@@ -258,8 +258,8 @@ object Bench {
     // parallel-work accounting: summed task wall time per query run,
     // via a listener (the QueryProbe discipline). Queries run strictly
     // sequentially, so attributing by snapshot delta is sound up to
-    // listener-bus lag; the snapshot is taken OUTSIDE the timed window
-    // after a short drain-until-stable wait, so accounting never
+    // listener-bus lag; both snapshots are taken OUTSIDE the timed
+    // window after a short drain-until-stable wait, so accounting never
     // inflates the committed seconds and residual lag only smears a
     // few ms of task time into the neighbouring query.
     val taskNs = new java.util.concurrent.atomic.AtomicLong
@@ -282,7 +282,9 @@ object Bench {
     val taskSecs = scala.collection.mutable.Map
       .empty[String, Vector[Double]].withDefaultValue(Vector.empty)
     def runOne(name: String): (Double, Option[String]) = {
-      val task0 = taskNs.get
+      // drained baseline: a late task-end event of the previous query
+      // lands before this snapshot, not in this query's delta
+      val task0 = taskSnap()
       val t0 = System.nanoTime()
       val err: Option[String] =
         try { SparkEntry.queries(name)(spark, sfDir).count(); None }

@@ -158,107 +158,34 @@ object DerivedTable {
     val fs = fsOf(spark, location)
     val root = new Path(location)
     if (!fs.exists(root)) return None
-    val versions = listVersions(fs, root).sortBy(-_._1)
-    if (versions.isEmpty) return None
-    // Newest PARSEABLE version wins, walked LAZILY newest-first (the
-    // healthy hot path reads exactly one file): a crash between the
-    // sidecar's exclusive create and its write leaves a torn/empty
-    // newest file, which must not brick the table — the previous
-    // commit is intact by construction (sidecars are immutable once
-    // written), and the next deriveTo allocates PAST the torn version,
-    // healing over it. ONLY an unparseable CONTENT counts as torn:
-    // a read IOException (store hiccup on a perfectly good file)
-    // propagates loudly — falling back there would silently serve a
-    // stale live set. Each skip is logged by version; all-torn still
-    // fails loudly below.
-    var firstErr: Option[(Long, Throwable)] = None
-    versions.foreach { case (v, p) =>
-      val json = readFully(fs, p) // IO failures propagate
-      try {
-        val st = parse(json, location)
-        if (firstErr.nonEmpty)
-          log.warn(s"derived table at $location: newest sidecar " +
-            s"(version ${firstErr.get._1}) is unparseable " +
-            s"(${firstErr.get._2.getMessage}) — serving version $v; " +
-            "the next deriveTo heals over it")
-        return Some(new DerivedTable(spark, location, st))
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          if (firstErr.isEmpty) firstErr = Some(v -> e)
-      }
-    }
-    val (v, e) = firstErr.get
-    throw new IllegalStateException(
-      s"derived table at $location: no parseable sidecar among " +
-        s"${versions.size} version(s) — newest ($v) failed with: " +
-        e.getMessage, e)
+    newestState(fs, location, listVersions(fs, root))
+      .map(new DerivedTable(spark, location, _))
   }
 
-  /** Parse a derived sidecar loaded FROM `location` (for messages). */
-  private[graft] def parse(json: String, location: String): State = {
-    def num(name: String): Long =
-      (s""""$name"\\s*:\\s*(-?\\d+)""").r.findFirstMatchIn(json)
-        .map(_.group(1).toLong)
-        .getOrElse(throw new IllegalStateException(
-          s"derived sidecar at $location: missing numeric field '$name'"))
-    def str(name: String): String =
-      Lake.escapedStrField(json, name).getOrElse(throw new IllegalStateException(
-        s"derived sidecar at $location: missing string field '$name'"))
-    // live is the LAST field the writer emits, so a non-greedy bracket
-    // capture cannot be confused by brackets in schema_ddl (there are
-    // none today — catalog DDL uses <>— but field order is cheap armor)
-    val live = """"live"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(json)
-      .map(m => """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
-        .map(e => Lake.unescapeJson(e.group(1))).toSeq)
-      .getOrElse(throw new IllegalStateException(
-        s"derived sidecar at $location: missing 'live' manifest"))
-    // FILE-level manifest entries — same shape and fallback posture as
-    // the lake sidecar's (Lake.parseState): a torn entry is dropped,
-    // never thrown, and its directory is simply listed by readers
-    val liveFiles: Map[String, Seq[Lake.LiveFile]] =
-      """\{\s*"fd"\s*:\s*"((?:[^"\\]|\\.)*)"\s*,\s*"fn"\s*:\s*"([^"]*)"\s*,\s*"fl"\s*:\s*"([^"]*)"\s*,\s*"fm"\s*:\s*"([^"]*)"\s*\}""".r
-        .findAllMatchIn(json).flatMap { m =>
-          try {
-            def parts(s: String): Seq[String] =
-              if (s.isEmpty) Nil else s.split(";", -1).toSeq
-            val names = parts(m.group(2))
-            val lens = parts(m.group(3)).map(_.toLong)
-            val mods = parts(m.group(4)).map(_.toLong)
-            if (names.size != lens.size || names.size != mods.size) None
-            else Some(Lake.unescapeJson(m.group(1)) ->
-              names.indices.map(i => Lake.LiveFile(names(i), lens(i), mods(i))))
-          } catch { case _: NumberFormatException => None }
-        }.toMap
-    State(str("derived_of"), num("base_version"), num("dim").toInt,
-      num("num_shards").toInt, num("lsh_seed"), str("metric"),
-      num("generation"), live, str("schema_ddl"), liveFiles)
-  }
+  /** Newest PARSEABLE version's state, walked LAZILY newest-first (the
+    * healthy hot path reads exactly one file): a crash between the
+    * sidecar's exclusive create and its write leaves a torn/empty
+    * newest file, which must not brick the table — the previous commit
+    * is intact by construction (sidecars are immutable once written),
+    * and the next deriveTo allocates PAST the torn version, healing
+    * over it. ONLY an unparseable CONTENT counts as torn: a read
+    * IOException (store hiccup on a perfectly good file) propagates
+    * loudly — falling back there would silently serve a stale live
+    * set. Each skip is logged; all-torn fails loudly. */
+  private[graft] def newestState(fs: org.apache.hadoop.fs.FileSystem,
+      location: String, versions: Seq[(Long, Path)]): Option[State] =
+    ControlFiles.newestParseable[ControlFiles.DerivedSidecar, State](fs, versions,
+      s"derived table at $location")(_.toState(location)).map(_._2)
 
-  private[graft] def render(st: State): String = {
-    val liveField = st.live.map(d => s""""${Lake.escapeJson(d)}"""")
-      .mkString("[", ", ", "]")
-    // files rides BEFORE live so live stays the last field (the parse
-    // comment above relies on that order as armor); names/lengths/mods
-    // are ';'-joined strings so nothing here can collide with the
-    // live-array string regex
-    val filesField =
-      if (st.liveFiles.isEmpty) ""
-      else st.live.distinct.flatMap(d => st.liveFiles.get(d).map(d -> _))
-        .map { case (d, fl) =>
-          s"""{"fd": "${Lake.escapeJson(d)}", """ +
-            s""""fn": "${fl.map(_.name).mkString(";")}", """ +
-            s""""fl": "${fl.map(_.len).mkString(";")}", """ +
-            s""""fm": "${fl.map(_.mod).mkString(";")}"}"""
-        }.mkString(""""files": [""", ", ", "], ")
-    s"""{"derived": true, "derived_of": "${Lake.escapeJson(st.baseLocation)}", """ +
-      s""""base_version": ${st.baseVersion}, "dim": ${st.dim}, """ +
-      s""""num_shards": ${st.numShards}, "lsh_seed": ${st.seed}, """ +
-      s""""metric": "${Lake.escapeJson(st.metric)}", """ +
-      s""""generation": ${st.generation}, """ +
-      s""""schema_ddl": "${Lake.escapeJson(st.schemaDdl)}", """ +
-      filesField +
-      s""""live": $liveField}"""
-  }
+  /** A sidecar version's state; an unparseable body (or one missing a
+    * required field) throws [[ControlFiles.Unparseable]]. */
+  private def readState(fs: org.apache.hadoop.fs.FileSystem, p: Path,
+      location: String): State =
+    ControlFiles.read[ControlFiles.DerivedSidecar](fs, p).toState(location)
+
+  /** `st` as its sidecar body. */
+  private[graft] def render(st: State): String =
+    ControlFiles.encode(ControlFiles.DerivedSidecar.of(st))
 
   /** Commit `st` as the next sidecar version — ONE atomic exclusive
     * create; a concurrent deriveTo to the same location loses the
@@ -285,12 +212,9 @@ object DerivedTable {
     val prev: Map[String, Seq[Lake.LiveFile]] =
       if (st.liveFiles.nonEmpty) st.liveFiles
       else versions.sortBy(-_._1).headOption.flatMap { case (_, p) =>
-        try Some(parse(readFully(fs, p), location).liveFiles)
+        try Some(readState(fs, p, location).liveFiles)
         catch { case scala.util.control.NonFatal(_) => None }
       }.getOrElse(Map.empty)
-    def safe(n: String): Boolean =
-      !n.contains(';') && !n.contains('"') && !n.contains('\\') &&
-        n.forall(_ >= ' ')
     val recorded = st.live.distinct.flatMap { d =>
       val files = prev.get(d).orElse {
         try Some(fs.listStatus(new Path(root, d)).toSeq
@@ -300,7 +224,7 @@ object DerivedTable {
             s.getModificationTime)))
         catch { case _: java.io.FileNotFoundException => None }
       }
-      files.filter(_.forall(f => safe(f.name))).map(d -> _)
+      files.filter(ControlFiles.FileEntry.recordable).map(d -> _)
     }
     st.copy(liveFiles = recorded.toMap)
   }
@@ -396,7 +320,7 @@ object DerivedTable {
     // still retires.
     val (kept0, dead0) = versions.splitAt(keepVersions)
     def tryParse(p: Path) =
-      try Some(parse(readFully(fs, p), location))
+      try Some(readState(fs, p, location))
       catch { case scala.util.control.NonFatal(_) => None }
     val attempts0 = kept0.map { case (v, p) => (v, p, tryParse(p)) }
     // liveness must anchor on a PARSEABLE commit. A keep window made
@@ -461,19 +385,18 @@ object DerivedTable {
     new Path(location).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def listVersions(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path): Seq[(Long, Path)] = {
-    val pat = """_derived\.(\d+)\.json""".r
-    fs.listStatus(root).toSeq.collect {
-      case s if s.isFile => s.getPath.getName match {
-        case pat(v) => Some(v.toLong -> s.getPath)
-        case _ => None
-      }
-      case _ => None
-    }.flatten
-  }
+      root: Path): Seq[(Long, Path)] =
+    versionsIn(fs.listStatus(root).toSeq)
 
-  private def readFully(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): String = Lake.readControlFile(fs, p)
+  private val versionRe = """_derived\.(\d+)\.json""".r
+
+  /** (version, path) of every derived sidecar in a root listing. */
+  private[graft] def versionsIn(entries: Seq[org.apache.hadoop.fs.FileStatus])
+      : Seq[(Long, Path)] =
+    entries.flatMap(s => s.getPath.getName match {
+      case versionRe(v) if s.isFile => Some(v.toLong -> s.getPath)
+      case _ => None
+    })
 
   /** Shard value of a live manifest entry (`gen-N/shard=K` → K). */
   private[graft] def shardOf(rel: String): Int =

@@ -156,8 +156,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // would erase the flag from the re-stamped sidecar, and every
     // later lesser-config write would then pass [[requireWriteConfigMatch]]
     // and strip the columns for real.
-    requireNoLesserConfig(readMetaSidecar())
-    writeState(readState()); ()
+    val st = readState()
+    requireNoLesserConfig(st)
+    writeState(st); ()
   }
 
   def evolve(add: StructType): Unit = {
@@ -166,8 +167,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       // evolve re-stamps the sidecar from THIS session's config: under
       // a mismatched one it would silently flip the recorded
       // compression flags (same hazard as any write)
-      requireWriteConfigMatch()
       val st = readState()
+      requireWriteConfigMatch(st)
       validateExtraCols(st, add.fields.toSeq, "evolve")
       writeState(st.copy(extraCols =
         st.extraCols ++ add.fields.map(f => f.name -> f.dataType.catalogString)))
@@ -509,8 +510,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       s"_sink.$idHex.$batchId.json")
     try {
       if (!fs.exists(p)) None
-      else Some(""""attempt"\s*:\s*"([0-9a-f]+)"""".r
-        .findFirstMatchIn(readFully(fs, p)).map(_.group(1)))
+      else Some(Option(ControlFiles.read[ControlFiles.SinkLedger](fs, p).attempt))
     } catch {
       case _: java.io.FileNotFoundException => None
       case scala.util.control.NonFatal(_) => Some(None)
@@ -544,12 +544,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       idHex: String, batchId: Long, attempt: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(cfg.location,
       s"_sink.$idHex.$batchId.json")
-    val out = fs.create(p, false) // atomic create = the commit arbiter;
-    try out.write(                // a collision means a rival won
-      (s"""{"sink": "$idHex", "batch": $batchId, "attempt": "$attempt", """ +
-        s""""committed_at": "${java.time.Instant.now()}"}""")
-        .getBytes("UTF-8"))
-    finally out.close()
+    // atomic create = the commit arbiter; a collision means a rival won
+    ControlFiles.write(fs, p, ControlFiles.SinkLedger(idHex, batchId,
+      attempt, java.time.Instant.now().toString), overwrite = false)
     try {
       val re = ("_sink\\." + java.util.regex.Pattern.quote(idHex) +
         "\\.(\\d+)\\.json").r
@@ -796,18 +793,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     try body finally fs.delete(marker, false)
   }
 
-  /** Read a small control file fully (sidecars, the lock). A single
-    * read() call may legally return a short prefix on some streams —
-    * truncating a lock body would drop the holder token and truncating
-    * a sidecar would tear the manifest, so EVERY control-file read goes
-    * through this loop (the derived-table sidecar reader shares it:
-    * [[Lake.readControlFile]]). */
-  private def readFully(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = Lake.readControlFile(fs, p)
-
+  /** The lock body read fully: a short read would drop the holder token. */
   private def lockHolder(fs: org.apache.hadoop.fs.FileSystem,
       lock: org.apache.hadoop.fs.Path): Option[String] =
-    try Some(readFully(fs, lock)).filter(_.nonEmpty)
+    try Some(ControlFiles.readControlFile(fs, lock)).filter(_.nonEmpty)
     catch { case _: Throwable => None }
 
   /** Whether the store advertises conditional (If-None-Match) create
@@ -916,9 +905,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * makes the sink's replay idempotent. Plain appends stay untagged. */
   private def writeAppend(derived: DataFrame,
       fileTag: Option[String] = None): Lake.Appended = {
-    routingChecked // never append rows routed under foreign hyperplanes
     val fs = fsOfRoot
     val st = readState()
+    requireRouting(st) // never append rows routed under foreign hyperplanes
     // re-checked UNDER the append gate (not just at op entry): a
     // reshard transition committing in the entry-check-to-marker
     // window must not let this session land rows routed at the old
@@ -1154,8 +1143,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   def ingestStream(rows: DataFrame, checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)): org.apache.spark.sql.streaming.StreamingQuery = {
-    routingChecked // BEFORE the sidecar write below re-stamps it
-    requireWriteConfigMatch() // likewise
+    // both BEFORE the sidecar write below re-stamps it
+    val entrySt = readState()
+    requireRouting(entrySt)
+    requireWriteConfigMatch(entrySt)
     // resolve the sink generation, stamp, AND pin it — all under the
     // writer lock, failing LOUDLY on contention (a silently-skipped
     // start racing a compact could resolve a generation that a commit
@@ -1271,10 +1262,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * read, and nothing deletes a live-at-resolution-time directory
     * except an operator-invoked [[vacuum]]. */
   def read(): DataFrame = {
-    routingChecked // a mismatched-config session must not prune/route
     val fs = fsOfRoot
     val entries = listRoot(fs)
-    readFrom(readStateFrom(fs, entries), entries)
+    val st = readStateFrom(fs, entries)
+    requireRouting(st) // a mismatched-config session must not prune/route
+    readFrom(st, entries)
   }
 
   /** SNAPSHOT READ at a past sidecar version — time travel, free by
@@ -1290,9 +1282,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * last-persist-wins stamp, but queryable. Fails loudly when the
     * version's sidecar (or a generation it names) has been vacuumed. */
   def readAt(version: Long): DataFrame = {
-    routingChecked
     val fs = fsOfRoot
     val entries = listRoot(fs)
+    requireRouting(readStateFrom(fs, entries))
     readFrom(vacuumCheckedStateAt(version, fs, entries), entries)
   }
 
@@ -1354,14 +1346,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * The target must be EMPTY (no sidecar, no data): clone creates,
     * never merges. A vacuumed `asOf` fails loudly via [[readAt]]. */
   def cloneTo(targetLocation: String, asOf: Option[Long] = None): Lake = {
-    routingChecked
     // the clone's first sidecar is stamped from THIS config, so a
     // session whose config lacks a compression the SOURCE declares
     // (the codebook-less SQL-procedure session on a PQ lake, a
     // misconstructed Scala one) would produce a target whose sidecar
     // misdescribes the faithfully-copied pq_code/packed bytes — refuse,
     // same contract as every write surface
-    requireNoLesserConfig(readMetaSidecar())
+    val st = readState()
+    requireRouting(st)
+    requireNoLesserConfig(st)
     val fs = fsOfRoot
     val here = fs.makeQualified(new org.apache.hadoop.fs.Path(cfg.location))
     val there = new org.apache.hadoop.fs.Path(targetLocation)
@@ -1371,7 +1364,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       s"cloneTo: target equals the source location $here")
     val snap = asOf.map(readAt).getOrElse(read())
     val target = Lake(spark, cfg.copy(location = targetLocation))
-    require(!target.exists() && target.readMetaSidecar().isEmpty,
+    require(!target.exists() && target.readState().config.isEmpty,
       s"cloneTo: target $targetLocation already holds a lake or data — " +
         "clone only creates, never merges; delete() the target first")
     // extras = snapshot columns beyond this config's canonical stored
@@ -1694,8 +1687,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       (col("cnt") <=> col("other_cnt") && col("h") <=> col("oh") &&
         col("hs") <=> col("ohs")).as("in_sync")
     val nullableKey = cfg.partitionKey.isDefined ||
-      scanRoots(None).exists(_._2.isEmpty) ||
-      other.scanRoots(None).exists(_._2.isEmpty)
+      scanRoots().exists(_._2.isEmpty) ||
+      other.scanRoots().exists(_._2.isEmpty)
     val joined =
       if (nullableKey)
         mine.join(theirs, mine(partCol) <=> theirs(partCol), "full_outer")
@@ -1821,7 +1814,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       since.map(_._1) == (version + 1 to since.last._1) &&
         since.forall { case (v, p) =>
           sealedMemo.getOrElseUpdate(v,
-            try parseState(readFully(fs, p)).isSealed
+            try stateOfSidecar(fs, p).isSealed
             catch { case scala.util.control.NonFatal(_) => false })
         })
   }
@@ -1867,7 +1860,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     require(cfg.partitionKey.isEmpty,
       s"deriveTo at ${cfg.location}: derived co-location keys on LSH " +
         "shard routing; this lake is user-keyed")
-    routingChecked
+    // routing is checked by the seal() both refresh paths start with
     val qualBase = qualifiedLocation
     // self/overlap guard on QUALIFIED paths: a raw string compare would
     // let a trailing slash or a `file:` spelling of the lake's own root
@@ -2081,7 +2074,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     require(cfg.partitionKey.isEmpty,
       s"reshardDerived at ${cfg.location}: derived co-location keys on " +
         "LSH shard routing; this lake is user-keyed")
-    routingChecked
+    // routing is checked by the seal() (direct or via deriveTo) below
     val qualBase = qualifiedLocation
     val d = DerivedTable.load(spark, location)
     require(d.state.baseLocation == qualBase,
@@ -2206,36 +2199,52 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   /** The canonical stored schema + partition column — what an empty
     * lake's scan serves (and what [[readFrom]] validates a non-empty
     * read against). */
-  private[graft] def canonicalSchema: StructType =
-    StructType(storedFieldsOf(readState()) :+ StructField(partCol,
+  private[graft] def canonicalSchema: StructType = canonicalSchemaOf(readState())
+
+  private def canonicalSchemaOf(st: LakeState): StructType =
+    StructType(storedFieldsOf(st) :+ StructField(partCol,
       if (cfg.partitionKey.isEmpty) IntegerType else cfg.partitionKeyType))
 
-  /** DIRECTORY-level scan roots of the current (`asOf = None`) or a
-    * past snapshot — the `graft` DSv2 format's live-set resolution:
-    * exactly the directories [[read]]/[[readAt]] would open (the live
-    * manifest's (dir, generation) entries, the whole current
-    * generation tree by rule, plus any pre-v2/root-level legacy
-    * data), resolved from ONE sidecar read + the root listing. Each
-    * entry pairs the directory path with its ESCAPED `key=value`
-    * partition-dir name (None for unpartitioned root-level legacy
-    * files), from which the format constructs the partition spec
-    * directly — partition INFERENCE cannot work on this layout (each
-    * generation strips to a different base and Spark refuses the
-    * "conflicting directory structures"), and the manifest already
-    * knows every value. Dead generations are never listed; a vacuumed
-    * `asOf` fails loudly via [[vacuumCheckedStateAt]]. A stream-owned
-    * current generation is REFUSED: its `_spark_metadata` manifest
-    * governs file visibility, and a raw listing would serve
-    * uncommitted in-flight files — read through [[read]] (which
-    * consults the manifest) or stop the ingest stream first. */
-  private[graft] def scanRoots(asOf: Option[Long]): Seq[(String, Option[String])] = {
-    routingChecked
+  /** DIRECTORY-level scan roots of the current snapshot ([[formatScan]]). */
+  private[graft] def scanRoots(): Seq[(String, Option[String])] = {
     val fs = fsOfRoot
     val entries = listRoot(fs)
-    val st = asOf match {
-      case Some(v) => vacuumCheckedStateAt(v, fs, entries)
-      case None => readStateFrom(fs, entries)
-    }
+    formatScan(entries, readStateFrom(fs, entries), None).roots
+  }
+
+  /** The `graft` DSv2 format's view of the current (`asOf = None`) or a
+    * past snapshot, resolved from a root listing and the CURRENT state
+    * the caller already decoded from it — a table load pays one LIST
+    * and one sidecar GET (an `asOf` pin adds the GET of its version).
+    *
+    *  - `roots`: exactly the directories [[read]]/[[readAt]] would open
+    *    (the live manifest's (dir, generation) entries, the whole
+    *    current generation tree by rule, plus any pre-v2/root-level
+    *    legacy data). Each pairs the directory path with its ESCAPED
+    *    `key=value` partition-dir name (None for unpartitioned
+    *    root-level legacy files), from which the format constructs the
+    *    partition spec directly — partition INFERENCE cannot work on
+    *    this layout (each generation strips to a different base and
+    *    Spark refuses the "conflicting directory structures"), and the
+    *    manifest already knows every value.
+    *  - `rootFiles`: for each root whose (dir, generation) entry
+    *    carries a sidecar-recorded file manifest, the exact files to
+    *    plan, keyed by the root path string. Roots absent from the map
+    *    (the current generation tree, legacy data, pre-field sidecars)
+    *    are listed by the index.
+    *  - `schema`: the canonical schema with the CURRENT extras.
+    *
+    * Dead generations are never listed; a vacuumed `asOf` fails loudly
+    * via [[vacuumCheckedStateAt]]. A stream-owned current generation is
+    * REFUSED: its `_spark_metadata` manifest governs file visibility,
+    * and a raw listing would serve uncommitted in-flight files — read
+    * through [[read]] (which consults the manifest) or stop the ingest
+    * stream first. */
+  private[graft] def formatScan(entries: Seq[org.apache.hadoop.fs.FileStatus],
+      current: LakeState, asOf: Option[Long]): Lake.FormatScan = {
+    requireRouting(current)
+    val fs = fsOfRoot
+    val st = asOf.fold(current)(vacuumCheckedStateAt(_, fs, entries))
     if (!st.isSealed && fs.exists(
         new org.apache.hadoop.fs.Path(genPath(st.generation), "_spark_metadata")))
       throw new IllegalStateException(
@@ -2274,29 +2283,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       if (p.getName.contains("=")) p.toString -> Some(p.getName)
       else cfg.location -> None // bare root-level parquet: no partition
     }.distinct
-    dirs ++ legacy
-  }
-
-  /** [[scanRoots]]' FILE-level companion for the DSv2 format: for each
-    * root whose (dir, generation) entry carries a sidecar-recorded file
-    * manifest, the exact files to plan — keyed by the same root path
-    * string scanRoots returns. Roots absent from the map (the current
-    * generation tree, legacy data, pre-field sidecars) are listed by
-    * the index as before. One sidecar read, no listing. */
-  private[graft] def scanRootFiles(asOf: Option[Long]): Map[String, Seq[Lake.LiveFile]] = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val st = asOf match {
-      case Some(v) => vacuumCheckedStateAt(v, fs, entries)
-      case None => readStateFrom(fs, entries)
-    }
     // never serve a manifest for a CURRENT-generation entry: that tree
     // is live-by-rule (appends land there without a commit), so only a
     // listing is truthful for it
-    st.live.distinct.filter(_._2 != st.generation).flatMap { case e @ (d, g) =>
-      st.liveFiles.get(e).map(fl =>
-        new org.apache.hadoop.fs.Path(genPath(g), d).toString -> fl)
-    }.toMap
+    val rootFiles = st.live.distinct.filter(_._2 != st.generation)
+      .flatMap { case e @ (d, g) =>
+        st.liveFiles.get(e).map(fl =>
+          new org.apache.hadoop.fs.Path(genPath(g), d).toString -> fl)
+      }.toMap
+    Lake.FormatScan(dirs ++ legacy, rootFiles, canonicalSchemaOf(current))
   }
 
   /** The live data files as a frame — (file, partition, generation,
@@ -2335,22 +2330,18 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   /** The commit log as a frame: one row per sidecar version still on
     * disk — (version, last_update, generation, live_dirs). The
     * versions are [[readAt]]'s input; the latest row is what [[read]]
-    * serves. */
+    * serves. A torn version (no commit) has no row. */
   def history(): DataFrame = {
     import spark.implicits._
     val fs = fsOfRoot
-    metaVersions(fs).sortBy(_._1).map { case (v, p) =>
-      val json = readFully(fs, p)
-      val st = parseState(json)
-      (v, stampFrom(json).getOrElse(""), st.generation, st.live.size.toLong,
-        st.isSealed)
+    metaVersions(fs).sortBy(_._1).flatMap { case (v, p) =>
+      try {
+        val st = stateOfSidecar(fs, p)
+        Some((v, st.lastUpdate.getOrElse(""), st.generation,
+          st.live.size.toLong, st.isSealed))
+      } catch { case _: ControlFiles.Unparseable => None }
     }.toDF("version", "last_update", "generation", "live_dirs", "sealed")
   }
-
-  /** The `last_update` stamp inside one sidecar's JSON. */
-  private def stampFrom(json: String): Option[String] =
-    """"last_update"\s*:\s*"([^"]+)"""".r
-      .findFirstMatchIn(json).map(_.group(1))
 
   /** The `last_update` stamp a specific sidecar version recorded — what
     * the change-feed source pins after a [[seal]] (reading the sealed
@@ -2361,7 +2352,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private[graft] def stampOfVersion(version: Long): Option[String] = {
     val fs = fsOfRoot
     metaVersions(fs).find(_._1 == version)
-      .flatMap(vp => stampFrom(readFully(fs, vp._2)))
+      .flatMap(vp => stateOfSidecar(fs, vp._2).lastUpdate)
   }
 
   /** The newest SEALED sync point still on disk, with the
@@ -2375,9 +2366,12 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   def latestSealed(): Option[(Long, String)] = {
     val fs = fsOfRoot
     metaVersions(fs).sortBy(-_._1).view
-      .map { case (v, p) => (v, readFully(fs, p)) }
-      .collectFirst { case (v, json) if parseState(json).isSealed =>
-        (v, stampFrom(json).getOrElse("")) }
+      .map { case (v, p) =>
+        (v, try Some(stateOfSidecar(fs, p))
+          catch { case _: ControlFiles.Unparseable => None })
+      }
+      .collectFirst { case (v, Some(st)) if st.isSealed =>
+        (v, st.lastUpdate.getOrElse("")) }
   }
 
   /** The newest committed sidecar version — what [[read]] serves and
@@ -2417,10 +2411,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * consumer window; a swept sync point fails loudly, never reads back
     * partial). Returns the sealed version number. */
   def seal(): Long = withWriterLock("seal") {
-    routingChecked // seal re-stamps the sidecar: never under a foreign config
-    requireWriteConfigMatch() // both directions — the stamp is authoritative
     val fs = fsOfRoot
     val st = readState()
+    requireRouting(st) // seal re-stamps the sidecar: never under a foreign config
+    requireWriteConfigMatch(st) // both directions — the stamp is authoritative
     requireNoReshard(st, "seal")
     require(!fs.exists(new org.apache.hadoop.fs.Path(
       genPath(st.generation), "_spark_metadata")),
@@ -2465,15 +2459,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * @return changed rows with the stored columns plus
     *         `change ∈ {insert, delete}` */
   def changesSince(version: Long, netted: Boolean = true): DataFrame = {
-    routingChecked
     val fs = fsOfRoot
     val entries = listRoot(fs)
+    val stNew = readStateFrom(fs, entries)
+    requireRouting(stNew)
     require(rootLevelDataFrom(entries).isEmpty,
       s"changesSince at ${cfg.location} refused: root-level (pre-v2/foreign) " +
         "data present — the manifest does not govern it")
     val stOld = stateAt(version, fs, entries)
     requireSealedSync(version, stOld)
-    val stNew = readStateFrom(fs, entries)
     requireNoReshard(stNew, "changesSince")
     require(!fs.exists(new org.apache.hadoop.fs.Path(
       genPath(stNew.generation), "_spark_metadata")),
@@ -2499,9 +2493,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       s"changesBetween($fromVersion, $toVersion): from must not exceed to — " +
         "a swapped pair would return a plausible-looking INVERTED delta " +
         "(inserts reported as deletes) with no other symptom")
-    routingChecked
     val fs = fsOfRoot
     val entries = listRoot(fs)
+    val current = readStateFrom(fs, entries)
+    requireRouting(current)
     require(rootLevelDataFrom(entries).isEmpty,
       s"changesBetween at ${cfg.location} refused: root-level (pre-v2/" +
         "foreign) data present — the manifest does not govern it")
@@ -2517,7 +2512,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       netted,
       // CURRENT extras (not either endpoint's): a replayed pre-evolve
       // batch then null-fills the new columns instead of changing shape
-      extraFieldsOf(readStateFrom(fs, entries)))
+      extraFieldsOf(current))
   }
 
   /** State at a specific sidecar version, from an already-taken root
@@ -2530,7 +2525,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       .getOrElse(throw new IllegalArgumentException(
         s"no sidecar version $version at ${cfg.location} (vacuumed, or never " +
           s"existed) — available: ${versions.map(_._1).sorted.mkString(", ")}"))
-    parseState(readFully(fs, p))
+    stateOfSidecar(fs, p)
   }
 
   private def requireSealedSync(version: Long, st: LakeState): Unit =
@@ -2546,9 +2541,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * shard partition value each file's rows serve. Same bounded-pool
     * listing and loud-on-vacuumed contract as [[fileOwners]]. */
   private[graft] def sealedFileStatuses(version: Long): Seq[(String, Long, String)] = {
-    routingChecked
     val fs = fsOfRoot
     val entries = listRoot(fs)
+    requireRouting(readStateFrom(fs, entries))
     require(rootLevelDataFrom(entries).isEmpty,
       s"change stream at ${cfg.location} refused: root-level (pre-v2/" +
         "foreign) data present — the manifest does not govern it")
@@ -2578,7 +2573,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   }
 
   /** Every data file of the given live (escaped-dir, generation)
-    * entries, as file-path → owning generation. An entry the sidecar's
+    * entries, as file-path → (escaped-dir-name, owning generation,
+    * status). An entry the sidecar's
     * FILE-level manifest records is served straight from it — zero
     * listing (guide §6; sound because committed entries are immutable
     * until vacuum retires them wholesale); the rest pay one LIST per
@@ -2586,11 +2582,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * discipline). A LISTED directory that is gone means vacuum swept
     * past the sync point — loud, never a partial delta; a
     * manifest-served entry vacuum swept fails equally loudly when the
-    * delta scan opens its files (the [[readFileSlice]] cost contract:
-    * only delta files are opened), never silently partial. */
+    * delta scan is planned ([[readFileSlice]]), never silently partial. */
   private def fileOwners(fs: org.apache.hadoop.fs.FileSystem,
       dirs: Seq[(String, Long)], context: String,
-      manifest: Map[(String, Long), Seq[Lake.LiveFile]] = Map.empty): Map[String, Long] = {
+      manifest: Map[(String, Long), Seq[Lake.LiveFile]] = Map.empty)
+      : Map[String, (String, Long, org.apache.hadoop.fs.FileStatus)] = {
     val (recorded, toList) = dirs.distinct.partition(manifest.contains)
     // QUALIFIED exactly as a listing would return them: [[changeFrame]]
     // diffs the two sides by path STRING, so a manifest-served
@@ -2598,12 +2594,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // the same file as both insert and delete
     val served = recorded.flatMap { case e @ (d, g) =>
       val p = fs.makeQualified(new org.apache.hadoop.fs.Path(genPath(g), d))
-      manifest(e).map(f =>
-        new org.apache.hadoop.fs.Path(p, f.name).toString -> g)
+      manifest(e).map { f =>
+        val st = graft.sources.GraftManifestFileIndex.status(p, f.name, f.len, f.mod)
+        st.getPath.toString -> (d, g, st)
+      }
     }
     (served ++ mapDirsPooled(toList) { (d, g) =>
       val p = new org.apache.hadoop.fs.Path(genPath(g), d)
-      try dataFilesIn(fs, p).map(_.getPath.toString -> g)
+      try dataFilesIn(fs, p).map(s => s.getPath.toString -> (d, g, s))
       catch {
         case _: java.io.FileNotFoundException =>
           throw new IllegalStateException(
@@ -2614,39 +2612,40 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     }.flatten).toMap
   }
 
-  /** Read an explicit file set with the canonical schema, one branch
-    * per owning generation so partition values resolve against the
-    * right basePath. Only these files are opened — the change feed's
-    * cost contract. */
-  private def readFileSlice(files: Map[String, Long],
+  /** Read an explicit file set ([[fileOwners]]' values) with the
+    * canonical schema, planned straight from the statuses in hand
+    * ([[graft.sources.GraftManifestFileIndex]]) — zero listings, and
+    * only these files are opened: the change feed's cost contract.
+    * Vacuum retires whole generation trees, so a slice naming a
+    * generation gone from disk means vacuum swept past the sync point
+    * (a sealed sidecar outlives the data it names): fail loudly, never
+    * a partial delta. */
+  private def readFileSlice(
+      files: Iterable[(String, Long, org.apache.hadoop.fs.FileStatus)],
       extras: Seq[StructField] = Nil): DataFrame = {
     val partType =
       if (cfg.partitionKey.isEmpty) IntegerType else cfg.partitionKeyType
-    val full = StructType(
-      (storedFields ++ extras) :+ StructField(partCol, partType))
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
+    val part = StructField(partCol, partType)
     // pinned schema: parquet null-fills a requested column absent from
     // a pre-evolve file, so both change-feed sides share one shape
-    files.groupBy(_._2).toSeq.sortBy(_._1).map { case (g, fm) =>
-      try spark.read.option("basePath", genPath(g).toString).schema(full)
-        .parquet(fm.keys.toSeq.sorted: _*)
-      catch {
-        // a sidecar-recorded file gone from disk: the sync point's data
-        // was vacuumed while its sealed sidecar lingered. Manifest-served
-        // resolution performs no per-directory LIST, so this is where
-        // the sweep becomes visible — translate to the same loud
-        // contract the listing path threw, never a partial delta.
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" =>
-          throw new IllegalStateException(
-            s"reading manifest-recorded data files at ${cfg.location}: a " +
-              "recorded file is no longer on disk — vacuum has swept past " +
-              "this sync point (see vacuum(retainMs) for the consumer " +
-              "window)", e)
+    val data = StructType(storedFields ++ extras)
+    if (files.isEmpty)
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], data.add(part))
+    val fs = fsOfRoot
+    files.map(_._2).toSeq.distinct.sorted.find(g => !fs.exists(genPath(g)))
+      .foreach { g =>
+        throw new IllegalStateException(
+          s"reading manifest-recorded data files at ${cfg.location}: " +
+            s"generation $g is no longer on disk — vacuum has swept past " +
+            "this sync point (see vacuum(retainMs) for the consumer window)")
       }
-    }.reduce(_ unionByName _)
+    graft.sources.GraftManifestFileIndex.frame(spark, data, part,
+      files.groupBy { case (d, _, st) => (st.getPath.getParent, d) }.toSeq
+        .sortBy(_._1._1.toString).map { case ((dir, d), fl) =>
+          (dir, graft.sources.GraftDataSource.partValue(Some(d), partType),
+            fl.map(_._3).toArray.sortBy(_.getPath.toString))
+        })
   }
 
   /** Assemble the change frame from the two resolved file→generation
@@ -2654,11 +2653,12 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * files only the old side holds are deletes; `netted` cancels
     * byte-identical rows across the two (metadata compared as sorted
     * entries — maps are not join keys). */
-  private def changeFrame(oldFiles: Map[String, Long],
-      newFiles: Map[String, Long], netted: Boolean,
-      extras: Seq[StructField] = Nil): DataFrame = {
-    val ins = readFileSlice(newFiles -- oldFiles.keySet, extras)
-    val del = readFileSlice(oldFiles -- newFiles.keySet, extras)
+  private def changeFrame(
+      oldFiles: Map[String, (String, Long, org.apache.hadoop.fs.FileStatus)],
+      newFiles: Map[String, (String, Long, org.apache.hadoop.fs.FileStatus)],
+      netted: Boolean, extras: Seq[StructField] = Nil): DataFrame = {
+    val ins = readFileSlice((newFiles -- oldFiles.keySet).values, extras)
+    val del = readFileSlice((oldFiles -- newFiles.keySet).values, extras)
     // the slice's own column order IS the output shape (stored cols,
     // extras, partition col) — netting keys derive from it so an
     // evolved column participates in row identity (an upsert changing
@@ -3240,7 +3240,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       pred: Column): DataFrame = {
     val model = cfg.pqCodebooks.getOrElse(throw new IllegalArgumentException(
       s"$op needs a materialized pq_code column: set pqCodebooks = Some(model)"))
-    requirePqModelMatch() // stored codes must be this model's codes
+    pqFingerprintMatch(readState()) // stored codes must be this model's codes
     val adc = (0 until model.m).map { mi =>
       element_at(V.vecLit(model.lutFor(q, mi)),
         (shiftright(col("pq_code"), 8 * mi).bitwiseAND(lit(255)) + 1).cast("int"))
@@ -3345,18 +3345,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val tmp = new org.apache.hadoop.fs.Path(cfg.location,
       s"_recall__tmp_${java.util.UUID.randomUUID()}")
     fs.mkdirs(tmp)
-    val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "calib.json"), false)
-    try out.write(
-      (s"""{"dim": ${cfg.dim}, "num_hashes": ${cfg.numHashes}, """ +
-        s""""lsh_seed": ${cfg.seed}, "metric": "${cfg.metric}", """ +
-        s""""k": $k, "sample": ${sampled.size}, """ +
-        s""""stamp": "${lastUpdate().getOrElse("")}", """ +
+    ControlFiles.write(fs, new org.apache.hadoop.fs.Path(tmp, "calib.json"),
+      ControlFiles.RecallCalib(Some(cfg.dim.toLong), Some(cfg.numHashes.toLong),
+        Some(cfg.seed), Some(cfg.metric), Some(k), Some(sampled.size),
+        Some(lastUpdate().getOrElse("")),
         // the live data volume at calibration time — the cheap drift
         // denominator [[recallCalibStale]] compares against (metadata
         // listing only, no scan)
-        s""""bytes": ${liveDataBytes()}, """ +
-        s""""recalls": [${recalls.mkString(", ")}]}""").getBytes("UTF-8"))
-    finally out.close()
+        Some(liveDataBytes()), recalls), overwrite = false)
     fs.delete(recallPath, true)
     fs.rename(tmp, recallPath)
     recallCalibCache = Some(recalls)
@@ -3409,67 +3405,51 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * serving under a stale ladder (its fallback contract is unchanged
     * and re-calibration is a write-path job, not something a read
     * should trigger) — staleness is a MAINTENANCE signal. */
-  private[graft] def recallCalibStale(drift: Double = 0.5): Option[Boolean] = {
+  private[graft] def recallCalibStale(drift: Double = 0.5): Option[Boolean] =
+    (try recallCalib()
+     // torn artifact: stale, so the next maintain() re-calibrates over it
+     catch { case _: ControlFiles.Unparseable => return Some(true) })
+      .map { c =>
+        val stamp = c.stamp.getOrElse("")
+        if (stamp.nonEmpty && lastUpdate().contains(stamp)) false
+        else c.bytes match {
+          case None => true // pre-volume artifact + moved token: recalibrate once
+          case Some(b0) =>
+            math.abs(liveDataBytes() - b0).toDouble >
+              drift * math.max(b0, 1L).toDouble
+        }
+      }
+
+  /** The persisted calibration, None when none was persisted; a body
+    * that does not decode fails loudly. */
+  private def recallCalib(): Option[ControlFiles.RecallCalib] = {
     val fs = fsOfRoot
     val p = new org.apache.hadoop.fs.Path(recallPath, "calib.json")
-    if (!fs.exists(p)) return None
-    val json = readFully(fs, p)
-    val stamp = """"stamp"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("")
-    if (stamp.nonEmpty && lastUpdate().contains(stamp)) return Some(false)
-    val calibBytes = """"bytes"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-    calibBytes match {
-      case None => Some(true) // pre-volume artifact + moved token: recalibrate once
-      case Some(b0) =>
-        Some(math.abs(liveDataBytes() - b0).toDouble >
-          drift * math.max(b0, 1L).toDouble)
-    }
+    if (!fs.exists(p)) None else Some(ControlFiles.read[ControlFiles.RecallCalib](fs, p))
   }
 
-  /** The (k, sampleQueries) the persisted calibration was measured
-    * with — what a policy-driven re-calibration must reuse (a refresh
-    * that silently changed k would move the ladder's self-hit bias). */
-  private def recallCalibParams(): Option[(Int, Int)] = {
-    val fs = fsOfRoot
-    val p = new org.apache.hadoop.fs.Path(recallPath, "calib.json")
-    if (!fs.exists(p)) return None
-    val json = readFully(fs, p)
-    def num(name: String): Option[Int] =
-      (s""""$name"\\s*:\\s*(\\d+)""").r.findFirstMatchIn(json)
-        .map(_.group(1).toInt)
-    for (k <- num("k"); s <- num("sample")) yield (k, s)
-  }
-
-  /** The persisted calibration, refused loudly when its routing
-    * fingerprint differs from this session's config (a ladder measured
-    * under foreign hyperplanes says nothing about ours). */
+  /** The persisted ladder, refused loudly when its routing fingerprint
+    * differs from this session's config (a ladder measured under
+    * foreign hyperplanes says nothing about ours). */
   private def loadRecallCalib(): Option[Seq[Double]] = {
     if (recallCalibCache.isDefined) return recallCalibCache
-    val fs = fsOfRoot
-    val p = new org.apache.hadoop.fs.Path(recallPath, "calib.json")
-    if (!fs.exists(p)) return None
-    val json = readFully(fs, p)
-    def num(name: String): Option[Double] =
-      (s""""$name"\\s*:\\s*(-?[\\d.eE+-]+)""").r.findFirstMatchIn(json)
-        .map(_.group(1).toDouble)
-    Seq(("dim", cfg.dim.toDouble), ("num_hashes", cfg.numHashes.toDouble),
-      ("lsh_seed", cfg.seed.toDouble)).foreach { case (n, want) =>
-      num(n).foreach(got => require(got == want,
-        s"recall calibration at ${cfg.location} was measured under $n=" +
-          s"${got.toLong} but this session uses ${want.toLong} — " +
-          "re-run calibrateRecall() under the writer's config"))
-    }
-    // the ladder is metric-specific too: which shards hold a query's
-    // true top-k depends on the distance ranking, so a cosine-measured
-    // ladder says nothing about l2 serving
-    ("\"metric\"\\s*:\\s*\"([^\"]*)\"").r.findFirstMatchIn(json)
-      .map(_.group(1)).foreach(got => require(got == cfg.metric,
+    val rs = recallCalib().map { c =>
+      Seq(("dim", c.dim, cfg.dim.toLong), ("num_hashes", c.numHashes, cfg.numHashes.toLong),
+        ("lsh_seed", c.lshSeed, cfg.seed)).foreach { case (n, got, want) =>
+        got.foreach(g => require(g == want,
+          s"recall calibration at ${cfg.location} was measured under $n=" +
+            s"$g but this session uses $want — " +
+            "re-run calibrateRecall() under the writer's config"))
+      }
+      // the ladder is metric-specific too: which shards hold a query's
+      // true top-k depends on the distance ranking, so a cosine-measured
+      // ladder says nothing about l2 serving
+      c.metric.foreach(got => require(got == cfg.metric,
         s"recall calibration at ${cfg.location} was measured under " +
           s"metric=$got but this session uses ${cfg.metric} — " +
           "re-run calibrateRecall() under the serving metric"))
-    val rs = """"recalls"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(json)
-      .map(_.group(1).split(",").map(_.trim.toDouble).toSeq)
+      c.recalls
+    }
     recallCalibCache = rs
     rs
   }
@@ -3925,17 +3905,18 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         "narrower width and cloneTo it instead")
     require(dirsPerCommit > 0 && maxDirs >= 0,
       s"dirsPerCommit must be positive and maxDirs non-negative")
-    routingChecked // both modes: the CALLER's width matches the sidecar
+    val entrySt = readState()
+    requireRouting(entrySt) // both modes: the CALLER's width matches the sidecar
     if (newNumHashes == cfg.numHashes) { // resume (no-op when complete)
       reshardSteps(maxDirs, dirsPerCommit)
       return this
     }
-    requireWriteConfigMatch()
+    requireWriteConfigMatch(entrySt)
     val target = new Lake(spark, cfg.copy(numHashes = newNumHashes))
     withReshardLock {
       val fs = fsOfRoot
       val st = readState()
-      requireNoReshard(st, "reshard(begin)") // defensive; routingChecked
+      requireNoReshard(st, "reshard(begin)") // defensive; requireRouting
       // already refuses a session at neither endpoint of an in-flight one
       require(!fs.exists(new org.apache.hadoop.fs.Path(
         genPath(st.generation), "_spark_metadata")),
@@ -4677,31 +4658,18 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * existed). Refreshes recompute exactly these, so appended entries
     * always match the map's schema; a refresh whose spec read failed
     * writes `spec_fp` of the EMPTY list, which field reads reject into
-    * "scan" rather than misprune. Escaped characters in paths
-    * round-trip through [[unescapeJson]]. */
-  /** The field spec with "present but unreadable" DISTINGUISHED from
-    * "absent": None = the spec file exists but could not be read or
-    * parsed (transient store failure, torn write). Callers that would
-    * REBUILD the map must skip on None — rebuilding with Nil would
-    * permanently and silently drop the operator-configured field
-    * pruning on one store hiccup. Read-side callers may treat None as
-    * Nil (degrade to unpruned scans, self-heals next read). */
-  private def zoneSpecFieldsChecked(
-      fs: org.apache.hadoop.fs.FileSystem): Option[Seq[String]] = {
+    * "scan" rather than misprune. None = the spec file exists but could
+    * not be read or decoded (transient store failure, torn write):
+    * callers that would REBUILD the map must skip on None — rebuilding
+    * with Nil would permanently and silently drop the
+    * operator-configured field pruning on one store hiccup. Read-side
+    * callers treat None as Nil (unpruned scans, self-heals next read). */
+  private def zoneSpecOf(fs: org.apache.hadoop.fs.FileSystem): Option[Seq[String]] = {
     val spec = new org.apache.hadoop.fs.Path(zonePath, "_spec.json")
-    if (!fs.exists(spec)) return Some(Nil)
-    // anchored on the "fields" array itself (not a positional token
-    // drop), so a future spec variant with extra keys parses the same
-    try Some(""""fields"\s*:\s*\[([^\]]*)\]""".r
-      .findFirstMatchIn(readFully(fs, spec))
-      .map(a => """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(a.group(1))
-        .map(m => unescapeJson(m.group(1))).toSeq)
-      .getOrElse(Nil))
+    if (!fs.exists(spec)) Some(Nil)
+    else try Some(ControlFiles.read[ControlFiles.ZoneSpec](fs, spec).fields)
     catch { case scala.util.control.NonFatal(_) => None }
   }
-
-  private def zoneSpecFields(fs: org.apache.hadoop.fs.FileSystem): Seq[String] =
-    zoneSpecFieldsChecked(fs).getOrElse(Nil)
 
   /** Build the per-file TIMESTAMP ZONE MAP (`<root>/_zone`): (file,
     * min_ts, max_ts, cnt), one row per live data file. LSH sharding
@@ -4749,30 +4717,22 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       try {
         val n = rows.count()
         if (n == 0L) { fs.delete(zonePath, true); return 0L }
-        writeZone(rows, fields)
+        // replace `_zone` via unique tmp + swap — same torn-swap
+        // contract as [[writeSkipIndex]]: a failure leaves no map or an
+        // unreadable one, both degrading to the unpruned full scan. The
+        // field spec is written INTO the tmp, so map and spec swap
+        // together.
+        val tmp = new org.apache.hadoop.fs.Path(cfg.location,
+          s"_zone__tmp_${java.util.UUID.randomUUID()}")
+        rows.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        if (fields.nonEmpty)
+          ControlFiles.write(fs, new org.apache.hadoop.fs.Path(tmp, "_spec.json"),
+            ControlFiles.ZoneSpec(fields), overwrite = false)
+        fs.delete(zonePath, true)
+        fs.rename(tmp, zonePath)
         n
       } finally { rows.unpersist(); () }
     }
-  }
-
-  /** Replace `_zone` via unique tmp + swap — same torn-swap contract as
-    * [[writeSkipIndex]]: a failure leaves no map or a parse error, both
-    * degrading to the unpruned full scan. The field spec is written
-    * INTO the tmp before the rename, so the map and its spec swap
-    * together. */
-  private def writeZone(rows: DataFrame, fields: Seq[String]): Unit = {
-    val fs = fsOfRoot
-    val tmp = new org.apache.hadoop.fs.Path(cfg.location,
-      s"_zone__tmp_${java.util.UUID.randomUUID()}")
-    rows.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fields.nonEmpty) {
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_spec.json"), false)
-      try out.write(fields.map(f => s""""${escapeJson(f)}"""")
-        .mkString("""{"fields": [""", ", ", "]}").getBytes("UTF-8"))
-      finally out.close()
-    }
-    fs.delete(zonePath, true)
-    fs.rename(tmp, zonePath)
   }
 
   /** Post-append zone refresh: map exactly the just-published files by
@@ -4787,7 +4747,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     if (files.isEmpty || !fs.exists(zonePath)) return
     val tmp = new org.apache.hadoop.fs.Path(cfg.location,
       s"_zone__tmp_${java.util.UUID.randomUUID()}")
-    zoneRows(spark.read.parquet(files: _*), zoneSpecFields(fs))
+    zoneRows(spark.read.parquet(files: _*), zoneSpecOf(fs).getOrElse(Nil))
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     fs.listStatus(tmp)
       .find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -4806,7 +4766,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * the per-query verdict pass and the many-small-files map read grow
     * with append count until the next full [[buildZoneMap]]. Past
     * `zonePartCap` parts, merge everything into one part via the same
-    * unique-tmp + swap as [[writeZone]], carrying `_spec.json` across.
+    * unique-tmp + swap as [[buildZoneMap]], carrying `_spec.json` across.
     * Schema-merged read (refresh parts written under a failed spec
     * read can be narrower than the build part — null-fill, the
     * `spec_fp` gate still decides trust per row). Concurrency is the
@@ -4829,11 +4789,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       s"_zone__tmp_${java.util.UUID.randomUUID()}")
     merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val spec = new org.apache.hadoop.fs.Path(zonePath, "_spec.json")
-    if (fs.exists(spec)) {
-      val body = readFully(fs, spec)
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_spec.json"), false)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
+    if (fs.exists(spec))
+      org.apache.hadoop.fs.FileUtil.copy(fs, spec, fs,
+        new org.apache.hadoop.fs.Path(tmp, "_spec.json"), false, fs.getConf)
     fs.delete(zonePath, true)
     fs.rename(tmp, zonePath)
     ()
@@ -4922,11 +4880,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private def zonePrunedBase(minCol: String, maxCol: String,
       lo: Column, hi: Column, dirNames: Option[Set[String]],
       op: String, requireFp: Option[String] = None): DataFrame = {
-    routingChecked
     val fs = fsOfRoot
     if (!exists() || !fs.exists(zonePath)) return read()
     val entries = listRoot(fs)
     val st = readStateFrom(fs, entries)
+    requireRouting(st)
     if (rootLevelDataFrom(entries).nonEmpty ||
         fs.exists(new org.apache.hadoop.fs.Path(
           genPath(st.generation), "_spark_metadata")))
@@ -4936,7 +4894,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       case None => liveEntries(st)
     }
     val owners = fileOwners(fs, dirs, op, st.liveFiles)
-    val kept: Map[String, Long] =
+    val kept =
       try readZone(fs, merged = requireFp.isDefined).map { z =>
         val scoped = dirNames match {
           case Some(keep) =>
@@ -4993,7 +4951,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         }
       }.getOrElse(owners)
       catch { case scala.util.control.NonFatal(_) => owners }
-    readFileSlice(kept, extraFieldsOf(st))
+    readFileSlice(kept.values, extraFieldsOf(st))
   }
 
   /** Rows whose NESTED-METADATA numeric field `path` lies in [lo, hi]
@@ -5009,10 +4967,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     require(lo <= hi, s"readFieldRange: lo $lo > hi $hi")
     val field = metadataField(path).cast(DoubleType)
     val residual = field >= lit(lo) && field <= lit(hi)
-    // zoneSpecFields' own missing-file check covers the no-map case
+    // zoneSpecOf's own missing-file check covers the no-map case
     // (no separate exists probes — each is a round trip on an object
     // store); an unmapped path falls back to the plain filtered read
-    val spec = zoneSpecFields(fsOfRoot)
+    val spec = zoneSpecOf(fsOfRoot).getOrElse(Nil)
     val i = spec.indexOf(path)
     if (i < 0) return read().where(residual)
     zonePrunedBase(s"f${i}_min", s"f${i}_max", lit(lo), lit(hi),
@@ -5155,7 +5113,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * no index, a full exact probe. Identical rows either way. */
   def lookup(ids: Seq[String]): DataFrame = {
     require(ids.nonEmpty, "lookup needs at least one id")
-    routingChecked
     // ONE state resolution feeds both the candidate probe and the scan:
     // lookup takes no lock, so resolving twice would let a concurrent
     // shard-moving upsert slip between them and the pruned scan miss a
@@ -5163,6 +5120,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val fs = fsOfRoot
     val entries = listRoot(fs)
     val st = readStateFrom(fs, entries)
+    requireRouting(st)
     val pred = col("id").isin(ids: _*)
     skipCandidates(ids, st, entries) match {
       case Some(c) if c.isEmpty => readFrom(st, entries).where(lit(false))
@@ -5383,9 +5341,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // seal-proportional cost sits off every hot path).
     lazy val commits: Seq[(Long, Long, Set[Long])] =
       metaVersions(fs).sortBy(_._1).map { case (v, p) =>
-        val s = parseState(readFully(fs, p))
-        (v, fs.getFileStatus(p).getModificationTime,
-          (s.live.map(_._2) :+ s.generation).toSet)
+        // a torn version committed nothing: it references no generation
+        val gens =
+          try {
+            val s = stateOfSidecar(fs, p)
+            (s.live.map(_._2) :+ s.generation).toSet
+          } catch { case _: ControlFiles.Unparseable => Set.empty[Long] }
+        (v, fs.getFileStatus(p).getModificationTime, gens)
       }
     def tombstone(g: Long) =
       new org.apache.hadoop.fs.Path(cfg.location, s"_dead.$g")
@@ -5619,7 +5581,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         clusterBy = clusterBy, maxFilesPerShard = maxFilesPerShard)
     val skip = reshardInFlight.isEmpty && skipStaleCount() > 0L && {
       buildSkipIndex(); true }
-    val zone = reshardInFlight.isEmpty && zoneNeedsRebuild() && (zoneSpecFieldsChecked(fsOfRoot) match {
+    val zone = reshardInFlight.isEmpty && zoneNeedsRebuild() && (zoneSpecOf(fsOfRoot) match {
       // spec present but unreadable: SKIP this cycle's rebuild rather
       // than rebuild specless (which would silently drop the
       // operator-configured field pruning); the next maintain() retries
@@ -5639,9 +5601,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       // rows return (topKAtRecall on an empty lake returns empty rows
       // regardless of ladder)
       if (liveDataBytes() == 0L) false
-      else recallCalibParams() match {
-        case Some((k, sample)) => calibrateRecall(k, sample); true
-        case None => calibrateRecall(); true
+      else {
+        val params = try recallCalib().flatMap(c =>
+          for (k <- c.k; sample <- c.sample) yield (k, sample))
+        catch { case _: ControlFiles.Unparseable => None }
+        params match {
+          case Some((k, sample)) => calibrateRecall(k, sample)
+          case None => calibrateRecall()
+        }
+        true
       }
     }
     // shard-health telemetry: the oversized-shard signal that says a
@@ -5771,9 +5739,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * corpus exactly when the lake actually changed, instead of on a
     * blind timer (reference parity: its readers re-check the parquet
     * attrs stamp the same way, index.py:296-305). */
-  def lastUpdate(): Option[String] =
-    readMetaSidecar().flatMap(""""last_update"\s*:\s*"([^"]+)"""".r
-      .findFirstMatchIn(_).map(_.group(1)))
+  def lastUpdate(): Option[String] = readState().lastUpdate
 
   /** Best-effort recursive delete (reference S5, index.py:312-325,548-563). */
   def delete(): Unit = {
@@ -5876,20 +5842,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   @volatile private var sidecarSeen = false
   @volatile private var sidecarlessChecked = false
 
-  /** (version, path) of every sidecar version in a root listing. */
-  private def metaVersionsFrom(entries: Seq[org.apache.hadoop.fs.FileStatus]): Seq[(Long, org.apache.hadoop.fs.Path)] =
-    entries.flatMap { s =>
-      s.getPath.getName match {
-        case metaNameRe(v) if s.isFile => Some(v.toLong -> s.getPath)
-        case _ => None
-      }
-    }
-
   private def metaVersions(fs: org.apache.hadoop.fs.FileSystem): Seq[(Long, org.apache.hadoop.fs.Path)] =
     metaVersionsFrom(listRoot(fs))
 
-  /** State parsed from the newest sidecar in a root listing (legacy
-    * single-file sidecar read-compatibly; no sidecar = fresh lake). */
+  /** State decoded from the newest parseable sidecar in a root listing
+    * ([[Lake.stateFromListing]]). */
   private def readStateFrom(fs: org.apache.hadoop.fs.FileSystem,
       entries: Seq[org.apache.hadoop.fs.FileStatus]): LakeState = {
     // the listed newest version can be rotated out between the listing
@@ -5899,14 +5856,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     var es = entries
     var tries = 0
     while (true) {
-      val versions = metaVersionsFrom(es)
-      try {
-        return if (versions.nonEmpty)
-          parseState(readFully(fs, versions.maxBy(_._1)._2))
-        else es.find(s => s.isFile && s.getPath.getName == "_meta.json")
-          .map(s => parseState(readFully(fs, s.getPath)))
-          .getOrElse(LakeState(1L, Nil))
-      } catch {
+      try return stateFromListing(fs, cfg.location, es)
+      catch {
         case _: java.io.FileNotFoundException if tries < 3 =>
           tries += 1
           Thread.sleep(25L * tries)
@@ -5923,73 +5874,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private def readState(): LakeState = {
     val fs = fsOfRoot
     readStateFrom(fs, listRoot(fs))
-  }
-
-  private def parseState(json: String): LakeState = {
-    val gen = """"generation"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong).getOrElse(1L)
-    val live = """\[\s*"((?:[^"\\]|\\.)*)"\s*,\s*(\d+)\s*\]""".r
-      .findAllMatchIn(json)
-      .map(m => unescapeJson(m.group(1)) -> m.group(2).toLong).toSeq
-    // no fallback to this field's short-lived predecessor ("has_data",
-    // renamed same-round): its semantics included manifest entries, so
-    // treating it as generation-specific would FALSELY refuse legitimate
-    // manifest-only snapshots; absent field = no vacuumed-snapshot check
-    val genHasData = """"gen_has_data"\s*:\s*(true|false)""".r
-      .findFirstMatchIn(json).map(_.group(1) == "true")
-    val isSealed = """"sealed"\s*:\s*true""".r.findFirstIn(json).isDefined
-    // schema-evolution extras: each entry is one escaped
-    // "name<U+0001>catalog-ddl" string (the \u0001 separator survives
-    // escapeJson/unescapeJson and cannot appear in either part)
-    val extraCols = """"extra_cols"\s*:\s*\[([^\]]*)\]""".r
-      .findFirstMatchIn(json)
-      .map(m => """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
-        .map(e => unescapeJson(e.group(1)).split("\u0001", 2))
-        .collect { case Array(n, t) => n -> t }.toSeq)
-      .getOrElse(Nil)
-    val sidecarShards = """"num_shards"\s*:\s*(-?\d+)""".r
-      .findFirstMatchIn(json).map(_.group(1).toLong)
-    val lastUpdate = """"last_update"\s*:\s*"([^"]+)"""".r
-      .findFirstMatchIn(json).map(_.group(1))
-    // in-flight reshard: pending entries are {"d": dir, "g": gen}
-    // OBJECTS, deliberately shaped so the `live` pair-regex above can
-    // never absorb them (and vice versa)
-    val reshard = for {
-      from <- """"reshard_from"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(json).map(_.group(1).toLong)
-      to <- """"reshard_to"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(json).map(_.group(1).toLong)
-    } yield ReshardState(
-      java.lang.Long.numberOfTrailingZeros(from),
-      java.lang.Long.numberOfTrailingZeros(to),
-      """\{\s*"d"\s*:\s*"((?:[^"\\]|\\.)*)"\s*,\s*"g"\s*:\s*(\d+)\s*\}""".r
-        .findAllMatchIn(json)
-        .map(m => unescapeJson(m.group(1)) -> m.group(2).toLong).toSeq,
-      """"reshard_skip"\s*:\s*true""".r.findFirstIn(json).isDefined)
-    // FILE-level manifest entries: {"fd": dir, "fg": gen, "fn": "a;b",
-    // "fl": "1;2", "fm": "3;4"} objects — keys deliberately distinct
-    // from the reshard-pending {"d","g"} shape so neither regex can
-    // absorb the other, names/lengths/mods as ';'-joined strings so no
-    // nested array can collide with the `live` pair-regex above
-    val liveFiles: Map[(String, Long), Seq[LiveFile]] =
-      """\{\s*"fd"\s*:\s*"((?:[^"\\]|\\.)*)"\s*,\s*"fg"\s*:\s*(\d+)\s*,\s*"fn"\s*:\s*"([^"]*)"\s*,\s*"fl"\s*:\s*"([^"]*)"\s*,\s*"fm"\s*:\s*"([^"]*)"\s*\}""".r
-        .findAllMatchIn(json).flatMap { m =>
-          // a torn/hand-edited entry (mismatched arity, non-numeric
-          // length) is dropped, not thrown: absence just means the
-          // reader lists that directory
-          try {
-            def parts(s: String): Seq[String] =
-              if (s.isEmpty) Nil else s.split(";", -1).toSeq
-            val names = parts(m.group(3))
-            val lens = parts(m.group(4)).map(_.toLong)
-            val mods = parts(m.group(5)).map(_.toLong)
-            if (names.size != lens.size || names.size != mods.size) None
-            else Some((unescapeJson(m.group(1)) -> m.group(2).toLong) ->
-              names.indices.map(i => LiveFile(names(i), lens(i), mods(i))))
-          } catch { case _: NumberFormatException => None }
-        }.toMap
-    LakeState(gen, live, genHasData, isSealed, extraCols, sidecarShards,
-      reshard, lastUpdate, liveFiles)
   }
 
   /** Best-effort `last_update` stamp for the streaming path. The
@@ -6027,59 +5911,21 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val rootEntries = listRoot(fs)
     val versions = metaVersionsFrom(rootEntries)
     val latest = if (versions.isEmpty) 0L else versions.map(_._1).max
-    val pqField = cfg.pqCodebooks
-      .map(m => s""", "pq_fingerprint": "${m.fingerprint}"""").getOrElse("")
-    val seedField =
-      if (cfg.partitionKey.isEmpty) s""", "lsh_seed": ${cfg.seed}""" else ""
-    // self-description the SQL format needs to reconstruct THIS config
-    // (GraftDataSource.resolveConfig): whether rows carry the packed
-    // sign-bit column, and the user partition key's NAME (num_shards=-1
-    // already says "user-keyed" but not what the column is called)
-    val packField =
-      if (cfg.packSignBits) s""", "pack_sign_bits": true""" else ""
-    val partKeyField = cfg.partitionKey
-      .map(k => s""", "partition_key": "${escapeJson(k)}"""").getOrElse("") +
-      // ... and its TYPE: without it the SQL surface resolves a
-      // Scala-created IntegerType-keyed lake with the StringType
-      // default, and format reads / DML serve a string-typed key
-      // column diverging from the Scala API's
-      cfg.partitionKey.map(_ =>
-        s""", "partition_key_type": "${escapeJson(cfg.partitionKeyType.catalogString)}"""")
-        .getOrElse("")
-    val sealedField = if (sealedCommit) s""", "sealed": true""" else ""
-    val liveField = st.live
-      .map { case (d, g) => s"""["${escapeJson(d)}", $g]""" }
-      .mkString("[", ", ", "]")
     // gen_has_data: whether the CURRENT generation's tree held data at
     // commit time — readAt's loud-failure contract needs to tell
     // "snapshot of an empty/manifest-only lake" apart from "snapshot
     // whose own generation was vacuumed"
     val genHasData = treeHasData(fs, genPath(st.generation))
-    // schema-evolution extras ride EVERY commit (states are re-read
-    // before each writeState, so append stamps / seals / rewrites all
-    // carry them forward); absent field = no extras, full back-compat
-    val extraField =
-      if (st.extraCols.isEmpty) ""
-      else st.extraCols
-        .map { case (n, t) => s""""${escapeJson(n + "\u0001" + t)}"""" }
-        .mkString(""", "extra_cols": [""", ", ", "]")
     // declared routing width: mid-reshard states declare the TARGET
     // width (the transition commit is written by the pre-reshard
     // session, whose own lsh is still the narrow one); otherwise the
     // carried sidecar width and the writer's are equal by the
     // per-write guard, and fresh states fall back to the writer's
-    val numShardsField: Long =
+    val numShards: Long =
       if (cfg.partitionKey.isDefined) -1L
       else st.reshard.map(r => 1L << r.toBits)
         .orElse(st.sidecarShards.filter(_ > 0))
         .getOrElse(lsh.numShards.toLong)
-    val reshardField = st.reshard.map { r =>
-      val pend = r.pending
-        .map { case (d, g) => s"""{"d": "${escapeJson(d)}", "g": $g}""" }
-        .mkString("[", ", ", "]")
-      s""", "reshard_from": ${1L << r.fromBits}, "reshard_to": ${1L << r.toBits}, "reshard_pending": $pend""" +
-        (if (r.hadSkipIndex) s""", "reshard_skip": true""" else "")
-    }.getOrElse("")
     // FILE-level manifest (guide §6): record each live entry's data
     // files AT COMMIT TIME so reads plan with zero per-directory
     // listings. Committed (dir, generation) entries are immutable until
@@ -6093,39 +5939,28 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // invariant. An entry whose file names cannot ride the ';'-joined
     // encoding (foreign tooling) is simply not recorded — readers fall
     // back to listing that directory, never misread it.
-    val filesField: String = {
-      if (st.live.isEmpty) ""
+    val files: Seq[((String, Long), Seq[Lake.LiveFile])] =
+      if (st.live.isEmpty) Nil
       else {
         val prev: Map[(String, Long), Seq[Lake.LiveFile]] =
           if (st.liveFiles.nonEmpty) st.liveFiles
           else readStateFrom(fs, rootEntries).liveFiles
-        def safe(n: String): Boolean =
-          !n.contains(';') && !n.contains('"') && !n.contains('\\') &&
-            n.forall(_ >= ' ')
         // CURRENT-generation entries are excluded: that tree is
         // live-by-rule (appends land there without a commit), so a
         // recorded list would go stale the moment one lands — readers
         // list it, always
-        val recorded = st.live.distinct.filter(_._2 != st.generation)
-          .flatMap { case e @ (d, g) =>
+        st.live.distinct.filter(_._2 != st.generation).flatMap { case e @ (d, g) =>
           val files = prev.get(e).orElse {
             try Some(dataFilesIn(fs, new org.apache.hadoop.fs.Path(genPath(g), d))
               .map(s => Lake.LiveFile(s.getPath.getName, s.getLen,
                 s.getModificationTime)))
             catch { case _: java.io.FileNotFoundException => None }
           }
-          files.filter(_.forall(f => safe(f.name))).map(e -> _)
+          files.filter(ControlFiles.FileEntry.recordable).map(e -> _)
         }
-        if (recorded.isEmpty) ""
-        else recorded.map { case ((d, g), fl) =>
-          s"""{"fd": "${escapeJson(d)}", "fg": $g, """ +
-            s""""fn": "${fl.map(_.name).mkString(";")}", """ +
-            s""""fl": "${fl.map(_.len).mkString(";")}", """ +
-            s""""fm": "${fl.map(_.mod).mkString(";")}"}"""
-        }.mkString(""", "files": [""", ", ", "]")
       }
-    }
-    val json = s"""{"last_update": "${java.time.Instant.now()}", "dim": ${cfg.dim}, "metric": "${cfg.metric}", "num_shards": $numShardsField$seedField$pqField$packField$partKeyField$sealedField$extraField$reshardField$filesField, "generation": ${st.generation}, "live": $liveField, "gen_has_data": $genHasData}"""
+    val json = ControlFiles.encode(ControlFiles.LakeSidecar.of(
+      st, cfg, numShards, sealedCommit, genHasData, files))
     // ATOMIC publish: the body lands in a root-sibling tmp (a name no
     // discovery regex matches) and is RENAMED into its version name.
     // A create-in-place briefly exposes an EMPTY `_meta.<v>.json`
@@ -6194,7 +6029,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     versions.filter(_._1 < v - keptMetaVersions)
       .filterNot { case (ver, p) =>
         sealedCache.getOrElseUpdate(ver,
-          try parseState(readFully(fs, p)).isSealed
+          try stateOfSidecar(fs, p).isSealed
           catch { case scala.util.control.NonFatal(_) => true }) }
       .foreach(p => fs.delete(p._2, false))
     // stranded publish bodies (a JVM that died between staging and
@@ -6216,19 +6051,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private val sealedCache =
     scala.collection.concurrent.TrieMap.empty[Long, Boolean]
 
-  private def readMetaSidecar(): Option[String] = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val versions = metaVersionsFrom(entries)
-    val p =
-      if (versions.nonEmpty) Some(versions.maxBy(_._1)._2)
-      else // pre-v2 single-file sidecar, read-only compatibility
-        entries.find(s => s.isFile && s.getPath.getName == "_meta.json")
-          .map(_.getPath)
-    p.map(readFully(fs, _))
-  }
-
-
   /** Stored `shard` values are only meaningful under the hyperplanes
     * that routed them — the routing analog of the PQ/IVF fingerprint
     * contract. A session configured with a different `numHashes` or
@@ -6237,22 +6059,35 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * returns wrong neighbors with no error, and ingest appends rows
     * whose shard disagrees with every stored row's. The sidecar records
     * (dim, num_shards, lsh_seed); any read or write under a mismatched
-    * config fails loudly here. Checked once per Lake instance (lazy) —
-    * pre-seed sidecars (no lsh_seed field) check what they carry. */
-  private def jsonLongField(json: String, name: String): Option[Long] =
-    (s""""$name"\\s*:\\s*(-?\\d+)""").r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
+    * config fails loudly here, checked against the state the operation
+    * already decoded (zero extra I/O) — pre-seed sidecars (no lsh_seed
+    * field) check what they carry. */
+  private def requireRouting(st: LakeState): Unit =
+    st.config.foreach { c =>
+      c.dim.foreach(d => require(d == cfg.dim,
+        s"lake at ${cfg.location} stores $d-dim vectors but this session " +
+          s"is configured for ${cfg.dim}"))
+      if (cfg.partitionKey.isEmpty) {
+        st.sidecarShards.filter(_ != -1L).foreach(ns =>
+          require(ns == lsh.numShards,
+            s"lake at ${cfg.location} was routed into $ns LSH shards but " +
+              s"this session's config routes into ${lsh.numShards} " +
+              s"(numHashes mismatch) — pruned queries would scan the wrong " +
+              "directory; construct the Lake with the writer's config"))
+        c.lshSeed.foreach(s => require(s == cfg.seed,
+          s"lake at ${cfg.location} was routed with LSH seed $s but this " +
+            s"session's config uses seed ${cfg.seed} — same shard count, " +
+            "different hyperplanes; construct the Lake with the writer's config"))
+      }
+    }
 
   /** Per-OPERATION routing-width check against a state already in
-    * hand — zero extra I/O. [[routingChecked]] is once-per-instance
-    * (lazy): it cannot catch a Lake instance whose lake was RESHARDED
-    * underneath it by another session after construction, and such a
-    * stale instance would prune the wrong directory on reads or
-    * append mis-routed rows. Reads check here per [[readFrom]] call
-    * (the state read was already paid); writes check inside
-    * [[requireWriteConfigMatch]] (the sidecar read was already paid)
-    * and again in [[writeAppend]] under the append gate (closing the
-    * check-then-act window against a racing reshard transition). */
+    * hand — zero extra I/O: a Lake instance whose lake was RESHARDED
+    * underneath it by another session after construction would prune
+    * the wrong directory on reads or append mis-routed rows. Writes
+    * check inside [[requireWriteConfigMatch]] and again in
+    * [[writeAppend]] under the append gate (closing the check-then-act
+    * window against a racing reshard transition). */
   private def requireStateWidth(st: LakeState, op: String): Unit =
     if (cfg.partitionKey.isEmpty)
       st.sidecarShards.filter(_ > 0).foreach(ns => require(
@@ -6280,26 +6115,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           "and is interruptible")
     }
 
-  private lazy val routingChecked: Unit =
-    readMetaSidecar().foreach { json =>
-      def longField(name: String): Option[Long] = jsonLongField(json, name)
-      longField("dim").foreach(d => require(d == cfg.dim,
-        s"lake at ${cfg.location} stores $d-dim vectors but this session " +
-          s"is configured for ${cfg.dim}"))
-      if (cfg.partitionKey.isEmpty) {
-        longField("num_shards").filter(_ != -1L).foreach(ns =>
-          require(ns == lsh.numShards,
-            s"lake at ${cfg.location} was routed into $ns LSH shards but " +
-              s"this session's config routes into ${lsh.numShards} " +
-              s"(numHashes mismatch) — pruned queries would scan the wrong " +
-              "directory; construct the Lake with the writer's config"))
-        longField("lsh_seed").foreach(s => require(s == cfg.seed,
-          s"lake at ${cfg.location} was routed with LSH seed $s but this " +
-            s"session's config uses seed ${cfg.seed} — same shard count, " +
-            "different hyperplanes; construct the Lake with the writer's config"))
-      }
-    }
-
   /** `pq_code` rows are only meaningful under the codebooks that wrote
     * them — previously a doc-comment contract on
     * [[LakeConfig.pqCodebooks]], now enforced: the sidecar records the
@@ -6307,30 +6122,22 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * DIFFERENT model fails loudly here instead of silently mixing
     * incompatible codes (which corrupts topKPq with no error). A
     * pre-fingerprint sidecar (no field) is accepted and stamped on the
-    * next write. */
-  private def requirePqModelMatch(): Unit =
-    pqFingerprintMatch(if (cfg.pqCodebooks.isDefined) readMetaSidecar() else None)
-
-  /** Fingerprint equality when BOTH sides carry one — shared by the
-    * read guard ([[requirePqModelMatch]], which pays the sidecar read
-    * only for PQ sessions) and the write guard (which already holds
-    * the sidecar body — no second read, G4). */
-  private def pqFingerprintMatch(json: Option[String]): Unit =
-    cfg.pqCodebooks.foreach { m =>
-      for {
-        j <- json
-        found <- """"pq_fingerprint"\s*:\s*"([0-9a-f]+)"""".r
-          .findFirstMatchIn(j).map(_.group(1))
-      } require(found == m.fingerprint,
-        s"lake at ${cfg.location} stores pq_code under codebook fingerprint " +
-          s"$found but this session's model fingerprints ${m.fingerprint}; " +
-          "mixing codes from different trainings silently corrupts topKPq — " +
-          "construct the Lake with the model that first wrote it")
-    }
+    * next write. Shared by the read guard (which pays the state read
+    * only for PQ sessions) and the write guards. */
+  private def pqFingerprintMatch(st: LakeState): Unit =
+    for {
+      m <- cfg.pqCodebooks
+      c <- st.config
+      found <- c.pqFingerprint
+    } require(found == m.fingerprint,
+      s"lake at ${cfg.location} stores pq_code under codebook fingerprint " +
+        s"$found but this session's model fingerprints ${m.fingerprint}; " +
+        "mixing codes from different trainings silently corrupts topKPq — " +
+        "construct the Lake with the model that first wrote it")
 
   /** WRITE-side config guard: the session's compression config and the
     * sidecar's recorded one must agree IN BOTH DIRECTIONS before any
-    * write or rewrite — one sidecar read covers every check.
+    * write or rewrite — one state read covers every check.
     *
     *  - Session LACKS a compression the sidecar declares: refuse —
     *    [[withDerived]] would append rows WITHOUT `pq_code`/`packed`
@@ -6351,28 +6158,23 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     *
     * READS stay open under any config — `pq_code`/`packed` are plain
     * columns to a plain read. */
-  private def requireWriteConfigMatch(): Unit = {
-    val json = readMetaSidecar()
-    requireNoLesserConfig(json)
-    json.foreach { j =>
+  private def requireWriteConfigMatch(st: LakeState = readState()): Unit = {
+    requireNoLesserConfig(st)
+    st.config.foreach { c =>
       // routing width, per WRITE (not just per instance): a stale
       // session writing at the pre-reshard width would append
       // mis-routed rows or stamp the old width back over the sidecar
       if (cfg.partitionKey.isEmpty)
-        jsonLongField(j, "num_shards").filter(_ > 0).foreach(ns =>
+        st.sidecarShards.filter(_ > 0).foreach(ns =>
           require(ns == lsh.numShards,
             s"write at ${cfg.location} refused: the lake is routed " +
               s"into $ns LSH shards but this session writes at " +
               s"${lsh.numShards} — it was likely resharded after this " +
               "Lake instance was constructed; build a fresh Lake at " +
               "the sidecar's width"))
-      val sidecarPq =
-        """"pq_fingerprint"\s*:\s*"[0-9a-f]+"""".r.findFirstIn(j).isDefined
-      val sidecarPacked =
-        """"pack_sign_bits"\s*:\s*true""".r.findFirstIn(j).isDefined
       val upgrades =
-        (if (cfg.pqCodebooks.isDefined && !sidecarPq) Seq("pqCodebooks") else Nil) ++
-          (if (cfg.packSignBits && !sidecarPacked) Seq("packSignBits") else Nil)
+        (if (cfg.pqCodebooks.isDefined && c.pqFingerprint.isEmpty) Seq("pqCodebooks") else Nil) ++
+          (if (cfg.packSignBits && !c.packSignBits) Seq("packSignBits") else Nil)
       // check-then-act residual: two CONCURRENT first writes under the
       // shared append gate (one plain, one upgraded) can both see an
       // empty lake here and both land — whichever sidecar version wins
@@ -6398,14 +6200,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * declares a compression this session's config lacks) — what
     * [[bootstrap]] checks, since bootstrap is itself the documented
     * upgrade path and must not trip the upgrade refusal. */
-  private def requireNoLesserConfig(json: Option[String]): Unit = {
-    pqFingerprintMatch(json)
-    json.foreach { j =>
-      val sidecarPq =
-        """"pq_fingerprint"\s*:\s*"[0-9a-f]+"""".r.findFirstIn(j).isDefined
-      val sidecarPacked =
-        """"pack_sign_bits"\s*:\s*true""".r.findFirstIn(j).isDefined
-      if (cfg.pqCodebooks.isEmpty && sidecarPq)
+  private def requireNoLesserConfig(st: LakeState): Unit = {
+    pqFingerprintMatch(st)
+    st.config.foreach { c =>
+      if (cfg.pqCodebooks.isEmpty && c.pqFingerprint.isDefined)
         throw new IllegalArgumentException(
           s"lake at ${cfg.location} stores pq_code (the sidecar records a " +
             "codebook fingerprint) but this session has no pqCodebooks — " +
@@ -6413,7 +6211,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
             "silently corrupt topKPq. Construct the Lake (or pass options) " +
             "with the lake's model; SQL-surface writes to PQ lakes need " +
             "the Scala session that holds it.")
-      if (!cfg.packSignBits && sidecarPacked)
+      if (!cfg.packSignBits && c.packSignBits)
         throw new IllegalArgumentException(
           s"lake at ${cfg.location} stores the packed sign-bit column but " +
             "this session has packSignBits=false — writing would " +
@@ -6424,57 +6222,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
 }
 
 object Lake {
-  /** The ONE short-read-safe control-file reader (class Lake, the
-    * DSv2 provider, and DerivedTable all read sidecar-sized files
-    * through it — a short-read fix must land once). */
-  private[graft] def readControlFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, "UTF-8")
-    } finally in.close()
-  }
-
-  private[graft] def escapeJson(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private[graft] def unescapeJson(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case e => sb.append(e); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Escape-aware named string field over sidecar JSON — the ONE
-    * correct way to read back a string the writer passed through
-    * [[escapeJson]]: a naive `[^"]*` capture stops at an escaped quote
-    * and resolves a corrupted value. Any new string field added to the
-    * sidecar must be read through this (array-shaped fields like
-    * `live`/`extra_cols` carry the same escape-aware element pattern
-    * inline). */
-  private[graft] def escapedStrField(json: String, name: String): Option[String] =
-    (s""""${java.util.regex.Pattern.quote(name)}"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r
-      .findFirstMatchIn(json).map(m => unescapeJson(m.group(1)))
-
   /** Writer-lock marker file name, under the lake root. Underscore
     * prefix keeps it out of Spark's file index (never read as data). */
   private[graft] val lockName: String = "_lock"
@@ -6654,6 +6401,11 @@ object Lake {
       fromBits: Int, toBits: Int, pending: Seq[(String, Long)],
       hadSkipIndex: Boolean = false)
 
+  /** What the `graft` DSv2 format scans ([[Lake.formatScan]]). */
+  private[graft] final case class FormatScan(
+      roots: Seq[(String, Option[String])],
+      rootFiles: Map[String, Seq[LiveFile]], schema: StructType)
+
   /** One data file of a live manifest entry, as recorded in the
     * sidecar at commit time (name is directory-relative; len/mod are
     * the exact [[org.apache.hadoop.fs.FileStatus]] values a listing
@@ -6679,7 +6431,9 @@ object Lake {
     * safely) fall back to listing; presence is an optimization, never
     * a semantics change, because a committed (dir, generation) entry
     * is immutable until vacuum retires it wholesale — the same
-    * invariant the listing read already relied on. */
+    * invariant the listing read already relied on. `config` is the
+    * writer config the sidecar recorded — Some exactly when the state
+    * was decoded from a sidecar (fresh constructions carry None). */
   private[graft] final case class LakeState(
       generation: Long, live: Seq[(String, Long)],
       genHasData: Option[Boolean] = None,
@@ -6688,7 +6442,17 @@ object Lake {
       sidecarShards: Option[Long] = None,
       reshard: Option[ReshardState] = None,
       lastUpdate: Option[String] = None,
-      liveFiles: Map[(String, Long), Seq[LiveFile]] = Map.empty)
+      liveFiles: Map[(String, Long), Seq[LiveFile]] = Map.empty,
+      config: Option[SidecarConfig] = None)
+
+  /** The writer config a sidecar records beside the live set: what
+    * routing/compression guards check a session against and what the
+    * SQL format resolves a lake's config from. Each field is None when
+    * the sidecar predates it. */
+  private[graft] final case class SidecarConfig(
+      dim: Option[Long], metric: Option[String], lshSeed: Option[Long],
+      pqFingerprint: Option[String], packSignBits: Boolean,
+      partitionKey: Option[String], partitionKeyType: Option[String])
 
   /** Generation subtree directory names under the root. */
   private[graft] val genDirRe = "gen-(\\d+)".r
@@ -6697,6 +6461,34 @@ object Lake {
     * each commit is an atomic CREATE of a new version, never an
     * in-place overwrite a reader could catch half-written. */
   private[graft] val metaNameRe = "_meta\\.(\\d+)\\.json".r
+
+  /** (version, path) of every sidecar version in a root listing. */
+  private[graft] def metaVersionsFrom(entries: Seq[org.apache.hadoop.fs.FileStatus])
+      : Seq[(Long, org.apache.hadoop.fs.Path)] =
+    entries.flatMap { s =>
+      s.getPath.getName match {
+        case metaNameRe(v) if s.isFile => Some(v.toLong -> s.getPath)
+        case _ => None
+      }
+    }
+
+  /** The state a root listing of `location` names: the newest
+    * parseable `_meta.<v>.json` (a torn newest falls back to the one
+    * before it, logged; none parseable fails loudly), else the pre-v2
+    * single-file `_meta.json`, else a fresh lake. A listed version
+    * rotated out before its read surfaces as FileNotFoundException. */
+  private[graft] def stateFromListing(fs: org.apache.hadoop.fs.FileSystem,
+      location: String, entries: Seq[org.apache.hadoop.fs.FileStatus]): LakeState =
+    ControlFiles.newestParseable[ControlFiles.LakeSidecar, LakeState](fs,
+      metaVersionsFrom(entries), s"lake at $location")(_.toState).map(_._2)
+      .orElse(entries.find(s => s.isFile && s.getPath.getName == "_meta.json")
+        .map(s => stateOfSidecar(fs, s.getPath)))
+      .getOrElse(LakeState(1L, Nil))
+
+  /** The state one sidecar version recorded. */
+  private[graft] def stateOfSidecar(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): LakeState =
+    ControlFiles.read[ControlFiles.LakeSidecar](fs, p).toState
 
   /** Superseded sidecar versions kept for in-flight readers that
     * listed the root just before a commit; older ones are swept. */

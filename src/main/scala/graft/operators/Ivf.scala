@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ControlFiles
 import graft.functions.{VectorFunctions => V}
 
 /** IVF (inverted-file) approximate nearest neighbor — the
@@ -154,29 +155,24 @@ object Ivf {
         } yield (i, p, x)
         rows.toDF("cell", "pos", "value")
           .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-        val out = fs.create(metaPath(dir), true)
-        out.write(
-          s"""{"k": ${model.k}, "dim": ${model.dim}, "fingerprint": "${model.fingerprint}"}"""
-            .getBytes("UTF-8"))
-        out.close()
+        ControlFiles.write(fs, metaPath(dir),
+          ControlFiles.IvfMeta(model.k, model.dim, model.fingerprint), overwrite = true)
     }
   }
 
+  /** The stored fingerprint, None when no model is saved. A meta file
+    * that does not decode fails loudly: reading it as "no model" would
+    * retrain and overwrite the centroids stored rows were assigned by. */
   private def savedFingerprint(spark: org.apache.spark.sql.SparkSession,
       dir: String): Option[String] = {
     val p = metaPath(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        """"fingerprint"\s*:\s*"([0-9a-f]+)"""".r
-          .findFirstMatchIn(new String(bytes.toByteArray, "UTF-8")).map(_.group(1))
-      } finally in.close()
+      val fp = ControlFiles.read[ControlFiles.IvfMeta](fs, p).fingerprint
+      if (fp == null) throw new ControlFiles.Unparseable(
+        s"IVF model meta $p has no fingerprint", null)
+      Some(fp)
     }
   }
 

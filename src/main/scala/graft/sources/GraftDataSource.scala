@@ -4,7 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.StreamSinkProvider
@@ -266,9 +266,15 @@ object GraftDataSource {
     }
   }
 
-  /** Newest `_meta.<v>.json` (or the pre-v2 `_meta.json`) body at
-    * `location`, read directly — the provider cannot construct a Lake
-    * before it knows `dim`, and the sidecar is where `dim` lives.
+  /** What one listing of a location's root resolved: the listing
+    * itself and the newest parseable sidecar DECODED — a lake's
+    * `_meta.<v>.json` (or the pre-v2 `_meta.json`) as `Right`, a
+    * [[graft.DerivedTable]]'s `_derived.<v>.json` as `Left` (a lake
+    * sidecar wins if both somehow exist — a lake location can never
+    * legitimately grow a derived sidecar, and the lake is the
+    * self-describing one). The provider cannot construct a Lake before
+    * it knows `dim`, and the sidecar is where `dim` lives; every later
+    * step of a table load reads this one decoded state.
     *
     * BOUNDED RETRY around the listing+read: a directory listing under
     * concurrent churn is not a snapshot — concurrent appends stamp and
@@ -279,32 +285,24 @@ object GraftDataSource {
     * opens it. At least one version file exists at every instant once
     * the lake exists, so a miss is transient by construction: re-list
     * a few times before concluding the lake has no sidecar. */
-  private def sidecarJson(spark: SparkSession, location: String): Option[String] =
-    rootSidecar(spark, location).collect { case (false, json) => json }
+  private final case class RootState(entries: Seq[FileStatus],
+      sidecar: Option[Either[graft.DerivedTable.State, Lake.LakeState]]) {
+    def lake: Option[Lake.LakeState] = sidecar.flatMap(_.toOption)
+  }
 
-  /** The location's newest sidecar from ONE root listing, tagged:
-    * `(false, json)` = a lake's `_meta.<v>.json`, `(true, json)` = a
-    * [[graft.DerivedTable]]'s `_derived.<v>.json` (a lake sidecar wins
-    * if both somehow exist — a lake location can never legitimately
-    * grow a derived sidecar, and the lake is the self-describing one).
-    * Shared by lake resolution and derived-table resolution so a
-    * derived read costs the same single listing as a lake read. */
-  private def rootSidecar(spark: SparkSession,
-      location: String): Option[(Boolean, String)] = {
+  private def rootSidecar(spark: SparkSession, location: String): RootState = {
     val root = new Path(location)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versioned = """_meta\.(\d+)\.json""".r
-    val derivedVersioned = """_derived\.(\d+)\.json""".r
-    // Left(retryable) — the directory HAS entries but no visible
-    // sidecar (the readdir-race signature: a lake with any content
-    // always has one) or the listed newest version vanished before the
-    // read; Right(answer) — a definitive yes/no (missing or empty root
-    // = a genuinely fresh location, answered immediately so the
-    // empty-lake bootstrap path never pays a retry).
-    def attempt(): Either[Unit, Option[(Boolean, String)]] = {
-      if (!fs.exists(root)) return Right(None)
-      val all = fs.listStatus(root)
-      if (all.isEmpty) return Right(None)
+    // Left(listing) — retryable: the directory HAS entries but no
+    // visible sidecar (the readdir-race signature: a lake with any
+    // content always has one) or the listed newest version vanished
+    // before the read; Right(answer) — a definitive yes/no (missing or
+    // empty root = a genuinely fresh location, answered immediately so
+    // the empty-lake bootstrap path never pays a retry).
+    def attempt(): Either[Seq[FileStatus], RootState] = {
+      if (!fs.exists(root)) return Right(RootState(Nil, None))
+      val all = fs.listStatus(root).toSeq
+      if (all.isEmpty) return Right(RootState(Nil, None))
       // LAKE-SHAPED data marks the race signature: a generation tree,
       // or root-level data (`key=value` dirs / bare parquet — an
       // adopted flat lake mid-sidecar-rotation looks exactly like
@@ -319,47 +317,35 @@ object GraftDataSource {
             s.getPath.getName.contains("="))) ||
           (s.isFile && s.getPath.getName.endsWith(".parquet"))
       }
-      val entries = all.filter(_.isFile)
-      val lakePath = entries.flatMap(s => s.getPath.getName match {
-        case versioned(v) => Some(v.toLong -> s.getPath)
-        case _ => None
-      }).sortBy(_._1).lastOption.map(_._2)
-        .orElse(entries.find(_.getPath.getName == "_meta.json").map(_.getPath))
-      val p = lakePath.map(_ -> false).orElse(
-        entries.flatMap(s => s.getPath.getName match {
-          case derivedVersioned(v) => Some(v.toLong -> s.getPath)
-          case _ => None
-        }).sortBy(_._1).lastOption.map(_._2 -> true))
-      p match {
-        case None => if (hasGenDir) Left(()) else Right(None)
-        case Some((path, derived)) =>
-          try Right(Some(derived -> graft.Lake.readControlFile(fs, path)))
-          catch {
-            // rotated out between list and read — a rival committed a
-            // newer version; re-list
-            case _: java.io.FileNotFoundException => Left(())
-          }
+      val hasLake = Lake.metaVersionsFrom(all).nonEmpty ||
+        all.exists(s => s.isFile && s.getPath.getName == "_meta.json")
+      val derived = graft.DerivedTable.versionsIn(all)
+      try {
+        if (hasLake)
+          Right(RootState(all, Some(Right(Lake.stateFromListing(fs, location, all)))))
+        else if (derived.nonEmpty)
+          Right(RootState(all, graft.DerivedTable.newestState(fs, location, derived)
+            .map(Left(_))))
+        else if (hasGenDir) Left(all)
+        else Right(RootState(all, None))
+      } catch {
+        // rotated out between list and read — a rival committed a
+        // newer version; re-list
+        case _: java.io.FileNotFoundException => Left(all)
       }
     }
     var tries = 0
     while (true) {
       attempt() match {
         case Right(r) => return r
-        case Left(_) if tries >= 3 => return None
+        case Left(all) if tries >= 3 => return RootState(all, None)
         case Left(_) =>
           tries += 1
           Thread.sleep(25L * tries)
       }
     }
-    None
+    RootState(Nil, None)
   }
-
-  private def longField(json: String, name: String): Option[Long] =
-    (s""""$name"\\s*:\\s*(-?\\d+)""").r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-  private def strField(json: String, name: String): Option[String] =
-    (s""""$name"\\s*:\\s*"([^"]*)"""").r.findFirstMatchIn(json)
-      .map(_.group(1))
 
   /** One escaped `key=value` dir name (or None for unpartitioned
     * legacy files) → the partition column's INTERNAL value. Decoding
@@ -394,7 +380,7 @@ object GraftDataSource {
   private[graft] def resolveConfig(spark: SparkSession,
       options: CaseInsensitiveStringMap): LakeConfig = {
     val location = locationOf(options)
-    resolveConfigWith(spark, options, location, sidecarJson(spark, location))
+    resolveConfigWith(options, location, rootSidecar(spark, location).lake)
   }
 
   private def locationOf(options: CaseInsensitiveStringMap): String =
@@ -403,21 +389,21 @@ object GraftDataSource {
         "graft format needs a path: spark.read.format(\"graft\").load(path) " +
           "or CREATE TABLE ... USING graft LOCATION '...'"))
 
-  /** [[resolveConfig]] with the sidecar already in hand — [[makeTable]]
-    * resolves the root ONCE (lake or derived) and passes the lake json
-    * through, so table resolution never pays a second listing. */
-  private def resolveConfigWith(spark: SparkSession,
-      options: CaseInsensitiveStringMap, location: String,
-      json: Option[String]): LakeConfig = {
+  /** [[resolveConfig]] with the state already decoded — [[makeTable]]
+    * resolves the root ONCE (lake or derived) and passes the lake
+    * state through, so table resolution never pays a second read. */
+  private def resolveConfigWith(options: CaseInsensitiveStringMap,
+      location: String, st: Option[Lake.LakeState]): LakeConfig = {
+    val sc = st.flatMap(_.config)
     val dim = opt(options, "dim").map(_.toInt)
-      .orElse(json.flatMap(longField(_, "dim")).map(_.toInt))
+      .orElse(sc.flatMap(_.dim).map(_.toInt))
       .getOrElse(throw new IllegalArgumentException(
         s"graft format at $location: no lake sidecar found and no 'dim' " +
           "option given — is this a graft lake location?"))
     // num_shards = 1 << numHashes for LSH-routed lakes; -1 marks a
     // user-keyed lake (partition key name not in the sidecar — pass
     // option 'partitionKey' if the lake is empty and the name matters)
-    val sidecarShards = json.flatMap(longField(_, "num_shards"))
+    val sidecarShards = st.flatMap(_.sidecarShards)
     val userKeyed = sidecarShards.contains(-1L)
     val numHashes = opt(options, "numHashes").map(_.toInt)
       .orElse(sidecarShards.filter(_ > 0)
@@ -428,16 +414,13 @@ object GraftDataSource {
       dim = dim,
       numHashes = numHashes,
       metric = opt(options, "metric")
-        .orElse(json.flatMap(strField(_, "metric"))).getOrElse("cosine"),
+        .orElse(sc.flatMap(_.metric)).getOrElse("cosine"),
       seed = opt(options, "seed").map(_.toLong)
-        .orElse(json.flatMap(longField(_, "lsh_seed"))).getOrElse(42L),
+        .orElse(sc.flatMap(_.lshSeed)).getOrElse(42L),
       partitionKey = opt(options, "partitionKey")
-        // the sidecar records the user partition key's NAME (round 10),
-        // json-ESCAPED by the writer — read it back escape-aware
-        // (Lake.escapedStrField; a plain [^"]* capture stops at an
-        // escaped quote and resolves a corrupted column name);
+        // the sidecar records the user partition key's NAME (round 10);
         // pre-recording sidecars fall back to the legacy "key" guess
-        .orElse(json.flatMap(Lake.escapedStrField(_, "partition_key")))
+        .orElse(sc.flatMap(_.partitionKey))
         .orElse(if (userKeyed) Some("key") else None),
       partitionKeyType = opt(options, "partitionKeyType")
         // the sidecar records the key's TYPE too (round 11): a
@@ -446,12 +429,11 @@ object GraftDataSource {
         // and DML would serve a string-typed key column diverging
         // from the Scala API's. Pre-recording sidecars keep the
         // default, same back-compat posture as partition_key.
-        .orElse(json.flatMap(Lake.escapedStrField(_, "partition_key_type")))
+        .orElse(sc.flatMap(_.partitionKeyType))
         .map(org.apache.spark.sql.types.DataType.fromDDL)
         .getOrElse(org.apache.spark.sql.types.StringType),
       packSignBits = opt(options, "packSignBits").map(_.toBoolean)
-        .getOrElse(json.exists(
-          """"pack_sign_bits"\s*:\s*true""".r.findFirstIn(_).isDefined)))
+        .getOrElse(sc.exists(_.packSignBits)))
   }
 
   /** Resolve options + sidecar into the lake and its scan roots, and
@@ -474,12 +456,12 @@ object GraftDataSource {
   private[sources] def makeTable(options: CaseInsensitiveStringMap): Table = {
     val spark = SparkSession.active
     val location = locationOf(options)
-    val sidecar = rootSidecar(spark, location)
-    sidecar match {
+    val resolved = rootSidecar(spark, location)
+    resolved.sidecar match {
       // a Lake.deriveTo feature table: read-only, pinned schema, SPJ
       // opt-in — the lake verbs (write, DML, views, time travel) have
       // no meaning over a projection
-      case Some((true, json)) =>
+      case Some(Left(st)) =>
         // lake verbs must REFUSE here, not silently no-op: an ignored
         // asOf would serve the LATEST derived snapshot as if it were
         // the pinned one — the catalog already refuses time travel on
@@ -490,15 +472,6 @@ object GraftDataSource {
               "derived feature table — a read-only projection with no " +
               "version history of its own (re-derive with Lake.deriveTo " +
               "instead)")))
-        // torn-newest fallback: a crash between the sidecar's create
-        // and write leaves an unparseable newest version — fall back
-        // through DerivedTable.load, which walks to the newest
-        // PARSEABLE commit (one extra listing, only on the torn path)
-        val st =
-          try graft.DerivedTable.parse(json, location)
-          catch { case scala.util.control.NonFatal(_) =>
-            graft.DerivedTable.load(spark, location).state
-          }
         val pinned = StructType.fromDDL(st.schemaDdl)
         val partField = pinned.fields.last
         val roots = st.live.map(rel =>
@@ -512,8 +485,7 @@ object GraftDataSource {
           options, roots, partField, pinned, rootFiles)
       case _ => ()
     }
-    val cfg = resolveConfigWith(spark, options, location,
-      sidecar.collect { case (false, json) => json })
+    val cfg = resolveConfigWith(options, location, resolved.lake)
     val lake = Lake(spark, cfg)
     opt(options, "view").foreach { v =>
       val df = v match {
@@ -527,13 +499,13 @@ object GraftDataSource {
       return new GraftViewTable(s"graft:$location#$v", df)
     }
     val asOf = opt(options, "asOf").map(_.toLong)
-    val roots = lake.scanRoots(asOf)
-    val rootFiles = lake.scanRootFiles(asOf)
-    val canonical = lake.canonicalSchema
+    val scan = lake.formatScan(resolved.entries,
+      resolved.lake.getOrElse(Lake.LakeState(1L, Nil)), asOf)
+    val canonical = scan.schema
     val partField = canonical.fields.last
     new GraftTable(
       s"graft:$location" + asOf.map(v => s"@$v").getOrElse(""),
-      spark, options, cfg, asOf, roots, rootFiles, partField,
+      spark, options, cfg, asOf, scan.roots, scan.rootFiles, partField,
       // the table's schema is PINNED to the sidecar-declared one
       // (stored columns + registered evolve() extras + partition col),
       // never footer-inferred: a column registered by evolve() but not

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.Row
 
+import graft.ControlFiles
+
 /** INCREMENTAL MATERIALIZED AGGREGATES over the lake's change feed —
   * the downstream half of the `graft-changes` subscription story: a
   * consumer that keeps a grouped aggregate table continuously correct
@@ -363,49 +365,28 @@ object IncrementalAgg {
     })
   }
 
-  private def readPointerFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Pointer = {
-    val in = fs.open(p)
-    val json = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](4096)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
-    parsePointer(json)
+  /** A pointer file's committed (batch id, owners). The `complete`
+    * sentinel is written LAST: a truncated pointer (torn copy+delete
+    * rename, short write) lacks it and is REJECTED here instead of
+    * decoding as a smaller-but-plausible owners map — which would
+    * silently drop buckets' accumulated state. */
+  private def pointerOf(ptr: ControlFiles.StatePointer): Pointer = {
+    if (!ptr.complete || ptr.batchId.isEmpty)
+      throw new ControlFiles.Unparseable(s"truncated state pointer $ptr", null)
+    Pointer(ptr.batchId.get, ptr.owners)
   }
 
   /** Newest PARSEABLE pointer (version, parsed) still on disk. A
     * corrupt newest file (a crash mid-commit on a store whose rename is
-    * copy+delete) falls back to the next older pointer — the state
-    * resumes from the last good commit and the interrupted batch simply
-    * replays ([[commitPointer]]'s `complete` sentinel rejects any
-    * truncated body, so a partial owners map can never parse as
-    * smaller-but-valid). */
+    * copy+delete) falls back to the next older pointer, logged — the
+    * state resumes from the last good commit and the interrupted batch
+    * simply replays. No parseable pointer at all fails loudly. */
   private def currentPointer(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Option[(Long, Pointer)] =
-    pointerFiles(fs, root).sortBy(-_._1).view.flatMap { case (v, p) =>
-      try Some((v, readPointerFile(fs, p)))
-      catch { case scala.util.control.NonFatal(_) => None }
-    }.headOption
+    ControlFiles.newestParseable[ControlFiles.StatePointer, Pointer](fs,
+      pointerFiles(fs, root), s"incremental state at $root")(pointerOf)
 
   private final case class Pointer(batchId: Long, owners: Map[Int, Long])
-
-  private def parsePointer(json: String): Pointer = {
-    // the `complete` sentinel is written LAST: a truncated pointer (torn
-    // copy+delete rename, short write) is missing it and is REJECTED
-    // here instead of parsing as a smaller-but-plausible owners map —
-    // which would silently drop buckets' accumulated state
-    if (""""complete"\s*:\s*true""".r.findFirstIn(json).isEmpty)
-      throw new java.io.IOException(s"truncated state pointer: $json")
-    val batchId = """"batch_id"\s*:\s*(-?[0-9]+)""".r
-      .findFirstMatchIn(json).map(_.group(1).toLong)
-      .getOrElse(throw new java.io.IOException(s"bad state pointer: $json"))
-    val owners = """"([0-9]+)"\s*:\s*([0-9]+)""".r.findAllMatchIn(json)
-      .map(m => m.group(1).toInt -> m.group(2).toLong).toMap
-    Pointer(batchId, owners)
-  }
 
   /** Commit pointer version = prev+1, written to a uniquely-named tmp
     * and RENAMED into place — the create/write/close window can no
@@ -420,19 +401,15 @@ object IncrementalAgg {
       owners: Map[Int, Long], batchId: Long,
       reassigned: Map[Int, Long] = Map.empty): Unit = {
     fs.mkdirs(root)
-    val next = owners ++ reassigned
-    val body = next.toSeq.sorted
-      .map { case (b, v) => s""""$b": $v""" }.mkString(", ")
-    val json =
-      s"""{"batch_id": $batchId, "owners": {$body}, "complete": true}"""
+    val pointer = ControlFiles.StatePointer(Some(batchId),
+      scala.collection.immutable.TreeMap.from(owners ++ reassigned), complete = true)
     // allocate past the max pointer FILE, not the max parseable one: a
     // corrupt newest pointer (prev fell back behind it) must be stepped
     // over, not collided with on every commit forever
     val v = (pointerFiles(fs, root).map(_._1) :+ -1L).max + 1
     val tmp = new org.apache.hadoop.fs.Path(root,
       s"_state_tmp_${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    ControlFiles.write(fs, tmp, pointer, overwrite = false)
     val dst = new org.apache.hadoop.fs.Path(root, s"_state.$v.json")
     if (!fs.rename(tmp, dst)) {
       fs.delete(tmp, false)
@@ -479,7 +456,7 @@ object IncrementalAgg {
       if (v + 3 < newest && fs.delete(p, false)) removed += 1L
     }
     val referenced: Set[Long] = pointerFiles(fs, root).flatMap { case (_, p) =>
-      try readPointerFile(fs, p).owners.values
+      try pointerOf(ControlFiles.read[ControlFiles.StatePointer](fs, p)).owners.values
       catch { case scala.util.control.NonFatal(_) => Nil } // corrupt = refs nothing
     }.toSet
     val now = System.currentTimeMillis()

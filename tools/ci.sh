@@ -4,6 +4,18 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# JSON control files are decoded by the typed codec only
+# (src/main/scala/graft/ControlFiles.scala): a hand-rolled
+# `"<field>"\s*:` regex anywhere else in the engine fails the gate
+if grep -rnE '"\\{1,2}s\*:' src/main/scala --include='*.scala' \
+    | grep -v '^src/main/scala/graft/ControlFiles.scala:'; then
+  echo "ci: JSON-field regex outside ControlFiles.scala (decode through the codec)" >&2
+  exit 1
+fi
+
+# benchmark arithmetic (stats.py) unit tests
+python3 perfbench/test_stats.py
+
 sbt -batch test
 
 for sf in 0.001 0.01 0.1; do
