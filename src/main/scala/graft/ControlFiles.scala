@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, PropertyNamingStr
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 import scala.reflect.ClassTag
 
@@ -151,6 +151,28 @@ private[graft] object ControlFiles {
       FileEntry(dir, gen, files.map(_.name).mkString(";"),
         files.map(_.len).mkString(";"), files.map(_.mod).mkString(";"))
   }
+
+  /** The FILE-level manifest a commit records for `dirs`: each
+    * directory's list is reused from `carried` (the state being
+    * committed) or, when that is empty, from `committed` (the newest
+    * sidecar's) — a committed directory is immutable until vacuum
+    * retires it — and listed once through `list` otherwise. A directory
+    * gone from disk, or one whose names cannot ride the `;`-joined
+    * lists, is left unrecorded: readers list it. */
+  def recordFiles[K](dirs: Seq[K], carried: Map[K, Seq[LiveFile]],
+      committed: => Map[K, Seq[LiveFile]])(
+      list: K => Seq[FileStatus]): Seq[(K, Seq[LiveFile])] =
+    if (dirs.isEmpty) Nil
+    else {
+      val prev = if (carried.nonEmpty) carried else committed
+      dirs.distinct.flatMap { k =>
+        prev.get(k).orElse {
+          try Some(list(k).map(s =>
+            LiveFile(s.getPath.getName, s.getLen, s.getModificationTime)))
+          catch { case _: java.io.FileNotFoundException => None }
+        }.filter(FileEntry.recordable).map(k -> _)
+      }
+    }
 
   /** `<lake>/_meta.<v>.json`, the lake's commit point. Keys in writer
     * order; `extra_cols` entries are `name<U+0001>catalog-ddl`;

@@ -187,6 +187,23 @@ object DerivedTable {
   private[graft] def render(st: State): String =
     ControlFiles.encode(ControlFiles.DerivedSidecar.of(st))
 
+  /** Record each live directory's data files into the state at COMMIT
+    * time ([[ControlFiles.recordFiles]], shared with the lake's commit):
+    * lists already recorded by the state or the newest sidecar are
+    * reused, new directories are listed once, here on the write path. */
+  private def recordFiles(fs: org.apache.hadoop.fs.FileSystem,
+      root: Path, location: String,
+      versions: Seq[(Long, Path)], st: State): State =
+    st.copy(liveFiles = ControlFiles.recordFiles(st.live, st.liveFiles,
+      versions.sortBy(-_._1).headOption.flatMap { case (_, p) =>
+        try Some(readState(fs, p, location).liveFiles)
+        catch { case scala.util.control.NonFatal(_) => None }
+      }.getOrElse(Map.empty[String, Seq[Lake.LiveFile]])) { d =>
+        fs.listStatus(new Path(root, d)).toSeq
+          .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+            !s.getPath.getName.startsWith("."))
+      }.toMap)
+
   /** Commit `st` as the next sidecar version — ONE atomic exclusive
     * create; a concurrent deriveTo to the same location loses the
     * create and fails loudly (derived tables have a single writer
@@ -198,37 +215,6 @@ object DerivedTable {
     * create on HDFS, and only a create that LOST to an existing file
     * maps to the concurrency error — any other IOException (quota,
     * permission, network) surfaces as itself. */
-  /** Record each live directory's data files into the state at COMMIT
-    * time (the [[graft.Lake]] writeState posture): entries already
-    * recorded by the previous sidecar are reused (committed generation
-    * directories are immutable until vacuumDerived), new ones are
-    * listed once, here on the write path; a directory whose names
-    * cannot ride the ';'-joined encoding is left unrecorded and
-    * readers list it. */
-  private def recordFiles(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path, location: String,
-      versions: Seq[(Long, Path)], st: State): State = {
-    if (st.live.isEmpty) return st
-    val prev: Map[String, Seq[Lake.LiveFile]] =
-      if (st.liveFiles.nonEmpty) st.liveFiles
-      else versions.sortBy(-_._1).headOption.flatMap { case (_, p) =>
-        try Some(readState(fs, p, location).liveFiles)
-        catch { case scala.util.control.NonFatal(_) => None }
-      }.getOrElse(Map.empty)
-    val recorded = st.live.distinct.flatMap { d =>
-      val files = prev.get(d).orElse {
-        try Some(fs.listStatus(new Path(root, d)).toSeq
-          .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          .map(s => Lake.LiveFile(s.getPath.getName, s.getLen,
-            s.getModificationTime)))
-        catch { case _: java.io.FileNotFoundException => None }
-      }
-      files.filter(ControlFiles.FileEntry.recordable).map(d -> _)
-    }
-    st.copy(liveFiles = recorded.toMap)
-  }
-
   private[graft] def commit(spark: SparkSession, location: String,
       st: State): Long = {
     val fs = fsOf(spark, location)

@@ -855,8 +855,73 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       (s.isDirectory && s.getPath.getName.contains("=")) ||
         (s.isFile && s.getPath.getName.endsWith(".parquet"))).map(_.getPath)
 
-  private def rootLevelData(fs: org.apache.hadoop.fs.FileSystem): Seq[org.apache.hadoop.fs.Path] =
-    rootLevelDataFrom(listRoot(fs))
+  /** True when `st`'s current generation is STREAM-OWNED: a Structured
+    * Streaming sink's `_spark_metadata` manifest governs which of its
+    * files readers see, so a raw listing of that tree would serve
+    * uncommitted files and a rewrite would orphan the sink's. A sealed
+    * state is manifest-only by contract ([[seal]]), never stream-owned. */
+  private def streamOwned(st: LakeState): Boolean =
+    !st.isSealed && fsOfRoot.exists(new org.apache.hadoop.fs.Path(
+      genPath(st.generation), "_spark_metadata"))
+
+  /** The maintenance guard: `op` refuses data the manifest does not
+    * govern — root-level (pre-v2/foreign) data in `entries`, the root
+    * listing the op already took, and (unless `streamOk`, for side
+    * indexes that rewrite nothing) a stream-owned current generation. */
+  private def requireManifestGoverned(op: String, st: LakeState,
+      entries: Seq[org.apache.hadoop.fs.FileStatus],
+      streamOk: Boolean = false): Unit = {
+    require(rootLevelDataFrom(entries).isEmpty,
+      s"$op at ${cfg.location} refused: root-level (pre-v2/foreign) data " +
+        "present — the manifest does not govern it; re-ingest into the " +
+        "generation layout first")
+    require(streamOk || !streamOwned(st),
+      s"$op at ${cfg.location} refused: the current generation is a " +
+        "streaming sink — its _spark_metadata manifest governs file " +
+        "visibility; stop the stream first")
+  }
+
+  /** The data files the sidecar's FILE-level manifest records for `st`,
+    * per (escaped-dir, generation) entry, as QUALIFIED statuses — the
+    * exact values a listing returns, so a served path and a listed one
+    * compare equal. Pure: no I/O. Never serves a current-generation
+    * entry: that tree is live by rule (appends land there without a
+    * commit), so only a listing is truthful for it. */
+  private def recordedFiles(st: LakeState)
+      : Map[(String, Long), Seq[org.apache.hadoop.fs.FileStatus]] = {
+    val fs = fsOfRoot
+    st.liveFiles.collect { case (e @ (d, g), fl) if g != st.generation =>
+      val dir = fs.makeQualified(new org.apache.hadoop.fs.Path(genPath(g), d))
+      e -> fl.map(f =>
+        graft.sources.GraftManifestFileIndex.status(dir, f.name, f.len, f.mod))
+    }
+  }
+
+  /** Which files `st` holds: every data file of `entries` (live
+    * (escaped-dir, generation) pairs of `st`), per entry. An entry
+    * [[recordedFiles]] serves costs nothing; every other one — the
+    * current generation's directories, entries an older sidecar did not
+    * record — pays one LIST from a bounded pool. A listed directory that
+    * is gone means vacuum swept past the state `op` resolved: loud,
+    * never partial. The one answer every read, change feed, files view
+    * and maintenance op plans from. */
+  private def resolveFiles(fs: org.apache.hadoop.fs.FileSystem,
+      st: LakeState, entries: Seq[(String, Long)], op: String)
+      : Seq[((String, Long), Seq[org.apache.hadoop.fs.FileStatus])] = {
+    val recorded = recordedFiles(st)
+    val (served, toList) = entries.distinct.partition(recorded.contains)
+    served.map(e => e -> recorded(e)) ++ mapDirsPooled(toList) { (d, g) =>
+      val p = new org.apache.hadoop.fs.Path(genPath(g), d)
+      (d, g) -> (try dataFilesIn(fs, p)
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalStateException(
+            s"$op at ${cfg.location}: live directory $p is no longer on " +
+              "disk — vacuum has swept past this sync point (see " +
+              "vacuum(retainMs) for the consumer window)")
+      })
+    }
+  }
 
   /** First unused generation number: past both the committed pointer
     * and any UNCOMMITTED tree a crashed op stranded on disk (those keep
@@ -918,8 +983,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // append's files — writing here would produce committed-but-
     // invisible rows. [[ingestStream]] rolls a fresh generation when it
     // starts over batch data; the inverse direction refuses.
-    require(!fs.exists(new org.apache.hadoop.fs.Path(
-      genPath(st.generation), "_spark_metadata")),
+    require(!streamOwned(st),
       s"refusing batch ingest at ${cfg.location}: the current generation " +
         "is a streaming sink (its _spark_metadata manifest would not " +
         "name the appended files, hiding them from every read)")
@@ -1249,12 +1313,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * index.py:249-250). Empty-location bootstrap returns an empty frame
     * with the canonical schema (index.py:247).
     *
-    * Layout v2: one branch per live GENERATION — the whole current tree
-    * (appends land there; read as a single path so a streaming sink's
-    * `_spark_metadata` manifest is honored), plus each older
-    * generation's manifest-named directories under a `basePath` at that
-    * generation (the standard subset-of-a-partitioned-table read).
-    * A freshly-compacted (or never-rewritten) lake is ONE branch — the
+    * Layout v2: one branch per live GENERATION, each planned from the
+    * files [[resolveFiles]] names — the whole current tree (appends
+    * land there; one LIST per directory) and each older generation's
+    * manifest-named directories (served from the sidecar, no LIST). A
+    * stream-owned current tree is read as a single path instead, so
+    * the sink's `_spark_metadata` manifest is honored. A
+    * freshly-compacted (or never-rewritten) lake is ONE branch — the
     * exact single-scan plan of a flat layout; each uncommitted-into-
     * compact maintenance op adds at most one branch, and partition
     * pruning applies inside every branch. Dead directories are never
@@ -2229,9 +2294,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     *    manifest already knows every value.
     *  - `rootFiles`: for each root whose (dir, generation) entry
     *    carries a sidecar-recorded file manifest, the exact files to
-    *    plan, keyed by the root path string. Roots absent from the map
-    *    (the current generation tree, legacy data, pre-field sidecars)
-    *    are listed by the index.
+    *    plan ([[recordedFiles]]), keyed by the root path string. Roots
+    *    absent from the map (the current generation tree, legacy data,
+    *    pre-field sidecars) are listed by the index.
     *  - `schema`: the canonical schema with the CURRENT extras.
     *
     * Dead generations are never listed; a vacuumed `asOf` fails loudly
@@ -2245,8 +2310,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     requireRouting(current)
     val fs = fsOfRoot
     val st = asOf.fold(current)(vacuumCheckedStateAt(_, fs, entries))
-    if (!st.isSealed && fs.exists(
-        new org.apache.hadoop.fs.Path(genPath(st.generation), "_spark_metadata")))
+    if (streamOwned(st))
       throw new IllegalStateException(
         s"graft format at ${cfg.location}: the current generation is an " +
           "active streaming-sink tree (its _spark_metadata manifest " +
@@ -2283,45 +2347,37 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       if (p.getName.contains("=")) p.toString -> Some(p.getName)
       else cfg.location -> None // bare root-level parquet: no partition
     }.distinct
-    // never serve a manifest for a CURRENT-generation entry: that tree
-    // is live-by-rule (appends land there without a commit), so only a
-    // listing is truthful for it
-    val rootFiles = st.live.distinct.filter(_._2 != st.generation)
-      .flatMap { case e @ (d, g) =>
-        st.liveFiles.get(e).map(fl =>
-          new org.apache.hadoop.fs.Path(genPath(g), d).toString -> fl)
-      }.toMap
+    val rootFiles = recordedFiles(st).map { case ((d, g), fl) =>
+      new org.apache.hadoop.fs.Path(genPath(g), d).toString -> fl }
     Lake.FormatScan(dirs ++ legacy, rootFiles, canonicalSchemaOf(current))
   }
 
   /** The live data files as a frame — (file, partition, generation,
     * bytes, modified_ms), the capacity-planning / small-files view
-    * behind the format's `option("view", "files")`. One root listing +
-    * one LIST per live directory: O(live files) driver-side metadata,
-    * the same order as [[validate]]'s skip check. Pre-v2/legacy
-    * root-level data reports generation 0. */
+    * behind the format's `option("view", "files")`. One root listing,
+    * the resolved live set ([[resolveFiles]]: manifest-recorded
+    * entries free, one LIST per current-generation directory), and one
+    * LIST per pre-v2/legacy root-level partition directory, reported
+    * as generation 0. */
   def filesView(): DataFrame = {
     import spark.implicits._
     val fs = fsOfRoot
     val entries = listRoot(fs)
     val st = readStateFrom(fs, entries)
-    def fileRows(dir: org.apache.hadoop.fs.Path, part: Option[String],
-        gen: Long): Seq[(String, String, Long, Long, Long)] =
-      if (!fs.exists(dir)) Nil
-      else dataFilesIn(fs, dir).map(f => (f.getPath.toString, part.orNull,
-        gen, f.getLen, f.getModificationTime))
-    // pooled LISTs (the liveShardFiles posture): on an object store a
-    // serial per-directory listing would pay O(live dirs) round trips
-    val live = mapDirsPooled(liveEntries(st)) { (d, g) =>
-      fileRows(new org.apache.hadoop.fs.Path(genPath(g), d),
-        unescapePartitionValue(d.split("=", 2)(1)), g)
-    }.flatten
+    def row(f: org.apache.hadoop.fs.FileStatus, part: Option[String],
+        gen: Long) =
+      (f.getPath.toString, part.orNull, gen, f.getLen, f.getModificationTime)
+    val live = resolveFiles(fs, st, liveEntries(st), "files view").flatMap {
+      case ((d, g), fl) =>
+        fl.map(row(_, unescapePartitionValue(d.split("=", 2)(1)), g))
+    }
     val legacy = rootLevelDataFrom(entries).flatMap { p =>
       if (p.getName.endsWith(".parquet"))
         // listRoot already fetched these statuses — reuse, no re-stat
-        entries.find(_.getPath == p).toSeq.map(s =>
-          (p.toString, null: String, 0L, s.getLen, s.getModificationTime))
-      else fileRows(p, unescapePartitionValue(p.getName.split("=", 2)(1)), 0L)
+        entries.find(_.getPath == p).toSeq.map(row(_, None, 0L))
+      else if (!fs.exists(p)) Nil
+      else dataFilesIn(fs, p)
+        .map(row(_, unescapePartitionValue(p.getName.split("=", 2)(1)), 0L))
     }
     (live ++ legacy)
       .toDF("file", "partition", "generation", "bytes", "modified_ms")
@@ -2385,8 +2441,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * feed can refuse at SUBSCRIBE time with a clear error instead of
     * killing the stream on its first data-carrying trigger. */
   private[graft] def currentGenerationStreamOwned: Boolean =
-    exists() && fsOfRoot.exists(new org.apache.hadoop.fs.Path(
-      genPath(readState().generation), "_spark_metadata"))
+    exists() && streamOwned(readState())
 
   /** SEAL the live set — the change-feed SYNC POINT: one sidecar commit,
     * zero data movement, after which the sealed version denotes an
@@ -2412,20 +2467,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * partial). Returns the sealed version number. */
   def seal(): Long = withWriterLock("seal") {
     val fs = fsOfRoot
-    val st = readState()
+    val entries = listRoot(fs)
+    val st = readStateFrom(fs, entries)
     requireRouting(st) // seal re-stamps the sidecar: never under a foreign config
     requireWriteConfigMatch(st) // both directions — the stamp is authoritative
     requireNoReshard(st, "seal")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(
-      genPath(st.generation), "_spark_metadata")),
-      s"refusing to seal ${cfg.location}: the current generation is a " +
-        "streaming sink — its manifest governs file visibility, so a " +
-        "physical freeze would misattribute uncommitted files; stop the " +
-        "stream first")
-    require(rootLevelData(fs).isEmpty,
-      s"refusing to seal ${cfg.location}: root-level (pre-v2/foreign) data " +
-        "present — the manifest does not govern it, so a sealed snapshot " +
-        "could not name it; re-ingest into the generation layout first")
+    // a sealed snapshot names only manifest-governed directories: a
+    // sink's uncommitted files or root-level data could not be frozen
+    requireManifestGoverned("seal", st, entries)
     if (treeHasData(fs, genPath(st.generation)))
       writeState(LakeState(nextGen(st), liveEntries(st), extraCols = st.extraCols), sealedCommit = true)
     else writeState(LakeState(st.generation, st.live, extraCols = st.extraCols), sealedCommit = true)
@@ -2463,21 +2512,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val entries = listRoot(fs)
     val stNew = readStateFrom(fs, entries)
     requireRouting(stNew)
-    require(rootLevelDataFrom(entries).isEmpty,
-      s"changesSince at ${cfg.location} refused: root-level (pre-v2/foreign) " +
-        "data present — the manifest does not govern it")
+    // a physical diff of the current state would count a sink's
+    // uncommitted files
+    requireManifestGoverned("changesSince", stNew, entries)
     val stOld = stateAt(version, fs, entries)
     requireSealedSync(version, stOld)
     requireNoReshard(stNew, "changesSince")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(
-      genPath(stNew.generation), "_spark_metadata")),
-      s"changesSince at ${cfg.location} refused: the current generation is " +
-        "a streaming sink — its manifest governs file visibility, so a " +
-        "physical diff would count uncommitted files; stop the stream first")
     changeFrame(
-      fileOwners(fs, stOld.live, s"changesSince($version)", stOld.liveFiles),
-      fileOwners(fs, liveEntries(stNew), "changesSince: current state",
-        stNew.liveFiles),
+      fileOwners(fs, stOld, stOld.live, s"changesSince($version)"),
+      fileOwners(fs, stNew, liveEntries(stNew), "changesSince: current state"),
       netted, extraFieldsOf(stNew))
   }
 
@@ -2497,18 +2540,16 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val entries = listRoot(fs)
     val current = readStateFrom(fs, entries)
     requireRouting(current)
-    require(rootLevelDataFrom(entries).isEmpty,
-      s"changesBetween at ${cfg.location} refused: root-level (pre-v2/" +
-        "foreign) data present — the manifest does not govern it")
     val stFrom = stateAt(fromVersion, fs, entries)
     requireSealedSync(fromVersion, stFrom)
     val stTo = stateAt(toVersion, fs, entries)
     requireSealedSync(toVersion, stTo)
+    // both endpoints are sealed (never stream-owned): only root-level
+    // data can escape the manifest here
+    requireManifestGoverned("changesBetween", stTo, entries)
     changeFrame(
-      fileOwners(fs, stFrom.live, s"changesBetween($fromVersion, _)",
-        stFrom.liveFiles),
-      fileOwners(fs, stTo.live, s"changesBetween(_, $toVersion)",
-        stTo.liveFiles),
+      fileOwners(fs, stFrom, stFrom.live, s"changesBetween($fromVersion, _)"),
+      fileOwners(fs, stTo, stTo.live, s"changesBetween(_, $toVersion)"),
       netted,
       // CURRENT extras (not either endpoint's): a replayed pre-evolve
       // batch then null-fills the new columns instead of changing shape
@@ -2538,79 +2579,30 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   /** (path, length, escaped-dir-name) of every data file of a SEALED
     * sync point — the DSv2 change stream's file-level resolution:
     * lengths drive its input-partition packing, dir names carry the
-    * shard partition value each file's rows serve. Same bounded-pool
-    * listing and loud-on-vacuumed contract as [[fileOwners]]. */
+    * shard partition value each file's rows serve. */
   private[graft] def sealedFileStatuses(version: Long): Seq[(String, Long, String)] = {
     val fs = fsOfRoot
     val entries = listRoot(fs)
     requireRouting(readStateFrom(fs, entries))
-    require(rootLevelDataFrom(entries).isEmpty,
-      s"change stream at ${cfg.location} refused: root-level (pre-v2/" +
-        "foreign) data present — the manifest does not govern it")
     val st = stateAt(version, fs, entries)
     requireSealedSync(version, st)
-    // manifest-recorded entries serve name+length straight from the
-    // sidecar (zero listing — the fileOwners posture, loudness moved
-    // to the scan that opens the files); the rest pay one pooled LIST
-    val (recorded, toList) = st.live.distinct.partition(st.liveFiles.contains)
-    val served = recorded.flatMap { case e @ (d, g) =>
-      val p = fs.makeQualified(new org.apache.hadoop.fs.Path(genPath(g), d))
-      st.liveFiles(e).map(f =>
-        (new org.apache.hadoop.fs.Path(p, f.name).toString, f.len, d))
-    }
-    served ++ mapDirsPooled(toList) { (d, g) =>
-      val p = new org.apache.hadoop.fs.Path(genPath(g), d)
-      try dataFilesIn(fs, p).map(s => (s.getPath.toString, s.getLen, d))
-      catch {
-        case _: java.io.FileNotFoundException =>
-          throw new IllegalStateException(
-            s"change stream at ${cfg.location}: live directory $p of " +
-              s"version $version is no longer on disk — vacuum has swept " +
-              "past this sync point (see vacuum(retainMs) for the " +
-              "consumer window)")
-      }
-    }.flatten
+    requireManifestGoverned("change stream", st, entries)
+    resolveFiles(fs, st, st.live, s"change stream (version $version)")
+      .flatMap { case ((d, _), fl) =>
+        fl.map(s => (s.getPath.toString, s.getLen, d)) }
   }
 
-  /** Every data file of the given live (escaped-dir, generation)
-    * entries, as file-path → (escaped-dir-name, owning generation,
-    * status). An entry the sidecar's
-    * FILE-level manifest records is served straight from it — zero
-    * listing (guide §6; sound because committed entries are immutable
-    * until vacuum retires them wholesale); the rest pay one LIST per
-    * directory from a bounded pool (the [[liveShardFiles]] object-store
-    * discipline). A LISTED directory that is gone means vacuum swept
-    * past the sync point — loud, never a partial delta; a
-    * manifest-served entry vacuum swept fails equally loudly when the
-    * delta scan is planned ([[readFileSlice]]), never silently partial. */
-  private def fileOwners(fs: org.apache.hadoop.fs.FileSystem,
-      dirs: Seq[(String, Long)], context: String,
-      manifest: Map[(String, Long), Seq[Lake.LiveFile]] = Map.empty)
-      : Map[String, (String, Long, org.apache.hadoop.fs.FileStatus)] = {
-    val (recorded, toList) = dirs.distinct.partition(manifest.contains)
-    // QUALIFIED exactly as a listing would return them: [[changeFrame]]
-    // diffs the two sides by path STRING, so a manifest-served
-    // `/x/f.parquet` against a listed `file:/x/f.parquet` would report
-    // the same file as both insert and delete
-    val served = recorded.flatMap { case e @ (d, g) =>
-      val p = fs.makeQualified(new org.apache.hadoop.fs.Path(genPath(g), d))
-      manifest(e).map { f =>
-        val st = graft.sources.GraftManifestFileIndex.status(p, f.name, f.len, f.mod)
-        st.getPath.toString -> (d, g, st)
-      }
-    }
-    (served ++ mapDirsPooled(toList) { (d, g) =>
-      val p = new org.apache.hadoop.fs.Path(genPath(g), d)
-      try dataFilesIn(fs, p).map(s => s.getPath.toString -> (d, g, s))
-      catch {
-        case _: java.io.FileNotFoundException =>
-          throw new IllegalStateException(
-            s"$context at ${cfg.location}: live directory $p is no " +
-              "longer on disk — vacuum has swept past this sync " +
-              "point (see vacuum(retainMs) for the consumer window)")
-      }
-    }.flatten).toMap
-  }
+  /** Every data file of `st`'s entries `dirs` ([[resolveFiles]]), as
+    * file-path → (escaped-dir-name, owning generation, status): the
+    * change feed diffs two sides by path string. A manifest-served
+    * entry vacuum swept fails loudly when the delta scan is planned
+    * ([[readFileSlice]]), never silently partial. */
+  private def fileOwners(fs: org.apache.hadoop.fs.FileSystem, st: LakeState,
+      dirs: Seq[(String, Long)], op: String)
+      : Map[String, (String, Long, org.apache.hadoop.fs.FileStatus)] =
+    resolveFiles(fs, st, dirs, op).flatMap { case ((d, g), fl) =>
+      fl.map(s => s.getPath.toString -> (d, g, s))
+    }.toMap
 
   /** Read an explicit file set ([[fileOwners]]' values) with the
     * canonical schema, planned straight from the statuses in hand
@@ -2756,12 +2748,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         f.copy(metadata = md)
       case f => f
     }
-    def pinnedBranch(basePath: Option[String], paths: Seq[String]): DataFrame = {
-      var r = spark.read.schema(
-        StructType(pinnedFields :+ StructField(partCol, partType)))
-      basePath.foreach(b => r = r.option("basePath", b))
-      r.parquet(paths: _*)
-    }
+    val pinned = StructType(pinnedFields :+ StructField(partCol, partType))
     def branch(basePath: Option[String], paths: Seq[String]): DataFrame = {
       var r = spark.read.option("mergeSchema", "true")
       basePath.foreach(b => r = r.option("basePath", b))
@@ -2784,56 +2771,42 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // change feed diffs against
     val curPresent = !st.isSealed && rootEntries.exists(s =>
       s.isDirectory && s.getPath.getName == cur.getName)
-    // a stream-owned current generation is read with the CANONICAL
-    // schema instead of footer inference: its `_spark_metadata`
-    // manifest governs the file list, and between stream start and
-    // batch 0's commit that list is legitimately EMPTY — inference
-    // would throw "unable to infer schema" at a perfectly healthy
-    // moment, where the truthful answer is an empty slice. The sink
-    // writes exactly withDerived's columns, so no drift can hide here.
-    val curSinkOwned = curPresent && fs.exists(
-      new org.apache.hadoop.fs.Path(cur, "_spark_metadata"))
-    val curBranch =
-      if (curPresent && treeHasData(fs, cur, knownExists = true))
-        Seq(widen(
-          if (curSinkOwned)
-            spark.read
-              .schema(StructType(pinnedFields :+ StructField(partCol, partType)))
-              .parquet(cur.toString)
-          else pinnedBranch(None, Seq(cur.toString)), stateBits))
+    // a stream-owned current generation is read through its
+    // `_spark_metadata` manifest (a path read is the only one that
+    // honors it), with the CANONICAL schema instead of footer
+    // inference: between stream start and batch 0's commit that list
+    // is legitimately EMPTY — inference would throw "unable to infer
+    // schema" at a perfectly healthy moment, where the truthful answer
+    // is an empty slice. The sink writes exactly withDerived's
+    // columns, so no drift can hide here.
+    val curSinkOwned = curPresent && streamOwned(st)
+    val sinkBranch =
+      if (curSinkOwned && treeHasData(fs, cur, knownExists = true))
+        Seq(widen(spark.read.schema(pinned).parquet(cur.toString), stateBits))
       else Nil
-    // older-generation branches split by reshard membership: pending
-    // entries were routed at the reshard's FROM width and re-derive
-    // the missing bits; everything else is at the state's width
-    // (mid-reshard, that is the target width — completed steps and
-    // post-transition appends). A branch whose every entry carries a
-    // FILE-level manifest (recorded at commit) is planned straight
-    // from the sidecar — zero listStatus against the data tree
-    // ([[graft.sources.GraftManifestFileIndex]], guide §6); entries
-    // predating the field fall back to the listing read, branch by
-    // branch.
-    val oldBranches = st.live.filter(_._2 != st.generation)
-      .groupBy(e => (e._2, reshardPending.contains(e)))
-      .toSeq.sortBy(_._1).map { case ((g, isPending), entries) =>
-        val base = genPath(g)
-        val dirs = entries.distinct
-        val branchDf =
-          if (dirs.forall(st.liveFiles.contains)) {
-            val qBase = fs.makeQualified(base)
-            graft.sources.GraftManifestFileIndex.frame(spark,
-              StructType(pinnedFields), StructField(partCol, partType),
-              dirs.map { case e @ (d, _) =>
-                val dir = new org.apache.hadoop.fs.Path(qBase, d)
-                (dir,
-                  graft.sources.GraftDataSource.partValue(Some(d), partType),
-                  st.liveFiles(e).map(f => graft.sources
-                    .GraftManifestFileIndex.status(dir, f.name, f.len, f.mod))
-                    .toArray)
-              })
-          } else pinnedBranch(Some(base.toString),
-            dirs.map(_._1).distinct
-              .map(d => new org.apache.hadoop.fs.Path(base, d).toString))
-        widen(branchDf,
+    // every other live entry plans from its resolved statuses
+    // ([[resolveFiles]]: manifest-recorded entries with zero listings,
+    // the current generation's directories with one LIST each) — one
+    // branch per (generation, reshard membership): pending entries were
+    // routed at the reshard's FROM width and re-derive the missing
+    // bits; everything else is at the state's width (mid-reshard, that
+    // is the target width — completed steps and post-transition
+    // appends). The current generation's branch leads the union.
+    val entries =
+      if (curPresent && !curSinkOwned) liveEntries(st)
+      else st.live.filter(_._2 != st.generation)
+    val genBranches = resolveFiles(fs, st, entries, "read")
+      .groupBy { case (e, _) => (e._2, reshardPending.contains(e)) }
+      .toSeq.sortBy { case ((g, isPending), _) =>
+        (g != st.generation, g, isPending) }
+      .map { case ((g, isPending), resolved) =>
+        widen(graft.sources.GraftManifestFileIndex.frame(spark,
+          StructType(pinnedFields), StructField(partCol, partType),
+          resolved.sortBy(_._1._1).map { case ((d, _), fl) =>
+            (fs.makeQualified(new org.apache.hadoop.fs.Path(genPath(g), d)),
+              graft.sources.GraftDataSource.partValue(Some(d), partType),
+              fl.toArray)
+          }),
           if (isPending) st.reshard.get.fromBits else stateBits)
       }
     // pre-v2 flat tree or foreign data at the root: a dedicated branch,
@@ -2850,11 +2823,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     def pad(df: DataFrame): DataFrame =
       extraFieldsOf(st).filterNot(f => df.columns.contains(f.name))
         .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-    val branches = (curBranch ++ oldBranches ++ legacyBranch).map(pad)
+    val branches = (sinkBranch ++ genBranches ++ legacyBranch).map(pad)
     if (branches.isEmpty)
       return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(pinnedFields :+ StructField(partCol, partType)))
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pinned)
     val df = branches.reduce(_ unionByName _)
     val got = df.columns.toSet
     val want = storedColsOf(st).toSet + partCol
@@ -3360,16 +3332,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   }
 
   /** Total bytes of live data files — the calibration-drift
-    * denominator. Pure metadata (pooled LISTs over live directories,
-    * the filesView posture); never opens a file. */
+    * denominator. Pure metadata (the resolved live set, the filesView
+    * posture); never opens a file. */
   private def liveDataBytes(): Long = {
     val fs = fsOfRoot
     val entries = listRoot(fs)
     val st = readStateFrom(fs, entries)
-    val live = mapDirsPooled(liveEntries(st)) { (d, g) =>
-      val p = new org.apache.hadoop.fs.Path(genPath(g), d)
-      if (!fs.exists(p)) Nil else dataFilesIn(fs, p).map(_.getLen)
-    }.flatten.sum
+    val live = resolveFiles(fs, st, liveEntries(st), "liveDataBytes")
+      .map(_._2.map(_.getLen).sum).sum
     // legacy root-level data: a directory's own FileStatus length is
     // meaningless — branch on shape like filesView, never entries.find
     // (whose hit would report the dir entry's ~0 length for gigabytes
@@ -3725,15 +3695,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
 
   private def compactImpl(targetBytes: Long, clusterBy: Seq[Column]): Long = {
     val fs = fsOfRoot
-    val st = readState()
+    val entries = listRoot(fs)
+    val st = readStateFrom(fs, entries)
     requireNoReshard(st, "compact")
-    require(!fs.exists(
-      new org.apache.hadoop.fs.Path(genPath(st.generation), "_spark_metadata")),
-      "refusing to compact a streaming-sink lake: _spark_metadata manifest present")
-    require(rootLevelData(fs).isEmpty,
-      s"refusing maintenance at ${cfg.location}: root-level (pre-v2/foreign) " +
-        "data present — the manifest does not govern it, so a rewrite could " +
-        "not retire it; re-ingest into the generation layout first")
+    requireManifestGoverned("compact", st, entries)
 
     // per-shard compressed bytes across every live copy. Directory
     // names carry ESCAPED partition values (Spark writes ':','%','=' etc
@@ -3915,17 +3880,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val target = new Lake(spark, cfg.copy(numHashes = newNumHashes))
     withReshardLock {
       val fs = fsOfRoot
-      val st = readState()
+      val entries = listRoot(fs)
+      val st = readStateFrom(fs, entries)
       requireNoReshard(st, "reshard(begin)") // defensive; requireRouting
       // already refuses a session at neither endpoint of an in-flight one
-      require(!fs.exists(new org.apache.hadoop.fs.Path(
-        genPath(st.generation), "_spark_metadata")),
-        s"refusing reshard at ${cfg.location}: the current generation " +
-          "is an active streaming-sink tree — stop the stream first")
-      require(rootLevelData(fs).isEmpty,
-        s"refusing reshard at ${cfg.location}: root-level (pre-v2/" +
-          "foreign) data present — the manifest does not govern it; " +
-          "re-ingest into the generation layout first")
+      requireManifestGoverned("reshard", st, entries)
       val pending = liveEntries(st)
       val hadSkip = fs.exists(skipPath)
       writeState(LakeState(nextGen(st), pending,
@@ -4150,17 +4109,12 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
 
   private def expireImpl(olderThan: java.time.Instant): (Long, Long) = {
     val fs = fsOfRoot
+    val entries = listRoot(fs)
+    val st = readStateFrom(fs, entries)
     // same maintenance posture as compact/vacuum: data the manifest
-    // does not govern cannot be retired, and a streaming-sink tree's
-    // visibility belongs to its _spark_metadata manifest
-    require(rootLevelData(fs).isEmpty,
-      s"refusing expire at ${cfg.location}: root-level (pre-v2/foreign) " +
-        "data present — re-ingest into the generation layout first")
-    require(!currentGenerationStreamOwned,
-      s"refusing expire at ${cfg.location}: the current generation is an " +
-        "active streaming-sink tree")
+    // does not govern cannot be retired
+    requireManifestGoverned("expire", st, entries)
     val horizon = java.sql.Timestamp.from(olderThan)
-    val st = readState()
     requireNoReshard(st, "expire")
     // tier 1: only MANIFEST entries are wholesale candidates (the
     // current generation is live by listing rule, not by entry)
@@ -4184,19 +4138,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         }.getOrElse(Map.empty)
         catch { case scala.util.control.NonFatal(_) => Map.empty }
       if (certs.nonEmpty) {
-        val retired = candidates.filter { case (d, g) =>
-          val files = try dataFilesIn(fs,
-            new org.apache.hadoop.fs.Path(genPath(g), d)).toSeq
-          catch { case _: java.io.FileNotFoundException => Nil }
-          files.nonEmpty && files.forall(f =>
-            certs.get(zoneKey(f.getPath.toString)).exists(_._1))
-        }.toSet
+        val retired = resolveFiles(fs, st, candidates, "expire")
+          .filter { case (_, files) =>
+            files.nonEmpty && files.forall(f =>
+              certs.get(zoneKey(f.getPath.toString)).exists(_._1))
+          }
         if (retired.nonEmpty) {
-          retiredRows = retired.toSeq.flatMap { case (d, g) =>
-            dataFilesIn(fs, new org.apache.hadoop.fs.Path(genPath(g), d))
-              .map(f => certs(zoneKey(f.getPath.toString))._2)
-          }.sum
-          writeState(st.copy(live = st.live.filterNot(retired)))
+          retiredRows = retired.flatMap(_._2)
+            .map(f => certs(zoneKey(f.getPath.toString))._2).sum
+          writeState(st.copy(live = st.live.filterNot(retired.map(_._1).toSet)))
           ()
         }
       }
@@ -4399,37 +4349,20 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     new org.apache.hadoop.fs.Path(cfg.location, "_skip")
 
   /** Every live shard's file set, keyed by decoded partition value:
-    * the input to both building and freshness-checking the skip index.
-    * One LIST per live directory — the same enumeration any scan pays —
-    * issued from a bounded thread pool: serial per-directory LISTs
-    * against an object store would cost |shards| round trips end to end
-    * (FileSystem implementations are thread-safe for reads; s3a
-    * documents this). */
+    * the input to both building and freshness-checking the skip index
+    * — the resolved live set ([[resolveFiles]]) grouped by shard,
+    * optionally only the shards in `only`. */
   private def liveShardFiles(fs: org.apache.hadoop.fs.FileSystem,
       st: LakeState,
       only: Option[Set[Option[String]]] = None)
       : Map[Option[String], Seq[(String, Long)]] = {
-    val all = liveEntries(st)
-    val entries = only match {
-      case Some(vals) => all.filter { case (d, _) =>
-        vals.contains(unescapePartitionValue(d.split("=", 2)(1))) }
-      case None => all
-    }
-    // entries the sidecar's FILE-level manifest records skip their LIST
-    // (guide §6 — committed entries are immutable until vacuum); the
-    // rest (current generation, pre-field sidecars) pay one pooled LIST
-    val (recorded, toList) = entries.partition(st.liveFiles.contains)
-    val served = recorded.map { case e @ (d, g) =>
-      val p = fs.makeQualified(new org.apache.hadoop.fs.Path(genPath(g), d))
-      unescapePartitionValue(d.split("=", 2)(1)) ->
-        st.liveFiles(e).map(f =>
-          (new org.apache.hadoop.fs.Path(p, f.name).toString, f.len))
-    }
-    (served ++ mapDirsPooled(toList) { (d, g) =>
-      unescapePartitionValue(d.split("=", 2)(1)) ->
-        dataFilesIn(fs, new org.apache.hadoop.fs.Path(genPath(g), d))
-          .map(s => (s.getPath.toString, s.getLen))
-    }).groupBy(_._1).map { case (v, xs) => v -> xs.flatMap(_._2) }
+    def value(d: String) = unescapePartitionValue(d.split("=", 2)(1))
+    val entries = liveEntries(st).filter { case (d, _) =>
+      only.forall(_.contains(value(d))) }
+    resolveFiles(fs, st, entries, "skip index")
+      .groupBy { case ((d, _), _) => value(d) }
+      .map { case (v, xs) =>
+        v -> xs.flatMap(_._2.map(s => (s.getPath.toString, s.getLen))) }
   }
 
   /** Data files of one directory (markers and hidden files excluded). */
@@ -4485,10 +4418,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     if (!exists()) return 0L
     withWriterLock("buildSkipIndex") {
       val fs = fsOfRoot
-      require(rootLevelData(fs).isEmpty,
-        s"refusing to index ${cfg.location}: root-level (pre-v2/foreign) " +
-          "data present — the index cannot govern what the manifest does not")
-      val st = readState()
+      val entries = listRoot(fs)
+      val st = readStateFrom(fs, entries)
+      requireManifestGoverned("buildSkipIndex", st, entries, streamOk = true)
       requireNoReshard(st, "buildSkipIndex")
       val files = liveShardFiles(fs, st)
       if (files.isEmpty) { fs.delete(skipPath, true); return 0L }
@@ -4709,10 +4641,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     if (!exists()) return 0L
     withWriterLock("buildZoneMap") {
       val fs = fsOfRoot
-      require(rootLevelData(fs).isEmpty,
-        s"refusing to zone-map ${cfg.location}: root-level (pre-v2/foreign) " +
-          "data present — the map cannot govern what the manifest does not")
-      requireNoReshard(readState(), "buildZoneMap")
+      val entries = listRoot(fs)
+      val st = readStateFrom(fs, entries)
+      requireManifestGoverned("buildZoneMap", st, entries, streamOk = true)
+      requireNoReshard(st, "buildZoneMap")
       val rows = zoneRows(read(), fields).cache()
       try {
         val n = rows.count()
@@ -4885,15 +4817,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val entries = listRoot(fs)
     val st = readStateFrom(fs, entries)
     requireRouting(st)
-    if (rootLevelDataFrom(entries).nonEmpty ||
-        fs.exists(new org.apache.hadoop.fs.Path(
-          genPath(st.generation), "_spark_metadata")))
+    if (rootLevelDataFrom(entries).nonEmpty || streamOwned(st))
       return read()
     val dirs = dirNames match {
       case Some(keep) => liveEntries(st).filter(d => keep(d._1.split("/").last))
       case None => liveEntries(st)
     }
-    val owners = fileOwners(fs, dirs, op, st.liveFiles)
+    val owners = fileOwners(fs, st, dirs, op)
     val kept =
       try readZone(fs, merged = requireFp.isDefined).map { z =>
         val scoped = dirNames match {
@@ -5170,18 +5100,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       slices: Map[Option[String], Long] = Map.empty,
       clusterBy: Seq[Column] = Nil): Unit = {
     val fs = fsOfRoot
-    val st = readState()
+    val entries = listRoot(fs)
+    val st = readStateFrom(fs, entries)
     requireNoReshard(st, tag)
     // the caller's content shape (stored cols + extras + partCol) is
     // what the slice-join below must re-project back to
     val outCols = content.columns.toSeq
-    require(!fs.exists(
-      new org.apache.hadoop.fs.Path(genPath(st.generation), "_spark_metadata")),
-      "refusing to rewrite a streaming-sink lake: _spark_metadata manifest present")
-    require(rootLevelData(fs).isEmpty,
-      s"refusing maintenance at ${cfg.location}: root-level (pre-v2/foreign) " +
-        "data present — the manifest does not govern it, so a rewrite could " +
-        "not retire it; re-ingest into the generation layout first")
+    requireManifestGoverned(tag, st, entries)
     val newGen = nextGen(st)
     val tmp = genPath(newGen)
     if (expectedRows > 0L) {
@@ -5928,37 +5853,19 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         .getOrElse(lsh.numShards.toLong)
     // FILE-level manifest (guide §6): record each live entry's data
     // files AT COMMIT TIME so reads plan with zero per-directory
-    // listings. Committed (dir, generation) entries are immutable until
-    // vacuum retires them wholesale (appends land only in the CURRENT
-    // generation; every rewrite publishes into a FRESH generation), so
-    // entries carried forward reuse the lists already recorded — only
-    // entries NEW to the manifest are listed, once, here on the write
-    // path. States constructed without the carried map (most callers
-    // build fresh LakeStates) recover it from the newest committed
-    // sidecar: any committed copy is equally valid by the immutability
-    // invariant. An entry whose file names cannot ride the ';'-joined
-    // encoding (foreign tooling) is simply not recorded — readers fall
-    // back to listing that directory, never misread it.
-    val files: Seq[((String, Long), Seq[Lake.LiveFile])] =
-      if (st.live.isEmpty) Nil
-      else {
-        val prev: Map[(String, Long), Seq[Lake.LiveFile]] =
-          if (st.liveFiles.nonEmpty) st.liveFiles
-          else readStateFrom(fs, rootEntries).liveFiles
-        // CURRENT-generation entries are excluded: that tree is
-        // live-by-rule (appends land there without a commit), so a
-        // recorded list would go stale the moment one lands — readers
-        // list it, always
-        st.live.distinct.filter(_._2 != st.generation).flatMap { case e @ (d, g) =>
-          val files = prev.get(e).orElse {
-            try Some(dataFilesIn(fs, new org.apache.hadoop.fs.Path(genPath(g), d))
-              .map(s => Lake.LiveFile(s.getPath.getName, s.getLen,
-                s.getModificationTime)))
-            catch { case _: java.io.FileNotFoundException => None }
-          }
-          files.filter(ControlFiles.FileEntry.recordable).map(e -> _)
-        }
-      }
+    // listings ([[ControlFiles.recordFiles]]). Every rewrite publishes
+    // into a FRESH generation, so an entry carried forward reuses its
+    // recorded list and only entries NEW to the manifest are listed,
+    // once, here on the write path. States constructed without the
+    // carried map (most callers build fresh LakeStates) recover it from
+    // the newest committed sidecar. CURRENT-generation entries are
+    // excluded: that tree is live-by-rule (appends land there without a
+    // commit), so a recorded list would go stale the moment one lands.
+    val files = ControlFiles.recordFiles(
+      st.live.filter(_._2 != st.generation), st.liveFiles,
+      readStateFrom(fs, rootEntries).liveFiles) { case (d, g) =>
+      dataFilesIn(fs, new org.apache.hadoop.fs.Path(genPath(g), d))
+    }
     val json = ControlFiles.encode(ControlFiles.LakeSidecar.of(
       st, cfg, numShards, sealedCommit, genHasData, files))
     // ATOMIC publish: the body lands in a root-sibling tmp (a name no
@@ -6404,7 +6311,8 @@ object Lake {
   /** What the `graft` DSv2 format scans ([[Lake.formatScan]]). */
   private[graft] final case class FormatScan(
       roots: Seq[(String, Option[String])],
-      rootFiles: Map[String, Seq[LiveFile]], schema: StructType)
+      rootFiles: Map[String, Seq[org.apache.hadoop.fs.FileStatus]],
+      schema: StructType)
 
   /** One data file of a live manifest entry, as recorded in the
     * sidecar at commit time (name is directory-relative; len/mod are

@@ -448,8 +448,8 @@ object GraftDataSource {
     *    — runs the audit scan at resolution, the cost the caller asked
     *    for)
     *  - `files`: the live data files with directory, generation, and
-    *    size — the capacity-planning view (one root listing + one
-    *    LIST per live directory, O(live files) metadata)
+    *    size — the capacity-planning view ([[graft.Lake.filesView]]:
+    *    sidecar-recorded directories cost no LIST)
     *
     * Views are driver-sized metadata served through a DSv2 `LocalScan`
     * (Catalyst folds it to a LocalRelation — no file scan planned). */
@@ -479,8 +479,11 @@ object GraftDataSource {
         // FILE-level manifest, keyed by the same root strings —
         // derived commits record their files (DerivedTable.commit), so
         // the scan plans with zero per-directory listings (guide §6)
+        val fs = new Path(location).getFileSystem(spark.sparkContext.hadoopConfiguration)
         val rootFiles = st.liveFiles.map { case (rel, fl) =>
-          s"$location/$rel" -> fl }
+          val dir = fs.makeQualified(new Path(s"$location/$rel"))
+          s"$location/$rel" -> fl.map(f =>
+            GraftManifestFileIndex.status(dir, f.name, f.len, f.mod)) }
         return new GraftDerivedTable(s"graft-derived:$location", spark,
           options, roots, partField, pinned, rootFiles)
       case _ => ()
@@ -563,7 +566,7 @@ final class GraftDerivedTable(
     roots: Seq[(String, Option[String])],
     partField: StructField,
     pinned: StructType,
-    rootFiles: Map[String, Seq[graft.Lake.LiveFile]] = Map.empty)
+    rootFiles: Map[String, Seq[FileStatus]] = Map.empty)
   extends Table with SupportsRead {
 
   private val parquet = new GraftBackingTable(
@@ -618,7 +621,7 @@ final class GraftTable(
     cfg: LakeConfig,
     asOf: Option[Long],
     roots: Seq[(String, Option[String])],
-    rootFiles: Map[String, Seq[graft.Lake.LiveFile]],
+    rootFiles: Map[String, Seq[FileStatus]],
     partField: StructField,
     emptySchema: Option[StructType])
   extends Table with SupportsRead with SupportsWrite
@@ -767,7 +770,7 @@ private final class GraftBackingTable(
     roots: Seq[(String, Option[String])],
     partField: StructField,
     emptySchema: Option[StructType],
-    rootFiles: Map[String, Seq[graft.Lake.LiveFile]] = Map.empty)
+    rootFiles: Map[String, Seq[FileStatus]] = Map.empty)
   extends ParquetTable(name0, spark, scanOpts, roots.map(_._1).distinct,
     emptySchema, classOf[ParquetFileFormat]) {
 
@@ -809,8 +812,7 @@ private final class GraftBackingTable(
           roots.map { case (s, _) => qualify(s) -> s }.toMap
         val dirFiles = qualified.map(_._1).distinct.map { q =>
           rootFiles.get(byPath(q)) match {
-            case Some(fl) => q -> fl.map(f =>
-              GraftManifestFileIndex.status(q, f.name, f.len, f.mod)).toArray
+            case Some(fl) => q -> fl.toArray
             case None =>
               val listed =
                 try q.getFileSystem(hadoopConf).listStatus(q)

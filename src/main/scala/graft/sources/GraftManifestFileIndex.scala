@@ -16,8 +16,10 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * practical arguments for them at scale").
   *
   * Every [[org.apache.hadoop.fs.FileStatus]] this index serves was
-  * recorded at COMMIT time ([[graft.Lake]] `writeState`), so planning a
-  * scan performs ZERO `listStatus` calls against the data tree — on an
+  * resolved before planning — recorded at COMMIT time ([[graft.Lake]]
+  * `writeState`) or listed once by the lake's file resolver — so
+  * planning a scan performs ZERO `listStatus` calls of its own; for a
+  * manifest-recorded entry that means none against the data tree — on an
   * object store that turns O(live directories) round trips per query
   * into none, and it removes the last reason a reader's latency grows
   * with the lake's directory count. Partition pruning works exactly as
@@ -27,9 +29,7 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *
   * Sound because a committed (directory, generation) manifest entry is
   * immutable until vacuum retires it wholesale — the same invariant the
-  * listing-based read already relied on. Entries that predate the
-  * file-level field (or could not be recorded safely) never reach this
-  * index; their branches fall back to the listing read. */
+  * listing-based read already relied on. */
 private[graft] final class GraftManifestFileIndex(
     spark: SparkSession,
     spec: PartitionSpec,

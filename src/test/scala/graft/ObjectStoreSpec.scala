@@ -758,6 +758,12 @@ class ObjectStoreSpec extends SparkSpec {
     assert(spark.read.format("graft").load(s"$root/lake")
       .select("id").as[String].collect().toSet ===
       (0 until 60).map(i => s"m$i").toSet)
+    // files view: the same resolved live set, straight from the sidecar
+    CountingListFs.listed.clear()
+    val viewed = lake.filesView().select("file").as[String].collect().toSet
+    assert(dataListings().isEmpty,
+      s"filesView listed data dirs: ${dataListings().mkString(", ")}")
+    assert(viewed === lake.read().inputFiles.toSet)
     // change feed between two sealed sync points: both endpoints'
     // file sets come straight from their sidecars
     assert(lake.deleteWhere(col("id") === "m7") === 1L)
@@ -768,6 +774,63 @@ class ObjectStoreSpec extends SparkSpec {
       .select("id").as[String].collect().toSeq === Seq("m7"))
     assert(dataListings().isEmpty,
       s"changesBetween listed data dirs: ${dataListings().mkString(", ")}")
+    // recall-calibration staleness after a moved token weighs the live
+    // volume of the resolved set: no data LIST either
+    lake.calibrateRecall(k = 3, sampleQueries = 4)
+    lake.seal() // a fresh last_update token over the same live set
+    CountingListFs.listed.clear()
+    assert(lake.recallCalibStale() === Some(false))
+    assert(dataListings().isEmpty,
+      s"recallCalibStale listed data dirs: ${dataListings().mkString(", ")}")
+    // expire's wholesale-retirement check resolves its candidates once,
+    // from the sidecar (nothing here is old enough to expire)
+    lake.buildZoneMap()
+    CountingListFs.listed.clear()
+    assert(lake.expire(java.time.Instant.EPOCH) === ((0L, 0L)))
+    assert(dataListings().isEmpty,
+      s"expire listed data dirs: ${dataListings().mkString(", ")}")
+    lake.delete()
+  }
+
+  test("a sealed sidecar without its file manifest resolves by listing: same rows, same files") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingListFs].getName)
+    val dir = java.nio.file.Files.createTempDirectory("graft_countfs").toString
+    val root = s"countfs://$dir"
+    val lake = Lake(spark, LakeConfig(s"$root/lake", dim = 4, numHashes = 3))
+    def rows(from: Int, to: Int) = (from until to)
+      .map(i => (s"m$i", Seq(math.sin(i).toFloat, 1f, -i.toFloat, 0.5f), s"doc-$i"))
+      .toDF("id", "vector", "document")
+    lake.ingest(rows(0, 60))
+    val sync1 = lake.seal()
+    assert(lake.deleteWhere(col("id") === "m7") === 1L)
+    lake.ingest(rows(60, 70))
+    val sync2 = lake.seal()
+    def dataListings(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      CountingListFs.listed.asScala.toSeq
+        .filter(p => p.contains("shard=") || p.matches(""".*gen-\d+$"""))
+    }
+    def resolved() = (
+      lake.read().select("id").as[String].collect().sorted.toSeq,
+      spark.read.format("graft").load(s"$root/lake")
+        .select("id").as[String].collect().sorted.toSeq,
+      lake.changesBetween(sync1, sync2).select("id", "change")
+        .as[(String, String)].collect().sorted.toSeq,
+      lake.filesView().select("file", "bytes")
+        .as[(String, Long)].collect().sorted.toSeq)
+    val before = resolved()
+    assert(before._1.size === 69 && before._3.size === 11)
+    // the newest sidecar as an older writer left it: no `files` array
+    val p = new org.apache.hadoop.fs.Path(s"$root/lake/_meta.$sync2.json")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sidecar = ControlFiles.read[ControlFiles.LakeSidecar](fs, p)
+    assert(sidecar.files.exists(_.nonEmpty))
+    ControlFiles.write(fs, p, sidecar.copy(files = None), overwrite = true)
+    CountingListFs.listed.clear()
+    assert(resolved() === before)
+    assert(dataListings().nonEmpty,
+      "an unrecorded sidecar must be resolved by listing its directories")
     lake.delete()
   }
 }

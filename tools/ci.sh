@@ -13,6 +13,22 @@ if grep -rnE '"\\{1,2}s\*:' src/main/scala --include='*.scala' \
   exit 1
 fi
 
+# which files a lake state holds is decided in one place: in Lake.scala
+# only the resolver (recordedFiles) and the commit-time recorder
+# (writeState) read `.liveFiles`, and only streamOwned (the predicate)
+# and ingestStream (which plants the pin) name "_spark_metadata"
+if ! awk '
+  /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
+  match($0, /def [A-Za-z0-9_]+/) { fn = substr($0, RSTART + 4, RLENGTH - 4) }
+  /\.liveFiles([^A-Za-z0-9_]|$)/ && fn != "recordedFiles" && fn != "writeState" {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  /"_spark_metadata"/ && fn != "streamOwned" && fn != "ingestStream" {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  END { exit bad }' src/main/scala/graft/Lake.scala; then
+  echo "ci: snapshot files resolved outside Lake.resolveFiles/recordedFiles, or a stream-owned check outside Lake.streamOwned" >&2
+  exit 1
+fi
+
 # benchmark arithmetic (stats.py) unit tests
 python3 perfbench/test_stats.py
 
