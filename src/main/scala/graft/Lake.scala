@@ -836,11 +836,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     if (st.isSealed) return st.live
     val fs = fsOfRoot
     val cur = genPath(st.generation)
+    // one LIST, no existence probe first: a missing tree has no
+    // directories
     val inCur =
-      if (!fs.exists(cur)) Nil
-      else fs.listStatus(cur).toSeq
+      try fs.listStatus(cur).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.contains("="))
         .map(_.getPath.getName -> st.generation)
+      catch { case _: java.io.FileNotFoundException => Nil }
     st.live.filter(_._2 != st.generation) ++ inCur
   }
 
@@ -1326,12 +1328,29 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * even LISTED — a reader's paths are resolved from one sidecar
     * read, and nothing deletes a live-at-resolution-time directory
     * except an operator-invoked [[vacuum]]. */
-  def read(): DataFrame = {
+  def read(): DataFrame = readScoped(None)
+
+  /** [[read]] (or [[readAt]] `version`) cut to the partitions holding
+    * `values` (decoded partition values at the session's width, None =
+    * the Hive null partition): only the live entries that can hold one
+    * of them are resolved — a routed search on an unsealed lake LISTs
+    * its probed directories, not the whole current tree — and
+    * [[affectedPartPred]] stays on top, so the rows are exactly those
+    * of the unscoped read filtered by it ([[inScope]] keeps a superset
+    * of the entries holding them). Every read that already knows its
+    * partitions goes through here. */
+  private[graft] def readPartitions(values: Set[Option[String]],
+      version: Option[Long] = None): DataFrame =
+    readScoped(Some(values), version).where(affectedPartPred(values))
+
+  private def readScoped(scope: Option[Set[Option[String]]],
+      version: Option[Long] = None): DataFrame = {
     val fs = fsOfRoot
     val entries = listRoot(fs)
     val st = readStateFrom(fs, entries)
     requireRouting(st) // a mismatched-config session must not prune/route
-    readFrom(st, entries)
+    readFrom(version.fold(st)(vacuumCheckedStateAt(_, fs, entries)),
+      entries, scope)
   }
 
   /** SNAPSHOT READ at a past sidecar version — time travel, free by
@@ -1346,12 +1365,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * snapshot boundaries, the same contract as the reference's
     * last-persist-wins stamp, but queryable. Fails loudly when the
     * version's sidecar (or a generation it names) has been vacuumed. */
-  def readAt(version: Long): DataFrame = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    requireRouting(readStateFrom(fs, entries))
-    readFrom(vacuumCheckedStateAt(version, fs, entries), entries)
-  }
+  def readAt(version: Long): DataFrame = readScoped(None, Some(version))
 
   /** [[stateAt]] plus the vacuumed-snapshot detectors [[readAt]] and
     * the `graft` DSv2 format's [[scanRoots]] share — a retired
@@ -1566,7 +1580,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // churning every partition. Only partitions where a row actually
     // enters or leaves are rewritten.
     val current = graft.operators.Materialize.cut(
-      proj(read().where(affectedPartPred(candidates))
+      proj(readPartitions(candidates)
         .join(touched, col("id") === col("__chg_id"), "left_semi")))
     val net = graft.operators.Materialize.cut(netInsertsDeletes(ins, current))
     val toIns = net.where(col("change") === "insert").drop("change")
@@ -1577,7 +1591,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       .map(r => Option(r.get(0)).map(_.toString)).toSet
     val changedIds = broadcast(
       net.select(col("id").as("__chg_id")).distinct())
-    val slice = read().where(affectedPartPred(affected))
+    val slice = readPartitions(affected)
     val sliceCount = slice.count()
     val kept = proj(
       slice.join(changedIds, col("id") === col("__chg_id"), "left_anti"))
@@ -1805,7 +1819,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         .map(r => Option(r.get(0)).map(_.toString)).toSet
       if (convicted.isEmpty) (0L, 0L)
       else {
-        val truth = source.read().where(affectedPartPred(convicted))
+        val truth = source.readPartitions(convicted)
         // auto-evolve source extras under the held lock (no re-entrant
         // evolve(), same inline path + validation as applyChanges)
         val st0 = readState()
@@ -2663,8 +2677,49 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     else Lake.netInsertsDeletes(ins, del)
   }
 
+  /** The routing width `st`'s LSH directories were written at: the
+    * reshard's target mid-reshard, else the sidecar's declared shard
+    * count (a pre-reshard snapshot), else the session's. A user-keyed
+    * lake has no routing width: the session's. Reshard-PENDING entries
+    * are the exception — they sit at the reshard's `fromBits`. */
+  private def stateBitsOf(st: LakeState): Int =
+    if (cfg.partitionKey.isDefined) cfg.numHashes
+    else st.reshard.map(_.toBits)
+      .orElse(st.sidecarShards.filter(_ > 0)
+        .map(ns => java.lang.Long.numberOfTrailingZeros(ns)))
+      .getOrElse(cfg.numHashes)
+
+  /** Whether live entry (escaped-dir, generation) of `st` can hold a
+    * row whose partition value is in `values` — the scope of
+    * [[readPartitions]]. A user key matches its decoded value exactly
+    * (None = the Hive default directory). An LSH entry written at width
+    * `w` holds every row whose session-width shard agrees with its value
+    * on the low `w` bits, so a reshard-pending entry (`fromBits`) or a
+    * narrower snapshot's entry ([[stateBitsOf]]) matches through that
+    * mask; a match on the directory name alone would drop them. */
+  private def inScope(st: LakeState, values: Set[Option[String]])
+      : ((String, Long)) => Boolean = {
+    def value(d: String): Any = graft.sources.GraftDataSource.partValue(Some(d),
+      if (cfg.partitionKey.isEmpty) IntegerType else cfg.partitionKeyType)
+    if (cfg.partitionKey.isDefined)
+      e => values.contains(Option(value(e._1)).map(_.toString))
+    else {
+      val shards = values.flatMap(_.flatMap(_.toIntOption))
+      val bits = stateBitsOf(st)
+      val pending = st.reshard.map(r => (r.pending.toSet, r.fromBits))
+      e => value(e._1) match {
+        case v: java.lang.Integer =>
+          val w = pending.collect { case (p, from) if p(e) => from }
+            .getOrElse(bits)
+          shards.exists(s => (s & ((1 << w) - 1)) == v.intValue)
+        case _ => false
+      }
+    }
+  }
+
   private def readFrom(st: LakeState,
-      rootEntries: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame = {
+      rootEntries: Seq[org.apache.hadoop.fs.FileStatus],
+      scope: Option[Set[Option[String]]] = None): DataFrame = {
     val partType =
       if (cfg.partitionKey.isEmpty) IntegerType else cfg.partitionKeyType
     val fs = fsOfRoot
@@ -2685,12 +2740,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // sets and pre-reshard snapshots are), and a stale old-width
     // instance reading a resharded lake is still refused by the
     // wider-state require below.
-    val stateBits: Int =
-      if (cfg.partitionKey.isDefined) cfg.numHashes
-      else st.reshard.map(_.toBits)
-        .orElse(st.sidecarShards.filter(_ > 0)
-          .map(ns => java.lang.Long.numberOfTrailingZeros(ns)))
-        .getOrElse(cfg.numHashes)
+    val stateBits = stateBitsOf(st)
     require(stateBits <= cfg.numHashes,
       s"read at ${cfg.location}: this snapshot was routed into " +
         s"${1L << stateBits} shards but the session's width is " +
@@ -2791,10 +2841,16 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // routed at the reshard's FROM width and re-derive the missing
     // bits; everything else is at the state's width (mid-reshard, that
     // is the target width — completed steps and post-transition
-    // appends). The current generation's branch leads the union.
+    // appends). The current generation's branch leads the union. A
+    // `scope` ([[readPartitions]]) drops every entry that cannot hold a
+    // scoped value BEFORE resolution, so the LISTs follow the scope;
+    // the sink and legacy branches stay whole (the caller's predicate
+    // prunes them).
+    val keep = scope.map(inScope(st, _))
     val entries =
-      if (curPresent && !curSinkOwned) liveEntries(st)
-      else st.live.filter(_._2 != st.generation)
+      (if (curPresent && !curSinkOwned) liveEntries(st)
+      else st.live.filter(_._2 != st.generation))
+        .filter(e => keep.forall(_(e)))
     val genBranches = resolveFiles(fs, st, entries, "read")
       .groupBy { case (e, _) => (e._2, reshardPending.contains(e)) }
       .toSeq.sortBy { case ((g, isPending), _) =>
@@ -2870,18 +2926,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * then exact top-k — `TakeOrderedAndProject` does per-partition heap
     * top-k on executors + driver merge, structurally the reference's
     * per-shard search + merge (index.py:499-537). */
-  def topK(q: Seq[Double], k: Int): DataFrame = {
-    val routed = lsh.shardOf(q)
-    topKWhere(q, k, col(partCol) === lit(routed))
-  }
+  def topK(q: Seq[Double], k: Int): DataFrame =
+    topKRouted(q, k, probeShards(q, 1))
 
   /** Multi-probe variant: search all shards within Hamming distance 1 of
     * the routed shard (IVF-style recall/cost dial; still prunes 247 of
     * 256 directories at 8 hashes). */
-  def topKMultiProbe(q: Seq[Double], k: Int): DataFrame = {
-    val probes = probeShards(q, 1 + cfg.numHashes)
-    topKWhere(q, k, col(partCol).isin(probes: _*))
-  }
+  def topKMultiProbe(q: Seq[Double], k: Int): DataFrame =
+    topKRouted(q, k, probeShards(q, 1 + cfg.numHashes))
 
   /** Exact kNN over the whole lake (no pruning). */
   def topKExact(q: Seq[Double], k: Int): DataFrame =
@@ -2970,8 +3022,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         V.l2Norm(col("qvec")).as("qnrm"))
     val shards = probed.map(_._3).distinct
     batchTopKTail(
-      read()
-        .where(col(partCol).isin(shards: _*))
+      readPartitions(shardValues(shards))
         .select(col("id"), col(partCol),
           V.asDouble(col("vector")).as("vec"), V.l2Norm(col("vector")).as("nrm"))
         .join(broadcast(qdf), col(partCol) === col("qshard"))
@@ -3174,7 +3225,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * instead of data-independent sign bits — tighter candidates at the
     * same stored size. */
   def topKPq(q: Seq[Double], k: Int, coarseK: Int = 100): DataFrame =
-    topKPqWhere("topKPq", q, k, coarseK, lit(true))
+    topKPqWhere("topKPq", q, k, coarseK, None)
 
   /** [[topKPq]] with LSH shard pruning composed in — the full serving
     * stack a 100 TB ANN deployment actually runs, each stage cutting
@@ -3201,15 +3252,12 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     require(cfg.partitionKey.isEmpty,
       "topKPqRouted routes by the LSH shard column — a user-partitioned " +
         "lake has no LSH routing; use topKPq (full scan) or topKFiltered")
-    val routed = lsh.shardOf(q)
-    val probes =
-      if (multiProbe) routed +: (0 until cfg.numHashes).map(j => routed ^ (1 << j))
-      else Seq(routed)
-    topKPqWhere("topKPqRouted", q, k, coarseK, col(partCol).isin(probes: _*))
+    val probes = probeShards(q, if (multiProbe) 1 + cfg.numHashes else 1)
+    topKPqWhere("topKPqRouted", q, k, coarseK, Some(probes))
   }
 
   private def topKPqWhere(op: String, q: Seq[Double], k: Int, coarseK: Int,
-      pred: Column): DataFrame = {
+      probes: Option[Seq[Int]]): DataFrame = {
     val model = cfg.pqCodebooks.getOrElse(throw new IllegalArgumentException(
       s"$op needs a materialized pq_code column: set pqCodebooks = Some(model)"))
     pqFingerprintMatch(readState()) // stored codes must be this model's codes
@@ -3217,14 +3265,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       element_at(V.vecLit(model.lutFor(q, mi)),
         (shiftright(col("pq_code"), 8 * mi).bitwiseAND(lit(255)) + 1).cast("int"))
     }.reduce(_ + _)
-    val coarse = read()
-      .where(pred)
+    // the rerank never reads outside the routed shards either
+    def slice(): DataFrame =
+      probes.fold(read())(ps => readPartitions(shardValues(ps)))
+    val coarse = slice()
       .select(col("id"), adc.as("adc"))
       .orderBy(col("adc"), col("id"))
       .limit(coarseK)
       .select("id")
-    read()
-      .where(pred) // the rerank never reads outside the routed shards either
+    slice()
       .join(broadcast(coarse), Seq("id"))
       .withColumn("dist", V.round6z(distCol(q)))
       .orderBy(col("dist"), col("id"))
@@ -3233,6 +3282,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
 
   private def topKWhere(q: Seq[Double], k: Int, pred: Column): DataFrame =
     topKOver(read().where(pred), q, k)
+
+  /** Exact top-k over the probed shards only ([[readPartitions]]). */
+  private def topKRouted(q: Seq[Double], k: Int, probes: Seq[Int]): DataFrame =
+    topKOver(readPartitions(shardValues(probes)), q, k)
+
+  /** LSH shard ids as [[readPartitions]] values. */
+  private def shardValues(shards: Seq[Int]): Set[Option[String]] =
+    shards.map(s => Option(s.toString)).toSet
 
   /** The one scoring tail every exact serve path shares (metric via
     * `distCol`, round-6 floats, (dist, id) total order, heap top-k) —
@@ -3441,7 +3498,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         "later session)"))
     val idx = recalls.indexWhere(_ >= targetRecall)
     if (idx < 0) topKExact(q, k)
-    else topKWhere(q, k, col(partCol).isin(probeShards(q, idx + 1): _*))
+    else topKRouted(q, k, probeShards(q, idx + 1))
   }
 
   /** Metadata/attribute-filtered exact kNN — the vector-DB "filtered
@@ -3682,7 +3739,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           math.max(1L, (bytes + targetBytes - 1) / targetBytes)) => v
       }.toSet
       if (dirty.isEmpty) return 0L
-      val slice = read().where(affectedPartPred(dirty))
+      val slice = readPartitions(dirty)
       val expected = slice.count()
       val content = slice.select((storedColsOf(st).map(col) :+ col(partCol)): _*)
       rewritePartitions(dirty, content, expected, "compactIncremental",
@@ -4164,13 +4221,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private def deleteWhereImpl(pred: Column,
       scope: Option[Set[Option[String]]] = None): Long = {
     val discovery = scope match {
-      case Some(c) => read().where(affectedPartPred(c))
+      case Some(c) => readPartitions(c)
       case None => read()
     }
     val affected = discovery.where(pred).select(partCol).distinct().collect()
       .map(r => Option(r.get(0)).map(_.toString)).toSet
     if (affected.isEmpty) return 0L
-    val slice = read().where(affectedPartPred(affected))
+    val slice = readPartitions(affected)
     val total = slice.count()
     val kept = slice.where(!coalesce(pred, lit(false)))
       .select((storedColsNow.map(col) :+ col(partCol)): _*)
@@ -4224,7 +4281,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         readStateFrom(fs, entries), entries)
     } match {
       case Some(c) if c.isEmpty => None // no stored shard can hold these ids
-      case Some(c) => Some(read().where(affectedPartPred(c)))
+      case Some(c) => Some(readPartitions(c))
       case None => Some(read())
     }
     val oldShards = probe.map(
@@ -4234,7 +4291,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val newShards = newDerived.select(partCol).distinct().collect()
     val affected = (oldShards ++ newShards)
       .map(r => Option(r.get(0)).map(_.toString)).toSet
-    val slice = read().where(affectedPartPred(affected))
+    val slice = readPartitions(affected)
     val sliceCount = slice.count()
     val colsNow = storedColsNow
     val keptOld = slice
@@ -4309,7 +4366,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         readStateFrom(fs, entries), entries)
     } match {
       case Some(c) if c.isEmpty => None
-      case Some(c) => Some(read().where(affectedPartPred(c)))
+      case Some(c) => Some(readPartitions(c))
       case None => Some(read())
     }
     val oldShards = probe.map(
@@ -4322,7 +4379,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val affected = (oldShards ++ newShards)
       .map(r => Option(r.get(0)).map(_.toString)).toSet
     if (affected.isEmpty) return (0L, 0L) // deletes of absent ids only
-    val slice = read().where(affectedPartPred(affected))
+    val slice = readPartitions(affected)
     val sliceCount = slice.count()
     val colsNow = storedColsNow
     val kept = slice
@@ -4337,9 +4394,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     (sliceCount - keptCount, newCount)
   }
 
-  /** Null-safe membership predicate over decoded partition values. */
+  /** Membership predicate over decoded partition values. An LSH lake's
+    * values are shard ids (never null), matched as a typed IN — the
+    * literal shard predicate a routed scan prunes by (one id plans as
+    * `shard = <id>`); a user key is matched null-safe on its string
+    * form. */
   private def affectedPartPred(affected: Set[Option[String]]): Column =
-    affected.toSeq
+    if (cfg.partitionKey.isEmpty)
+      col(partCol).isin(affected.toSeq.flatMap(_.flatMap(_.toIntOption)).sorted: _*)
+    else affected.toSeq
       .map(v => col(partCol).cast(StringType) <=> lit(v.orNull))
       .reduce(_ || _)
 
@@ -4497,7 +4560,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val refreshed =
       if (affectedLive.isEmpty) keep // every affected shard fully emptied
       else keep.unionByName(skipRows(
-        read().where(affectedPartPred(affectedLive.keySet)),
+        readPartitions(affectedLive.keySet),
         affectedLive, fpp = 0.01))
     writeSkipIndex(refreshed)
   } catch { case scala.util.control.NonFatal(_) => () } // stale = safe
@@ -4768,24 +4831,24 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * [[topKInRange]]: (base frame, residual window predicate). The base
     * is the file slice the map could not exclude — or the plain
     * [[read]] when no map exists / the layout forces the fallback —
-    * optionally pre-cut to `dirNames` partition directories (the routed
-    * shards' escaped dir names, a second file-level cut on top of the
-    * zone cut). Callers must apply `residual` (and any shard predicate)
-    * for exactness. */
+    * optionally pre-cut to the partitions holding `scope`'s values (the
+    * routed shards, a second file-level cut on top of the zone cut).
+    * Callers must apply `residual` (and any shard predicate) for
+    * exactness. */
   private def timeWindowBase(from: java.time.Instant, to: java.time.Instant,
-      dirNames: Option[Set[String]], op: String): (DataFrame, Column) = {
+      scope: Option[Set[Option[String]]], op: String): (DataFrame, Column) = {
     require(!from.isAfter(to), s"$op: from $from is after to $to")
     val lob = lit(java.sql.Timestamp.from(from))
     val hib = lit(java.sql.Timestamp.from(to))
-    (zonePrunedBase("min_ts", "max_ts", lob, hib, dirNames, op),
+    (zonePrunedBase("min_ts", "max_ts", lob, hib, scope, op),
       col("timestamp") >= lob && col("timestamp") <= hib)
   }
 
   /** The zone-pruned scan shared by every range surface: the file
     * slice whose mapped [`minCol`, `maxCol`] can intersect [lo, hi] —
     * or the plain [[read]] when no map exists / the layout forces the
-    * fallback — optionally pre-cut to `dirNames` partition
-    * directories. Control-plane cost is O(live files in scope), the
+    * fallback — optionally pre-cut to the partitions holding `scope`'s
+    * values ([[readPartitions]]' scope). Control-plane cost is O(live files in scope), the
     * same order as the listing itself (and as Spark's own file index):
     * ONE pass over the map, PRE-FILTERED in the plan to the scoped
     * directories when a shard cut is given (a serving call must not
@@ -4810,28 +4873,29 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * None and trust every row. Callers must apply their exact residual
     * predicate. */
   private def zonePrunedBase(minCol: String, maxCol: String,
-      lo: Column, hi: Column, dirNames: Option[Set[String]],
+      lo: Column, hi: Column, scope: Option[Set[Option[String]]],
       op: String, requireFp: Option[String] = None): DataFrame = {
     val fs = fsOfRoot
-    if (!exists() || !fs.exists(zonePath)) return read()
+    def plain(): DataFrame = scope.fold(read())(readPartitions(_))
+    if (!exists() || !fs.exists(zonePath)) return plain()
     val entries = listRoot(fs)
     val st = readStateFrom(fs, entries)
     requireRouting(st)
-    if (rootLevelDataFrom(entries).nonEmpty || streamOwned(st))
-      return read()
-    val dirs = dirNames match {
-      case Some(keep) => liveEntries(st).filter(d => keep(d._1.split("/").last))
-      case None => liveEntries(st)
-    }
+    // a file slice carries its directory's shard value as written, so
+    // reshard-pending entries (narrower width, re-derived only by the
+    // plain read) take the plain read until the reshard completes
+    if (rootLevelDataFrom(entries).nonEmpty || streamOwned(st) ||
+        st.reshard.isDefined)
+      return plain()
+    val keep = scope.map(inScope(st, _))
+    val dirs = liveEntries(st).filter(e => keep.forall(_(e)))
     val owners = fileOwners(fs, st, dirs, op)
     val kept =
       try readZone(fs, merged = requireFp.isDefined).map { z =>
-        val scoped = dirNames match {
-          case Some(keep) =>
-            z.where(keep.toSeq.map(d => col("file").contains(s"/$d/"))
-              .reduce(_ || _))
-          case None => z
-        }
+        val scoped =
+          if (scope.isEmpty || dirs.isEmpty) z
+          else z.where(dirs.map(_._1).distinct
+            .map(d => col("file").contains(s"/$d/")).reduce(_ || _))
         val trusted = requireFp match {
           case Some(fp) => scoped.where(col("spec_fp") === fp)
           case None => scoped
@@ -4928,11 +4992,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         "lake has no LSH routing; use topKFiltered with a timestamp " +
         "predicate")
     requireNprobe(nprobe)
-    // LSH shard values are plain ints, so the dir names need no
-    // Hive-escaping (a user-partitioned lake is refused above)
     val probes = probeShards(q, nprobe)
-    val dirNames: Set[String] = probes.map(s => s"$partCol=$s").toSet
-    val (base, residual) = timeWindowBase(from, to, Some(dirNames), "topKInRange")
+    val (base, residual) = timeWindowBase(from, to,
+      Some(shardValues(probes)), "topKInRange")
     topKOver(base.where(residual && col(partCol).isin(probes: _*)), q, k)
   }
 
@@ -5054,7 +5116,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val pred = col("id").isin(ids: _*)
     skipCandidates(ids, st, entries) match {
       case Some(c) if c.isEmpty => readFrom(st, entries).where(lit(false))
-      case Some(c) => readFrom(st, entries).where(affectedPartPred(c) && pred)
+      case Some(c) =>
+        readFrom(st, entries, Some(c)).where(affectedPartPred(c) && pred)
       case None => readFrom(st, entries).where(pred)
     }
   }

@@ -56,6 +56,32 @@ case class DotProductExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** A query constant the optimizer must not fold: evaluates to its
+  * child and generates the child's code (an array literal is a
+  * reference object, the same source for every value), but is not
+  * `foldable`. Without it ConstantFolding turns an expression over the
+  * constant alone — ‖q‖ in the cosine distance — into a double literal
+  * that codegen inlines into the generated source, so every new query
+  * vector compiles new classes. Over it, such an expression stays a
+  * per-row computation with the same arithmetic, bit for bit, and one
+  * query shape compiles once. */
+case class QueryConstant(child: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  override def foldable: Boolean = false
+  override def dataType: DataType = child.dataType
+  override def nullable: Boolean = child.nullable
+  override def prettyName: String = "query_constant"
+
+  override def eval(input: InternalRow): Any = child.eval(input)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    child.genCode(ctx)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** Static loop bodies shared by eval and codegen (same posture as
   * [[TextKernels]]). */
 object VectorKernels {

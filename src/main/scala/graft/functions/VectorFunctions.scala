@@ -105,11 +105,21 @@ object VectorFunctions {
     * consumes it, which blew the IVF/PQ queries' generated source to
     * ~57 KB (16 centroids × 64 dims inlined per row) and their
     * execution time to 2-4× the no-codegen path. Values, type and
-    * containsNull=false are identical to the CreateArray form. */
-  def vecLit(v: Seq[Double]): Column = wrap(
+    * containsNull=false are identical to the CreateArray form.
+    *
+    * The literal is wrapped NON-FOLDABLE
+    * ([[graft.expressions.QueryConstant]]): otherwise Catalyst folds
+    * every expression over the vector alone — `l2Norm(q)` in
+    * [[cosineSim]] — into a double literal inlined into the generated
+    * Java, so each new query vector compiled new classes (~0.1-0.2 s
+    * each). Wrapped, `sqrt(dot(q, q))` stays per-row (dim multiplies,
+    * the same arithmetic in the same order, so every distance is
+    * bit-identical) and every query of one shape reuses Spark's
+    * codegen cache. */
+  def vecLit(v: Seq[Double]): Column = wrap(graft.expressions.QueryConstant(
     org.apache.spark.sql.catalyst.expressions.Literal.create(v,
       org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, containsNull = false)))
+        org.apache.spark.sql.types.DoubleType, containsNull = false))))
 
   /** Sign-bit packing: bit i ⇔ vᵢ > 0, first min(64, dim) dims — the
     * binarized-embedding compression (fused kernel

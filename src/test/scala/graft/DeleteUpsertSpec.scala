@@ -460,4 +460,21 @@ class DeleteUpsertSpec extends SparkSpec {
     lake.ingest(Seq(("keep-me", Seq(1f, 0f, 0f, 0f, 0f), "d")).toDF("id", "vector", "document"))
     assert(lake.read().head().getAs[String]("id") === "keep-me")
   }
+
+  test("deleteWhere on a user-keyed lake rewrites the null partition from its scoped slice") {
+    val dir = Files.createTempDirectory("graft_del_null").toString
+    val lake = Lake(spark, LakeConfig(s"$dir/lake", dim = 3,
+      partitionKey = Some("tenant")))
+    def batch(rs: (String, String)*) = rs.map { case (id, t) =>
+      (id, Seq(id.length.toFloat, 1f, 0f), s"d-$id", t)
+    }.toDF("id", "vector", "document", "tenant")
+    lake.ingest(batch(("n1", null), ("n2", null), ("a1", "a"), ("b1", "b")))
+    lake.seal()
+    // the null partition now has live entries in two generations
+    lake.ingest(batch(("n3", null), ("a2", "a")))
+    assert(lake.deleteWhere(col("id").isin("n1", "a1")) === 2L)
+    assert(lake.read().select("id", "tenant").as[(String, String)]
+      .collect().toSet ===
+      Set(("n2", null), ("n3", null), ("a2", "a"), ("b1", "b")))
+  }
 }

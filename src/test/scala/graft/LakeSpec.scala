@@ -503,4 +503,22 @@ class LakeSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("packSignBits"))
   }
+
+  test("a routed topK with a new query vector of the same plan shape compiles no new code") {
+    val lake = freshLake()
+    val rng = new scala.util.Random(5)
+    lake.ingest(vecsDF((0 until 200).map(_ => Seq.fill(5)(rng.nextGaussian()))))
+    // two stored vectors routed to one shard: same plan, different query
+    val Seq(q1, q2) = lake.read().select("shard", "vector")
+      .as[(Int, Seq[Float])].collect().groupBy(_._1).values
+      .find(_.length >= 2).get.take(2).map(_._2.map(_.toDouble)).toSeq
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    lake.topK(q1, 4).collect()
+    val before = compiles.getCount
+    val got = lake.topK(q2, 4).collect()
+    assert(compiles.getCount - before === 0L,
+      "a new query vector must reuse the compiled plan")
+    assert(got.head.getAs[Double]("dist") === 0.0)
+  }
 }

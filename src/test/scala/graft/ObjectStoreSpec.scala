@@ -833,4 +833,45 @@ class ObjectStoreSpec extends SparkSpec {
       "an unrecorded sidecar must be resolved by listing its directories")
     lake.delete()
   }
+
+  test("a routed search on an unsealed lake LISTs the root, the current generation and its probed directories only") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingListFs].getName)
+    val dir = java.nio.file.Files.createTempDirectory("graft_countfs").toString
+    val root = s"countfs://$dir"
+    val lake = Lake(spark, LakeConfig(s"$root/lake", dim = 8, numHashes = 6))
+    val rng = new scala.util.Random(11)
+    def rows(from: Int, to: Int) = (from until to)
+      .map(i => (s"m$i", Seq.fill(8)(rng.nextGaussian().toFloat), s"doc-$i"))
+      .toDF("id", "vector", "document")
+    // an older recorded generation plus a current generation that takes
+    // appends in nearly every shard directory — never sealed after
+    lake.ingest(rows(0, 600))
+    lake.seal()
+    lake.ingest(rows(600, 1200))
+    def lakeListings(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      CountingListFs.listed.asScala.toSeq.filter(_.contains(s"$dir/lake"))
+    }
+    val currentDirs = lake.read().where(col("id") >= "m600")
+      .select("shard").distinct().count()
+    assert(currentDirs > 32, "fixture needs a wide current generation")
+    def idDist(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "dist").as[(String, Double)].collect().toSeq
+    val q = Seq.fill(8)(rng.nextGaussian())
+    CountingListFs.listed.clear()
+    val single = idDist(lake.topK(q, 5))
+    assert(lakeListings().size <= 3,
+      s"topK listed: ${lakeListings().mkString(", ")}")
+    assert(single === idDist(lake.topKFiltered(q, 5,
+      col("shard") === lake.lsh.shardOf(q))))
+    CountingListFs.listed.clear()
+    val multi = idDist(lake.topKMultiProbe(q, 5))
+    assert(lakeListings().size <= 2 + 7,
+      s"topKMultiProbe listed: ${lakeListings().mkString(", ")}")
+    val r = lake.lsh.shardOf(q)
+    assert(multi === idDist(lake.topKFiltered(q, 5,
+      col("shard").isin((r +: (0 until 6).map(j => r ^ (1 << j))): _*))))
+    lake.delete()
+  }
 }

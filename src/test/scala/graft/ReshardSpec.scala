@@ -331,4 +331,97 @@ class ReshardSpec extends SparkSpec {
       java.time.Instant.parse("2024-02-01T00:00:00Z")).count()
     assert(inRange === 100L)
   }
+
+  test("a partition-scoped read resolves pending and pre-reshard entries through the width mask: routed top-k equals the unscoped filtered top-k") {
+    val dir = tmp()
+    val old = Lake(spark, LakeConfig(s"$dir/lake", dim = dim, numHashes = 3))
+    old.ingest(rows(400))
+    val preVersion = old.currentVersion().get
+    // partial reshard: six of the eight width-3 directories stay PENDING,
+    // then appends land at width 5 in the (unsealed) current generation
+    val wide = old.reshard(5, maxDirs = 2, dirsPerCommit = 1)
+    assert(wide.reshardStatus().exists(_._3 > 0), "fixture needs pending dirs")
+    wide.ingest(rows(40, tag = "mid"))
+    val lsh5 = Lsh(dim, 5)
+    // routed searches: the answer of the unscoped top-k over the probes
+    def probes(q: Seq[Double], n: Int): Seq[Int] = {
+      val r = lsh5.shardOf(q)
+      (r +: (0 until 5).map(j => r ^ (1 << j))).take(n)
+    }
+    def idDist(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "dist").as[(String, Double)].collect().toSeq
+    val queries = (0 until 12).map { i =>
+      (i.toLong, Seq(math.sin(i * 0.7), math.cos(i * 1.9),
+        math.sin(i * 0.4 + 2), (i % 5 - 2) / 3.0))
+    }
+    def unscoped(q: Seq[Double], nprobe: Int) =
+      idDist(wide.topKFiltered(q, 5, col("shard").isin(probes(q, nprobe): _*)))
+    queries.foreach { case (_, q) =>
+      assert(idDist(wide.topK(q, 5)) === unscoped(q, 1))
+      assert(idDist(wide.topKMultiProbe(q, 5)) === unscoped(q, 6))
+    }
+    Seq(1, 6).foreach { nprobe =>
+      val batch = wide.topKBatchRouted(queries, 5, nprobe).collect()
+        .groupBy(_.getAs[Long]("qid"))
+        .view.mapValues(_.sortBy(_.getAs[Int]("rank"))
+          .map(r => (r.getAs[String]("id"), r.getAs[Double]("dist"))).toSeq)
+        .toMap
+      queries.foreach { case (qid, q) =>
+        assert(batch.getOrElse(qid, Nil) === unscoped(q, nprobe),
+          s"qid $qid nprobe $nprobe")
+      }
+    }
+    def idShard(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "shard").as[(String, Int)].collect().toSet
+    // every session-width shard: the scoped read serves exactly the
+    // filtered unscoped read — a pending width-3 directory holds rows of
+    // four width-5 shards, and only the low-bits mask finds it
+    val scoped = (0 until 32).map { s =>
+      val got = idShard(wide.readPartitions(Set(Some(s.toString))))
+      assert(got === idShard(wide.read().where(col("shard") === s)), s"shard $s")
+      got.size
+    }
+    assert(scoped.sum === 440)
+    // the same on a pre-reshard snapshot, written at width 3 throughout
+    val snap = (0 until 32).map { s =>
+      val got = idShard(wide.readPartitions(Set(Some(s.toString)),
+        version = Some(preVersion)))
+      assert(got === idShard(wide.readAt(preVersion).where(col("shard") === s)),
+        s"snapshot shard $s")
+      got.size
+    }
+    assert(snap.sum === 400)
+  }
+
+  test("mid-reshard zone-pruned reads serve re-derived shards: readTimeRange and topKInRange equal the filtered read") {
+    val dir = tmp()
+    val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val ts1 = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
+    val old = Lake(spark, LakeConfig(s"$dir/lake", dim = dim, numHashes = 3))
+    old.ingest((0 until 300).map { i =>
+      (s"r-$i", Seq(math.sin(i * 1.3).toFloat, math.cos(i * 2.7).toFloat,
+        math.sin(i * 0.9 + 1).toFloat, (i % 7 - 3).toFloat / 4),
+        s"doc $i", if (i % 2 == 0) ts0 else ts1)
+    }.toDF("id", "vector", "document", "timestamp"))
+    assert(old.buildZoneMap() > 0L)
+    val wide = old.reshard(5, maxDirs = 2, dirsPerCommit = 1)
+    assert(wide.reshardStatus().exists(_._3 > 0), "fixture needs pending dirs")
+    val (from, to) = (java.time.Instant.parse("2023-12-01T00:00:00Z"),
+      java.time.Instant.parse("2024-02-01T00:00:00Z"))
+    val window = col("timestamp") >= lit(java.sql.Timestamp.from(from)) &&
+      col("timestamp") <= lit(java.sql.Timestamp.from(to))
+    def idShard(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "shard").as[(String, Int)].collect().toSet
+    assert(idShard(wide.readTimeRange(from, to)) ===
+      idShard(wide.read().where(window)))
+    def idDist(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "dist").as[(String, Double)].collect().toSeq
+    (0 until 8).foreach { i =>
+      val q = Seq(math.sin(i * 0.7), math.cos(i * 1.9),
+        math.sin(i * 0.4 + 2), (i % 5 - 2) / 3.0)
+      assert(idDist(wide.topKInRange(q, 5, from, to)) ===
+        idDist(wide.topKFiltered(q, 5,
+          window && col("shard") === Lsh(dim, 5).shardOf(q))), s"query $i")
+    }
+  }
 }

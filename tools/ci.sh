@@ -29,6 +29,19 @@ if ! awk '
   exit 1
 fi
 
+# a read that knows its partitions resolves only those: Lake.scala cuts
+# a partition slice with readPartitions, never with read() and then a
+# partition predicate (that resolves — LISTs — every live directory
+# first). A DerivedTable's `d.read()` is not the lake's read.
+if ! perl -0777 -ne '
+  while (/read\(\)\.where\(affectedPartPred|(?<![.\w])read\(\)\s*\.where\(col\(partCol\)/g) {
+    my $line = 1 + (substr($_, 0, $-[0]) =~ tr/\n//);
+    print "$ARGV:$line: partition slice read through read()\n"; $bad = 1 }
+  END { exit($bad ? 1 : 0) }' src/main/scala/graft/Lake.scala; then
+  echo "ci: partition-scoped reads in Lake.scala go through readPartitions" >&2
+  exit 1
+fi
+
 # benchmark arithmetic (stats.py) unit tests
 python3 perfbench/test_stats.py
 
