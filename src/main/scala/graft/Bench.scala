@@ -256,12 +256,13 @@ object Bench {
     val tailReps = math.max(0,
       sys.env.getOrElse("SPARK_GRAFT_TAIL_REPS", "4").toInt)
     // parallel-work accounting: summed task wall time per query run,
-    // via a listener (the QueryProbe discipline). Queries run strictly
-    // sequentially, so attributing by snapshot delta is sound up to
-    // listener-bus lag; both snapshots are taken OUTSIDE the timed
-    // window after a short drain-until-stable wait, so accounting never
-    // inflates the committed seconds and residual lag only smears a
-    // few ms of task time into the neighbouring query.
+    // via a listener (as perfbench's ExecListener counts per layer).
+    // Queries run strictly sequentially, so attributing by snapshot
+    // delta is sound up to listener-bus lag; both snapshots are taken
+    // OUTSIDE the timed window after a short drain-until-stable wait,
+    // so accounting never inflates the committed seconds and residual
+    // lag only smears a few ms of task time into the neighbouring
+    // query.
     val taskNs = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {

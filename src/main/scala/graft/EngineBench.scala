@@ -1323,93 +1323,6 @@ object RepairBench {
   }
 }
 
-/** Row-level DML slope probe: the claim
-  * ([[graft.sources.GraftRowLevelBuilder]]) is that a DML statement
-  * costs a pruned scan + O(changed rows) staging + O(affected
-  * partitions) rewrite — never O(table). Measures an UPDATE touching a
-  * FIXED ~400 rows confined to 2 of the lake's shards at 1× and 10×
-  * data, against the worst case (an UPDATE touching every shard at the
-  * same row count) and the full-table UPDATE (the O(data) ceiling).
-  * Expected shape: confined ≈ flat-ish (the 2 dirs grow with data),
-  * scattered grows with shard count × dir size, full-table grows
-  * linearly. Args: [rows] [dim]. */
-object DmlBench {
-  def main(args: Array[String]): Unit = {
-    val baseRows = if (args.length > 0) args(0).toLong else 100000L
-    val dim = if (args.length > 1) args(1).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](f: => T): (Double, T) = {
-      val t = System.nanoTime(); val r = f; ((System.nanoTime() - t) / 1e9, r)
-    }
-    def rowsDf(n: Long) = spark.range(n)
-      .select(col("id").as("num"),
-        transform(sequence(lit(0), lit(dim - 1)),
-          i => sin(col("id") * 7919 + i * 104729) * 0.15)
-          .cast("array<float>").as("vector"))
-      .select(col("vector"), concat(lit("doc-"), col("num")).as("document"),
-        concat(lit("id-"), col("num")).as("id"))
-    def run(scale: Int, tag: String, report: Boolean): Unit = {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_dml_bench_$tag"
-      val lake = Lake(spark, LakeConfig(s"$root/lake", dim = dim,
-        numHashes = 5))
-      lake.delete()
-      lake.ingest(rowsDf(baseRows * scale))
-      val cat = s"dmlbench$tag"
-      spark.conf.set(s"spark.sql.catalog.$cat",
-        classOf[graft.sources.GraftCatalog].getName)
-      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$root/wh")
-      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.default")
-      spark.sql(s"CREATE TABLE IF NOT EXISTS $cat.default.t USING graft " +
-        s"LOCATION '$root/lake'")
-      import spark.implicits._
-      // ~400 update targets CONFINED to the 2 median shards
-      val byShard = lake.read().groupBy("shard").count()
-        .orderBy(col("count")).select("shard").as[Int].collect()
-      val two = byShard.slice(byShard.length / 2 - 1, byShard.length / 2 + 1)
-      val confinedIds = lake.read()
-        .where(col("shard").isin(two.map(Integer.valueOf): _*))
-        .select("id").as[String].head(400).toSeq
-      // ~400 targets SCATTERED across every live shard
-      val scatteredIds = lake.read()
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("shard")).orderBy(col("id"))))
-        .where(col("rn") <= math.max(1, 400 / byShard.length))
-        .select("id").as[String].collect().toSeq
-      def update(ids: Seq[String]): Double = {
-        val view = s"dml_bench_ids_$tag"
-        ids.toDF("key").createOrReplaceTempView(view)
-        time(spark.sql(s"""UPDATE $cat.default.t SET document = 'upd'
-          WHERE id IN (SELECT key FROM $view)"""))._1
-      }
-      val tConfined = update(confinedIds)
-      val tScattered = update(scatteredIds)
-      val (tFull, _) = time(
-        spark.sql(s"UPDATE $cat.default.t SET document = 'all'"))
-      if (report)
-        println(s"""{"probe":"dml","rows":${baseRows * scale},""" +
-          s""""shards":${byShard.length},""" +
-          s""""confined_rows":${confinedIds.size},""" +
-          s""""confined_sec":${f"$tConfined%.2f"},""" +
-          s""""scattered_rows":${scatteredIds.size},""" +
-          s""""scattered_sec":${f"$tScattered%.2f"},""" +
-          s""""full_sec":${f"$tFull%.2f"}}""")
-      lake.delete()
-    }
-    run(1, "warm", report = false) // codegen/classload warm-up
-    run(1, "x1", report = true)
-    run(10, "x10", report = true)
-    spark.stop()
-  }
-}
-
 /** CO-LOCATED DERIVED TABLE cost shapes ([[Lake.deriveTo]] /
   * [[Lake.joinDerived]]) at 1× and 10× data:
   *

@@ -1546,8 +1546,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       ()
     }
     if (!exists()) { // bootstrapping replica: the delta IS the state
-      val out = writeAppend(insRaw)
-      refreshSkipIndex(out.shards); refreshZoneMap(out.files)
+      bootstrapAppend(insRaw)
       return (0L, insCount)
     }
     // project both sides to the replica's stored shape; a column this
@@ -1583,22 +1582,16 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       proj(readPartitions(candidates)
         .join(touched, col("id") === col("__chg_id"), "left_semi")))
     val net = graft.operators.Materialize.cut(netInsertsDeletes(ins, current))
-    val toIns = net.where(col("change") === "insert").drop("change")
-    val insN = toIns.count()
-    val delN = net.where(col("change") === "delete").count()
-    if (insN == 0L && delN == 0L) return (0L, 0L) // already converged
-    val affected = net.select(partCol).distinct().collect()
-      .map(r => Option(r.get(0)).map(_.toString)).toSet
-    val changedIds = broadcast(
-      net.select(col("id").as("__chg_id")).distinct())
-    val slice = readPartitions(affected)
-    val sliceCount = slice.count()
-    val kept = proj(
-      slice.join(changedIds, col("id") === col("__chg_id"), "left_anti"))
-    val keptCount = kept.count()
-    rewritePartitions(affected, kept.unionByName(toIns),
-      keptCount + insN, "applyChanges")
-    (sliceCount - keptCount, insN)
+    val r = net.agg(org.apache.spark.sql.functions.count(lit(1)), collect_set(col("id")),
+      collect_set(struct(col(partCol)))).head()
+    if (r.getLong(0) == 0L) return (0L, 0L) // already converged
+    // the netted rows' own partitions bound the rewrite: a net delete
+    // carries the partition its current row was read from, a net
+    // insert its routed one
+    rewriteRows("applyChanges", Right(r.getSeq[String](1).toSet),
+      Some(net.where(col("change") === "insert").drop("change")),
+      scope = Some(r.getSeq[org.apache.spark.sql.Row](2)
+        .map(x => Option(x.get(0)).map(_.toString)).toSet))
   }
 
   /** Aligned replication step: advance this REPLICA from its
@@ -4126,7 +4119,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   def deleteWhere(pred: Column): Long = {
     if (!exists()) return 0L
     requireWriteConfigMatch() // a rewrite under a lesser config would strip columns
-    withWriterLock("deleteWhere")(deleteWhereImpl(pred))
+    withWriterLock("deleteWhere")(rewriteRows("deleteWhere", Left(pred))._1)
   }
 
   /** RETENTION — delete every row whose `timestamp` is strictly older
@@ -4210,40 +4203,133 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     }
     // tier 2: whatever rows remain expired (straddlers, current-gen,
     // uncertified files) — discovery reads the post-retirement live set
-    val rewritten = deleteWhereImpl(col("timestamp") < lit(horizon))
-    (retiredRows, rewritten)
+    (retiredRows,
+      rewriteRows("deleteWhere", Left(col("timestamp") < lit(horizon)))._1)
   }
 
-  /** @param scope when set, bound the affected-shard DISCOVERY scan to
-    *        these partition values (a skip-index candidate set from
-    *        [[deleteIds]] — a superset of the shards truly holding
-    *        matches, so the discovery result is unchanged) */
-  private def deleteWhereImpl(pred: Column,
-      scope: Option[Set[Option[String]]] = None): Long = {
-    val discovery = scope match {
-      case Some(c) => readPartitions(c)
-      case None => read()
+  /** THE row-level rewrite under every keyed write: [[deleteWhere]],
+    * [[deleteIds]], [[expire]]'s tier 2, [[upsert]], SQL DML
+    * ([[applyRowDelta]]) and [[applyChanges]] are thin callers that keep
+    * their own lock, refusals and return shape. One sequence over one
+    * resolved lake state:
+    *
+    *  1. ONE BATCH AGGREGATE over the caller-materialized `inserts`:
+    *     rows, distinct ids, insert partitions. Duplicate ids refuse
+    *     loudly — every copy would survive the rewrite, and a frame has
+    *     no row order to make "keep last" deterministic — BEFORE the
+    *     empty-lake bootstrap ([[bootstrapAppend]]), so an empty lake
+    *     cannot silently ingest both versions of an id. The bootstrap
+    *     only counts the ids; a rewrite collects them to broadcast.
+    *  2. `remove` dooms rows. `Left(pred)`: where `coalesce(pred,
+    *     false)` holds (NULL-predicate rows are KEPT — SQL DELETE
+    *     semantics); discovery is the pushed-down `where(pred)` (row
+    *     groups skip by statistics, a partition-column predicate
+    *     prunes directories), then one aggregate over the affected
+    *     partitions counts rows and doomed rows. `Right(ids)`: where
+    *     the id is in `ids` or among the insert ids (an insert replaces
+    *     the stored row of its id — upsert identity), tested against a
+    *     broadcast variable; ONE aggregate grouped by partition over the frame
+    *     scoped to `scope` — else the skip index's candidates (exact:
+    *     the doomed flag kills bloom false positives) — plus the insert
+    *     partitions discovers and counts at once.
+    *  3. The affected partitions' kept rows, cut from the frame that
+    *     was counted (the same resolved files), plus the inserts, go
+    *     to [[rewritePartitions]] expecting rows − doomed + inserts,
+    *     which it checks against the new files' Parquet footers before
+    *     the commit.
+    *
+    * Returns (rows removed, rows inserted). */
+  private def rewriteRows(tag: String, remove: Either[Column, Set[String]],
+      inserts: Option[DataFrame] = None,
+      scope: Option[Set[Option[String]]] = None): (Long, Long) = {
+    val fs = fsOfRoot
+    val entries = listRoot(fs)
+    val st = readStateFrom(fs, entries)
+    val boot = inserts.isDefined && !holdsData(fs, entries, st)
+    // ids and partition values aggregate inside structs, so a null id
+    // counts as one distinct value and a null partition value (the
+    // Hive default directory) is kept
+    val (insN, insIds, insParts) = inserts.fold(
+      (0L, Set.empty[String], Set.empty[Option[String]])) { batch =>
+      val r = batch.agg(org.apache.spark.sql.functions.count(lit(1)),
+        if (boot) count_distinct(struct(col("id")))
+        else collect_set(struct(col("id"))),
+        collect_set(struct(col(partCol)))).head()
+      val ids = if (boot) Nil else r.getSeq[org.apache.spark.sql.Row](1)
+      val distinct = if (boot) r.getLong(1) else ids.size.toLong
+      require(distinct == r.getLong(0), s"$tag: inserts carry duplicate ids " +
+        s"(${r.getLong(0)} rows, $distinct distinct ids)")
+      (r.getLong(0), ids.flatMap(x => Option(x.getString(0))).toSet,
+        r.getSeq[org.apache.spark.sql.Row](2)
+          .map(x => Option(x.get(0)).map(_.toString)).toSet)
     }
-    val affected = discovery.where(pred).select(partCol).distinct().collect()
-      .map(r => Option(r.get(0)).map(_.toString)).toSet
-    if (affected.isEmpty) return 0L
-    val slice = readPartitions(affected)
-    val total = slice.count()
-    val kept = slice.where(!coalesce(pred, lit(false)))
-      .select((storedColsNow.map(col) :+ col(partCol)): _*)
-    val keptCount = kept.count()
-    val deleted = total - keptCount
-    if (deleted == 0L) return 0L
-    rewritePartitions(affected, kept, keptCount, "deleteWhere")
-    deleted
+    if (boot) {
+      if (insN > 0L) bootstrapAppend(inserts.get)
+      return (0L, insN)
+    }
+    requireRouting(st)
+    def scoped(c: Set[Option[String]]): DataFrame =
+      readFrom(st, entries, Some(c)).where(affectedPartPred(c))
+    // (affected partitions, a frame over them with rows flagged
+    // `__doomed`, its rows, its doomed rows)
+    val (affected, flagged, rows, doomed) = remove match {
+      case Left(pred) =>
+        val hit = readFrom(st, entries).where(pred)
+          .select(partCol).distinct().collect()
+          .map(r => Option(r.get(0)).map(_.toString)).toSet ++ insParts
+        if (hit.isEmpty) return (0L, 0L)
+        val slice = scoped(hit).withColumn("__doomed", coalesce(pred, lit(false)))
+        val r = slice.agg(org.apache.spark.sql.functions.count(lit(1)),
+          count_if(col("__doomed"))).head()
+        (hit, slice, r.getLong(0), r.getLong(1))
+      case Right(given) =>
+        val ids = given ++ insIds
+        if (ids.isEmpty && insN == 0L) return (0L, 0L)
+        val probe = scope.orElse(skipCandidates(ids.toSeq, st, entries))
+          .map(_ ++ insParts)
+        val discovery = probe match {
+          case Some(c) if c.isEmpty => return (0L, 0L) // no stored shard holds an id
+          case Some(c) => scoped(c)
+          case None => readFrom(st, entries)
+        }
+        // the id set ships to each executor once, as a broadcast
+        // variable: a membership test needs no join, so neither this
+        // aggregate nor the write of the kept rows runs a job to build one
+        val idSet = spark.sparkContext.broadcast(ids)
+        val frame = discovery.withColumn("__doomed",
+          udf((id: String) => id != null && idSet.value.contains(id)).apply(col("id")))
+        val perPart = frame.groupBy(col(partCol))
+          .agg(org.apache.spark.sql.functions.count(lit(1)), count_if(col("__doomed")))
+          .collect().map(r =>
+            Option(r.get(0)).map(_.toString) -> ((r.getLong(1), r.getLong(2))))
+          .toMap
+        val hit = perPart.collect { case (v, (_, d)) if d > 0L => v }.toSet ++ insParts
+        val (r, d) = hit.toSeq.flatMap(perPart.get).unzip[Long, Long]
+        (hit, frame.where(affectedPartPred(hit)), r.sum, d.sum)
+    }
+    if (affected.isEmpty || (doomed == 0L && insN == 0L)) return (0L, 0L)
+    val cols = storedColsOf(st).map(col) :+ col(partCol)
+    val kept = flagged.where(!col("__doomed")).select(cols: _*)
+    rewritePartitions(affected,
+      inserts.fold(kept)(batch => kept.unionByName(batch.select(cols: _*))),
+      rows - doomed + insN, tag)
+    (doomed, insN)
+  }
+
+  /** The empty-lake bootstrap of a keyed write: the inserts ARE the
+    * lake — a plain append, with the skip index and zone map refreshed
+    * as after any append. */
+  private def bootstrapAppend(batch: DataFrame): Unit = {
+    val out = writeAppend(batch)
+    refreshSkipIndex(out.shards); refreshZoneMap(out.files)
   }
 
   /** Upsert by caller-supplied id: rows whose id already exists replace
     * the stored version (wherever routing put it — a changed vector may
     * have moved shards), the rest append. One rewrite touching only the
     * union of (shards holding old versions, shards receiving new rows);
-    * the id probe is a broadcast semi/anti join, never a collected id
-    * list. Returns the number of replaced rows. Single-writer, same
+    * the batch's ids join the discovery scan as a broadcast. Returns
+    * the number of replaced rows. Single-writer, same
     * caveat as [[deleteWhere]]. */
   def upsert(rows: DataFrame): Long = {
     require(rows.columns.contains("id"),
@@ -4252,57 +4338,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     withWriterLock("upsert")(upsertImpl(rows))
   }
 
-  private def upsertImpl(rows: DataFrame): Long = {
-    val newDerived = graft.operators.Materialize.cut(withDerived(rows))
-    val newCount = newDerived.count()
-    if (newCount == 0L) return 0L // empty batch: nothing to probe, write, or rewrite
-    // duplicate ids WITHIN the batch would all survive the rewrite and
-    // recreate the duplicate this op exists to prevent — and a frame
-    // has no row order to make "keep last" deterministic. Fail loudly —
-    // BEFORE the empty-lake bootstrap branch, so an upsert into an
-    // empty (or fully-deleted) lake cannot silently ingest both
-    // versions of a duplicated id.
-    val distinctIds = newDerived.select("id").distinct().count()
-    require(distinctIds == newCount,
-      s"upsert batch has duplicate ids ($newCount rows, $distinctIds distinct ids)")
-    if (!exists()) { // bootstrap: plain ingest (indexes refreshed likewise)
-      val out = writeAppend(newDerived)
-      refreshSkipIndex(out.shards); refreshZoneMap(out.files)
-      return 0L
-    }
-    val newIds = broadcast(newDerived.select(col("id").as("__new_id")).distinct())
-    // old-version probe, skip-index pruned when one is fresh: the exact
-    // semi-join below kills bloom false positives, so the discovered
-    // shard set is identical — only the files READ to discover it shrink
-    val probe = {
-      val fs = fsOfRoot
-      val entries = listRoot(fs)
-      skipCandidates(newDerived.select("id"),
-        readStateFrom(fs, entries), entries)
-    } match {
-      case Some(c) if c.isEmpty => None // no stored shard can hold these ids
-      case Some(c) => Some(readPartitions(c))
-      case None => Some(read())
-    }
-    val oldShards = probe.map(
-      _.join(newIds, col("id") === col("__new_id"), "left_semi")
-        .select(partCol).distinct().collect())
-      .getOrElse(Array.empty[org.apache.spark.sql.Row])
-    val newShards = newDerived.select(partCol).distinct().collect()
-    val affected = (oldShards ++ newShards)
-      .map(r => Option(r.get(0)).map(_.toString)).toSet
-    val slice = readPartitions(affected)
-    val sliceCount = slice.count()
-    val colsNow = storedColsNow
-    val keptOld = slice
-      .join(newIds, col("id") === col("__new_id"), "left_anti")
-      .select((colsNow.map(col) :+ col(partCol)): _*)
-    val keptCount = keptOld.count()
-    rewritePartitions(affected,
-      keptOld.unionByName(newDerived.select((colsNow.map(col) :+ col(partCol)): _*)),
-      keptCount + newCount, "upsert")
-    sliceCount - keptCount
-  }
+  private def upsertImpl(rows: DataFrame): Long =
+    rewriteRows("upsert", Right(Set.empty),
+      Some(graft.operators.Materialize.cut(withDerived(rows))))._1
 
   /** ROW-LEVEL DML APPLY — the commit half of the SQL `UPDATE` /
     * `MERGE INTO` / subquery-`DELETE` surface
@@ -4327,71 +4365,17 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private def applyRowDeltaImpl(deletes: DataFrame,
       inserts: DataFrame): (Long, Long) = {
     // a pure DELETE stages no row columns — there is nothing to derive
-    val newDerived =
+    val batch =
       if (!inserts.columns.exists(_.equalsIgnoreCase("vector"))) None
       else Some(graft.operators.Materialize.cut(withDerived(inserts)))
-    val newCount = newDerived.fold(0L)(_.count())
-    // duplicate TARGET ids in one statement would both survive the
-    // rewrite (MERGE inserting two rows under one explicit id, or two
-    // updates re-keyed onto one id) — no row order exists to pick a
-    // winner, so refuse loudly, same contract as upsert
-    val distinctIds = newDerived.fold(0L)(_.select("id").distinct().count())
-    require(distinctIds == newCount,
-      s"row-level DML lands duplicate ids ($newCount rows, " +
-        s"$distinctIds distinct ids) — make the written ids unique")
-    val delIds = graft.operators.Materialize.cut(
-      deletes.select(col(deletes.columns.head).cast(StringType).as("id"))
-        .where(col("id").isNotNull).distinct())
-    val delCount = delIds.count()
-    if (newCount == 0L && delCount == 0L) return (0L, 0L)
-    if (!exists()) {
-      // bootstrapping DML (a MERGE's not-matched inserts into a fresh
-      // bootstrapped table): deletes have nothing to hit, inserts are
-      // a plain first append — same branch as upsert's bootstrap
-      newDerived.foreach { nd =>
-        val out = writeAppend(nd)
-        refreshSkipIndex(out.shards); refreshZoneMap(out.files)
-      }
-      return (0L, newCount)
-    }
-    val newIds = newDerived.fold(delIds.limit(0))(_.select("id"))
-    val touched = broadcast(newIds.select(col("id").as("__chg_id"))
-      .unionByName(delIds.select(col("id").as("__chg_id"))).distinct())
-    // old-version probe, skip-index pruned when one is fresh (exact
-    // semi-join kills bloom false positives — upsertImpl scaladoc)
-    val probe = {
-      val fs = fsOfRoot
-      val entries = listRoot(fs)
-      skipCandidates(newIds.unionByName(delIds.select("id")),
-        readStateFrom(fs, entries), entries)
-    } match {
-      case Some(c) if c.isEmpty => None
-      case Some(c) => Some(readPartitions(c))
-      case None => Some(read())
-    }
-    val oldShards = probe.map(
-      _.join(touched, col("id") === col("__chg_id"), "left_semi")
-        .select(partCol).distinct().collect())
-      .getOrElse(Array.empty[org.apache.spark.sql.Row])
-    val newShards = newDerived.fold(
-      Array.empty[org.apache.spark.sql.Row])(
-      _.select(partCol).distinct().collect())
-    val affected = (oldShards ++ newShards)
-      .map(r => Option(r.get(0)).map(_.toString)).toSet
-    if (affected.isEmpty) return (0L, 0L) // deletes of absent ids only
-    val slice = readPartitions(affected)
-    val sliceCount = slice.count()
-    val colsNow = storedColsNow
-    val kept = slice
-      .join(touched, col("id") === col("__chg_id"), "left_anti")
-      .select((colsNow.map(col) :+ col(partCol)): _*)
-    val keptCount = kept.count()
-    if (sliceCount == keptCount && newCount == 0L) return (0L, 0L)
-    rewritePartitions(affected,
-      newDerived.fold(kept)(nd => kept.unionByName(
-        nd.select((colsNow.map(col) :+ col(partCol)): _*))),
-      keptCount + newCount, "rowLevelDml")
-    (sliceCount - keptCount, newCount)
+    val delIds = deletes
+      .select(col(deletes.columns.head).cast(StringType).as("id"))
+      .where(col("id").isNotNull).distinct().collect()
+      .map(_.getString(0)).toSet
+    // duplicate TARGET ids in one statement (MERGE inserting two rows
+    // under one explicit id, or two updates re-keyed onto one id) have
+    // no row order to pick a winner by: refused, as upsert refuses
+    rewriteRows("rowLevelDml", Right(delIds), batch)
   }
 
   /** Membership predicate over decoded partition values. An LSH lake's
@@ -5005,40 +4989,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * or pre-v2 root data all yield `None`; a read error inside the
     * probe itself must never fail the calling op.
     *
-    * The DataFrame overload runs the membership test as one narrow job
-    * (upsert batches can be arbitrarily large); the Seq overload tests
-    * driver-side against the already-collected sketches — a point-read
-    * must not pay a Spark job just to decide where to point. */
-  private def skipCandidates(ids: DataFrame, st: LakeState,
-      entries: Seq[org.apache.hadoop.fs.FileStatus]): Option[Set[Option[String]]] =
-    skipProbe(st, entries) { sketches =>
-      val bc = spark.sparkContext.broadcast(sketches)
-      import spark.implicits._
-      // one narrow pass over the ids: each task deserializes every
-      // sketch ONCE, tests xxhash64(id) (the hash BloomFilterAggregate
-      // stored) against each, and emits the indices of shards hit —
-      // at most |sketches| ints per task, with early exit once all hit
-      ids.select(xxhash64(col("id")).as("h")).as[Long]
-        .mapPartitions { it =>
-          val bfs = bc.value.map(b => org.apache.spark.util.sketch.BloomFilter
-            .readFrom(new java.io.ByteArrayInputStream(b)))
-          val n = bfs.length
-          val hit = new java.util.BitSet(n)
-          var found = 0
-          while (it.hasNext && found < n) {
-            val h = it.next()
-            var i = 0
-            while (i < n) {
-              if (!hit.get(i) && bfs(i).mightContainLong(h)) {
-                hit.set(i); found += 1
-              }
-              i += 1
-            }
-          }
-          Iterator.range(0, n).filter(hit.get)
-        }.distinct().collect().toSet
-    }
-
+    * The membership test runs driver-side against the collected
+    * sketches: a point-read must not pay a Spark job just to decide
+    * where to point, and a keyed rewrite holds its id set on the
+    * driver already ([[rewriteRows]]). */
   private def skipCandidates(ids: Seq[String], st: LakeState,
       entries: Seq[org.apache.hadoop.fs.FileStatus]): Option[Set[Option[String]]] =
     skipProbe(st, entries) { sketches =>
@@ -5122,32 +5076,23 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     }
   }
 
-  /** DELETE by id list: [[deleteWhere]] with the affected-shard
-    * discovery pruned by the skip index — with a fresh index, a
-    * targeted delete reads only the shards that might hold the ids
-    * instead of probing the whole lake. Returns rows deleted. */
+  /** DELETE by id list: [[rewriteRows]] removing an id set, with the
+    * affected-shard discovery pruned by the skip index — with a fresh
+    * index, a targeted delete reads only the shards that might hold the
+    * ids instead of probing the whole lake. Returns rows deleted. */
   def deleteIds(ids: Seq[String]): Long = {
     if (ids.isEmpty || !exists()) return 0L
     requireWriteConfigMatch() // a rewrite under a lesser config would strip columns
-    val pred = col("id").isin(ids: _*)
-    withWriterLock("deleteIds") {
-      val fs = fsOfRoot
-      val entries = listRoot(fs)
-      skipCandidates(ids, readStateFrom(fs, entries), entries) match {
-        case Some(c) if c.isEmpty => 0L
-        case Some(c) => deleteWhereImpl(pred, scope = Some(c))
-        case None => deleteWhereImpl(pred)
-      }
-    }
+    withWriterLock("deleteIds")(rewriteRows("deleteWhere", Right(ids.toSet))._1)
   }
 
-  /** Shared targeted-rewrite machinery for [[deleteWhere]]/[[upsert]]/
-    * [[compactIncremental]]: write `content` (covering EXACTLY the
-    * `affected` partition values) into a NEW generation tree, verify
-    * the row count, then COMMIT with one sidecar create whose manifest
-    * keeps every unaffected directory at its existing location and
-    * drops every affected one (the new tree, being current, is live by
-    * rule). Unaffected directories are not read, not renamed, not
+  /** Shared targeted-rewrite machinery for [[rewriteRows]],
+    * [[compactIncremental]] and [[repairFrom]]: write `content`
+    * (covering EXACTLY the `affected` partition values) into a NEW
+    * generation tree, verify the row count, then COMMIT with one
+    * sidecar create whose manifest keeps every unaffected directory at
+    * its existing location and drops every affected one (the new tree,
+    * being current, is live by rule). Unaffected directories are not read, not renamed, not
     * touched — bit-identical across the op. An affected value with no
     * rewritten directory means all its rows were removed: it simply
     * leaves the manifest. A crash anywhere before the commit leaves the
@@ -5205,18 +5150,23 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         .option("compression", cfg.codec)
         .partitionBy(partCol)
         .parquet(tmp.toString)
-      val tmpRows = spark.read.parquet(tmp.toString).count()
-      if (tmpRows != expectedRows) {
-        fs.delete(tmp, true)
-        throw new IllegalStateException(
-          s"partition rewrite ($tag) aborted: wrote $tmpRows rows, expected $expectedRows (live state untouched)")
-      }
-      val outOfScope = fs.listStatus(tmp)
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-        .map(s => unescapePartitionValue(s.getPath.getName.split("=", 2)(1)))
-        .filterNot(affected.contains)
-      require(outOfScope.isEmpty,
-        s"rewrite produced out-of-scope partitions: ${outOfScope.mkString(", ")}")
+      // the check reads no data: each written file's Parquet footer
+      // holds its row count. Any abort (a row mismatch, an out-of-scope
+      // partition, an unreadable footer) removes the unreferenced tree.
+      try {
+        val dirs = fs.listStatus(tmp)
+          .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+        val tmpRows = dirs.iterator.flatMap(d => dataFilesIn(fs, d.getPath))
+          .map(footerRows).sum
+        if (tmpRows != expectedRows)
+          throw new IllegalStateException(
+            s"partition rewrite ($tag) aborted: wrote $tmpRows rows, expected $expectedRows (live state untouched)")
+        val outOfScope = dirs
+          .map(s => unescapePartitionValue(s.getPath.getName.split("=", 2)(1)))
+          .filterNot(affected.contains)
+        require(outOfScope.isEmpty,
+          s"rewrite produced out-of-scope partitions: ${outOfScope.mkString(", ")}")
+      } catch { case scala.util.control.NonFatal(e) => fs.delete(tmp, true); throw e }
     }
     // COMMIT: unaffected dirs keep their existing generation (now named
     // explicitly, since the current-tree becomes non-current); affected
@@ -5227,6 +5177,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     writeState(LakeState(newGen, survivors, extraCols = st.extraCols))
     refreshSkipIndex(affected)
     refreshZoneMapShards(affected)
+  }
+
+  /** Row count of one Parquet data file, from its footer alone. */
+  private def footerRows(f: org.apache.hadoop.fs.FileStatus): Long = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+        f, spark.sparkContext.hadoopConfiguration))
+    try reader.getRecordCount finally reader.close()
   }
 
   /** Sweep DEAD storage — the VACUUM of this layout: generation trees
@@ -5745,11 +5703,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   def exists(): Boolean = {
     val fs = fsOfRoot
     val entries = listRoot(fs)
-    val st = readStateFrom(fs, entries)
+    holdsData(fs, entries, readStateFrom(fs, entries))
+  }
+
+  /** [[exists]] over a state the caller already resolved. */
+  private def holdsData(fs: org.apache.hadoop.fs.FileSystem,
+      entries: Seq[org.apache.hadoop.fs.FileStatus], st: LakeState): Boolean =
     st.live.exists(_._2 != st.generation) ||
       treeHasData(fs, genPath(st.generation)) ||
       rootLevelDataFrom(entries).nonEmpty
-  }
 
   /** The live-data pointer + config stamp, stored as VERSIONED sidecar
     * files `_meta.<v>.json` under the root — the commit point of every

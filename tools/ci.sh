@@ -42,6 +42,26 @@ if ! perl -0777 -ne '
   exit 1
 fi
 
+# one row-level rewrite: in Lake.scala an id-set left_anti/left_semi
+# join (on `__chg_id`/`__new_id`) may stand only in rewriteRows or
+# applyChanges' netting, and only rewriteRows, compactIncremental and
+# repairFrom call rewritePartitions. Functions are tracked at class
+# member indentation, so a nested def does not hide its enclosing one.
+if ! awk '
+  /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
+  match($0, /^  ([a-z]+(\[[a-z]+\])? )*def [A-Za-z0-9_]+/) {
+    fn = substr($0, RSTART, RLENGTH); sub(/.*def /, "", fn) }
+  /left_(anti|semi)/ && /__(chg|new)_id/ &&
+      fn != "rewriteRows" && fn != "applyChangesImpl" {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  /rewritePartitions\(/ && !/def rewritePartitions\(/ && fn != "rewriteRows" &&
+      fn != "compactIncremental" && fn != "repairFrom" {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  END { exit bad }' src/main/scala/graft/Lake.scala; then
+  echo "ci: row-level rewrite outside Lake.rewriteRows (an id anti/semi join, or a rewritePartitions call)" >&2
+  exit 1
+fi
+
 # benchmark arithmetic (stats.py) unit tests
 python3 perfbench/test_stats.py
 
