@@ -167,8 +167,7 @@ private[graft] object ControlFiles {
       val prev = if (carried.nonEmpty) carried else committed
       dirs.distinct.flatMap { k =>
         prev.get(k).orElse {
-          try Some(list(k).map(s =>
-            LiveFile(s.getPath.getName, s.getLen, s.getModificationTime)))
+          try Some(list(k).map(LiveFile.of))
           catch { case _: java.io.FileNotFoundException => None }
         }.filter(FileEntry.recordable).map(k -> _)
       }

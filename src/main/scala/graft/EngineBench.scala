@@ -685,72 +685,6 @@ object ZoneBench {
   }
 }
 
-/** Convergence slope for [[Lake.maintain]] — the one-call policy loop a
-  * platform team crons. Churns a lake (tiny appends, rewrites, deletes),
-  * then runs maintain() repeatedly: call #1 must do the justified work,
-  * call #2+ must no-op in bounded time (the policy reads health signals,
-  * it never blindly rewrites). Two lake sizes show the no-op cost does
-  * not grow with the lake. Args: [dim] [sizes...]. */
-object MaintainBench {
-  def main(args: Array[String]): Unit = {
-    val dim = if (args.length > 0) args(0).toInt else 16
-    val sizes = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-                else Seq(20000, 200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](f: => T): (Double, T) = {
-      val t = System.nanoTime(); val r = f; ((System.nanoTime() - t) / 1e9, r)
-    }
-    val chunkRows = 5000L
-    sizes.foreach { n =>
-      val lake = Lake(spark, LakeConfig(
-        s"${sys.props("java.io.tmpdir")}/graft_maintain_bench_$n", dim = dim,
-        numHashes = 4))
-      lake.delete()
-      def chunk(c: Long) = spark.range(c * chunkRows, (c + 1) * chunkRows)
-        .select(col("id").as("num"),
-          transform(sequence(lit(0), lit(dim - 1)),
-            i => sin(col("id") * 7919 + i * 104729) * 0.15)
-            .cast("array<float>").as("vector"))
-        .select(concat(lit("r"), col("num")).as("id"), col("vector"),
-          concat(lit("doc-"), col("num")).as("document"),
-          timestamp_seconds(lit(c * 86400L)).as("timestamp"))
-      val chunks = n / chunkRows.toInt
-      (0L until chunks.toLong).foreach(c => lake.ingest(chunk(c)))
-      lake.buildSkipIndex(); lake.buildZoneMap()
-      // churn: a rewrite (dead generation + stale sketches) + more appends
-      lake.deleteWhere(col("id") === "r0")
-      (0L until 4L).foreach(c => lake.ingest(chunk(chunks + c)))
-      val filesBefore = lake.read().inputFiles.length
-      val (t1, r1) = time(lake.maintain(
-        targetBytes = 64L * 1024 * 1024, maxFilesPerShard = 2, retainMs = 0L))
-      val filesAfter1 = lake.read().inputFiles.length
-      val (t2, r2) = time(lake.maintain(
-        targetBytes = 64L * 1024 * 1024, maxFilesPerShard = 2, retainMs = 0L))
-      val (t3, r3) = time(lake.maintain(
-        targetBytes = 64L * 1024 * 1024, maxFilesPerShard = 2, retainMs = 0L))
-      val stale = lake.validate().select("skip_stale").head().getLong(0)
-      println(s"""{"probe":"maintain","rows":${n + 4 * chunkRows},"dim":$dim,""" +
-        s""""files_before":$filesBefore,"files_after":$filesAfter1,""" +
-        s""""call1_sec":${f"$t1%.2f"},"call1_compacted":${r1.compactedShards},""" +
-        s""""call1_swept":${r1.vacuumSwept},"call1_skip":${r1.skipRefreshed},""" +
-        s""""call1_zone":${r1.zoneRebuilt},""" +
-        s""""call2_sec":${f"$t2%.2f"},"call2_compacted":${r2.compactedShards},""" +
-        s""""call2_swept":${r2.vacuumSwept},""" +
-        s""""call3_sec":${f"$t3%.2f"},"call3_compacted":${r3.compactedShards},""" +
-        s""""skip_stale_after":$stale}""")
-      lake.delete()
-    }
-    spark.stop()
-  }
-}
-
 /** Cost curve for [[Lake.topKAtRecall]] — what each recall target
   * actually costs once [[Lake.calibrateRecall]] has measured the
   * multiprobe ladder. Builds a lake, calibrates, then serves held-out
@@ -956,77 +890,6 @@ object SinkBench {
     run("plain", "p", report = true)
     run("sink", "s", report = true)
     run("stage", "st", report = true)
-    spark.stop()
-  }
-}
-
-/** Zone-selectivity-preserving compaction probe: time-correlated
-  * ingest leaves naturally banded files; a hash-sliced compaction
-  * merges every band into every file and readTimeRange is back to
-  * opening the whole lake, while `compact(clusterBy = timestamp)`
-  * range-slices so each file keeps one contiguous band. Reports the
-  * fixed-window file count after each strategy at two lake sizes.
-  * Args: [dim] [sizes...]. */
-object BandCompactBench {
-  def main(args: Array[String]): Unit = {
-    val dim = if (args.length > 0) args(0).toInt else 16
-    val sizes = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-                else Seq(20000, 200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](f: => T): (Double, T) = {
-      val t = System.nanoTime(); val r = f; ((System.nanoTime() - t) / 1e9, r)
-    }
-    val chunkRows = 10000L
-    sizes.foreach { n =>
-      def build(tag: String): Lake = {
-        val lake = Lake(spark, LakeConfig(
-          s"${sys.props("java.io.tmpdir")}/graft_band_bench_${tag}_$n",
-          dim = dim, numHashes = 2))
-        lake.delete()
-        def chunk(c: Long) = spark.range(c * chunkRows, (c + 1) * chunkRows)
-          .select(col("id").as("num"),
-            transform(sequence(lit(0), lit(dim - 1)), i =>
-              pmod(xxhash64(col("id"), i), lit(1000003L)).cast("double") /
-                1000003.0 - 0.5)
-            .cast("array<float>").as("vector"))
-          .select(concat(lit("r"), col("num")).as("id"), col("vector"),
-            concat(lit("doc-"), col("num")).as("document"),
-            timestamp_seconds(lit(c * 86400L) + col("num") % 86400L)
-              .as("timestamp"))
-        (0L until (n / chunkRows)).foreach(c => lake.ingest(chunk(c)))
-        lake
-      }
-      def windowFiles(lake: Lake): (Long, Long, Long) = {
-        lake.buildZoneMap()
-        val df = lake.readTimeRange(java.time.Instant.ofEpochSecond(0L),
-          java.time.Instant.ofEpochSecond(86399L))
-        (df.count(), df.inputFiles.length.toLong,
-          lake.read().inputFiles.length.toLong)
-      }
-      // hash-sliced compaction (the default): bands destroyed
-      val hashed = build("hash")
-      val (tHash, filesHash) = time(hashed.compact(targetBytes = 512L * 1024))
-      val (rowsH, winH, totH) = windowFiles(hashed)
-      hashed.delete()
-      // range-sliced compaction: bands preserved
-      val banded = build("range")
-      val (tBand, filesBand) = time(banded.compact(
-        targetBytes = 512L * 1024, clusterBy = Seq(col("timestamp"))))
-      val (rowsB, winB, totB) = windowFiles(banded)
-      banded.delete()
-      println(s"""{"probe":"band_compact","rows":$n,""" +
-        s""""hash_sec":${f"$tHash%.2f"},"hash_files":$filesHash,""" +
-        s""""hash_window_files":$winH,"hash_total_files":$totH,"hash_window_rows":$rowsH,""" +
-        s""""range_sec":${f"$tBand%.2f"},"range_files":$filesBand,""" +
-        s""""range_window_files":$winB,"range_total_files":$totB,"range_window_rows":$rowsB}""")
-    }
     spark.stop()
   }
 }

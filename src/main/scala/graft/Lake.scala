@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 import graft.functions.{Lsh, VectorFunctions => V}
 
 /** Engine configuration — the analog of the reference's `Index` fields
@@ -231,7 +233,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   def ingest(rows: DataFrame): Unit = withAppendLock("ingest") {
     requireWriteConfigMatch()
     val out = writeAppend(withDerived(rows))
-    refreshSkipIndex(out.shards)
+    refreshSkipIndex(out.state, out.shards)
     refreshZoneMap(out.files)
   }
 
@@ -434,7 +436,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       try {
         val out = writeAppend(withDerived(rows),
           fileTag = Some(s"$idHex-$batchHex-$attempt"))
-        refreshSkipIndex(out.shards)
+        refreshSkipIndex(out.state, out.shards)
         refreshZoneMap(out.files)
         // COMMIT = the atomic ledger version create (recording THIS
         // attempt as the winner). On IOException the version state
@@ -912,7 +914,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       : Seq[((String, Long), Seq[org.apache.hadoop.fs.FileStatus])] = {
     val recorded = recordedFiles(st)
     val (served, toList) = entries.distinct.partition(recorded.contains)
-    served.map(e => e -> recorded(e)) ++ mapDirsPooled(toList) { (d, g) =>
+    served.map(e => e -> recorded(e)) ++ mapDirsPooled(toList) { case (d, g) =>
       val p = new org.apache.hadoop.fs.Path(genPath(g), d)
       (d, g) -> (try dataFilesIn(fs, p)
       catch {
@@ -1031,11 +1033,12 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // merge-safe stamp: re-read the state UNDER the gate (no maintenance
     // commit can interleave; racing append stamps republish the same
     // manifest) so the stamp can never resurrect a pre-commit manifest
-    writeState(readState())
+    val stamped = readState()
+    writeState(stamped)
     Lake.Appended(
       stagedDirs.map(d =>
-        unescapePartitionValue(d.getPath.getName.split("=", 2)(1))).toSet,
-      moved.result())
+        dirValue(d.getPath.getName)).toSet,
+      moved.result(), stamped)
   }
 
   /** The ONE derived-column block, shared by batch and streaming ingest
@@ -1814,25 +1817,31 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       else {
         val truth = source.readPartitions(convicted)
         // auto-evolve source extras under the held lock (no re-entrant
-        // evolve(), same inline path + validation as applyChanges)
-        val st0 = readState()
+        // evolve(), same inline path + validation as applyChanges); the
+        // rewrite commits over the state this commit wrote
+        val fs = fsOfRoot
+        val entries = listRoot(fs)
+        val st0 = readStateFrom(fs, entries)
         val known = (storedColsOf(st0) :+ partCol).map(_.toLowerCase).toSet
         val extra = truth.schema.fields
           .filterNot(f => known(f.name.toLowerCase))
-        if (extra.nonEmpty) {
-          validateExtraCols(st0, extra.toSeq, "repairFrom")
-          writeState(st0.copy(extraCols = st0.extraCols ++
-            extra.map(f => f.name -> f.dataType.catalogString)))
-          ()
-        }
-        val colsNow = storedColsNow
-        val shape = canonicalSchema.fields.map(f => f.name -> f.dataType).toMap
+        val st =
+          if (extra.isEmpty) st0
+          else {
+            validateExtraCols(st0, extra.toSeq, "repairFrom")
+            val evolved = st0.copy(extraCols = st0.extraCols ++
+              extra.map(f => f.name -> f.dataType.catalogString))
+            writeState(evolved)
+            evolved
+          }
+        val colsNow = storedColsOf(st)
+        val shape = canonicalSchemaOf(st).fields.map(f => f.name -> f.dataType).toMap
         val padded = (colsNow :+ partCol).filterNot(truth.columns.contains)
           .foldLeft(truth)((d, c) => d.withColumn(c, lit(null).cast(shape(c))))
         val content = graft.operators.Materialize.cut(
           padded.select((colsNow.map(col) :+ col(partCol)): _*))
         val n = content.count()
-        rewritePartitions(convicted, content, n, "repairFrom")
+        rewritePartitions(fs, entries, st, convicted, content, n, "repairFrom")
         (convicted.size.toLong, n)
       }
     }
@@ -2376,7 +2385,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       (f.getPath.toString, part.orNull, gen, f.getLen, f.getModificationTime)
     val live = resolveFiles(fs, st, liveEntries(st), "files view").flatMap {
       case ((d, g), fl) =>
-        fl.map(row(_, unescapePartitionValue(d.split("=", 2)(1)), g))
+        fl.map(row(_, dirValue(d), g))
     }
     val legacy = rootLevelDataFrom(entries).flatMap { p =>
       if (p.getName.endsWith(".parquet"))
@@ -2384,7 +2393,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         entries.find(_.getPath == p).toSeq.map(row(_, None, 0L))
       else if (!fs.exists(p)) Nil
       else dataFilesIn(fs, p)
-        .map(row(_, unescapePartitionValue(p.getName.split("=", 2)(1)), 0L))
+        .map(row(_, dirValue(p.getName), 0L))
     }
     (live ++ legacy)
       .toDF("file", "partition", "generation", "bytes", "modified_ms")
@@ -3696,7 +3705,24 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       clusterBy: Seq[Column] = Nil): Long = {
     if (!exists()) return 0L
     requireWriteConfigMatch() // a rewrite under a lesser config would strip columns
-    withWriterLock("compact")(compactImpl(targetBytes, clusterBy))
+    withWriterLock("compact") {
+      val fs = fsOfRoot
+      val entries = listRoot(fs)
+      val st = readStateFrom(fs, entries)
+      // cheap refusals before the footer reads below (rewritePartitions
+      // repeats the reshard and manifest checks for its other callers);
+      // compactIncremental leaves the manifest check to the rewrite, so a
+      // tick with nothing dirty stays a no-op on a sink-owned lake
+      requireNoReshard(st, "compact")
+      requireRouting(st)
+      requireManifestGoverned("compact", st, entries)
+      val files = liveShardFiles(fs, st)
+      if (files.isEmpty) 0L
+      else rewritePartitions(fs, entries, st, files.keySet,
+        readFrom(st, entries).select((storedColsOf(st).map(col) :+ col(partCol)): _*),
+        footerRowsOf(files.values), "compact",
+        files.map { case (v, fl) => v -> slicesOf(fl, targetBytes) }, clusterBy)
+    }
   }
 
   /** INCREMENTAL compact: rewrite only the shards whose file count
@@ -3714,128 +3740,27 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     requireWriteConfigMatch() // a rewrite under a lesser config would strip columns
     withWriterLock("compactIncremental") {
       val fs = fsOfRoot
-      val st = readState()
+      val entries = listRoot(fs)
+      val st = readStateFrom(fs, entries)
       requireNoReshard(st, "compactIncremental")
-      // per-shard (files, bytes) across every live copy of the shard
-      val stats: Map[Option[String], (Long, Long)] = liveEntries(st)
-        .map { case (d, g) =>
-          val cs = fs.getContentSummary(
-            new org.apache.hadoop.fs.Path(genPath(g), d))
-          unescapePartitionValue(d.split("=", 2)(1)) ->
-            (cs.getFileCount, cs.getLength)
-        }
-        .groupBy(_._1)
-        .map { case (v, xs) =>
-          v -> (xs.map(_._2._1).sum, xs.map(_._2._2).sum) }
-      val dirty = stats.collect { case (v, (files, bytes))
-        if files > math.max(maxFilesPerShard.toLong,
-          math.max(1L, (bytes + targetBytes - 1) / targetBytes)) => v
-      }.toSet
+      requireRouting(st)
+      // a shard's files and bytes across every live copy of it
+      val dirty = liveShardFiles(fs, st).filter { case (_, fl) =>
+        fl.size > math.max(maxFilesPerShard.toLong, slicesOf(fl, targetBytes)) }
       if (dirty.isEmpty) return 0L
-      val slice = readPartitions(dirty)
-      val expected = slice.count()
-      val content = slice.select((storedColsOf(st).map(col) :+ col(partCol)): _*)
-      rewritePartitions(dirty, content, expected, "compactIncremental",
-        slices = stats.collect { case (v, (_, bytes)) if dirty.contains(v) =>
-          v -> math.max(1L, (bytes + targetBytes - 1) / targetBytes) }.toMap,
-        clusterBy = clusterBy)
+      rewritePartitions(fs, entries, st, dirty.keySet,
+        readFrom(st, entries, Some(dirty.keySet)).where(affectedPartPred(dirty.keySet))
+          .select((storedColsOf(st).map(col) :+ col(partCol)): _*),
+        footerRowsOf(dirty.values), "compactIncremental",
+        dirty.map { case (v, fl) => v -> slicesOf(fl, targetBytes) }, clusterBy)
       dirty.size.toLong
     }
   }
 
-  private def compactImpl(targetBytes: Long, clusterBy: Seq[Column]): Long = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val st = readStateFrom(fs, entries)
-    requireNoReshard(st, "compact")
-    requireManifestGoverned("compact", st, entries)
-
-    // per-shard compressed bytes across every live copy. Directory
-    // names carry ESCAPED partition values (Spark writes ':','%','=' etc
-    // as %XX and null as the Hive sentinel) while read() yields decoded
-    // values — decode here or the slice join below misses those shards
-    val shardBytes: Map[Option[String], Long] = liveEntries(st)
-      .map { case (d, g) =>
-        unescapePartitionValue(d.split("=", 2)(1)) ->
-          fs.getContentSummary(
-            new org.apache.hadoop.fs.Path(genPath(g), d)).getLength
-      }
-      .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).sum }
-    if (shardBytes.isEmpty) return 0L
-
-    val slices = shardBytes.map { case (sh, b) =>
-      sh -> math.max(1L, (b + targetBytes - 1) / targetBytes)
-    }
-    val totalSlices = math.max(1, math.min(slices.values.sum, Int.MaxValue).toInt)
-
-    // broadcast the (shard → slice count) table, cluster by (shard, slice):
-    // each output file is written whole by one task, files-per-shard is
-    // proportional to that shard's bytes (small shards stay one file)
-    import spark.implicits._
-    val sliceDf = broadcast(
-      slices.toSeq.map { case (sh, n) => (sh.orNull, n) }
-        .toDF(partCol + "_s", "n_slices")
-        .withColumn(partCol + "_s", col(partCol + "_s").cast(
-          if (cfg.partitionKey.isEmpty) IntegerType else cfg.partitionKeyType)))
-    val newGen = nextGen(st)
-    val tmp = genPath(newGen)
-    // null-safe LEFT join with a 1-slice default: a shard whose directory
-    // name failed to map (or a null partition value) must still be
-    // rewritten — dropping it here would turn into silent data loss at
-    // the commit below
-    val src = read()
-    val srcRows = src.count()
-    // Slice assignment decides what a compacted FILE spans, and that is
-    // a zone-map question: hash slices give byte-balanced files where
-    // every file spans the shard's ENTIRE key range — one compaction after
-    // time-correlated ingest and readTimeRange is back to opening every
-    // file. With clusterBy, slices are RANGE-assigned over
-    // (shard, clusterBy): repartitionByRange samples the key
-    // distribution and hands each task one contiguous band, so each
-    // output file carries a TIGHT (min, max) for the clustering key and
-    // the per-file zone map keeps pruning after the rewrite (files per
-    // shard still tracks bytes — the sampler balances rows per slice).
-    // partCol leads the sort below either way: the dynamic-partition
-    // writer requires rows ordered by the partition column and ADDS ITS
-    // OWN (non-stable) sort when the incoming order doesn't satisfy
-    // that — which would undo the clustering.
-    val sliced =
-      if (clusterBy.isEmpty)
-        src
-          .join(sliceDf, col(partCol) <=> col(partCol + "_s"), "left")
-          .withColumn("_slice", pmod(abs(hash(col("id"))), coalesce(col("n_slices"), lit(1L))))
-          .repartition(totalSlices, col(partCol), col("_slice"))
-          .select((storedColsOf(st).map(col) :+ col(partCol)): _*)
-      else
-        src
-          .repartitionByRange(totalSlices, (col(partCol) +: clusterBy): _*)
-          .select((storedColsOf(st).map(col) :+ col(partCol)): _*)
-    (if (clusterBy.isEmpty) sliced
-     else sliced.sortWithinPartitions((col(partCol) +: clusterBy): _*))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", cfg.codec)
-      .partitionBy(partCol)
-      .parquet(tmp.toString)
-
-    // verify BEFORE the commit: any rewrite shortfall aborts with the
-    // live state untouched instead of surfacing as permanent loss
-    val tmpRows = spark.read.parquet(tmp.toString).count()
-    if (tmpRows != srcRows) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"compact aborted: rewrote $tmpRows rows but source has $srcRows (live state untouched)")
-    }
-
-    // COMMIT: one sidecar create names the new generation as the whole
-    // live set; every older generation is dead-in-place (vacuum sweeps)
-    writeState(LakeState(newGen, Nil, extraCols = st.extraCols))
-    refreshSkipIndex(shardBytes.keySet) // full compact rewrote every shard
-    refreshZoneMapShards(shardBytes.keySet)
-
-    fs.listStatus(tmp).filter(_.isDirectory).map(d =>
-      fs.listStatus(d.getPath).count(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet")).toLong).sum
-  }
+  /** Files a shard holding `fl` compacts into at ~`targetBytes` each:
+    * ceil(bytes / target), at least one. */
+  private def slicesOf(fl: Seq[org.apache.hadoop.fs.FileStatus], targetBytes: Long): Long =
+    math.max(1L, (fl.map(_.getLen).sum + targetBytes - 1) / targetBytes)
 
   /** Inverse of Spark's partition-path escaping — delegates to the ONE
     * hardened implementation in the companion ([[Lake.unescapePartitionValue]]),
@@ -3843,6 +3768,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * the same directory name differently. */
   private[graft] def unescapePartitionValue(raw: String): Option[String] =
     Lake.unescapePartitionValue(raw)
+
+  /** The decoded partition value of a `<col>=<escaped value>` directory name. */
+  private def dirValue(d: String): Option[String] = unescapePartitionValue(d.split("=", 2)(1))
 
   /** INCREMENTAL RESHARD — grow the routing width from `cfg.numHashes`
     * to `newNumHashes` hyperplanes (2^Δ× the shards), the structural
@@ -4025,59 +3953,21 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private def reshardStep(st: LakeState, r: Lake.ReshardState,
       batch: Seq[(String, Long)]): Unit = {
     val fs = fsOfRoot
-    val extras = extraFieldsOf(st)
-    def pad(df: DataFrame): DataFrame =
-      extras.filterNot(f => df.columns.contains(f.name))
-        .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-    val slices = batch.groupBy(_._2).toSeq.sortBy(_._1).map { case (g, pairs) =>
-      val base = genPath(g)
-      val raw = spark.read.option("mergeSchema", "true")
-        .option("basePath", base.toString)
-        .parquet(pairs.map(_._1).distinct
-          .map(d => new org.apache.hadoop.fs.Path(base, d).toString): _*)
-      pad(raw.withColumn(partCol, col(partCol).cast(IntegerType)))
-    }
-    val cols = storedColsOf(st) :+ partCol
-    val src = slices.reduce(_ unionByName _).select(cols.map(col): _*)
-    val expected = src.count()
+    val sources = resolveFiles(fs, st, batch, "reshard")
     val newGen = nextGen(st)
-    val tmp = genPath(newGen)
-    if (expected > 0L) {
-      src.withColumn(partCol,
-          (col(partCol) + lsh.shardColFrom(col("vector"), r.fromBits))
-            .cast(IntegerType))
-        .repartition(col(partCol))
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", cfg.codec)
-        .partitionBy(partCol)
-        .parquet(tmp.toString)
-      val got = spark.read.parquet(tmp.toString).count()
-      if (got != expected) {
-        fs.delete(tmp, true)
-        throw new IllegalStateException(
-          s"reshard step aborted: wrote $got rows, expected $expected " +
-            "(live state untouched)")
-      }
-      // refinement scope: every produced value must preserve its
-      // source's low bits — anything else is a routing bug, refused
-      // before the commit
-      val mask = (1 << r.fromBits) - 1
-      val oldVals = batch.flatMap(p =>
-        unescapePartitionValue(p._1.split("=", 2)(1))).map(_.toInt).toSet
-      val outOfScope = fs.listStatus(tmp)
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-        .flatMap(s => unescapePartitionValue(s.getPath.getName.split("=", 2)(1)))
-        .map(_.toInt).filterNot(v => oldVals(v & mask))
-      require(outOfScope.isEmpty,
-        s"reshard step produced out-of-scope partitions: " +
-          s"${outOfScope.mkString(", ")}")
-    }
+    // refinement scope: every produced value must preserve its source's
+    // low bits — anything else is a routing bug, refused before the commit
+    val mask = (1 << r.fromBits) - 1
+    val oldVals = batch.flatMap(p => dirValue(p._1)).map(_.toInt).toSet
+    val produced = writeGeneration(newGen,
+      readFileSlice(sources.flatMap { case ((d, g), fl) => fl.map((d, g, _)) },
+        extraFieldsOf(st))
+        .select((storedColsOf(st) :+ partCol).map(col): _*)
+        .withColumn(partCol, (col(partCol) + lsh.shardColFrom(col("vector"), r.fromBits))
+          .cast(IntegerType)),
+      footerRowsOf(sources.map(_._2)),
+      "reshard", _.exists(v => oldVals(v.toInt & mask)))
     val batchSet = batch.toSet
-    val producedDirs: Seq[String] =
-      if (expected == 0L) Nil
-      else fs.listStatus(tmp).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-        .map(_.getPath.getName)
     // COMMIT — the generation POINTER does not move: the split
     // directories land as EXPLICIT live entries in their fresh
     // (non-current) generation, the batch's source pairs fall out, and
@@ -4086,19 +3976,21 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // manifest — is never touched. (An earlier version rolled the
     // pointer per step, which would have re-parented a stream-owned
     // generation into raw live entries and broken manifest-governed
-    // file visibility.)
-    writeState(LakeState(
+    // file visibility.) The produced files ride the commit as recorded.
+    val committed = LakeState(
       st.generation,
       st.live.filter(_._2 != st.generation).filterNot(batchSet) ++
-        producedDirs.map(_ -> newGen),
+        produced.map(_._1 -> newGen),
       extraCols = st.extraCols, sidecarShards = st.sidecarShards,
-      reshard = Some(r.copy(pending = r.pending.filterNot(batchSet)))))
+      reshard = Some(r.copy(pending = r.pending.filterNot(batchSet))),
+      liveFiles = st.liveFiles ++ produced.map { case (d, fl) =>
+        (d, newGen) -> fl.map(Lake.LiveFile.of) })
+    writeState(committed)
     // auxiliary refresh: the skip index is absent mid-reshard (dropped
     // at transition); the FILE-keyed zone map refreshes for the
     // retired and produced values
-    refreshZoneMapShards(
-      producedDirs.map(d => unescapePartitionValue(d.split("=", 2)(1))).toSet ++
-        batch.map(p => unescapePartitionValue(p._1.split("=", 2)(1))).toSet)
+    refreshZoneMapShards(committed,
+      (produced.map(_._1) ++ batch.map(_._1)).map(dirValue).toSet)
   }
 
   /** Row-level DELETE WHERE — the targeted maintenance op the reference
@@ -4310,7 +4202,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     if (affected.isEmpty || (doomed == 0L && insN == 0L)) return (0L, 0L)
     val cols = storedColsOf(st).map(col) :+ col(partCol)
     val kept = flagged.where(!col("__doomed")).select(cols: _*)
-    rewritePartitions(affected,
+    rewritePartitions(fs, entries, st, affected,
       inserts.fold(kept)(batch => kept.unionByName(batch.select(cols: _*))),
       rows - doomed + insN, tag)
     (doomed, insN)
@@ -4321,7 +4213,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * as after any append. */
   private def bootstrapAppend(batch: DataFrame): Unit = {
     val out = writeAppend(batch)
-    refreshSkipIndex(out.shards); refreshZoneMap(out.files)
+    refreshSkipIndex(out.state, out.shards); refreshZoneMap(out.files)
   }
 
   /** Upsert by caller-supplied id: rows whose id already exists replace
@@ -4395,22 +4287,26 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private def skipPath: org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(cfg.location, "_skip")
 
-  /** Every live shard's file set, keyed by decoded partition value:
-    * the input to both building and freshness-checking the skip index
-    * — the resolved live set ([[resolveFiles]]) grouped by shard,
-    * optionally only the shards in `only`. */
+  /** Every live shard's file set, keyed by decoded partition value —
+    * the resolved live set ([[resolveFiles]]) grouped by shard,
+    * optionally only the shards in `only`: recorded sizes, a LIST only
+    * for current-generation or unrecorded directories. What building
+    * and freshness-checking the skip index, compaction sizing and
+    * shard-skew telemetry all read. */
   private def liveShardFiles(fs: org.apache.hadoop.fs.FileSystem,
       st: LakeState,
       only: Option[Set[Option[String]]] = None)
-      : Map[Option[String], Seq[(String, Long)]] = {
-    def value(d: String) = unescapePartitionValue(d.split("=", 2)(1))
+      : Map[Option[String], Seq[org.apache.hadoop.fs.FileStatus]] = {
     val entries = liveEntries(st).filter { case (d, _) =>
-      only.forall(_.contains(value(d))) }
-    resolveFiles(fs, st, entries, "skip index")
-      .groupBy { case ((d, _), _) => value(d) }
-      .map { case (v, xs) =>
-        v -> xs.flatMap(_._2.map(s => (s.getPath.toString, s.getLen))) }
+      only.forall(_.contains(dirValue(d))) }
+    resolveFiles(fs, st, entries, "shard files")
+      .groupBy { case ((d, _), _) => dirValue(d) }
+      .map { case (v, xs) => v -> xs.flatMap(_._2) }
   }
+
+  /** A shard's skip-index fingerprint: its live files' paths and sizes. */
+  private def fingerprintOf(fl: Seq[org.apache.hadoop.fs.FileStatus]): String =
+    graft.operators.SkipIndex.fingerprint(fl.map(s => (s.getPath.toString, s.getLen)))
 
   /** Data files of one directory (markers and hidden files excluded). */
   private def dataFilesIn(fs: org.apache.hadoop.fs.FileSystem,
@@ -4419,21 +4315,20 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       s.isFile && !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith("."))
 
-  /** Run `per(dir, gen)` for each entry from a bounded thread pool —
-    * one object-store LIST per directory is a round trip, and serial
-    * LISTs would pay |dirs| of them end to end (FileSystem reads are
-    * thread-safe; s3a documents this). ExecutionExceptions are
-    * unwrapped so callers see the real cause. Shared by the skip-index
-    * and change-feed listing paths. */
-  private def mapDirsPooled[A](dirs: Seq[(String, Long)])(
-      per: (String, Long) => A): Seq[A] = {
+  /** Run `per` for each directory (or file) from a bounded thread
+    * pool — one object-store LIST or footer read is a round trip, and
+    * serial ones would pay |dirs| of them end to end (FileSystem reads
+    * are thread-safe; s3a documents this). ExecutionExceptions are
+    * unwrapped so callers see the real cause. Shared by the resolver
+    * ([[resolveFiles]]) and the generation writer's footer checks. */
+  private def mapDirsPooled[K, A](dirs: Seq[K])(per: K => A): Seq[A] = {
     if (dirs.isEmpty) return Nil
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, dirs.size))
     try {
-      dirs.map { case (d, g) =>
+      dirs.map { d =>
         pool.submit(new java.util.concurrent.Callable[A] {
-          def call(): A = per(d, g)
+          def call(): A = per(d)
         })
       }.map(f =>
         try f.get()
@@ -4481,7 +4376,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * exactly `scope`): one per-shard counts pass to size the sketches,
     * then one `BloomFilterAggregate` per shard. */
   private def skipRows(slice: DataFrame,
-      scope: Map[Option[String], Seq[(String, Long)]],
+      scope: Map[Option[String], Seq[org.apache.hadoop.fs.FileStatus]],
       fpp: Double): DataFrame = {
     val key = col(partCol).cast(StringType).as("part")
     val counts = slice.groupBy(key).count().collect()
@@ -4494,7 +4389,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         org.apache.spark.sql.functions.count(lit(1)).as("cnt"))
     import spark.implicits._
     val fps = scope.toSeq.map { case (v, fl) =>
-      (v.orNull, graft.operators.SkipIndex.fingerprint(fl))
+      (v.orNull, fingerprintOf(fl))
     }.toDF("part_f", "fp")
     sketches.join(broadcast(fps), col("part") <=> col("part_f"), "inner")
       .select(col("part"), col("fp"), col("cnt"), col("sketch"))
@@ -4528,7 +4423,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * shards, like the rewrite itself. Refreshed sketches use the
     * default 1% fpp regardless of the original build's setting (fpp is
     * not stored; a full [[buildSkipIndex]] restores a custom one). */
-  private def refreshSkipIndex(affected: Set[Option[String]]): Unit = try {
+  private def refreshSkipIndex(st: LakeState,
+      affected: Set[Option[String]]): Unit = try {
     val fs = fsOfRoot
     if (affected.isEmpty || readSkipIndex(fs).isEmpty) return
     val partFiles = fs.listStatus(skipPath)
@@ -4540,7 +4436,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         .reduce(_ || _))
     // list ONLY the affected directories: kept rows reuse their stored
     // fingerprints, so the refresh's LIST cost tracks the rewrite's
-    val affectedLive = liveShardFiles(fs, readState(), only = Some(affected))
+    val affectedLive = liveShardFiles(fs, st, only = Some(affected))
     val refreshed =
       if (affectedLive.isEmpty) keep // every affected shard fully emptied
       else keep.unionByName(skipRows(
@@ -4787,11 +4683,12 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * entries are dead-harmless and compacted away by the next
     * [[buildZoneMap]]. Cost tracks the affected shards, like the
     * rewrite itself. */
-  private def refreshZoneMapShards(affected: Set[Option[String]]): Unit = try {
+  private def refreshZoneMapShards(st: LakeState,
+      affected: Set[Option[String]]): Unit = try {
     val fs = fsOfRoot
     if (affected.isEmpty || !fs.exists(zonePath)) return
-    val live = liveShardFiles(fs, readState(), only = Some(affected))
-      .values.flatten.map(_._1).toSeq
+    val live = liveShardFiles(fs, st, only = Some(affected))
+      .values.flatten.map(_.getPath.toString).toSeq
     refreshZoneMap(live)
   } catch { case scala.util.control.NonFatal(_) => () } // unmapped = safe
 
@@ -5044,7 +4941,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       val live = liveShardFiles(fs, st)
       if (live.isEmpty) return Some(Set.empty)
       val (fresh, stale) = live.partition { case (v, fl) =>
-        idx.get(v).exists(_._1 == graft.operators.SkipIndex.fingerprint(fl))
+        idx.get(v).exists(_._1 == fingerprintOf(fl))
       }
       if (fresh.isEmpty) return None // nothing skippable: exact probe
       val freshSeq = fresh.keys.toSeq
@@ -5086,105 +4983,144 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     withWriterLock("deleteIds")(rewriteRows("deleteWhere", Right(ids.toSet))._1)
   }
 
-  /** Shared targeted-rewrite machinery for [[rewriteRows]],
-    * [[compactIncremental]] and [[repairFrom]]: write `content`
-    * (covering EXACTLY the `affected` partition values) into a NEW
-    * generation tree, verify the row count, then COMMIT with one
-    * sidecar create whose manifest keeps every unaffected directory at
-    * its existing location and drops every affected one (the new tree,
-    * being current, is live by rule). Unaffected directories are not read, not renamed, not
-    * touched — bit-identical across the op. An affected value with no
-    * rewritten directory means all its rows were removed: it simply
-    * leaves the manifest. A crash anywhere before the commit leaves the
-    * previous state fully live (the half-written generation is
-    * unreferenced scratch for [[vacuum]]/[[repair]]).
-    *
-    * @param slices optional per-partition output-file counts (the
-    *        [[compactIncremental]] sizing); default one file per
-    *        partition
-    * @param clusterBy optional within-file local sort, as [[compact]] */
-  private def rewritePartitions(affected: Set[Option[String]],
-      content: DataFrame, expectedRows: Long, tag: String,
-      slices: Map[Option[String], Long] = Map.empty,
-      clusterBy: Seq[Column] = Nil): Unit = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val st = readStateFrom(fs, entries)
+  /** The commit half of every partition rewrite — [[rewriteRows]],
+    * [[compact]], [[compactIncremental]] and [[repairFrom]], each
+    * passing the root listing and the state it resolved under the
+    * writer lock: write `content` (covering EXACTLY the `affected`
+    * partition values) into a NEW generation ([[writeGeneration]]),
+    * then COMMIT with one sidecar create whose manifest keeps every
+    * unaffected directory at its existing location and drops every
+    * affected one (the new tree, being current, is live by rule).
+    * Unaffected directories are not read, not renamed, not touched —
+    * bit-identical across the op. An affected value with no rewritten
+    * directory means all its rows were removed: it simply leaves the
+    * manifest; when nothing survives (a full [[compact]]) the new
+    * generation is the whole live set. A crash anywhere before the
+    * commit leaves the previous state fully live (the half-written
+    * generation is unreferenced scratch for [[vacuum]]/[[repair]]).
+    * Returns the number of data files written. */
+  private def rewritePartitions(fs: org.apache.hadoop.fs.FileSystem,
+      entries: Seq[org.apache.hadoop.fs.FileStatus], st: LakeState,
+      affected: Set[Option[String]], content: DataFrame, expectedRows: Long,
+      tag: String, slices: Map[Option[String], Long] = Map.empty,
+      clusterBy: Seq[Column] = Nil): Long = {
     requireNoReshard(st, tag)
-    // the caller's content shape (stored cols + extras + partCol) is
-    // what the slice-join below must re-project back to
-    val outCols = content.columns.toSeq
     requireManifestGoverned(tag, st, entries)
     val newGen = nextGen(st)
-    val tmp = genPath(newGen)
-    if (expectedRows > 0L) {
-      val shaped =
-        if (slices.isEmpty) content.repartition(col(partCol))
-        else {
-          import spark.implicits._
-          val sliceDf = broadcast(
-            slices.toSeq.map { case (sh, n) => (sh.orNull, n) }
-              .toDF(partCol + "_s", "n_slices")
-              .withColumn(partCol + "_s", col(partCol + "_s").cast(
-                if (cfg.partitionKey.isEmpty) IntegerType else cfg.partitionKeyType)))
-          val total = math.max(1,
-            math.min(slices.values.sum, Int.MaxValue).toInt)
-          // range slices under clusterBy (tight per-file key bands that
-          // keep the zone map pruning after the rewrite — compactImpl
-          // scaladoc), hash slices otherwise
-          if (clusterBy.isEmpty)
-            content
-              .join(sliceDf, col(partCol) <=> col(partCol + "_s"), "left")
-              .withColumn("_slice",
-                pmod(abs(hash(col("id"))), coalesce(col("n_slices"), lit(1L))))
-              .repartition(total, col(partCol), col("_slice"))
-              .select(outCols.map(col): _*)
-          else
-            content
-              .repartitionByRange(total, (col(partCol) +: clusterBy): _*)
-              .select(outCols.map(col): _*)
-        }
-      (if (clusterBy.isEmpty) shaped
-       else shaped.sortWithinPartitions((col(partCol) +: clusterBy): _*))
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", cfg.codec)
-        .partitionBy(partCol)
-        .parquet(tmp.toString)
-      // the check reads no data: each written file's Parquet footer
-      // holds its row count. Any abort (a row mismatch, an out-of-scope
-      // partition, an unreadable footer) removes the unreferenced tree.
-      try {
-        val dirs = fs.listStatus(tmp)
-          .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-        val tmpRows = dirs.iterator.flatMap(d => dataFilesIn(fs, d.getPath))
-          .map(footerRows).sum
-        if (tmpRows != expectedRows)
-          throw new IllegalStateException(
-            s"partition rewrite ($tag) aborted: wrote $tmpRows rows, expected $expectedRows (live state untouched)")
-        val outOfScope = dirs
-          .map(s => unescapePartitionValue(s.getPath.getName.split("=", 2)(1)))
-          .filterNot(affected.contains)
-        require(outOfScope.isEmpty,
-          s"rewrite produced out-of-scope partitions: ${outOfScope.mkString(", ")}")
-      } catch { case scala.util.control.NonFatal(e) => fs.delete(tmp, true); throw e }
-    }
+    val produced = writeGeneration(newGen, content, expectedRows, tag,
+      affected.contains, slices, clusterBy)
     // COMMIT: unaffected dirs keep their existing generation (now named
     // explicitly, since the current-tree becomes non-current); affected
     // dirs' old copies fall out of the manifest — dead in place
     val survivors = liveEntries(st).filter { case (d, _) =>
-      !affected.contains(unescapePartitionValue(d.split("=", 2)(1)))
+      !affected.contains(dirValue(d))
     }
-    writeState(LakeState(newGen, survivors, extraCols = st.extraCols))
-    refreshSkipIndex(affected)
-    refreshZoneMapShards(affected)
+    val committed = LakeState(newGen, survivors, extraCols = st.extraCols,
+      liveFiles = st.liveFiles)
+    writeState(committed)
+    refreshSkipIndex(committed, affected)
+    refreshZoneMapShards(committed, affected)
+    produced.map(_._2.size.toLong).sum
   }
 
+  /** THE generation writer under every rewrite ([[rewritePartitions]]
+    * and each [[reshard]] step): shape `content` — one file per
+    * partition, or `slices` files per partition — write it as
+    * generation `gen`, then check it before anyone commits it. The
+    * check reads no data: each written file's Parquet footer holds its
+    * row count, summed over the listing pool one file per task. A
+    * row count other than `expectedRows` or a partition value that
+    * `allowed` refuses aborts with the live state untouched and removes the
+    * unreferenced tree. Returns the produced directories with their
+    * data files (none when `expectedRows` is 0: nothing is written).
+    *
+    * Slices are hash-assigned by id, or RANGE-assigned over
+    * (partition, `clusterBy`) when given: hash slices give byte-balanced
+    * files that each span the shard's ENTIRE key range — one compaction
+    * after time-correlated ingest and readTimeRange is back to opening
+    * every file — while `repartitionByRange` samples the key
+    * distribution and hands each task one contiguous band, so each file
+    * carries a TIGHT (min, max) and the per-file zone map keeps pruning
+    * (the sampler still balances rows per slice). The partition column
+    * leads the local sort either way: the dynamic-partition writer adds
+    * its OWN (non-stable) sort when rows are not ordered by it, which
+    * would undo the clustering. */
+  private def writeGeneration(gen: Long, content: DataFrame,
+      expectedRows: Long, tag: String, allowed: Option[String] => Boolean,
+      slices: Map[Option[String], Long] = Map.empty,
+      clusterBy: Seq[Column] = Nil): Seq[(String, Seq[org.apache.hadoop.fs.FileStatus])] = {
+    if (expectedRows == 0L) return Nil
+    val fs = fsOfRoot
+    val tmp = genPath(gen)
+    // the caller's content shape (stored cols + extras + partCol) is
+    // what the slice join below must re-project back to
+    val outCols = content.columns.toSeq.map(col)
+    val shaped =
+      if (slices.isEmpty) content.repartition(col(partCol))
+      else {
+        import spark.implicits._
+        // null-safe LEFT join with a 1-slice default: a partition whose
+        // value failed to map (or a null value) must still be rewritten —
+        // dropping it here would be silent loss at the commit
+        val sliceDf = broadcast(
+          slices.toSeq.map { case (sh, n) => (sh.orNull, n) }
+            .toDF(partCol + "_s", "n_slices")
+            .withColumn(partCol + "_s", col(partCol + "_s").cast(
+              if (cfg.partitionKey.isEmpty) IntegerType else cfg.partitionKeyType)))
+        val total = math.max(1, math.min(slices.values.sum, Int.MaxValue).toInt)
+        if (clusterBy.isEmpty)
+          content
+            .join(sliceDf, col(partCol) <=> col(partCol + "_s"), "left")
+            .withColumn("_slice",
+              pmod(abs(hash(col("id"))), coalesce(col("n_slices"), lit(1L))))
+            .repartition(total, col(partCol), col("_slice"))
+            .select(outCols: _*)
+        else
+          content
+            .repartitionByRange(total, (col(partCol) +: clusterBy): _*)
+            .select(outCols: _*)
+      }
+    (if (clusterBy.isEmpty) shaped
+     else shaped.sortWithinPartitions((col(partCol) +: clusterBy): _*))
+      .write.mode(SaveMode.Overwrite)
+      .option("compression", cfg.codec)
+      .partitionBy(partCol)
+      .parquet(tmp.toString)
+    try {
+      val produced = mapDirsPooled(fs.listStatus(tmp).toSeq
+          .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+          .map(_.getPath.getName)) { d =>
+        d -> dataFilesIn(fs, new org.apache.hadoop.fs.Path(tmp, d))
+      }
+      def abort(why: String): Nothing = throw new IllegalStateException(
+        s"partition rewrite ($tag) aborted: $why (live state untouched)")
+      val wrote = footerRowsOf(produced.map(_._2))
+      if (wrote != expectedRows) abort(s"wrote $wrote rows, expected $expectedRows")
+      val outOfScope = produced.map(p => dirValue(p._1)).filterNot(allowed)
+      if (outOfScope.nonEmpty)
+        abort(s"out-of-scope partitions ${outOfScope.map(_.orNull).mkString(", ")}")
+      produced
+    } catch { case scala.util.control.NonFatal(e) => fs.delete(tmp, true); throw e }
+  }
+
+  /** Rows in the data files of `groups`, from their Parquet footers
+    * alone, one file per task of the listing pool (a fragmented shard
+    * must not pay its footer round trips in series). */
+  private def footerRowsOf(groups: Iterable[Seq[org.apache.hadoop.fs.FileStatus]]): Long =
+    mapDirsPooled(groups.flatten.toSeq)(footerRows).sum
+
   /** Row count of one Parquet data file, from its footer alone. */
-  private def footerRows(f: org.apache.hadoop.fs.FileStatus): Long = {
+  private def footerRows(f: org.apache.hadoop.fs.FileStatus): Long =
+    footerOf(f).getBlocks.asScala.map(_.getRowCount).sum
+
+  /** The Parquet footer of one data file: one open, no data read, and no
+    * listing (the status in hand carries the length). */
+  private def footerOf(f: org.apache.hadoop.fs.FileStatus)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
         f, spark.sparkContext.hadoopConfiguration))
-    try reader.getRecordCount finally reader.close()
+    try reader.getFooter finally reader.close()
   }
 
   /** Sweep DEAD storage — the VACUUM of this layout: generation trees
@@ -5421,15 +5357,12 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   /** Shards whose skip-index fingerprint no longer matches the live
     * file set; -1 = no index present (shared by [[validate]] and
     * [[maintain]]). Driver-side metadata only. */
-  private def skipStaleCount(): Long = try {
-    val fs = fsOfRoot
-    readSkipIndex(fs) match {
+  private def skipStaleCount(
+      files: => Map[Option[String], Seq[org.apache.hadoop.fs.FileStatus]]): Long = try {
+    readSkipIndex(fsOfRoot) match {
       case None => -1L
       case Some(idx) =>
-        liveShardFiles(fs, readState()).count { case (v, fl) =>
-          !idx.get(v).exists(
-            _._1 == graft.operators.SkipIndex.fingerprint(fl))
-        }.toLong
+        files.count { case (v, fl) => !idx.get(v).exists(_._1 == fingerprintOf(fl)) }.toLong
     }
   } catch { case scala.util.control.NonFatal(_) => -1L }
 
@@ -5472,24 +5405,16 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * per call is bounded by what actually churned: O(dirty shards)
     * rewrite + O(map)/O(shards) index refreshes + O(dead dirs) sweep.
     * Returns what ran. */
-  /** Per-shard BYTE totals over the live set, summarized as
-    * (max, median): the probe-cost signal behind the
+  /** Per-shard BYTE totals over the live set ([[liveShardFiles]]),
+    * summarized as (max, median): the probe-cost signal behind the
     * `reshard_recommended` verdict — a single-probe topK reads one
     * shard directory, so its cost tracks the largest directory (the
-    * worst-routed query) against the typical one. Pure listings,
-    * O(live dirs), no row reads — cheap enough for every
-    * [[maintain]]/[[validate]] tick. */
-  private def shardSkewStats(st: LakeState): Option[(Long, Long)] = {
-    val fs = fsOfRoot
-    val perShard = liveEntries(st)
-      .map { case (d, g) =>
-        unescapePartitionValue(d.split("=", 2)(1)) ->
-          (try fs.getContentSummary(
-            new org.apache.hadoop.fs.Path(genPath(g), d)).getLength
-          catch { case _: java.io.FileNotFoundException => 0L })
-      }
-      .groupBy(_._1).map { case (_, xs) => xs.map(_._2).sum }
-      .toSeq.sorted
+    * worst-routed query) against the typical one. Recorded sizes, no
+    * row reads — cheap enough for every [[maintain]]/[[validate]]
+    * tick. */
+  private def shardSkewStats(
+      files: Map[Option[String], Seq[org.apache.hadoop.fs.FileStatus]]): Option[(Long, Long)] = {
+    val perShard = files.values.map(_.map(_.getLen).sum).toSeq.sorted
     if (perShard.isEmpty) None
     else Some((perShard.max, perShard(perShard.size / 2)))
   }
@@ -5512,6 +5437,16 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val tickState = readState()
     val reshardInFlight = tickState.reshard.map(r =>
       (1L << r.fromBits, 1L << r.toBits, r.pending.size.toLong))
+    // shard-health telemetry reads the PRE-maintenance state
+    // deliberately: the tick's own compaction/expiry do not change
+    // per-shard BYTE skew materially (they rewrite within shards), and
+    // one state serves the whole report. Best-effort: a live directory
+    // swept between the state read and its listing (a concurrent
+    // compaction + vacuum elsewhere) leaves the skew unknown instead of
+    // failing the tick before its maintenance runs
+    val skew =
+      try shardSkewStats(liveShardFiles(fsOfRoot, tickState))
+      catch { case scala.util.control.NonFatal(_) => None }
     // retention FIRST: rows about to expire must not be paid for again
     // by the compaction rewrite below (and a wholesale retirement may
     // itself leave shards under the file-count slack). ttlMs < 0 = off.
@@ -5525,7 +5460,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       if (reshardInFlight.isDefined) 0L
       else compactIncremental(targetBytes,
         clusterBy = clusterBy, maxFilesPerShard = maxFilesPerShard)
-    val skip = reshardInFlight.isEmpty && skipStaleCount() > 0L && {
+    val skip = reshardInFlight.isEmpty &&
+      skipStaleCount(liveShardFiles(fsOfRoot, readState())) > 0L && {
       buildSkipIndex(); true }
     val zone = reshardInFlight.isEmpty && zoneNeedsRebuild() && (zoneSpecOf(fsOfRoot) match {
       // spec present but unreadable: SKIP this cycle's rebuild rather
@@ -5558,16 +5494,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         true
       }
     }
-    // shard-health telemetry: the oversized-shard signal that says a
-    // reshard is JUSTIFIED work — never auto-runs one (a reshard is an
-    // operator decision: it rewrites the lake once and temporarily
-    // refuses other maintenance); mid-reshard the recommendation stays
-    // down and the pending count reports progress instead
-    // NOTE the skew reads the PRE-maintenance state deliberately: the
-    // tick's own compaction/expiry do not change per-shard BYTE skew
-    // materially (they rewrite within shards), and one state serves
-    // the whole report
-    val skew = shardSkewStats(tickState)
+    // the oversized-shard signal says a reshard is JUSTIFIED work —
+    // never auto-runs one (a reshard is an operator decision: it
+    // rewrites the lake once and temporarily refuses other
+    // maintenance); mid-reshard the recommendation stays down and the
+    // pending count reports progress instead
     Lake.MaintenanceReport(compacted, skip, zone, swept, recalibrated,
       expired,
       maxShardBytes = skew.map(_._1).getOrElse(0L),
@@ -5584,29 +5515,30 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // object store each readState is a remote GET, and an audit should
     // not pay five of them
     val auditState = readState()
-    val skew = shardSkewStats(auditState)
+    // one resolution of the live files serves skew, drift and skip-index
+    // staleness
+    val files = liveShardFiles(fsOfRoot, auditState)
+    val skew = shardSkewStats(files)
     val pendingDirs = auditState.reshard.map(_.pending.size.toLong).getOrElse(0L)
-    // FOOTER-DRIFT audit (round 11): the O(live files) mergeSchema
-    // sweep that used to run on EVERY read now runs only here, where
-    // an audit-priced pass belongs — count data columns any live
+    // FOOTER-DRIFT audit (round 11): the O(live files) footer sweep
+    // that used to run on EVERY read now runs only here, where an
+    // audit-priced pass belongs — count data columns any live
     // manifest-governed file carries beyond the declared stored set
     // (an out-of-contract foreign write; the pinned-schema read
     // serves such a file null-padded/projected instead of failing).
-    // -1 = no live files to audit; unreadable footers surface as the
-    // read error they are.
-    val driftCols: Long = {
-      val fs = fsOfRoot
-      val files = liveShardFiles(fs, auditState)
-        .values.flatten.map(_._1).toSeq
-      if (files.isEmpty) -1L
+    // The footers are read from the resolved statuses on the listing
+    // pool. -1 = no live files to audit; unreadable footers surface as
+    // the read error they are.
+    val driftCols: Long =
+      if (files.values.forall(_.isEmpty)) -1L
       else {
-        val merged = spark.read.option("mergeSchema", "true")
-          .parquet(files: _*).schema.fieldNames.map(_.toLowerCase).toSet
+        val stored = mapDirsPooled(files.values.flatten.toSeq)(f =>
+          footerOf(f).getFileMetaData.getSchema.getFields.asScala.map(_.getName))
+          .flatten.map(_.toLowerCase).toSet
         val declared = (storedColsOf(auditState) :+ partCol)
           .map(_.toLowerCase).toSet
-        (merged -- declared).size.toLong
+        (stored -- declared).size.toLong
       }
-    }
     // every branch must be an AGGREGATE expression (a bare literal is
     // rejected by agg); "not configured" = max of a constant -1
     def unconfigured: Column = coalesce(max(lit(-1L)), lit(-1L))
@@ -5629,7 +5561,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // skip-index health, computed driver-side from listings (it is
     // metadata, not rows): shards whose recorded fingerprint no longer
     // matches the live file set; -1 = no index present
-    val skipStale: Long = skipStaleCount()
+    val skipStale: Long = skipStaleCount(files)
     // functions.count is shadowed by Lake.count() inside this class
     val rowsAgg = org.apache.spark.sql.functions.count(lit(1))
     // schema-evolution drift visibility: rows all-null across every
@@ -6306,10 +6238,10 @@ object Lake {
       .take(6).map(b => f"${b & 0xff}%02x").mkString
 
   /** What one staged append published: the partition values it landed
-    * files in (skip-index refresh scope) and the published data-file
-    * paths themselves (zone-map refresh scope). */
+    * files in (skip-index refresh scope), the published data-file paths
+    * themselves (zone-map refresh scope) and the state it stamped. */
   private[graft] final case class Appended(
-      shards: Set[Option[String]], files: Seq[String])
+      shards: Set[Option[String]], files: Seq[String], state: LakeState)
 
   /** Per-append staging subtree root: each batch append writes its
     * parquet under `_staging/<uuid>/` with its own committer scratch,
@@ -6345,6 +6277,11 @@ object Lake {
     * would return — readers build scan splits from them, so `len`
     * must be the true byte length). */
   private[graft] final case class LiveFile(name: String, len: Long, mod: Long)
+
+  private[graft] object LiveFile {
+    def of(s: org.apache.hadoop.fs.FileStatus): LiveFile =
+      LiveFile(s.getPath.getName, s.getLen, s.getModificationTime)
+  }
 
   /** Committed layout-v2 state: `generation` is the current append
     * target (its whole subtree is live); `live` names directories still

@@ -214,6 +214,29 @@ class LakeSpec extends SparkSpec {
       metric = "l2")).count() === 1L)
   }
 
+  test("compaction under a mismatched routing config is refused and leaves the sidecar's config alone") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_routing_compact").toString
+    val loc = s"$dir/lake"
+    val lake = Lake(spark, LakeConfig(loc, dim = 5, numHashes = 4))
+    (0 until 3).foreach(i => lake.ingest(
+      Seq((Seq(1f, i.toFloat, 0f, 0f, 0f), s"doc $i")).toDF("vector", "document")))
+    val before = lake.read().select("id").as[String].collect().toSet
+    // same shard count, different hyperplanes; then a different dimension
+    val foreign = Seq(LakeConfig(loc, dim = 5, numHashes = 4, seed = 7L),
+      LakeConfig(loc, dim = 6, numHashes = 4))
+    for (c <- foreign; op <- Seq[Lake => Long](_.compact(), _.compactIncremental(maxFilesPerShard = 0))) {
+      val e = intercept[IllegalArgumentException](op(Lake(spark, c)))
+      assert(e.getMessage.contains("seed") || e.getMessage.contains("-dim"), e.getMessage)
+    }
+    // nothing committed: the writer's own config still routes, the
+    // foreign seed is still refused, and the rows are the same
+    assert(lake.topK(Seq(1.0, 0, 0, 0, 0), 1).count() === 1L)
+    assert(intercept[IllegalArgumentException](
+      Lake(spark, foreign.head).topK(Seq(1.0, 0, 0, 0, 0), 1).count())
+      .getMessage.contains("seed"))
+    assert(lake.read().select("id").as[String].collect().toSet === before)
+  }
+
   test("topKBatch honors cfg.metric: batch ranking matches topKExact per metric") {
     for (metric <- Seq("cosine", "l2", "dot")) {
       val dir = java.nio.file.Files.createTempDirectory(s"graft_batch_$metric").toString

@@ -789,6 +789,18 @@ class ObjectStoreSpec extends SparkSpec {
     assert(lake.expire(java.time.Instant.EPOCH) === ((0L, 0L)))
     assert(dataListings().isEmpty,
       s"expire listed data dirs: ${dataListings().mkString(", ")}")
+    // compaction sizing and validate's skew and drift audit read the
+    // recorded file sizes: nothing here is dirty, and nothing is listed
+    CountingListFs.listed.clear()
+    assert(lake.compactIncremental() === 0L)
+    assert(dataListings().isEmpty,
+      s"compactIncremental listed data dirs: ${dataListings().mkString(", ")}")
+    CountingListFs.listed.clear()
+    val audit = lake.validate().head()
+    assert(audit.getAs[Long]("rows") === 59L && audit.getAs[Long]("misrouted") === 0L)
+    assert(audit.getAs[Long]("max_shard_bytes") > 0L)
+    assert(dataListings().isEmpty,
+      s"validate listed data dirs: ${dataListings().mkString(", ")}")
     lake.delete()
   }
 

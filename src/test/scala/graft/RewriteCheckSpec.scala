@@ -34,10 +34,10 @@ class DropPartFs extends BucketFs {
     else listStatus(p).toSeq.flatMap(s => parts(s.getPath))
 }
 
-/** The post-write row check of a row-level rewrite keeps its strength:
-  * a committed part file that goes missing aborts the op before its
-  * commit, the live state stays as it was, and the unreferenced tree
-  * is removed. */
+/** The post-write row check of every rewrite (row-level writes,
+  * compaction, reshard steps) keeps its strength: a committed part file
+  * that goes missing aborts the op before its commit, the live state
+  * stays as it was, and the unreferenced tree is removed. */
 class RewriteCheckSpec extends SparkSpec {
   import spark.implicits._
 
@@ -84,5 +84,28 @@ class RewriteCheckSpec extends SparkSpec {
   test("deleteIds aborts when a committed part file goes missing") {
     val l = lake()
     aborts(l)(l.deleteIds((0 until 8).map(i => s"r$i")))
+  }
+
+  test("compact aborts when a committed part file goes missing") {
+    val l = lake()
+    aborts(l)(l.compact())
+  }
+
+  test("compactIncremental aborts when a committed part file goes missing") {
+    val l = lake()
+    val rng = new scala.util.Random(13)
+    (0 until 2).foreach { b =>
+      l.ingest((0 until 100).map(i =>
+        (s"f$b-$i", Seq.fill(5)(rng.nextGaussian().toFloat), s"doc $b-$i"))
+        .toDF("id", "vector", "document"))
+    }
+    aborts(l)(l.compactIncremental(maxFilesPerShard = 1))
+  }
+
+  test("a reshard step aborts when a committed part file goes missing") {
+    // the transition commits first; the step that follows is the rewrite
+    val l = lake().reshard(5, maxDirs = 0)
+    aborts(l)(l.reshard(5, maxDirs = 1, dirsPerCommit = 1))
+    assert(l.reshardStatus().map(_._3) === Some(16L), "the aborted step retired nothing")
   }
 }

@@ -5,11 +5,12 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, lit}
 
-/** A row-level write costs a fixed handful of Spark jobs, whatever the
-  * lake's size: a batch aggregate, one discovery aggregate, the write —
-  * the post-write row check reads Parquet footers and runs no job. A
-  * predicate delete keeps its discovery scan pruned, and an empty
-  * replica's first apply is a plain append. */
+/** A rewrite costs a fixed handful of Spark jobs, whatever the lake's
+  * size. A row-level write runs a batch aggregate, one discovery
+  * aggregate and the write; a compaction runs only the write — its
+  * source count and the post-write row check read Parquet footers and
+  * run no job. A predicate delete keeps its discovery scan pruned, and
+  * an empty replica's first apply is a plain append. */
 class RewriteJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -91,6 +92,25 @@ class RewriteJobsSpec extends SparkSpec {
     info(s"upsert: $jobs Spark jobs")
     assert(jobs <= 10, s"upsert ran $jobs Spark jobs")
     assert(l.count() === 2008L)
+  }
+
+  test("compactIncremental of fragmented shards runs at most 3 Spark jobs") {
+    val l = lake() // two commits: two files in every shard
+    val (rewritten, jobs) = jobsOf(l.compactIncremental(maxFilesPerShard = 1))
+    assert(rewritten === 16L)
+    info(s"compactIncremental: $jobs Spark jobs")
+    assert(jobs <= 3, s"compactIncremental ran $jobs Spark jobs")
+    assert(l.count() === 2000L)
+    assert(l.liveDirPaths().size === 16)
+  }
+
+  test("a full compact runs at most 3 Spark jobs") {
+    val l = lake()
+    val (files, jobs) = jobsOf(l.compact())
+    assert(files === 16L)
+    info(s"compact: $jobs Spark jobs")
+    assert(jobs <= 3, s"compact ran $jobs Spark jobs")
+    assert(l.count() === 2000L)
   }
 
   test("deleteWhere on the partition column scans only that partition") {

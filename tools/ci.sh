@@ -15,12 +15,15 @@ fi
 
 # which files a lake state holds is decided in one place: in Lake.scala
 # only the resolver (recordedFiles) and the commit-time recorder
-# (writeState) read `.liveFiles`, and only streamOwned (the predicate)
-# and ingestStream (which plants the pin) name "_spark_metadata"
+# (writeState) read `.liveFiles` — besides the two rewrite commits
+# (rewritePartitions, reshardStep) that hand the recorded files they
+# resolved on to writeState — and only streamOwned (the predicate) and
+# ingestStream (which plants the pin) name "_spark_metadata"
 if ! awk '
   /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
   match($0, /def [A-Za-z0-9_]+/) { fn = substr($0, RSTART + 4, RLENGTH - 4) }
-  /\.liveFiles([^A-Za-z0-9_]|$)/ && fn != "recordedFiles" && fn != "writeState" {
+  /\.liveFiles([^A-Za-z0-9_]|$)/ && fn != "recordedFiles" && fn != "writeState" &&
+      fn != "rewritePartitions" && fn != "reshardStep" {
     print FILENAME ":" FNR ": " $0; bad = 1 }
   /"_spark_metadata"/ && fn != "streamOwned" && fn != "ingestStream" {
     print FILENAME ":" FNR ": " $0; bad = 1 }
@@ -44,9 +47,10 @@ fi
 
 # one row-level rewrite: in Lake.scala an id-set left_anti/left_semi
 # join (on `__chg_id`/`__new_id`) may stand only in rewriteRows or
-# applyChanges' netting, and only rewriteRows, compactIncremental and
-# repairFrom call rewritePartitions. Functions are tracked at class
-# member indentation, so a nested def does not hide its enclosing one.
+# applyChanges' netting, and only rewriteRows, compact,
+# compactIncremental and repairFrom call rewritePartitions. Functions
+# are tracked at class member indentation, so a nested def does not
+# hide its enclosing one.
 if ! awk '
   /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
   match($0, /^  ([a-z]+(\[[a-z]+\])? )*def [A-Za-z0-9_]+/) {
@@ -55,10 +59,29 @@ if ! awk '
       fn != "rewriteRows" && fn != "applyChangesImpl" {
     print FILENAME ":" FNR ": " $0; bad = 1 }
   /rewritePartitions\(/ && !/def rewritePartitions\(/ && fn != "rewriteRows" &&
-      fn != "compactIncremental" && fn != "repairFrom" {
+      fn != "compact" && fn != "compactIncremental" && fn != "repairFrom" {
     print FILENAME ":" FNR ": " $0; bad = 1 }
   END { exit bad }' src/main/scala/graft/Lake.scala; then
   echo "ci: row-level rewrite outside Lake.rewriteRows (an id anti/semi join, or a rewritePartitions call)" >&2
+  exit 1
+fi
+
+# one generation writer: in Lake.scala only writeGeneration writes a
+# rewrite's partitioned tree (besides the append, stream and derived
+# writers), a rewrite's row check reads footers instead of re-reading
+# the tree, and shard sizes come from the resolver (liveShardFiles),
+# not from per-directory content summaries
+if ! awk '
+  /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
+  match($0, /^  ([a-z]+(\[[a-z]+\])? )*def [A-Za-z0-9_]+/) {
+    fn = substr($0, RSTART, RLENGTH); sub(/.*def /, "", fn) }
+  /getContentSummary/ || /spark\.read\.parquet\(tmp/ {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  /\.partitionBy\(partCol\)/ && fn != "writeAppend" && fn != "ingestStream" &&
+      fn != "writeDerivedGen" && fn != "writeGeneration" {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  END { exit bad }' src/main/scala/graft/Lake.scala; then
+  echo "ci: a generation tree written, counted or sized outside Lake.writeGeneration/liveShardFiles" >&2
   exit 1
 fi
 
