@@ -156,127 +156,6 @@ object EngineBench {
   }
 }
 
-/** The per-shard ANN accelerator question, MEASURED (SURVEY §2.4 /
-  * round-7 What's-missing #2): the reference rebuilds an in-process
-  * HNSW graph over every loaded shard (hnsw.py:65-228). Would a
-  * per-partition in-memory index beat this engine's per-shard answer —
-  * an exact columnar scan, optionally cut by the IVF / PQ dials — at
-  * 1M+ rows per shard? Four modes over ONE 1M-row "shard" (a single
-  * un-partitioned parquet directory, cell-clustered files), per-query
-  * median of reps:
-  *
-  *  - `exact_parquet`: the engine's default — fused-kernel cosine scan
-  *    + TakeOrderedAndProject heap, straight off parquet;
-  *  - `exact_cached`: the same plan over an in-memory-cached frame —
-  *    the CEILING any in-process index structure could reach on IO
-  *    (it, too, must hold the shard's vectors in memory; what remains
-  *    is distance-evaluation count, which the next two modes cut);
-  *  - `ivf_nprobe4`: IVF cell filter (64 cells, probe 4) — candidates
-  *    ~n/16, and because files are WRITTEN cell-clustered, parquet
-  *    row-group stats prune the IO too (the sub-shard analog of the
-  *    lake's directory pruning); recall reported honestly;
-  *  - `pq_adc`: 8-byte ADC coarse top-100 + exact rerank of 100 —
-  *    reads 8 bytes/row of vector data instead of 256.
-  *
-  * Decision rule (BENCHNOTES records the verdict): an in-process graph
-  * index pays shard-load rebuild (the reference pays it on every load),
-  * JVM heap residency, and a non-columnar code path; it wins only if
-  * exact-cached is far from exact-parquet (IO-bound: it is not, on
-  * local storage) AND neither IVF nor PQ already delivers the
-  * sub-linear candidate cut (they do, with recall dials and oracle
-  * checks). Args: [n] [dim] [nQueries] (defaults 1000000, 64, 10). */
-object ShardAnnSpike {
-  def main(args: Array[String]): Unit = {
-    val n = if (args.length > 0) args(0).toInt else 1000000
-    val dim = if (args.length > 1) args(1).toInt else 64
-    val nQ = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import graft.functions.{VectorFunctions => V}
-
-    val base = spark.range(n).select(
-        col("id"),
-        transform(sequence(lit(0), lit(dim - 1)),
-          i => sin(col("id") * 7919 + i * 104729) * 0.15)
-          .cast("array<double>").as("vector"))
-    val ivf = operators.Ivf.train(
-      base.where(col("id") < 20000), "vector", "id", k = 64, iters = 3)
-    val pqM = (8 to 1 by -1).find(dim % _ == 0).get
-    val pq = operators.Pq.round6(operators.Pq.train(
-      base.where(col("id") < 20000), "vector", "id", dim = dim,
-      m = pqM, k = 16, iters = 2))
-    val path = s"${sys.props("java.io.tmpdir")}/graft_shard_ann_$n"
-    // one "shard": cell-clustered files so row-group min/max stats let
-    // an IVF cell filter prune IO, not just compute
-    base
-      .withColumn("cell", ivf.assignCol(col("vector")))
-      .withColumn("pq_code",
-        (0 until pq.m).map(mi =>
-          shiftleft(pq.codeCol(col("vector"), mi).cast("long"), 8 * mi))
-          .reduce(_ + _))
-      .withColumn("vector", col("vector").cast("array<float>"))
-      .repartition(8, col("cell")).sortWithinPartitions("cell")
-      .write.mode("overwrite").parquet(path)
-    val shard = spark.read.parquet(path)
-
-    val queries = base.where(col("id") % (n / nQ) === 7)
-      .limit(nQ).collect()
-      .map(_.getSeq[Double](1).toSeq)
-    def med(xs: Seq[Double]): Double = {
-      val s = xs.sorted; s(s.size / 2)
-    }
-    def perQuery(f: Seq[Double] => org.apache.spark.sql.DataFrame): Double =
-      med(queries.toSeq.map { q =>
-        val t0 = System.nanoTime(); f(q).count(); (System.nanoTime() - t0) / 1e9
-      })
-    def exactTop(df: org.apache.spark.sql.DataFrame, q: Seq[Double]) =
-      df.select(col("id"), V.cosineDist(col("vector"), V.vecLit(q)).as("dist"))
-        .orderBy(col("dist"), col("id")).limit(10)
-
-    val tParquet = perQuery(exactTop(shard, _))
-    val cached = shard.cache(); cached.count()
-    val tCached = perQuery(exactTop(cached, _))
-    val tIvf = perQuery { q =>
-      val cells = ivf.cellsFor(q, nprobe = 4)
-      exactTop(shard.where(col("cell").isin(cells: _*)), q)
-    }
-    val tPqAdc = perQuery { q =>
-      // ADC over the STORED 8-byte code word (unpack each subspace's
-      // 8-bit code, one LUT lookup per subspace — the topKPq shape)
-      val adc = round((0 until pq.m).map { mi =>
-        element_at(V.vecLit(pq.lutFor(q, mi)),
-          shiftright(col("pq_code"), 8 * mi).bitwiseAND(lit(255L))
-            .cast("int") + 1)
-      }.reduce(_ + _), 6)
-      val coarse = shard
-        .select(col("id"), adc.as("adc"))
-        .orderBy(col("adc"), col("id")).limit(100)
-        .select(col("id").as("cid"))
-      exactTop(shard.join(broadcast(coarse), col("id") === col("cid")), q)
-    }
-    // recall@10 of the IVF cut vs exact, averaged over the query set —
-    // the honesty line for the accelerator comparison
-    val recalls = queries.toSeq.map { q =>
-      val exact = exactTop(shard, q).collect().map(_.getLong(0)).toSet
-      val cells = ivf.cellsFor(q, nprobe = 4)
-      val approx = exactTop(shard.where(col("cell").isin(cells: _*)), q)
-        .collect().map(_.getLong(0)).toSet
-      approx.intersect(exact).size.toDouble / math.max(1, exact.size)
-    }
-    val recall = recalls.sum / recalls.size
-    println(s"""{"probe":"shard_ann","rows":$n,"dim":$dim,"queries":$nQ,""" +
-      s""""exact_parquet_sec":${f"$tParquet%.3f"},"exact_cached_sec":${f"$tCached%.3f"},""" +
-      s""""ivf_nprobe4_sec":${f"$tIvf%.3f"},"ivf_recall_at10":${f"$recall%.2f"},""" +
-      s""""pq_adc_sec":${f"$tPqAdc%.3f"}}""")
-    spark.stop()
-  }
-}
-
 /** Cost-vs-corpus-size curves for the 100 TB claims: the same probe set
   * at n and 10n (one JSON line per size), so the scaling behavior is
   * MEASURED slope, not just plan shape. What each probe's slope should
@@ -516,306 +395,6 @@ object ReshardBench {
   }
 }
 
-/** The incremental-aggregate slope probe: per-batch maintenance cost
-  * must track CHURN (changed keys → touched buckets), not state size.
-  * For each key count n: seed a state of n keys, then apply a
-  * fixed-size churn batch (100 keys updated) and time it; the contrast
-  * line is a from-scratch recompute over an n-row corpus, which grows
-  * with n while the churn apply stays flat (BENCHNOTES.md carries the
-  * observed numbers). Args: [sizes...] (defaults 20000 200000). */
-object IncrAggBench {
-  def main(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq
-                else Seq(20000, 200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import graft.streaming.IncrementalAgg
-
-    def time[T](f: => T): (Double, T) = {
-      val t = System.nanoTime(); val r = f; ((System.nanoTime() - t) / 1e9, r)
-    }
-    val keys = Seq("k")
-    val aggs = Seq("chars" -> length(col("doc")).cast("double"))
-    sizes.foreach { n =>
-      val statePath =
-        s"${sys.props("java.io.tmpdir")}/graft_incragg_bench_$n/state"
-      val fs = new org.apache.hadoop.fs.Path(statePath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(statePath).getParent, true)
-      def corpus(rows: Long) = spark.range(rows).select(
-        concat(lit("k"), col("id")).as("k"),
-        concat(lit("doc-"), col("id"), lit(" body")).as("doc"))
-      val seed = corpus(n).withColumn("change", lit("insert"))
-      val (tSeed, _) = time(IncrementalAgg.applyDelta(spark, statePath,
-        IncrementalAgg.signedDelta(seed, keys, aggs), keys,
-        aggs.map(_._1), 0L))
-      // fixed churn regardless of n: 100 keys each updated
-      // (delete + longer insert) — the quantity whose cost must be flat.
-      // Uniformly-hashed keys touch ~all 64 buckets (the worst case);
-      // the LOCALIZED variant below (all churn in ONE bucket — the
-      // one-shard-compact shape) is what bucket granularity buys
-      def updated(keysDf: org.apache.spark.sql.DataFrame) =
-        keysDf.withColumn("change", lit("delete"))
-          .unionByName(keysDf
-            .withColumn("doc", concat(col("doc"), lit(" grew")))
-            .withColumn("change", lit("insert")))
-      def buckets(df: org.apache.spark.sql.DataFrame): Long =
-        df.select(pmod(xxhash64(col("k")), lit(64)).as("b"))
-          .distinct().count()
-      val scattered = updated(corpus(100))
-      val bScattered = buckets(scattered)
-      val (tChurn, _) = time(IncrementalAgg.applyDelta(spark, statePath,
-        IncrementalAgg.signedDelta(scattered, keys, aggs), keys,
-        aggs.map(_._1), 1L))
-      val local = updated(corpus(n)
-        .where(pmod(xxhash64(col("k")), lit(64)) === 0).limit(100))
-      val (tChurnLocal, _) = time(IncrementalAgg.applyDelta(spark, statePath,
-        IncrementalAgg.signedDelta(local, keys, aggs), keys,
-        aggs.map(_._1), 2L))
-      // contrast: what a non-incremental consumer pays per refresh
-      val (tRecompute, _) = time(
-        corpus(n).groupBy("k")
-          .agg(count(lit(1)).as("__rows"), sum(length(col("doc"))).as("chars"))
-          .count())
-      val state = IncrementalAgg.readState(spark, statePath)
-      val stateKeys = state.count()
-      println(s"""{"probe":"incr_agg","keys":$n,"churn_keys":100,""" +
-        s""""seed_sec":${f"$tSeed%.3f"},"churn_apply_sec":${f"$tChurn%.3f"},""" +
-        s""""churn_buckets":$bScattered,""" +
-        s""""churn_local_sec":${f"$tChurnLocal%.3f"},"churn_local_buckets":1,""" +
-        s""""recompute_sec":${f"$tRecompute%.3f"},"state_keys":$stateKeys}""")
-      fs.delete(new org.apache.hadoop.fs.Path(statePath).getParent, true)
-    }
-    spark.stop()
-  }
-}
-
-/** The zone-map slope probe: a FIXED time window's read cost must
-  * track the window, never lake size. Rows are ingested in 10k-row
-  * chunks, one synthetic day per chunk (the time-correlated append
-  * order a real loader produces); the probe reads day 0's window at
-  * each lake size and records files opened + seconds, against the
-  * full-scan floor. files_window stays flat as rows grow 10×;
-  * files_total grows linearly (BENCHNOTES.md carries the observed
-  * numbers). Args: [dim] [sizes...] (defaults 16, 20000 200000). */
-object ZoneBench {
-  def main(args: Array[String]): Unit = {
-    val dim = if (args.length > 0) args(0).toInt else 16
-    val sizes = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-                else Seq(20000, 200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def time[T](f: => T): (Double, T) = {
-      val t = System.nanoTime(); val r = f; ((System.nanoTime() - t) / 1e9, r)
-    }
-    val chunkRows = 10000L
-    sizes.foreach { n =>
-      val lake = Lake(spark, LakeConfig(
-        s"${sys.props("java.io.tmpdir")}/graft_zone_bench_$n", dim = dim,
-        numHashes = 4))
-      lake.delete()
-      // two selects: a single one would resolve the lambda's col("id")
-      // against the LATERAL alias (the "rN" string), not range's long
-      def chunk(c: Long) = spark.range(c * chunkRows, (c + 1) * chunkRows)
-        .select(col("id").as("num"),
-          transform(sequence(lit(0), lit(dim - 1)),
-            i => sin(col("id") * 7919 + i * 104729) * 0.15)
-            .cast("array<float>").as("vector"))
-        .select(
-          concat(lit("r"), col("num")).as("id"), col("vector"),
-          concat(lit("doc-"), col("num")).as("document"),
-          timestamp_seconds(lit(c * 86400L)).as("timestamp"),
-          // a per-chunk quality band: the nested numeric field the
-          // FIELD zone map prunes on (q in [c*100, c*100+99])
-          to_json(struct((lit(c * 100) + col("num") % 100).as("q")))
-            .as("metadata_json"))
-      val chunks = n / chunkRows.toInt
-      (0L until chunks.toLong).foreach(c => lake.ingest(chunk(c)))
-      lake.buildZoneMap(fields = Seq("q"))
-      val day0 = (java.time.Instant.ofEpochSecond(0L),
-        java.time.Instant.ofEpochSecond(86399L))
-      val (tWin, (rowsWin, filesWin)) = time {
-        val df = lake.readTimeRange(day0._1, day0._2)
-        (df.count(), df.inputFiles.length)
-      }
-      val (tFull, (rowsFull, filesFull)) = time {
-        val df = lake.read().where(
-          col("timestamp").between(
-            java.sql.Timestamp.from(day0._1), java.sql.Timestamp.from(day0._2)))
-        (df.count(), df.inputFiles.length)
-      }
-      // the FIELD-band read: same fixed selectivity (one chunk's band)
-      // while the lake grows — files opened must stay flat, vs the
-      // full JSON-extract filter that opens everything (the field has
-      // no parquet statistics)
-      val (tField, (rowsField, filesField)) = time {
-        val df = lake.readFieldRange("q", 0.0, 99.0)
-        (df.count(), df.inputFiles.length)
-      }
-      val (tFieldFull, (rowsFieldFull, filesFieldFull)) = time {
-        val df = lake.read().where(
-          lake.metadataField("q").cast("double").between(0.0, 99.0))
-        (df.count(), df.inputFiles.length)
-      }
-      println(s"""{"probe":"zone","rows":$n,"dim":$dim,"chunks":$chunks,""" +
-        s""""window_rows":$rowsWin,"window_files":$filesWin,""" +
-        s""""window_sec":${f"$tWin%.3f"},""" +
-        s""""full_rows":$rowsFull,"full_files":$filesFull,""" +
-        s""""full_sec":${f"$tFull%.3f"},""" +
-        s""""field_rows":$rowsField,"field_files":$filesField,""" +
-        s""""field_sec":${f"$tField%.3f"},""" +
-        s""""field_full_rows":$rowsFieldFull,"field_full_files":$filesFieldFull,""" +
-        s""""field_full_sec":${f"$tFieldFull%.3f"}}""")
-      lake.delete()
-    }
-    spark.stop()
-  }
-}
-
-/** Cost curve for [[Lake.topKAtRecall]] — what each recall target
-  * actually costs once [[Lake.calibrateRecall]] has measured the
-  * multiprobe ladder. Builds a lake, calibrates, then serves held-out
-  * queries at rising targets, reporting the files each target's chosen
-  * dial opens, the median seconds, and the ACHIEVED recall against the
-  * exact scan. Args: [n] [dim] [numHashes]. */
-object RecallBench {
-  def main(args: Array[String]): Unit = {
-    val n = if (args.length > 0) args(0).toInt else 200000
-    val dim = if (args.length > 1) args(1).toInt else 16
-    val numHashes = if (args.length > 2) args(2).toInt else 5
-    val k = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](f: => T): (Double, T) = {
-      val t = System.nanoTime(); val r = f; ((System.nanoTime() - t) / 1e9, r)
-    }
-    // TWO corpus regimes bracket real embedding data:
-    //  - "clustered": a gaussian mixture — neighbors share the query's
-    //    LSH cell, the ladder saturates at nprobe 1, and the dial
-    //    serves ANY target from one shard (the routing cut in full);
-    //  - "uniform": structureless vectors — neighbors scatter across
-    //    every shard, no nprobe short of all-shards reaches a high
-    //    target, and topKAtRecall falls back to the EXACT scan rather
-    //    than silently missing the promise (the contract's other half).
-    // files RESOLVED BY a scan after partition pruning (Dataset
-    // .inputFiles ignores partition filters, so it cannot tell a
-    // pruned probe from a full scan); recurses through AQE
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      def scans(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-        p.collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            scans(a.executedPlan)
-        }.flatten
-      scans(df.queryExecution.executedPlan)
-        .map(_.selectedPartitions.toPartitionArray.length.toLong).sum
-    }
-    // deterministic high-dim pseudorandom component in [-0.5, 0.5]:
-    // xxhash64 per (row, dimension, salt) — NOT a phase-shifted
-    // sinusoid, which would collapse every vector into one 2-D plane
-    // and make any routing measurement degenerate
-    def h(row: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column,
-        salt: String): org.apache.spark.sql.Column =
-      pmod(xxhash64(row, i, lit(salt)), lit(1000003L)).cast("double") /
-        1000003.0 - 0.5
-    // TWO corpus regimes bracket real embedding data:
-    //  - "clustered": a mixture around 64 well-separated centers —
-    //    neighbors mostly share the query's LSH cell, the ladder opens
-    //    high and saturates fast, and a cheap nprobe serves every
-    //    target (the routing cut in full);
-    //  - "uniform": structureless vectors — neighbors scatter across
-    //    shards, the ladder stays low, and topKAtRecall falls back to
-    //    the EXACT scan for unreachable targets rather than silently
-    //    missing the promise (the contract's other half).
-    Seq("clustered", "uniform").foreach { regime =>
-      val clusters = 64
-      val lake = Lake(spark, LakeConfig(
-        s"${sys.props("java.io.tmpdir")}/graft_recall_bench_$regime",
-        dim = dim, numHashes = numHashes))
-      lake.delete()
-      def vecFor(rows: org.apache.spark.sql.DataFrame)
-          : org.apache.spark.sql.DataFrame = rows
-        .select(col("id").as("num"),
-          transform(sequence(lit(0), lit(dim - 1)), i =>
-            (if (regime == "clustered") h(col("id") % clusters, i, "ctr")
-             else lit(0.0)) + h(col("id"), i, "nz") * 0.35)
-            .cast("array<float>").as("vector"))
-        .select(concat(lit("r"), col("num")).as("id"), col("vector"),
-          concat(lit("doc-"), col("num")).as("document"))
-      lake.ingest(vecFor(spark.range(n.toLong).toDF("id")))
-      val (tCal, ladder) = time(lake.calibrateRecall(k = k, sampleQueries = 32))
-      println(s"""{"probe":"recall_ladder","regime":"$regime","rows":$n,""" +
-        s""""num_hashes":$numHashes,"calib_sec":${f"$tCal%.1f"},""" +
-        s""""ladder":[${ladder.map(r => f"$r%.3f").mkString(",")}]}""")
-      // held-out queries: generated by the same corpus process from
-      // ids OUTSIDE the ingested range — near the corpus, not in it
-      val heldOut = vecFor(
-        spark.range(n.toLong + 1000L, n.toLong + 1016L).toDF("id"))
-        .select(graft.functions.VectorFunctions.asDouble(col("vector")))
-        .collect()
-        .map(_.getAs[scala.collection.Seq[Double]](0).toSeq).toSeq
-      val exactTimes = Array.newBuilder[Double]
-      var exactFiles = 0L
-      val exact = heldOut.map { q =>
-        val (t, ids) = time {
-          val df = lake.topKExact(q, k)
-          val ids = df.select("id").collect().map(_.getString(0)).toSet
-          exactFiles += scannedFiles(df)
-          ids
-        }
-        exactTimes += t; ids
-      }
-      val ets = exactTimes.result().sorted
-      println(s"""{"probe":"recall_exact","regime":"$regime",""" +
-        s""""files_per_query":${exactFiles / heldOut.size},""" +
-        s""""median_sec":${f"${ets(ets.length / 2)}%.3f"}}""")
-      Seq(0.5, 0.8, 0.9, 0.95, 1.0).foreach { target =>
-        val times = Array.newBuilder[Double]
-        var files = 0L
-        val got = heldOut.map { q =>
-          val (t, ids) = time {
-            val df = lake.topKAtRecall(q, k, target)
-            val ids = df.select("id").collect().map(_.getString(0)).toSet
-            files += scannedFiles(df)
-            ids
-          }
-          times += t; ids
-        }
-        val achieved = exact.zip(got)
-          .map { case (e, g) => e.intersect(g).size.toDouble / e.size }
-        val ts = times.result().sorted
-        println(s"""{"probe":"recall_cost","regime":"$regime",""" +
-          s""""target":$target,""" +
-          s""""achieved":${f"${achieved.sum / achieved.size}%.3f"},""" +
-          s""""files_per_query":${files / heldOut.size},""" +
-          s""""median_sec":${f"${ts(ts.length / 2)}%.3f"}}""")
-      }
-      lake.delete()
-    }
-    spark.stop()
-  }
-}
-
 /** Streaming-sink overhead probe: the exactly-once ledger
   * ([[Lake.ingestExactlyOnce]]) vs the plain append it wraps, same
   * batches — the delta is the protocol cost a `writeStream.format
@@ -890,148 +469,6 @@ object SinkBench {
     run("plain", "p", report = true)
     run("sink", "s", report = true)
     run("stage", "st", report = true)
-    spark.stop()
-  }
-}
-
-/** Replication slope probe: [[Lake.syncFrom]] claims O(churn +
-  * affected partitions), never O(data) — so a FIXED churn (deletes +
-  * shard-moving replacements confined to a couple of shards) applied
-  * to a 1× and a 10× lake should cost nearly the same, while the
-  * alternative (re-[[Lake.cloneTo]]) pays the full data size both
-  * times. Also reports the CONVERGENCE pass: re-applying the same
-  * delta must rewrite nothing and cost only the reads. Args: [rows]
-  * [dim] [churn]. */
-object SyncBench {
-  def main(args: Array[String]): Unit = {
-    val baseRows = if (args.length > 0) args(0).toLong else 40000L
-    val dim = if (args.length > 1) args(1).toInt else 16
-    val churn = if (args.length > 2) args(2).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](f: => T): (Double, T) = {
-      val t = System.nanoTime(); val r = f; ((System.nanoTime() - t) / 1e9, r)
-    }
-    def rowsDf(n: Long) = spark.range(n)
-      .select(col("id").as("num"),
-        transform(sequence(lit(0), lit(dim - 1)),
-          i => sin(col("id") * 7919 + i * 104729) * 0.15)
-          .cast("array<float>").as("vector"))
-      .select(col("vector"), concat(lit("doc-"), col("num")).as("document"))
-    def run(scale: Int, tag: String, report: Boolean): Unit = {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_sync_bench_$tag"
-      val src = Lake(spark, LakeConfig(s"$root/src", dim = dim, numHashes = 5))
-      src.delete()
-      src.ingest(rowsDf(baseRows * scale))
-      val a = src.seal()
-      val rep = Lake(spark, LakeConfig(s"$root/rep", dim = dim, numHashes = 5))
-      rep.delete()
-      val (tClone, replica) = time(src.cloneTo(s"$root/rep", asOf = Some(a)))
-      // FIXED-SIZE churn confined to two shards: `churn` deletes from
-      // the fullest shard, `churn` negate-replacements from the next
-      // (they MOVE to the complementary shard — worst-case dir spread)
-      import spark.implicits._
-      val byShard = src.read().groupBy("shard").count()
-        .orderBy(col("count").desc).select("shard").as[Int].head(2)
-      val delDocs = src.read().where(col("shard") === byShard(0))
-        .select("document").as[String].head(churn).toSeq
-      val repDocs = src.read().where(col("shard") === byShard(1))
-        .select("document").as[String].head(churn).toSeq
-      src.deleteWhere(col("document").isin(delDocs: _*))
-      src.upsert(src.read().where(col("document").isin(repDocs: _*))
-        .select(transform(col("vector"), v => -v).as("vector"),
-          col("document"), col("id")))
-      val b = src.seal()
-      val delta = graft.operators.Materialize.cut(src.changesBetween(a, b))
-      val (tSync, counts) = time(replica.applyChanges(delta))
-      // convergence pass: same delta again — must be (0,0), no rewrite
-      val (tNoop, noop) = time(replica.applyChanges(delta))
-      if (report)
-        println(s"""{"probe":"sync","rows":${baseRows * scale},""" +
-          s""""churn":${2 * churn},"clone_sec":${f"$tClone%.2f"},""" +
-          s""""sync_sec":${f"$tSync%.2f"},""" +
-          s""""sync_deleted":${counts._1},"sync_inserted":${counts._2},""" +
-          s""""noop_sec":${f"$tNoop%.2f"},""" +
-          s""""noop_deleted":${noop._1},"noop_inserted":${noop._2}}""")
-      src.delete(); replica.delete()
-    }
-    run(1, "warm", report = false) // codegen/classload warm-up
-    run(1, "x1", report = true)
-    run(10, "x10", report = true)
-    spark.stop()
-  }
-}
-
-/** Retention slope probe: [[Lake.expire]]'s wholesale tier claims
-  * "TTL enforcement priced like a directory listing" — old data sealed
-  * into manifest directories retires by ONE sidecar commit, cost flat
-  * in data size, while the same retention without a zone map rewrites
-  * every affected partition (O(affected data)). Args: [rows] [dim]. */
-object ExpireBench {
-  def main(args: Array[String]): Unit = {
-    val baseRows = if (args.length > 0) args(0).toLong else 100000L
-    val dim = if (args.length > 1) args(1).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](f: => T): (Double, T) = {
-      val t = System.nanoTime(); val r = f; ((System.nanoTime() - t) / 1e9, r)
-    }
-    val oldTs = java.sql.Timestamp.from(
-      java.time.Instant.now().minusSeconds(10L * 86400))
-    val horizon = java.time.Instant.now().minusSeconds(5L * 86400)
-    def rowsDf(n: Long, old: Boolean) = {
-      val base = spark.range(n)
-        .select(col("id").as("num"),
-          transform(sequence(lit(0), lit(dim - 1)),
-            i => sin(col("id") * 7919 + i * 104729) * 0.15)
-            .cast("array<float>").as("vector"))
-        .select(col("vector"), concat(lit("doc-"), col("num")).as("document"))
-      if (old) base.withColumn("timestamp", lit(oldTs)) else base
-    }
-    def run(scale: Int, zoned: Boolean, tag: String, report: Boolean): Unit = {
-      val l = Lake(spark, LakeConfig(
-        s"${sys.props("java.io.tmpdir")}/graft_expire_bench_$tag",
-        dim = dim, numHashes = 5))
-      l.delete()
-      val n = baseRows * scale
-      l.ingest(rowsDf(n, old = true))
-      if (zoned) {
-        // the wholesale shape: old data sealed into manifest dirs, a
-        // small fresh tail in the current generation
-        l.buildZoneMap()
-        l.seal()
-        l.ingest(rowsDf(2000, old = false))
-      } else {
-        // the straddle shape: every partition holds old AND surviving
-        // rows in the same (current) generation — the rewrite tier
-        // must actually rewrite the kept half, O(affected data)
-        l.ingest(rowsDf(n / 2, old = false))
-      }
-      val (t, r) = time(l.expire(horizon))
-      if (report)
-        println(s"""{"probe":"expire","rows":$n,""" +
-          s""""zoned":$zoned,"sec":${f"$t%.2f"},""" +
-          s""""retired":${r._1},"rewritten":${r._2},""" +
-          s""""remaining":${l.read().count()}}""")
-      l.delete()
-    }
-    run(1, zoned = true, "warm", report = false)
-    run(1, zoned = true, "z1", report = true)
-    run(10, zoned = true, "z10", report = true)
-    run(1, zoned = false, "r1", report = true)
-    run(10, zoned = false, "r10", report = true)
     spark.stop()
   }
 }

@@ -125,7 +125,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     storedCols ++ st.extraCols.map(_._1)
   private def storedFieldsOf(st: LakeState): Seq[StructField] =
     storedFields ++ extraFieldsOf(st)
-  private def storedColsNow: Seq[String] = storedColsOf(readState())
 
   /** SCHEMA EVOLUTION: widen the stored schema with `add` — at 100 TB
     * "add a column" must be a SIDECAR COMMIT, never a reload. The
@@ -169,8 +168,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       // evolve re-stamps the sidecar from THIS session's config: under
       // a mismatched one it would silently flip the recorded
       // compression flags (same hazard as any write)
-      val st = readState()
-      requireWriteConfigMatch(st)
+      val (fs, entries, st) = resolveState()
+      requireWriteConfigMatch(fs, entries, st)
       validateExtraCols(st, add.fields.toSeq, "evolve")
       writeState(st.copy(extraCols =
         st.extraCols ++ add.fields.map(f => f.name -> f.dataType.catalogString)))
@@ -231,9 +230,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * for exactly the shards this batch touched, so appends no longer
     * stale-out their shards' sketches until the next rebuild. */
   def ingest(rows: DataFrame): Unit = withAppendLock("ingest") {
-    requireWriteConfigMatch()
-    val out = writeAppend(withDerived(rows))
-    refreshSkipIndex(out.state, out.shards)
+    val (fs, entries, st) = resolveState()
+    requireWriteConfigMatch(fs, entries, st)
+    val out = writeAppend(fs, st, withDerived(rows, st))
+    refreshSkipIndex(st, out.shards)
     refreshZoneMap(out.files)
   }
 
@@ -291,6 +291,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private[graft] def ingestExactlyOnce(rows: DataFrame, sinkId: String,
       batchId: Long): Boolean = withAppendLock("sink-batch") {
     val fs = fsOfRoot
+    // one state read serves the config check, a dead attempt's sweep and
+    // the append: maintenance is excluded while the gate is held, so the
+    // state cannot move under the batch. The marker and ledger listings
+    // below stay separate — each must see other attempts' files.
+    lazy val (_, entries, st) = resolveState()
     val idHex = Lake.sinkIdHex(sinkId)
     val batchHex = java.lang.Long.toHexString(batchId)
     // per-ATTEMPT identity on top of the (sink, batch) identity: two
@@ -351,7 +356,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
             try { fs.delete(p, false); () }
             catch { case scala.util.control.NonFatal(_) => () }
           case _ =>
-            sweepSinkFiles(fs, s"$idHex-$batchHex-$a")
+            sweepSinkFiles(fs, st.generation, s"$idHex-$batchHex-$a")
             try { fs.delete(p, false); () }
             catch { case scala.util.control.NonFatal(_) => () }
         }
@@ -381,7 +386,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       healDeadAttempts(sinkVersion(fs, idHex, batchId))
       false
     } else {
-      requireWriteConfigMatch()
+      requireWriteConfigMatch(fs, entries, st)
       // A FRESH marker for this batch means another driver is
       // publishing it right now (a zombie racing its replacement —
       // live attempts HEARTBEAT their marker): refuse loudly, since
@@ -434,9 +439,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       beat.setDaemon(true)
       beat.start()
       try {
-        val out = writeAppend(withDerived(rows),
+        val out = writeAppend(fs, st, withDerived(rows, st),
           fileTag = Some(s"$idHex-$batchHex-$attempt"))
-        refreshSkipIndex(out.state, out.shards)
+        refreshSkipIndex(st, out.shards)
         refreshZoneMap(out.files)
         // COMMIT = the atomic ledger version create (recording THIS
         // attempt as the winner). On IOException the version state
@@ -468,10 +473,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           catch { case e: java.io.IOException =>
             sinkVersion(fs, idHex, batchId) match {
               case Some(Some(w)) if w != attempt =>
-                sweepSinkFiles(fs, s"$idHex-$batchHex-$attempt")
+                sweepSinkFiles(fs, st.generation, s"$idHex-$batchHex-$attempt")
                 false
               case None if sinkLedger(fs, idHex).exists(_ > batchId) =>
-                sweepSinkFiles(fs, s"$idHex-$batchHex-$attempt")
+                sweepSinkFiles(fs, st.generation, s"$idHex-$batchHex-$attempt")
                 false
               case _ => throw e
             }
@@ -562,12 +567,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   /** Delete every live-tree file a torn attempt of this sink batch
     * published (identified by the `sink-<tag>-` name prefix). Runs only
     * on the torn-replay path; cost is one current-generation tree LIST.
-    * The torn files all sit in the CURRENT generation: appends only
-    * land there, and the pend marker has blocked every maintenance op
-    * (nothing can have moved them) since the torn attempt. */
+    * The torn files all sit in the CURRENT generation `current`:
+    * appends only land there, and the pend marker has blocked every
+    * maintenance op (nothing can have moved them) since the torn
+    * attempt. */
   private def sweepSinkFiles(fs: org.apache.hadoop.fs.FileSystem,
-      tag: String): Unit = {
-    val gen = genPath(readState().generation)
+      current: Long, tag: String): Unit = {
+    val gen = genPath(current)
     if (!fs.exists(gen)) return
     fs.listStatus(gen)
       .filter(s => s.isDirectory && s.getPath.getName.contains("="))
@@ -760,7 +766,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * Appends are safe to run concurrently by construction: each writes
     * fresh uniquely-named files into the current generation's live tree
     * via its own staging dir ([[writeAppend]]), touches no existing
-    * file, and its sidecar stamp re-reads the state it republishes
+    * file, and its sidecar stamp republishes the state it resolved
     * UNDER this gate — maintenance cannot interleave, so a stamp can
     * never republish a stale manifest (the lost-update hazard that kept
     * ingest serialized before). A crashed appender strands its marker;
@@ -930,18 +936,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   /** First unused generation number: past both the committed pointer
     * and any UNCOMMITTED tree a crashed op stranded on disk (those keep
     * their number until [[vacuum]] sweeps them — reusing it would mix
-    * two ops' files in one tree). */
-  private def nextGen(st: LakeState): Long = {
-    val fs = fsOfRoot
-    val root = new org.apache.hadoop.fs.Path(cfg.location)
-    val onDisk =
-      if (!fs.exists(root)) Nil
-      else fs.listStatus(root).toSeq.flatMap(s => s.getPath.getName match {
-        case genDirRe(g) if s.isDirectory => Some(g.toLong)
-        case _ => None
-      })
-    (st.generation +: onDisk).max + 1
-  }
+    * two ops' files in one tree), read from the root listing `entries`
+    * the op took under the writer lock (nothing else creates a
+    * generation tree while it is held). */
+  private def nextGen(st: LakeState,
+      entries: Seq[org.apache.hadoop.fs.FileStatus]): Long =
+    (st.generation +: entries.flatMap(s => s.getPath.getName match {
+      case genDirRe(g) if s.isDirectory => Some(g.toLong)
+      case _ => None
+    })).max + 1
 
   /** Append-write an already-derived frame (shared by [[ingest]] and
     * [[upsert]]'s bootstrap path so the two can never diverge). Appends
@@ -963,25 +966,19 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * file committer itself pays there. Returns the partition values
     * this batch landed files in (the skip-index refresh scope) and the
     * published file paths themselves (the zone-map refresh scope).
-    * Caller holds the shared OR exclusive gate, so the generation
+    * Caller holds the shared OR exclusive gate and resolved `st` under
+    * it (and checked its write config against it), so the generation
     * pointer cannot move between the state read and the move, and the
-    * closing stamp republishes a state no maintenance commit can be
-    * concurrently replacing.
+    * closing stamp republishes that same state: no maintenance commit
+    * can be concurrently replacing it.
     *
     * `fileTag` (the streaming-sink path, [[ingestExactlyOnce]])
     * prefixes every published filename with `sink-<tag>-` so a torn
     * batch's files are IDENTIFIABLE by name on replay — the sweep that
     * makes the sink's replay idempotent. Plain appends stay untagged. */
-  private def writeAppend(derived: DataFrame,
-      fileTag: Option[String] = None): Lake.Appended = {
-    val fs = fsOfRoot
-    val st = readState()
+  private def writeAppend(fs: org.apache.hadoop.fs.FileSystem, st: LakeState,
+      derived: DataFrame, fileTag: Option[String] = None): Lake.Appended = {
     requireRouting(st) // never append rows routed under foreign hyperplanes
-    // re-checked UNDER the append gate (not just at op entry): a
-    // reshard transition committing in the entry-check-to-marker
-    // window must not let this session land rows routed at the old
-    // width into the post-transition tree
-    requireStateWidth(st, "append")
     // a generation with a sink manifest is STREAM-OWNED: the manifest
     // governs which files readers see, and it will never name a batch
     // append's files — writing here would produce committed-but-
@@ -1030,24 +1027,19 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       if (fs.listStatus(staging.getParent).isEmpty)
         fs.delete(staging.getParent, false)
     } catch { case scala.util.control.NonFatal(_) => () }
-    // merge-safe stamp: re-read the state UNDER the gate (no maintenance
-    // commit can interleave; racing append stamps republish the same
-    // manifest) so the stamp can never resurrect a pre-commit manifest
-    val stamped = readState()
-    writeState(stamped)
-    Lake.Appended(
-      stagedDirs.map(d =>
-        dirValue(d.getPath.getName)).toSet,
-      moved.result(), stamped)
+    writeState(st)
+    Lake.Appended(stagedDirs.map(d => dirValue(d.getPath.getName)).toSet,
+      moved.result())
   }
 
   /** The ONE derived-column block, shared by batch and streaming ingest
     * so the two paths can never diverge: metadata coercion (column
     * missing → {"name":"unknown"}; null or EMPTY map → {"id":"1"}, the
     * reference's ingest quirk, index.py:572-575), document default,
-    * uuid id, ingest timestamp, float vector cast, LSH shard routing.
-    * All row-local expressions — map-side at any scale. */
-  private def withDerived(rows: DataFrame): DataFrame = {
+    * uuid id, ingest timestamp, float vector cast, LSH shard routing,
+    * and `st`'s registered extras. All row-local expressions — map-side
+    * at any scale. */
+  private def withDerived(rows: DataFrame, st: LakeState): DataFrame = {
     var df = rows
     // NESTED metadata (reference parity: `add` accepts an arbitrary
     // dict, index.py:266): a `metadata_json` string column rides
@@ -1173,7 +1165,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // schema, so null-filling pre-evolve files is the only merge reads
     // ever need. Unregistered input columns are dropped (the documented
     // ingest contract): evolve() first, then ingest.
-    val extras = extraFieldsOf(readState()).map { f =>
+    val extras = extraFieldsOf(st).map { f =>
       (if (df.columns.contains(f.name)) col(f.name).cast(f.dataType)
        else lit(null).cast(f.dataType)).as(f.name)
     }
@@ -1212,22 +1204,20 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   def ingestStream(rows: DataFrame, checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)): org.apache.spark.sql.streaming.StreamingQuery = {
-    // both BEFORE the sidecar write below re-stamps it
-    val entrySt = readState()
-    requireRouting(entrySt)
-    requireWriteConfigMatch(entrySt)
-    // resolve the sink generation, stamp, AND pin it — all under the
-    // writer lock, failing LOUDLY on contention (a silently-skipped
-    // start racing a compact could resolve a generation that a commit
-    // + vacuum then retires before batch 0 writes the sink manifest:
-    // batch 0 would recreate the dead tree and its rows would be
+    // check the config, resolve the sink generation, stamp, AND pin it
+    // — all under the writer lock, failing LOUDLY on contention (a
+    // silently-skipped start racing a compact could resolve a generation
+    // that a commit + vacuum then retires before batch 0 writes the sink
+    // manifest: batch 0 would recreate the dead tree and its rows would be
     // invisible and vacuum-bait). Pinning = pre-creating the sink's
     // `_spark_metadata` dir here, so the maintenance guard refuses
     // from stream START, not from batch 0's commit; the sink's
     // metadata log happily adopts the pre-existing empty dir.
-    val (sinkPath, pinnedMeta) = withWriterLock("ingestStream-start") {
-      val st = readState()
-      val fs = fsOfRoot
+    val (sinkPath, sinkSt, pinnedMeta) = withWriterLock("ingestStream-start") {
+      val (fs, entries, st) = resolveState()
+      // both BEFORE the sidecar write below re-stamps it
+      requireRouting(st)
+      requireWriteConfigMatch(fs, entries, st)
       val cur = genPath(st.generation)
       val metaExisted = fs.exists(
         new org.apache.hadoop.fs.Path(cur, "_spark_metadata"))
@@ -1246,9 +1236,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           // the roll carries any in-flight reshard forward: pending
           // (dir, generation) references are absolute, so a fresh
           // append target never invalidates them
-          val rolled = LakeState(nextGen(st), liveEntries(st),
-            extraCols = st.extraCols, sidecarShards = st.sidecarShards,
-            reshard = st.reshard)
+          val rolled = st.copy(generation = nextGen(st, entries),
+            live = liveEntries(st))
           writeState(rolled)
           rolled
         } else { writeState(st); st }
@@ -1259,7 +1248,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       // must never be rolled back by our failure path below
       val created = !fs.exists(meta)
       if (created) fs.mkdirs(meta)
-      (p.toString, if (created) Some(meta) else None)
+      (p.toString, sinkSt, if (created) Some(meta) else None)
     }
     import org.apache.spark.sql.streaming.StreamingQueryListener
     // registered BEFORE start() so batch 0's progress event can't slip
@@ -1284,7 +1273,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     }
     spark.streams.addListener(stamper)
     val query =
-      try withDerived(rows)
+      try withDerived(rows, sinkSt)
         .writeStream
         .queryName(qName)
         .format("parquet")
@@ -1344,13 +1333,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * partitions goes through here. */
   private[graft] def readPartitions(values: Set[Option[String]],
       version: Option[Long] = None): DataFrame =
-    readScoped(Some(values), version).where(affectedPartPred(values))
+    readScoped(Some(values), version)
 
   private def readScoped(scope: Option[Set[Option[String]]],
       version: Option[Long] = None): DataFrame = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val st = readStateFrom(fs, entries)
+    val (fs, entries, st) = resolveState()
     requireRouting(st) // a mismatched-config session must not prune/route
     readFrom(version.fold(st)(vacuumCheckedStateAt(_, fs, entries)),
       entries, scope)
@@ -1434,19 +1421,19 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // misconstructed Scala one) would produce a target whose sidecar
     // misdescribes the faithfully-copied pq_code/packed bytes — refuse,
     // same contract as every write surface
-    val st = readState()
+    val (fs, entries, st) = resolveState()
     requireRouting(st)
     requireNoLesserConfig(st)
-    val fs = fsOfRoot
     val here = fs.makeQualified(new org.apache.hadoop.fs.Path(cfg.location))
     val there = new org.apache.hadoop.fs.Path(targetLocation)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .makeQualified(new org.apache.hadoop.fs.Path(targetLocation))
     require(here != there,
       s"cloneTo: target equals the source location $here")
-    val snap = asOf.map(readAt).getOrElse(read())
+    val snap = readFrom(asOf.fold(st)(vacuumCheckedStateAt(_, fs, entries)), entries)
     val target = Lake(spark, cfg.copy(location = targetLocation))
-    require(!target.exists() && target.readState().config.isEmpty,
+    val (tfs, tEntries, tSt) = target.resolveState()
+    require(!target.holdsData(tfs, tEntries, tSt) && tSt.config.isEmpty,
       s"cloneTo: target $targetLocation already holds a lake or data — " +
         "clone only creates, never merges; delete() the target first")
     // extras = snapshot columns beyond this config's canonical stored
@@ -1455,7 +1442,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val base = (storedFields.map(_.name) :+ partCol).map(_.toLowerCase).toSet
     val extras = snap.schema.fields.filterNot(f => base(f.name.toLowerCase))
     if (extras.nonEmpty) target.evolve(StructType(extras.toSeq))
-    target.withAppendLock("clone") { target.writeAppend(snap); () }
+    target.withAppendLock("clone") {
+      val (_, _, evolved) = target.resolveState() // the extras' commit, if any
+      target.writeAppend(tfs, evolved, snap); ()
+    }
     target
   }
 
@@ -1485,11 +1475,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     require(changes.columns.contains("change"),
       "applyChanges wants a change-feed frame (a `change` column of " +
         "insert|delete) — see changesBetween/changesSince(netted=true)")
-    requireWriteConfigMatch()
     withWriterLock("applyChanges")(applyChangesImpl(changes))
   }
 
   private def applyChangesImpl(changes: DataFrame): (Long, Long) = {
+    val (fs, entries, st0) = resolveState()
+    requireWriteConfigMatch(fs, entries, st0)
+    requireRouting(st0)
     val delta = graft.operators.Materialize.cut(changes)
     val bad = delta.select("change").distinct()
       .as[String](org.apache.spark.sql.Encoders.STRING).collect()
@@ -1538,25 +1530,28 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // (inline sidecar commit under the held writer lock, so no
     // re-entrant evolve() — but the SAME validation: a legit source's
     // evolve already vetted these names, so anything validateExtraCols
-    // refuses here marks a frame that never came from a feed)
-    val st0 = readState()
+    // refuses here marks a frame that never came from a feed); from here
+    // on the op runs over the state that commit wrote
     val known = (storedColsOf(st0) :+ partCol).map(_.toLowerCase).toSet
     val extra = insRaw.schema.fields.filterNot(f => known(f.name.toLowerCase))
-    if (extra.nonEmpty) {
-      validateExtraCols(st0, extra.toSeq, "applyChanges")
-      writeState(st0.copy(extraCols = st0.extraCols ++
-        extra.map(f => f.name -> f.dataType.catalogString)))
-      ()
-    }
-    if (!exists()) { // bootstrapping replica: the delta IS the state
-      bootstrapAppend(insRaw)
+    val st =
+      if (extra.isEmpty) st0
+      else {
+        validateExtraCols(st0, extra.toSeq, "applyChanges")
+        val evolved = st0.copy(extraCols = st0.extraCols ++
+          extra.map(f => f.name -> f.dataType.catalogString))
+        writeState(evolved)
+        evolved
+      }
+    if (!holdsData(fs, entries, st)) { // bootstrapping replica: the delta IS the state
+      bootstrapAppend(fs, st, insRaw)
       return (0L, insCount)
     }
     // project both sides to the replica's stored shape; a column this
     // replica holds that the delta lacks (replica evolved past the
     // source) null-fills, the same typed fill every read applies
-    val colsNow = storedColsNow
-    val shape = canonicalSchema.fields.map(f => f.name -> f.dataType).toMap
+    val colsNow = storedColsOf(st)
+    val shape = canonicalSchemaOf(st).fields.map(f => f.name -> f.dataType).toMap
     def proj(df: DataFrame): DataFrame = {
       val padded = (colsNow :+ partCol).filterNot(df.columns.contains)
         .foldLeft(df)((d, c) => d.withColumn(c, lit(null).cast(shape(c))))
@@ -1582,7 +1577,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // churning every partition. Only partitions where a row actually
     // enters or leaves are rewritten.
     val current = graft.operators.Materialize.cut(
-      proj(readPartitions(candidates)
+      proj(readFrom(st, entries, Some(candidates))
         .join(touched, col("id") === col("__chg_id"), "left_semi")))
     val net = graft.operators.Materialize.cut(netInsertsDeletes(ins, current))
     val r = net.agg(org.apache.spark.sql.functions.count(lit(1)), collect_set(col("id")),
@@ -1591,7 +1586,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // the netted rows' own partitions bound the rewrite: a net delete
     // carries the partition its current row was read from, a net
     // insert its routed one
-    rewriteRows("applyChanges", Right(r.getSeq[String](1).toSet),
+    rewriteRows(fs, entries, st, "applyChanges", Right(r.getSeq[String](1).toSet),
       Some(net.where(col("change") === "insert").drop("change")),
       scope = Some(r.getSeq[org.apache.spark.sql.Row](2)
         .map(x => Option(x.get(0)).map(_.toString)).toSet))
@@ -1807,9 +1802,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * so a replica diverged in k of N shards repairs at ~k/N of a
     * re-clone's cost (re-cloning 100 TB is days of copy; repairing a
     * two-shard divergence is two directory rewrites). */
-  def repairFrom(source: Lake): (Long, Long) = {
-    requireWriteConfigMatch()
+  def repairFrom(source: Lake): (Long, Long) =
     withWriterLock("repairFrom") {
+      val (fs, entries, st0) = resolveState()
+      requireWriteConfigMatch(fs, entries, st0)
       val convicted = diffStats(source).where(!col("in_sync"))
         .select(partCol).collect()
         .map(r => Option(r.get(0)).map(_.toString)).toSet
@@ -1819,9 +1815,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         // auto-evolve source extras under the held lock (no re-entrant
         // evolve(), same inline path + validation as applyChanges); the
         // rewrite commits over the state this commit wrote
-        val fs = fsOfRoot
-        val entries = listRoot(fs)
-        val st0 = readStateFrom(fs, entries)
         val known = (storedColsOf(st0) :+ partCol).map(_.toLowerCase).toSet
         val extra = truth.schema.fields
           .filterNot(f => known(f.name.toLowerCase))
@@ -1845,7 +1838,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         (convicted.size.toLong, n)
       }
     }
-  }
 
   // ------------------------------------------------ derived tables --
 
@@ -2288,9 +2280,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
 
   /** DIRECTORY-level scan roots of the current snapshot ([[formatScan]]). */
   private[graft] def scanRoots(): Seq[(String, Option[String])] = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    formatScan(entries, readStateFrom(fs, entries), None).roots
+    val (_, entries, st) = resolveState()
+    formatScan(entries, st, None).roots
   }
 
   /** The `graft` DSv2 format's view of the current (`asOf = None`) or a
@@ -2377,9 +2368,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * as generation 0. */
   def filesView(): DataFrame = {
     import spark.implicits._
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val st = readStateFrom(fs, entries)
+    val (fs, entries, st) = resolveState()
     def row(f: org.apache.hadoop.fs.FileStatus, part: Option[String],
         gen: Long) =
       (f.getPath.toString, part.orNull, gen, f.getLen, f.getModificationTime)
@@ -2456,8 +2445,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * visibility) — the layout [[seal]] refuses. Surfaced so the change
     * feed can refuse at SUBSCRIBE time with a clear error instead of
     * killing the stream on its first data-carrying trigger. */
-  private[graft] def currentGenerationStreamOwned: Boolean =
-    exists() && streamOwned(readState())
+  private[graft] def currentGenerationStreamOwned: Boolean = {
+    val (fs, entries, st) = resolveState()
+    holdsData(fs, entries, st) && streamOwned(st)
+  }
 
   /** SEAL the live set — the change-feed SYNC POINT: one sidecar commit,
     * zero data movement, after which the sealed version denotes an
@@ -2482,18 +2473,17 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * consumer window; a swept sync point fails loudly, never reads back
     * partial). Returns the sealed version number. */
   def seal(): Long = withWriterLock("seal") {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val st = readStateFrom(fs, entries)
+    val (fs, entries, st) = resolveState()
     requireRouting(st) // seal re-stamps the sidecar: never under a foreign config
-    requireWriteConfigMatch(st) // both directions — the stamp is authoritative
+    requireWriteConfigMatch(fs, entries, st) // both directions — the stamp is authoritative
     requireNoReshard(st, "seal")
     // a sealed snapshot names only manifest-governed directories: a
     // sink's uncommitted files or root-level data could not be frozen
     requireManifestGoverned("seal", st, entries)
-    if (treeHasData(fs, genPath(st.generation)))
-      writeState(LakeState(nextGen(st), liveEntries(st), extraCols = st.extraCols), sealedCommit = true)
-    else writeState(LakeState(st.generation, st.live, extraCols = st.extraCols), sealedCommit = true)
+    writeState(
+      if (!treeHasData(fs, genPath(st.generation))) st
+      else st.copy(generation = nextGen(st, entries), live = liveEntries(st)),
+      sealedCommit = true)
   }
 
   /** CHANGE FEED — every row the lake gained or lost since the sealed
@@ -2524,9 +2514,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * @return changed rows with the stored columns plus
     *         `change ∈ {insert, delete}` */
   def changesSince(version: Long, netted: Boolean = true): DataFrame = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val stNew = readStateFrom(fs, entries)
+    val (fs, entries, stNew) = resolveState()
     requireRouting(stNew)
     // a physical diff of the current state would count a sink's
     // uncommitted files
@@ -2552,9 +2540,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       s"changesBetween($fromVersion, $toVersion): from must not exceed to — " +
         "a swapped pair would return a plausible-looking INVERTED delta " +
         "(inserts reported as deletes) with no other symptom")
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val current = readStateFrom(fs, entries)
+    val (fs, entries, current) = resolveState()
     requireRouting(current)
     val stFrom = stateAt(fromVersion, fs, entries)
     requireSealedSync(fromVersion, stFrom)
@@ -2597,9 +2583,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * lengths drive its input-partition packing, dir names carry the
     * shard partition value each file's rows serve. */
   private[graft] def sealedFileStatuses(version: Long): Seq[(String, Long, String)] = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    requireRouting(readStateFrom(fs, entries))
+    val (fs, entries, current) = resolveState()
+    requireRouting(current)
     val st = stateAt(version, fs, entries)
     requireSealedSync(version, st)
     requireManifestGoverned("change stream", st, entries)
@@ -2731,17 +2716,17 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // serves its rows with the missing high hyperplane bits RE-DERIVED
     // per row (exact: planes are prefix-stable in the seeded sequence,
     // see Lsh.shardColFrom), so every read is width-uniform at the
-    // session's width. A state WIDER than the session is refused
-    // (requireStateWidth — bits cannot be un-derived). Steady-state
+    // session's width. A state WIDER than the session is refused by
+    // the require below (bits cannot be un-derived). Steady-state
     // reads take the `entryBits >= cfg.numHashes` short-circuit: zero
     // added work. The transient cost is honest and self-shrinking:
     // pending branches lose directory pruning (the filter lands
     // post-derivation) until their reshard step completes. Note this
-    // is deliberately LOOSER than requireStateWidth: a narrower state
-    // is legal here (it derives up — that is what mid-reshard pending
-    // sets and pre-reshard snapshots are), and a stale old-width
-    // instance reading a resharded lake is still refused by the
-    // wider-state require below.
+    // is deliberately LOOSER than the write-side width check
+    // ([[requireWriteConfigMatch]]): a narrower state is legal here (it
+    // derives up — that is what mid-reshard pending sets and
+    // pre-reshard snapshots are), and a stale old-width instance
+    // reading a resharded lake is still refused.
     val stateBits = stateBitsOf(st)
     require(stateBits <= cfg.numHashes,
       s"read at ${cfg.location}: this snapshot was routed into " +
@@ -2846,8 +2831,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // appends). The current generation's branch leads the union. A
     // `scope` ([[readPartitions]]) drops every entry that cannot hold a
     // scoped value BEFORE resolution, so the LISTs follow the scope;
-    // the sink and legacy branches stay whole (the caller's predicate
-    // prunes them).
+    // the sink and legacy branches stay whole, and the scope's
+    // predicate ([[affectedPartPred]]) on top of the union cuts every
+    // branch to exactly the scoped rows.
     val keep = scope.map(inScope(st, _))
     val entries =
       (if (curPresent && !curSinkOwned) liveEntries(st)
@@ -2889,7 +2875,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val got = df.columns.toSet
     val want = storedColsOf(st).toSet + partCol
     require(got == want, s"schema mismatch: got $got want $want")
-    df
+    scope.fold(df)(v => df.where(affectedPartPred(v)))
   }
 
   private def distCol(q: Seq[Double]): Column = cfg.metric match {
@@ -3204,13 +3190,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     require(cfg.packSignBits,
       "topKCompressed needs a materialized packed column: set packSignBits = true")
     val qWord = V.signPackOf(q)
-    val coarse = read()
+    val base = read() // both stages score one snapshot
+    val coarse = base
       .select(col("id"),
         bit_count(col("packed").bitwiseXOR(lit(qWord))).cast("int").as("hamming"))
       .orderBy(col("hamming"), col("id"))
       .limit(coarseK)
       .select("id")
-    read()
+    base
       .join(broadcast(coarse), Seq("id"))
       .withColumn("dist", V.round6z(distCol(q)))
       .orderBy(col("dist"), col("id"))
@@ -3262,20 +3249,22 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       probes: Option[Seq[Int]]): DataFrame = {
     val model = cfg.pqCodebooks.getOrElse(throw new IllegalArgumentException(
       s"$op needs a materialized pq_code column: set pqCodebooks = Some(model)"))
-    pqFingerprintMatch(readState()) // stored codes must be this model's codes
+    val (_, entries, st) = resolveState()
+    requireRouting(st)
+    pqFingerprintMatch(st) // stored codes must be this model's codes
     val adc = (0 until model.m).map { mi =>
       element_at(V.vecLit(model.lutFor(q, mi)),
         (shiftright(col("pq_code"), 8 * mi).bitwiseAND(lit(255)) + 1).cast("int"))
     }.reduce(_ + _)
-    // the rerank never reads outside the routed shards either
-    def slice(): DataFrame =
-      probes.fold(read())(ps => readPartitions(shardValues(ps)))
-    val coarse = slice()
+    // both stages score one snapshot, and the rerank never reads outside
+    // the routed shards either
+    val slice = readFrom(st, entries, probes.map(shardValues))
+    val coarse = slice
       .select(col("id"), adc.as("adc"))
       .orderBy(col("adc"), col("id"))
       .limit(coarseK)
       .select("id")
-    slice()
+    slice
       .join(broadcast(coarse), Seq("id"))
       .withColumn("dist", V.round6z(distCol(q)))
       .orderBy(col("dist"), col("id"))
@@ -3394,9 +3383,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * denominator. Pure metadata (the resolved live set, the filesView
     * posture); never opens a file. */
   private def liveDataBytes(): Long = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val st = readStateFrom(fs, entries)
+    val (fs, entries, st) = resolveState()
     val live = resolveFiles(fs, st, liveEntries(st), "liveDataBytes")
       .map(_._2.map(_.getLen).sum).sum
     // legacy root-level data: a directory's own FileStatus length is
@@ -3702,19 +3689,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     *        sampler's row balancing.
     * @return number of data files after compaction */
   def compact(targetBytes: Long = 128L * 1024L * 1024L,
-      clusterBy: Seq[Column] = Nil): Long = {
-    if (!exists()) return 0L
-    requireWriteConfigMatch() // a rewrite under a lesser config would strip columns
-    withWriterLock("compact") {
-      val fs = fsOfRoot
-      val entries = listRoot(fs)
-      val st = readStateFrom(fs, entries)
+      clusterBy: Seq[Column] = Nil): Long =
+    lockedRewrite("compact", 0L) { (fs, entries, st) =>
       // cheap refusals before the footer reads below (rewritePartitions
       // repeats the reshard and manifest checks for its other callers);
       // compactIncremental leaves the manifest check to the rewrite, so a
       // tick with nothing dirty stays a no-op on a sink-owned lake
       requireNoReshard(st, "compact")
-      requireRouting(st)
       requireManifestGoverned("compact", st, entries)
       val files = liveShardFiles(fs, st)
       if (files.isEmpty) 0L
@@ -3723,7 +3704,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         footerRowsOf(files.values), "compact",
         files.map { case (v, fl) => v -> slicesOf(fl, targetBytes) }, clusterBy)
     }
-  }
 
   /** INCREMENTAL compact: rewrite only the shards whose file count
     * exceeds what their bytes justify under `targetBytes` (with
@@ -3735,27 +3715,20 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * (new generation + one sidecar create). Returns the number of
     * shards rewritten. */
   def compactIncremental(targetBytes: Long = 128L * 1024L * 1024L,
-      clusterBy: Seq[Column] = Nil, maxFilesPerShard: Int = 4): Long = {
-    if (!exists()) return 0L
-    requireWriteConfigMatch() // a rewrite under a lesser config would strip columns
-    withWriterLock("compactIncremental") {
-      val fs = fsOfRoot
-      val entries = listRoot(fs)
-      val st = readStateFrom(fs, entries)
+      clusterBy: Seq[Column] = Nil, maxFilesPerShard: Int = 4): Long =
+    lockedRewrite("compactIncremental", 0L) { (fs, entries, st) =>
       requireNoReshard(st, "compactIncremental")
-      requireRouting(st)
       // a shard's files and bytes across every live copy of it
       val dirty = liveShardFiles(fs, st).filter { case (_, fl) =>
         fl.size > math.max(maxFilesPerShard.toLong, slicesOf(fl, targetBytes)) }
-      if (dirty.isEmpty) return 0L
-      rewritePartitions(fs, entries, st, dirty.keySet,
-        readFrom(st, entries, Some(dirty.keySet)).where(affectedPartPred(dirty.keySet))
-          .select((storedColsOf(st).map(col) :+ col(partCol)): _*),
-        footerRowsOf(dirty.values), "compactIncremental",
-        dirty.map { case (v, fl) => v -> slicesOf(fl, targetBytes) }, clusterBy)
+      if (dirty.nonEmpty)
+        rewritePartitions(fs, entries, st, dirty.keySet,
+          readFrom(st, entries, Some(dirty.keySet))
+            .select((storedColsOf(st).map(col) :+ col(partCol)): _*),
+          footerRowsOf(dirty.values), "compactIncremental",
+          dirty.map { case (v, fl) => v -> slicesOf(fl, targetBytes) }, clusterBy)
       dirty.size.toLong
     }
-  }
 
   /** Files a shard holding `fl` compacts into at ~`targetBytes` each:
     * ceil(bytes / target), at least one. */
@@ -3848,25 +3821,21 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         "narrower width and cloneTo it instead")
     require(dirsPerCommit > 0 && maxDirs >= 0,
       s"dirsPerCommit must be positive and maxDirs non-negative")
-    val entrySt = readState()
-    requireRouting(entrySt) // both modes: the CALLER's width matches the sidecar
+    requireRouting(readState()) // both modes: the CALLER's width matches the sidecar
     if (newNumHashes == cfg.numHashes) { // resume (no-op when complete)
       reshardSteps(maxDirs, dirsPerCommit)
       return this
     }
-    requireWriteConfigMatch(entrySt)
     val target = new Lake(spark, cfg.copy(numHashes = newNumHashes))
     withReshardLock {
-      val fs = fsOfRoot
-      val entries = listRoot(fs)
-      val st = readStateFrom(fs, entries)
+      val (fs, entries, st) = resolveState()
+      requireWriteConfigMatch(fs, entries, st)
       requireNoReshard(st, "reshard(begin)") // defensive; requireRouting
       // already refuses a session at neither endpoint of an in-flight one
       requireManifestGoverned("reshard", st, entries)
       val pending = liveEntries(st)
       val hadSkip = fs.exists(skipPath)
-      writeState(LakeState(nextGen(st), pending,
-        extraCols = st.extraCols,
+      writeState(st.copy(generation = nextGen(st, entries), live = pending,
         reshard = Some(Lake.ReshardState(
           cfg.numHashes, newNumHashes, pending, hadSkip))))
       if (hadSkip) { fs.delete(skipPath, true); () }
@@ -3917,7 +3886,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     var done = false
     while (!done) {
       withReshardLock {
-        val st = readState()
+        val (fs, entries, st) = resolveState()
         st.reshard match {
           case None => done = true // complete (or never begun: no-op)
           case Some(r) =>
@@ -3933,7 +3902,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
             } else if (budget <= 0) done = true
             else {
               val batch = r.pending.take(math.min(budget, dirsPerCommit))
-              reshardStep(st, r, batch)
+              reshardStep(fs, entries, st, r, batch)
               budget -= batch.size
             }
         }
@@ -3950,11 +3919,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * retirement. Same staged-publish discipline as every rewrite: a
     * failure before the sidecar create leaves the live state
     * untouched and the stranded tree for vacuum. */
-  private def reshardStep(st: LakeState, r: Lake.ReshardState,
-      batch: Seq[(String, Long)]): Unit = {
-    val fs = fsOfRoot
+  private def reshardStep(fs: org.apache.hadoop.fs.FileSystem,
+      entries: Seq[org.apache.hadoop.fs.FileStatus], st: LakeState,
+      r: Lake.ReshardState, batch: Seq[(String, Long)]): Unit = {
     val sources = resolveFiles(fs, st, batch, "reshard")
-    val newGen = nextGen(st)
+    val newGen = nextGen(st, entries)
     // refinement scope: every produced value must preserve its source's
     // low bits — anything else is a routing bug, refused before the commit
     val mask = (1 << r.fromBits) - 1
@@ -4008,11 +3977,31 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * ENFORCED by [[withWriterLock]]: a concurrent mutation throws
     * instead of silently losing the race.
     */
-  def deleteWhere(pred: Column): Long = {
-    if (!exists()) return 0L
-    requireWriteConfigMatch() // a rewrite under a lesser config would strip columns
-    withWriterLock("deleteWhere")(rewriteRows("deleteWhere", Left(pred))._1)
-  }
+  def deleteWhere(pred: Column): Long =
+    lockedRewrite("deleteWhere", 0L) { (fs, entries, st) =>
+      rewriteRows(fs, entries, st, "deleteWhere", Left(pred))._1 }
+
+  /** The prelude of the rewrites that have nothing to do on an empty
+    * lake ([[deleteWhere]], [[deleteIds]], [[expire]], [[compact]],
+    * [[compactIncremental]]): on a missing location `none`, and nothing
+    * is created, not even the lock (one HEAD); else the writer lock
+    * taken as `op` and ONE resolution under it — `none` on an empty
+    * lake, else `body` over that resolution once its write and routing
+    * config check (a rewrite under a lesser config would strip columns,
+    * and its commit would stamp a foreign routing config). */
+  private def lockedRewrite[T](op: String, none: T)(
+      body: (org.apache.hadoop.fs.FileSystem,
+        Seq[org.apache.hadoop.fs.FileStatus], LakeState) => T): T =
+    if (!rootExists) none
+    else withWriterLock(op) {
+      val (fs, entries, st) = resolveState()
+      if (!holdsData(fs, entries, st)) none
+      else {
+        requireWriteConfigMatch(fs, entries, st)
+        requireRouting(st)
+        body(fs, entries, st)
+      }
+    }
 
   /** RETENTION — delete every row whose `timestamp` is strictly older
     * than `olderThan`, at the cheapest PROVABLE cost tier:
@@ -4043,26 +4032,23 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * retention at their own pace. A lake without a zone map is still
     * correct — everything rides tier 2. Returns
     * (rowsRetiredWholesale, rowsDeletedByRewrite). */
-  def expire(olderThan: java.time.Instant): (Long, Long) = {
-    if (!exists()) return (0L, 0L)
-    requireWriteConfigMatch()
-    withWriterLock("expire")(expireImpl(olderThan))
-  }
+  def expire(olderThan: java.time.Instant): (Long, Long) =
+    lockedRewrite("expire", (0L, 0L))(expireImpl(_, _, _, olderThan))
 
-  private def expireImpl(olderThan: java.time.Instant): (Long, Long) = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val st = readStateFrom(fs, entries)
+  private def expireImpl(fs: org.apache.hadoop.fs.FileSystem,
+      entries: Seq[org.apache.hadoop.fs.FileStatus], st0: LakeState,
+      olderThan: java.time.Instant): (Long, Long) = {
     // same maintenance posture as compact/vacuum: data the manifest
     // does not govern cannot be retired
-    requireManifestGoverned("expire", st, entries)
+    requireManifestGoverned("expire", st0, entries)
     val horizon = java.sql.Timestamp.from(olderThan)
-    requireNoReshard(st, "expire")
+    requireNoReshard(st0, "expire")
     // tier 1: only MANIFEST entries are wholesale candidates (the
     // current generation is live by listing rule, not by entry)
     val candidates =
-      if (st.isSealed) st.live else st.live.filter(_._2 != st.generation)
+      if (st0.isSealed) st0.live else st0.live.filter(_._2 != st0.generation)
     var retiredRows = 0L
+    var st = st0 // tier 2 runs over the state tier 1 committed, if it did
     if (candidates.nonEmpty) {
       // per-file certificates from the zone map: (fully-expired, rows).
       // Absent/old/unreadable maps yield no certificates — never wrong,
@@ -4080,7 +4066,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         }.getOrElse(Map.empty)
         catch { case scala.util.control.NonFatal(_) => Map.empty }
       if (certs.nonEmpty) {
-        val retired = resolveFiles(fs, st, candidates, "expire")
+        val retired = resolveFiles(fs, st0, candidates, "expire")
           .filter { case (_, files) =>
             files.nonEmpty && files.forall(f =>
               certs.get(zoneKey(f.getPath.toString)).exists(_._1))
@@ -4088,22 +4074,24 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         if (retired.nonEmpty) {
           retiredRows = retired.flatMap(_._2)
             .map(f => certs(zoneKey(f.getPath.toString))._2).sum
-          writeState(st.copy(live = st.live.filterNot(retired.map(_._1).toSet)))
+          st = st0.copy(live = st0.live.filterNot(retired.map(_._1).toSet))
+          writeState(st)
           ()
         }
       }
     }
     // tier 2: whatever rows remain expired (straddlers, current-gen,
     // uncertified files) — discovery reads the post-retirement live set
-    (retiredRows,
-      rewriteRows("deleteWhere", Left(col("timestamp") < lit(horizon)))._1)
+    (retiredRows, rewriteRows(fs, entries, st, "deleteWhere",
+      Left(col("timestamp") < lit(horizon)))._1)
   }
 
   /** THE row-level rewrite under every keyed write: [[deleteWhere]],
     * [[deleteIds]], [[expire]]'s tier 2, [[upsert]], SQL DML
     * ([[applyRowDelta]]) and [[applyChanges]] are thin callers that keep
-    * their own lock, refusals and return shape. One sequence over one
-    * resolved lake state:
+    * their own lock, refusals and return shape. One sequence over the
+    * root listing `entries` and state `st` the caller resolved under its
+    * writer lock:
     *
     *  1. ONE BATCH AGGREGATE over the caller-materialized `inserts`:
     *     rows, distinct ids, insert partitions. Duplicate ids refuse
@@ -4131,12 +4119,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     *     the commit.
     *
     * Returns (rows removed, rows inserted). */
-  private def rewriteRows(tag: String, remove: Either[Column, Set[String]],
+  private def rewriteRows(fs: org.apache.hadoop.fs.FileSystem,
+      entries: Seq[org.apache.hadoop.fs.FileStatus], st: LakeState,
+      tag: String, remove: Either[Column, Set[String]],
       inserts: Option[DataFrame] = None,
       scope: Option[Set[Option[String]]] = None): (Long, Long) = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val st = readStateFrom(fs, entries)
     val boot = inserts.isDefined && !holdsData(fs, entries, st)
     // ids and partition values aggregate inside structs, so a null id
     // counts as one distinct value and a null partition value (the
@@ -4156,12 +4143,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           .map(x => Option(x.get(0)).map(_.toString)).toSet)
     }
     if (boot) {
-      if (insN > 0L) bootstrapAppend(inserts.get)
+      if (insN > 0L) bootstrapAppend(fs, st, inserts.get)
       return (0L, insN)
     }
     requireRouting(st)
-    def scoped(c: Set[Option[String]]): DataFrame =
-      readFrom(st, entries, Some(c)).where(affectedPartPred(c))
     // (affected partitions, a frame over them with rows flagged
     // `__doomed`, its rows, its doomed rows)
     val (affected, flagged, rows, doomed) = remove match {
@@ -4170,7 +4155,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           .select(partCol).distinct().collect()
           .map(r => Option(r.get(0)).map(_.toString)).toSet ++ insParts
         if (hit.isEmpty) return (0L, 0L)
-        val slice = scoped(hit).withColumn("__doomed", coalesce(pred, lit(false)))
+        val slice = readFrom(st, entries, Some(hit))
+          .withColumn("__doomed", coalesce(pred, lit(false)))
         val r = slice.agg(org.apache.spark.sql.functions.count(lit(1)),
           count_if(col("__doomed"))).head()
         (hit, slice, r.getLong(0), r.getLong(1))
@@ -4181,7 +4167,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           .map(_ ++ insParts)
         val discovery = probe match {
           case Some(c) if c.isEmpty => return (0L, 0L) // no stored shard holds an id
-          case Some(c) => scoped(c)
+          case Some(c) => readFrom(st, entries, Some(c))
           case None => readFrom(st, entries)
         }
         // the id set ships to each executor once, as a broadcast
@@ -4211,9 +4197,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   /** The empty-lake bootstrap of a keyed write: the inserts ARE the
     * lake — a plain append, with the skip index and zone map refreshed
     * as after any append. */
-  private def bootstrapAppend(batch: DataFrame): Unit = {
-    val out = writeAppend(batch)
-    refreshSkipIndex(out.state, out.shards); refreshZoneMap(out.files)
+  private def bootstrapAppend(fs: org.apache.hadoop.fs.FileSystem,
+      st: LakeState, batch: DataFrame): Unit = {
+    val out = writeAppend(fs, st, batch)
+    refreshSkipIndex(st, out.shards); refreshZoneMap(out.files)
   }
 
   /** Upsert by caller-supplied id: rows whose id already exists replace
@@ -4226,13 +4213,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   def upsert(rows: DataFrame): Long = {
     require(rows.columns.contains("id"),
       "upsert needs caller-supplied ids (an id column) to define row identity")
-    requireWriteConfigMatch()
-    withWriterLock("upsert")(upsertImpl(rows))
+    withWriterLock("upsert") {
+      val (fs, entries, st) = resolveState()
+      requireWriteConfigMatch(fs, entries, st)
+      rewriteRows(fs, entries, st, "upsert", Right(Set.empty),
+        Some(graft.operators.Materialize.cut(withDerived(rows, st))))._1
+    }
   }
-
-  private def upsertImpl(rows: DataFrame): Long =
-    rewriteRows("upsert", Right(Set.empty),
-      Some(graft.operators.Materialize.cut(withDerived(rows))))._1
 
   /** ROW-LEVEL DML APPLY — the commit half of the SQL `UPDATE` /
     * `MERGE INTO` / subquery-`DELETE` surface
@@ -4249,17 +4236,17 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * and staged-publish commit as [[upsert]]/[[deleteWhere]]. Returns
     * (rows removed or replaced, rows landed). */
   private[graft] def applyRowDelta(deletes: DataFrame,
-      inserts: DataFrame): (Long, Long) = {
-    requireWriteConfigMatch()
+      inserts: DataFrame): (Long, Long) =
     withWriterLock("rowLevelDml")(applyRowDeltaImpl(deletes, inserts))
-  }
 
   private def applyRowDeltaImpl(deletes: DataFrame,
       inserts: DataFrame): (Long, Long) = {
+    val (fs, entries, st) = resolveState()
+    requireWriteConfigMatch(fs, entries, st)
     // a pure DELETE stages no row columns — there is nothing to derive
     val batch =
       if (!inserts.columns.exists(_.equalsIgnoreCase("vector"))) None
-      else Some(graft.operators.Materialize.cut(withDerived(inserts)))
+      else Some(graft.operators.Materialize.cut(withDerived(inserts, st)))
     val delIds = deletes
       .select(col(deletes.columns.head).cast(StringType).as("id"))
       .where(col("id").isNotNull).distinct().collect()
@@ -4267,7 +4254,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // duplicate TARGET ids in one statement (MERGE inserting two rows
     // under one explicit id, or two updates re-keyed onto one id) have
     // no row order to pick a winner by: refused, as upsert refuses
-    rewriteRows("rowLevelDml", Right(delIds), batch)
+    rewriteRows(fs, entries, st, "rowLevelDml", Right(delIds), batch)
   }
 
   /** Membership predicate over decoded partition values. An LSH lake's
@@ -4296,13 +4283,16 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private def liveShardFiles(fs: org.apache.hadoop.fs.FileSystem,
       st: LakeState,
       only: Option[Set[Option[String]]] = None)
-      : Map[Option[String], Seq[org.apache.hadoop.fs.FileStatus]] = {
-    val entries = liveEntries(st).filter { case (d, _) =>
-      only.forall(_.contains(dirValue(d))) }
-    resolveFiles(fs, st, entries, "shard files")
-      .groupBy { case ((d, _), _) => dirValue(d) }
+      : Map[Option[String], Seq[org.apache.hadoop.fs.FileStatus]] =
+    byShard(resolveFiles(fs, st, liveEntries(st).filter { case (d, _) =>
+      only.forall(_.contains(dirValue(d))) }, "shard files"))
+
+  /** Resolved entries' files grouped by decoded partition value. */
+  private def byShard(
+      resolved: Seq[((String, Long), Seq[org.apache.hadoop.fs.FileStatus])])
+      : Map[Option[String], Seq[org.apache.hadoop.fs.FileStatus]] =
+    resolved.groupBy { case ((d, _), _) => dirValue(d) }
       .map { case (v, xs) => v -> xs.flatMap(_._2) }
-  }
 
   /** A shard's skip-index fingerprint: its live files' paths and sizes. */
   private def fingerprintOf(fl: Seq[org.apache.hadoop.fs.FileStatus]): String =
@@ -4357,16 +4347,16 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * or the next maintenance op that touches it. Either way a stale
     * entry can only cost reads, never correctness. */
   def buildSkipIndex(fpp: Double = 0.01): Long = {
-    if (!exists()) return 0L
+    if (!rootExists) return 0L
     withWriterLock("buildSkipIndex") {
-      val fs = fsOfRoot
-      val entries = listRoot(fs)
-      val st = readStateFrom(fs, entries)
+      val (fs, entries, st) = resolveState()
+      if (!holdsData(fs, entries, st)) return 0L
+      requireRouting(st)
       requireManifestGoverned("buildSkipIndex", st, entries, streamOk = true)
       requireNoReshard(st, "buildSkipIndex")
       val files = liveShardFiles(fs, st)
       if (files.isEmpty) { fs.delete(skipPath, true); return 0L }
-      writeSkipIndex(skipRows(read(), files, fpp))
+      writeSkipIndex(skipRows(readFrom(st, entries), files, fpp))
       files.size.toLong
     }
   }
@@ -4435,13 +4425,17 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       .where(!affected.toSeq.map(v => col("part") <=> lit(v.orNull))
         .reduce(_ || _))
     // list ONLY the affected directories: kept rows reuse their stored
-    // fingerprints, so the refresh's LIST cost tracks the rewrite's
-    val affectedLive = liveShardFiles(fs, st, only = Some(affected))
+    // fingerprints, so the refresh's LIST cost tracks the rewrite's.
+    // The sketches read exactly those resolved files: `st` is the state
+    // just committed, so no second resolution is needed
+    val resolved = resolveFiles(fs, st, liveEntries(st).filter { case (d, _) =>
+      affected.contains(dirValue(d)) }, "skip refresh")
     val refreshed =
-      if (affectedLive.isEmpty) keep // every affected shard fully emptied
+      if (resolved.isEmpty) keep // every affected shard fully emptied
       else keep.unionByName(skipRows(
-        readPartitions(affectedLive.keySet),
-        affectedLive, fpp = 0.01))
+        readFileSlice(resolved.flatMap { case ((d, g), fl) => fl.map((d, g, _)) },
+          extraFieldsOf(st)),
+        byShard(resolved), fpp = 0.01))
     writeSkipIndex(refreshed)
   } catch { case scala.util.control.NonFatal(_) => () } // stale = safe
 
@@ -4581,14 +4575,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   def buildZoneMap(fields: Seq[String] = Nil): Long = {
     require(fields.distinct.size == fields.size && fields.forall(_.nonEmpty),
       s"buildZoneMap fields must be distinct non-empty paths; got $fields")
-    if (!exists()) return 0L
+    if (!rootExists) return 0L
     withWriterLock("buildZoneMap") {
-      val fs = fsOfRoot
-      val entries = listRoot(fs)
-      val st = readStateFrom(fs, entries)
+      val (fs, entries, st) = resolveState()
+      if (!holdsData(fs, entries, st)) return 0L
+      requireRouting(st)
       requireManifestGoverned("buildZoneMap", st, entries, streamOk = true)
       requireNoReshard(st, "buildZoneMap")
-      val rows = zoneRows(read(), fields).cache()
+      val rows = zoneRows(readFrom(st, entries), fields).cache()
       try {
         val n = rows.count()
         if (n == 0L) { fs.delete(zonePath, true); return 0L }
@@ -4756,18 +4750,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private def zonePrunedBase(minCol: String, maxCol: String,
       lo: Column, hi: Column, scope: Option[Set[Option[String]]],
       op: String, requireFp: Option[String] = None): DataFrame = {
-    val fs = fsOfRoot
-    def plain(): DataFrame = scope.fold(read())(readPartitions(_))
-    if (!exists() || !fs.exists(zonePath)) return plain()
-    val entries = listRoot(fs)
-    val st = readStateFrom(fs, entries)
+    val (fs, entries, st) = resolveState()
     requireRouting(st)
     // a file slice carries its directory's shard value as written, so
     // reshard-pending entries (narrower width, re-derived only by the
     // plain read) take the plain read until the reshard completes
-    if (rootLevelDataFrom(entries).nonEmpty || streamOwned(st) ||
+    if (!holdsData(fs, entries, st) || !fs.exists(zonePath) ||
+        rootLevelDataFrom(entries).nonEmpty || streamOwned(st) ||
         st.reshard.isDefined)
-      return plain()
+      return readFrom(st, entries, scope)
     val keep = scope.map(inScope(st, _))
     val dirs = liveEntries(st).filter(e => keep.forall(_(e)))
     val owners = fileOwners(fs, st, dirs, op)
@@ -4960,15 +4951,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // lookup takes no lock, so resolving twice would let a concurrent
     // shard-moving upsert slip between them and the pruned scan miss a
     // row that was live at both instants
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    val st = readStateFrom(fs, entries)
+    val (fs, entries, st) = resolveState()
     requireRouting(st)
     val pred = col("id").isin(ids: _*)
     skipCandidates(ids, st, entries) match {
       case Some(c) if c.isEmpty => readFrom(st, entries).where(lit(false))
       case Some(c) =>
-        readFrom(st, entries, Some(c)).where(affectedPartPred(c) && pred)
+        readFrom(st, entries, Some(c)).where(pred)
       case None => readFrom(st, entries).where(pred)
     }
   }
@@ -4977,11 +4966,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * affected-shard discovery pruned by the skip index — with a fresh
     * index, a targeted delete reads only the shards that might hold the
     * ids instead of probing the whole lake. Returns rows deleted. */
-  def deleteIds(ids: Seq[String]): Long = {
-    if (ids.isEmpty || !exists()) return 0L
-    requireWriteConfigMatch() // a rewrite under a lesser config would strip columns
-    withWriterLock("deleteIds")(rewriteRows("deleteWhere", Right(ids.toSet))._1)
-  }
+  def deleteIds(ids: Seq[String]): Long =
+    if (ids.isEmpty) 0L
+    else lockedRewrite("deleteIds", 0L) { (fs, entries, st) =>
+      rewriteRows(fs, entries, st, "deleteWhere", Right(ids.toSet))._1 }
 
   /** The commit half of every partition rewrite — [[rewriteRows]],
     * [[compact]], [[compactIncremental]] and [[repairFrom]], each
@@ -5006,7 +4994,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       clusterBy: Seq[Column] = Nil): Long = {
     requireNoReshard(st, tag)
     requireManifestGoverned(tag, st, entries)
-    val newGen = nextGen(st)
+    val newGen = nextGen(st, entries)
     val produced = writeGeneration(newGen, content, expectedRows, tag,
       affected.contains, slices, clusterBy)
     // COMMIT: unaffected dirs keep their existing generation (now named
@@ -5211,8 +5199,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
 
   private def sweepDead(fs: org.apache.hadoop.fs.FileSystem,
       retainMs: Long): Long = {
-    val root = new org.apache.hadoop.fs.Path(cfg.location)
-    val st = readState()
+    // one root listing (taken under the lock, which only this sweep
+    // holds) serves the state, the commit clock and both sweeps below
+    val (_, entries, st) = resolveState()
     val liveGens = (st.live.map(_._2) :+ st.generation).toSet
     val now = System.currentTimeMillis()
     // The commit clock for the retention window: every retained sidecar
@@ -5222,7 +5211,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // even with no window; vacuum is operator-invoked, so the
     // seal-proportional cost sits off every hot path).
     lazy val commits: Seq[(Long, Long, Set[Long])] =
-      metaVersions(fs).sortBy(_._1).map { case (v, p) =>
+      metaVersionsFrom(entries).sortBy(_._1).map { case (v, p) =>
         // a torn version committed nothing: it references no generation
         val gens =
           try {
@@ -5258,7 +5247,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       }
     }
     var removed = 0L
-    fs.listStatus(root).foreach { s =>
+    entries.foreach { s =>
       s.getPath.getName match {
         case genDirRe(g) if s.isDirectory && !liveGens.contains(g.toLong)
             && !diedWithinWindow(g.toLong) =>
@@ -5272,7 +5261,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // skip-index scratch dir is swept here too — a crash between its
     // write and its rename strands it, and nothing else removes it.
     val deadRe = """_dead\.(\d+)""".r
-    fs.listStatus(root).foreach { s =>
+    entries.foreach { s =>
       s.getPath.getName match {
         case deadRe(g) if s.isFile && !fs.exists(genPath(g.toLong)) =>
           fs.delete(s.getPath, false); ()
@@ -5425,16 +5414,17 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       clusterBy: Seq[Column] = Nil,
       ttlMs: Long = -1L,
       targetShardBytes: Long = Lake.defaultTargetShardBytes): Lake.MaintenanceReport = {
-    if (!exists()) return Lake.MaintenanceReport(0L, false, false, 0L)
-    // ONE sidecar read serves the tick's own telemetry (reshard state,
-    // shard skew) — each sub-op below still re-reads under its own
-    // lock, which is the serialization that matters. An in-flight
-    // reshard owns the structure: the rewrite steps (compact/expire/
-    // index builds) would be refused anyway, so skip them quietly,
-    // keep the always-safe vacuum + recalibration, and surface the
-    // pending count — the cron-driven maintain() tick stays a useful
-    // health probe mid-reshard instead of a throw
-    val tickState = readState()
+    // ONE sidecar read serves the emptiness check and the tick's own
+    // telemetry (reshard state, shard skew) — each sub-op below still
+    // re-reads under its own lock, which is the serialization that
+    // matters. An in-flight reshard owns the structure: the rewrite
+    // steps (compact/expire/index builds) would be refused anyway, so
+    // skip them quietly, keep the always-safe vacuum + recalibration,
+    // and surface the pending count — the cron-driven maintain() tick
+    // stays a useful health probe mid-reshard instead of a throw
+    val (fs, entries, tickState) = resolveState()
+    if (!holdsData(fs, entries, tickState))
+      return Lake.MaintenanceReport(0L, false, false, 0L)
     val reshardInFlight = tickState.reshard.map(r =>
       (1L << r.fromBits, 1L << r.toBits, r.pending.size.toLong))
     // shard-health telemetry reads the PRE-maintenance state
@@ -5445,7 +5435,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // compaction + vacuum elsewhere) leaves the skew unknown instead of
     // failing the tick before its maintenance runs
     val skew =
-      try shardSkewStats(liveShardFiles(fsOfRoot, tickState))
+      try shardSkewStats(liveShardFiles(fs, tickState))
       catch { case scala.util.control.NonFatal(_) => None }
     // retention FIRST: rows about to expire must not be paid for again
     // by the compaction rewrite below (and a wholesale retirement may
@@ -5509,15 +5499,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   }
 
   def validate(targetShardBytes: Long = Lake.defaultTargetShardBytes): DataFrame = {
-    val df = read()
-    // ONE sidecar read serves every driver-side audit input below
-    // (skew, reshard state, drift, the stored-column set) — on an
-    // object store each readState is a remote GET, and an audit should
-    // not pay five of them
-    val auditState = readState()
+    // ONE state read serves the audited rows and every driver-side audit
+    // input below (skew, reshard state, drift, the stored-column set,
+    // the extras) — one snapshot, and one remote GET on an object store
+    val (fs, entries, auditState) = resolveState()
+    requireRouting(auditState)
+    val df = readFrom(auditState, entries)
     // one resolution of the live files serves skew, drift and skip-index
     // staleness
-    val files = liveShardFiles(fsOfRoot, auditState)
+    val files = liveShardFiles(fs, auditState)
     val skew = shardSkewStats(files)
     val pendingDirs = auditState.reshard.map(_.pending.size.toLong).getOrElse(0L)
     // FOOTER-DRIFT audit (round 11): the O(live files) footer sweep
@@ -5567,7 +5557,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // schema-evolution drift visibility: rows all-null across every
     // registered extra column predate the evolution (or lost their
     // values); -1 = no extras registered
-    val preEvolve: Column = currentExtraFields match {
+    val preEvolve: Column = extraFieldsOf(auditState) match {
       case Nil => unconfigured
       case ex => violations(ex.map(f => col(f.name).isNull).reduce(_ && _))
     }
@@ -5633,9 +5623,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * reader cannot infer a schema from markers alone, so every data
     * path must take the bootstrap branch. */
   def exists(): Boolean = {
-    val fs = fsOfRoot
-    val entries = listRoot(fs)
-    holdsData(fs, entries, readStateFrom(fs, entries))
+    val (fs, entries, st) = resolveState()
+    holdsData(fs, entries, st)
   }
 
   /** [[exists]] over a state the caller already resolved. */
@@ -5749,14 +5738,29 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     LakeState(1L, Nil) // unreachable
   }
 
+  /** One resolution of the lake: its filesystem, one root listing and
+    * the state decoded from it. An op resolves once — under its lock or
+    * gate when it takes one — and hands the triple down, so every check,
+    * read, generation number and commit of the op sees one snapshot. */
+  private def resolveState(): (org.apache.hadoop.fs.FileSystem,
+      Seq[org.apache.hadoop.fs.FileStatus], LakeState) = {
+    val fs = fsOfRoot
+    val entries = listRoot(fs)
+    (fs, entries, readStateFrom(fs, entries))
+  }
+
   /** Current on-disk state: generation (the append target — its whole
     * tree is live) plus the manifest of live directories in OLDER
     * generations as (escaped-dir-name, generation) pairs. A lake with
-    * no sidecar yet is generation 1 with an empty manifest. */
-  private def readState(): LakeState = {
-    val fs = fsOfRoot
-    readStateFrom(fs, listRoot(fs))
-  }
+    * no sidecar yet is generation 1 with an empty manifest. Only for
+    * entry points that need the state alone. */
+  private def readState(): LakeState = resolveState()._3
+
+  /** Whether the root exists: one HEAD, no state read — the probe a
+    * no-op maintenance op makes before its lock, so that on a missing
+    * location it creates nothing. */
+  private def rootExists: Boolean =
+    fsOfRoot.exists(new org.apache.hadoop.fs.Path(cfg.location))
 
   /** Best-effort `last_update` stamp for the streaming path. The
     * read-modify-write runs UNDER the writer lock: an unlocked stamp
@@ -5813,14 +5817,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // listings ([[ControlFiles.recordFiles]]). Every rewrite publishes
     // into a FRESH generation, so an entry carried forward reuses its
     // recorded list and only entries NEW to the manifest are listed,
-    // once, here on the write path. States constructed without the
-    // carried map (most callers build fresh LakeStates) recover it from
-    // the newest committed sidecar. CURRENT-generation entries are
-    // excluded: that tree is live-by-rule (appends land there without a
-    // commit), so a recorded list would go stale the moment one lands.
+    // once, here on the write path. Every caller commits a state derived
+    // from the one it resolved, carrying that state's recorded map, so
+    // the commit never reads the sidecar again. CURRENT-generation
+    // entries are excluded: that tree is live-by-rule (appends land
+    // there without a commit), so a recorded list would go stale the
+    // moment one lands.
     val files = ControlFiles.recordFiles(
       st.live.filter(_._2 != st.generation), st.liveFiles,
-      readStateFrom(fs, rootEntries).liveFiles) { case (d, g) =>
+      Map.empty[(String, Long), Seq[LiveFile]]) { case (d, g) =>
       dataFilesIn(fs, new org.apache.hadoop.fs.Path(genPath(g), d))
     }
     val json = ControlFiles.encode(ControlFiles.LakeSidecar.of(
@@ -5880,6 +5885,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       try { fs.delete(tmp, false); () }
       catch { case scala.util.control.NonFatal(_) => () }
     }
+    sealedCache.put(v, sealedCommit) // the rotation never re-reads our own
     // sweep far-superseded versions; keep a few for in-flight readers.
     // SEALED versions are exempt: they are the change-feed's sync
     // points, and consumers hold them across arbitrarily many commits —
@@ -5945,23 +5951,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       }
     }
 
-  /** Per-OPERATION routing-width check against a state already in
-    * hand — zero extra I/O: a Lake instance whose lake was RESHARDED
-    * underneath it by another session after construction would prune
-    * the wrong directory on reads or append mis-routed rows. Writes
-    * check inside [[requireWriteConfigMatch]] and again in
-    * [[writeAppend]] under the append gate (closing the check-then-act
-    * window against a racing reshard transition). */
-  private def requireStateWidth(st: LakeState, op: String): Unit =
-    if (cfg.partitionKey.isEmpty)
-      st.sidecarShards.filter(_ > 0).foreach(ns => require(
-        ns == lsh.numShards,
-        s"$op at ${cfg.location}: the lake is routed into $ns LSH " +
-          s"shards but this session's config routes into " +
-          s"${lsh.numShards} — the lake was likely resharded after " +
-          "this Lake instance was constructed; build a fresh Lake at " +
-          "the sidecar's width"))
-
   /** Structure-changing maintenance is mutually exclusive with an
     * in-flight incremental reshard: compaction/DML/retention group
     * directories BY VALUE, and mid-reshard the same value names both
@@ -6021,8 +6010,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     *    the full config — the documented one-time migration.
     *
     * READS stay open under any config — `pq_code`/`packed` are plain
-    * columns to a plain read. */
-  private def requireWriteConfigMatch(st: LakeState = readState()): Unit = {
+    * columns to a plain read. `entries` and `st` are the op's own
+    * resolution; the check reads nothing more than a current-tree LIST
+    * when an upgrade must ask whether the lake holds data. */
+  private def requireWriteConfigMatch(fs: org.apache.hadoop.fs.FileSystem,
+      entries: Seq[org.apache.hadoop.fs.FileStatus], st: LakeState): Unit = {
     requireNoLesserConfig(st)
     st.config.foreach { c =>
       // routing width, per WRITE (not just per instance): a stale
@@ -6046,7 +6038,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       // the PUT-semantics lock notes: serialized first writes (the
       // universal case — someone creates the lake, then loaders attach)
       // are fully defended.
-      if (upgrades.nonEmpty && exists())
+      if (upgrades.nonEmpty && holdsData(fs, entries, st))
         throw new IllegalArgumentException(
           s"lake at ${cfg.location} holds rows written WITHOUT " +
             s"${upgrades.mkString("/")}, but this session declares " +
@@ -6238,10 +6230,10 @@ object Lake {
       .take(6).map(b => f"${b & 0xff}%02x").mkString
 
   /** What one staged append published: the partition values it landed
-    * files in (skip-index refresh scope), the published data-file paths
-    * themselves (zone-map refresh scope) and the state it stamped. */
+    * files in (skip-index refresh scope) and the published data-file
+    * paths themselves (zone-map refresh scope). */
   private[graft] final case class Appended(
-      shards: Set[Option[String]], files: Seq[String], state: LakeState)
+      shards: Set[Option[String]], files: Seq[String])
 
   /** Per-append staging subtree root: each batch append writes its
     * parquet under `_staging/<uuid>/` with its own committer scratch,

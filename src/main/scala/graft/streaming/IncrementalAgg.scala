@@ -51,8 +51,9 @@ import graft.ControlFiles
   * other buckets keep their old owner). Three properties fall out:
   *
   *  - '''churn-proportional''': per-batch cost tracks |A| ≤ changed
-  *    keys, never total state size — the EngineBench probe shows flat
-  *    batch cost at 10× the key count;
+  *    keys, never total state size — `IncrementalAggSpec` pins that a
+  *    batch writes only the buckets it touches (BENCHNOTES.md records
+  *    flat batch cost at 10× the key count);
   *  - '''exactly-once''': the pointer records the batch id. A replayed
   *    batch (foreachBatch is at-least-once) whose id is already
   *    committed SKIPS; a crash before the pointer write leaves an

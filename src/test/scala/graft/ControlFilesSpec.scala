@@ -298,4 +298,43 @@ class ControlFilesSpec extends SparkSpec {
     assert(lists.count(_.endsWith("/lake")) === 1, s"LISTs: $lists")
     assert(opens.count(_.matches(""".*_meta\.\d+\.json""")) === 2, s"GETs: $opens")
   }
+
+  test("every write, index build and zone-pruned read opens the sidecar once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countopenfs.impl", classOf[CountingOpenFs].getName)
+    val loc = s"countopenfs://${tmp("opcount")}/lake"
+    val lake = Lake(spark, LakeConfig(loc, dim = 3, numHashes = 2))
+    lake.ingest(rows(8, "a"))
+    import scala.jdk.CollectionConverters._
+    /** `_meta.<v>.json` GETs while `op` runs. */
+    def sidecarGets(op: => Any): Int = {
+      CountingOpenFs.opened.clear()
+      op
+      CountingOpenFs.opened.asScala.count(_.matches(""".*_meta\.\d+\.json"""))
+    }
+    val ingest = sidecarGets(lake.ingest(rows(8, "b")))
+    val deleteIds = sidecarGets(assert(lake.deleteIds(Seq("a-0", "b-1")) === 2L))
+    val upsert = sidecarGets(assert(lake.upsert(rows(2, "a")) === 1L))
+    lake.ingest(rows(8, "c")) // leave more than one file in some shard
+    val compactInc = sidecarGets(
+      assert(lake.compactIncremental(maxFilesPerShard = 1) > 0L))
+    // a small netted delta: a-2 leaves, a-3 comes back with a new document
+    val delta = lake.read().where(col("id").isin("a-2", "a-3"))
+      .withColumn("change", org.apache.spark.sql.functions.when(
+        col("id") === "a-2", lit("delete")).otherwise(lit("insert")))
+      .withColumn("document", org.apache.spark.sql.functions.when(
+        col("change") === "insert", lit("changed")).otherwise(col("document")))
+      .localCheckpoint()
+    val applyChanges = sidecarGets(assert(lake.applyChanges(delta) === ((2L, 1L))))
+    val buildSkip = sidecarGets(assert(lake.buildSkipIndex() > 0L))
+    val upsertSkip = sidecarGets(assert(lake.upsert(rows(2, "b")) === 1L))
+    lake.buildZoneMap()
+    val timeRange = sidecarGets(assert(lake.readTimeRange(java.time.Instant.EPOCH,
+      java.time.Instant.now().plusSeconds(3600)).count() === 23L))
+    val counts = Seq("ingest" -> ingest, "deleteIds" -> deleteIds,
+      "upsert" -> upsert, "compactIncremental" -> compactInc,
+      "applyChanges" -> applyChanges, "buildSkipIndex" -> buildSkip,
+      "upsert after buildSkipIndex" -> upsertSkip, "readTimeRange" -> timeRange)
+    assert(counts.forall(_._2 == 1), s"sidecar GETs per op: $counts")
+  }
 }

@@ -85,6 +85,32 @@ if ! awk '
   exit 1
 fi
 
+# one state read per operation: a Lake op resolves the root listing and
+# the sidecar once (resolveState, under its lock or gate when it takes
+# one) and hands that state down to every check, read and commit. So in
+# Lake.scala only the entry points that hold no state yet call the lake's
+# bare readState() or exists(), and no function resolves twice. Functions
+# are tracked at class member indentation, as above.
+if ! awk '
+  BEGIN {
+    n = split("exists lastUpdate canonicalSchema currentExtraFields " \
+      "bootstrap stampQuietly reshard reshardStatus maintain " \
+      "zoneNeedsRebuild currentGenDir liveDirPaths", a, " ")
+    for (i = 1; i <= n; i++) entry[a[i]] = 1 }
+  /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
+  match($0, /^  ([a-z]+(\[[a-z]+\])? )*def [A-Za-z0-9_]+/) {
+    fn = substr($0, RSTART, RLENGTH); sub(/.*def /, "", fn); resolves = 0 }
+  /(^|[^.A-Za-z0-9_])(readState|exists)\(\)/ && !/def (readState|exists)\(/ &&
+      !(fn in entry) {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  /(^|[^.A-Za-z0-9_])resolveState\(\)/ && !/def resolveState\(/ &&
+      ++resolves > 1 {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  END { exit bad }' src/main/scala/graft/Lake.scala; then
+  echo "ci: a Lake op reads its state more than once (hand the resolved state down)" >&2
+  exit 1
+fi
+
 # benchmark arithmetic (stats.py) unit tests
 python3 perfbench/test_stats.py
 
