@@ -175,7 +175,11 @@ private[graft] object ControlFiles {
 
   /** `<lake>/_meta.<v>.json`, the lake's commit point. Keys in writer
     * order; `extra_cols` entries are `name<U+0001>catalog-ddl`;
-    * `reshard_from`/`reshard_to` are shard counts. */
+    * `reshard_from`/`reshard_to` are shard counts. `gen_recorded` says
+    * `live` and `files` name the current generation's directories and
+    * files too, so its unnamed files are not part of the lake; without
+    * it (sidecars written before appends committed here) the current
+    * generation's tree is live by listing. */
   final case class LakeSidecar(
       lastUpdate: Option[String] = None,
       @JsonDeserialize(contentAs = classOf[JLong]) dim: Option[Long] = None,
@@ -195,7 +199,8 @@ private[graft] object ControlFiles {
       files: Option[Seq[FileEntry]] = None,
       generation: Long = 1L,
       live: Seq[LiveDir] = Nil,
-      genHasData: Option[Boolean] = None) {
+      genHasData: Option[Boolean] = None,
+      genRecorded: Option[Boolean] = None) {
 
     def toState: LakeState = LakeState(
       generation, live.map(e => e.d -> e.g), genHasData,
@@ -211,6 +216,7 @@ private[graft] object ControlFiles {
       lastUpdate = lastUpdate,
       liveFiles = files.getOrElse(Nil).flatMap(e =>
         for (g <- e.fg; fl <- e.liveFiles) yield (e.fd -> g) -> fl).toMap,
+      genRecorded = genRecorded.contains(true),
       config = Some(SidecarConfig(dim, metric, lshSeed, pqFingerprint,
         packSignBits.contains(true), partitionKey, partitionKeyType)))
   }
@@ -240,8 +246,10 @@ private[graft] object ControlFiles {
         files = Some(files.map { case ((d, g), fl) => FileEntry.of(d, Some(g), fl) })
           .filter(_.nonEmpty),
         generation = st.generation,
-        live = st.live.map { case (d, g) => LiveDir(d, g) },
-        genHasData = Some(genHasData))
+        live = (if (st.genRecorded) st.live
+          else st.live.filter(_._2 != st.generation)).map { case (d, g) => LiveDir(d, g) },
+        genHasData = Some(genHasData),
+        genRecorded = Some(true).filter(_ => st.genRecorded))
   }
 
   /** `<derived>/_derived.<v>.json`, a derived feature table's commit

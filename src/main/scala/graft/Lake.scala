@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -158,6 +158,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // later lesser-config write would then pass [[requireWriteConfigMatch]]
     // and strip the columns for real.
     val st = readState()
+    requireRouting(st) // the re-stamp records this session's dim and seed
     requireNoLesserConfig(st)
     writeState(st); ()
   }
@@ -169,6 +170,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       // a mismatched one it would silently flip the recorded
       // compression flags (same hazard as any write)
       val (fs, entries, st) = resolveState()
+      requireRouting(st) // ... and its dim and LSH seed
       requireWriteConfigMatch(fs, entries, st)
       validateExtraCols(st, add.fields.toSeq, "evolve")
       writeState(st.copy(extraCols =
@@ -233,7 +235,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val (fs, entries, st) = resolveState()
     requireWriteConfigMatch(fs, entries, st)
     val out = writeAppend(fs, st, withDerived(rows, st))
-    refreshSkipIndex(st, out.shards)
+    refreshSkipIndex(out.state, out.shards)
     refreshZoneMap(out.files)
   }
 
@@ -356,7 +358,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
             try { fs.delete(p, false); () }
             catch { case scala.util.control.NonFatal(_) => () }
           case _ =>
-            sweepSinkFiles(fs, st.generation, s"$idHex-$batchHex-$a")
+            sweepSinkFiles(fs, st, s"$idHex-$batchHex-$a")
             try { fs.delete(p, false); () }
             catch { case scala.util.control.NonFatal(_) => () }
         }
@@ -441,7 +443,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       try {
         val out = writeAppend(fs, st, withDerived(rows, st),
           fileTag = Some(s"$idHex-$batchHex-$attempt"))
-        refreshSkipIndex(st, out.shards)
+        refreshSkipIndex(out.state, out.shards)
         refreshZoneMap(out.files)
         // COMMIT = the atomic ledger version create (recording THIS
         // attempt as the winner). On IOException the version state
@@ -473,10 +475,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           catch { case e: java.io.IOException =>
             sinkVersion(fs, idHex, batchId) match {
               case Some(Some(w)) if w != attempt =>
-                sweepSinkFiles(fs, st.generation, s"$idHex-$batchHex-$attempt")
+                sweepSinkFiles(fs, out.state, s"$idHex-$batchHex-$attempt")
                 false
               case None if sinkLedger(fs, idHex).exists(_ > batchId) =>
-                sweepSinkFiles(fs, st.generation, s"$idHex-$batchHex-$attempt")
+                sweepSinkFiles(fs, out.state, s"$idHex-$batchHex-$attempt")
                 false
               case _ => throw e
             }
@@ -564,24 +566,26 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  /** Delete every live-tree file a torn attempt of this sink batch
-    * published (identified by the `sink-<tag>-` name prefix). Runs only
-    * on the torn-replay path; cost is one current-generation tree LIST.
-    * The torn files all sit in the CURRENT generation `current`:
-    * appends only land there, and the pend marker has blocked every
-    * maintenance op (nothing can have moved them) since the torn
-    * attempt. */
+  /** Un-name, then delete, the files a torn attempt of this sink batch
+    * committed (identified by the `sink-<tag>-` name prefix): one
+    * append commit ([[commitAppend]]) drops them from the current
+    * generation `st` records, then each is deleted. Runs only on the
+    * torn-replay and lost-race paths. The torn files all sit in the
+    * CURRENT generation: appends only land there, and the pend marker has
+    * blocked every maintenance op (nothing can have moved them) since the
+    * torn attempt. Files of the attempt that no sidecar named are
+    * invisible already; [[vacuum]] sweeps them. */
   private def sweepSinkFiles(fs: org.apache.hadoop.fs.FileSystem,
-      current: Long, tag: String): Unit = {
-    val gen = genPath(current)
-    if (!fs.exists(gen)) return
-    fs.listStatus(gen)
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      .foreach { d =>
-        fs.listStatus(d.getPath)
-          .filter(s => s.isFile && s.getPath.getName.startsWith(s"sink-$tag-"))
-          .foreach(s => fs.delete(s.getPath, false))
-      }
+      st: LakeState, tag: String): Unit = {
+    def tagged(f: LiveFile): Boolean = f.name.startsWith(s"sink-$tag-")
+    val g = st.generation
+    val named = resolveFiles(fs, st, liveEntries(st).filter(_._2 == g), "sink sweep")
+      .flatMap { case ((d, _), fl) =>
+        fl.filter(s => tagged(LiveFile.of(s))).map(_.getPath) }
+    if (named.isEmpty) return
+    commitAppend(fs, st)(editGenFiles(fs, _)(_.map { case (d, fl) =>
+      d -> fl.filterNot(tagged) }))
+    named.foreach(p => fs.delete(p, false))
   }
 
   /** Fail-fast EXCLUSIVE gate for the structure-mutating ops
@@ -764,12 +768,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     *     marker and throws, leaving nothing behind.
     *
     * Appends are safe to run concurrently by construction: each writes
-    * fresh uniquely-named files into the current generation's live tree
-    * via its own staging dir ([[writeAppend]]), touches no existing
-    * file, and its sidecar stamp republishes the state it resolved
-    * UNDER this gate — maintenance cannot interleave, so a stamp can
-    * never republish a stale manifest (the lost-update hazard that kept
-    * ingest serialized before). A crashed appender strands its marker;
+    * fresh uniquely-named files into the current generation's tree
+    * ([[writeAppend]]), touches no existing file, and commits them in a
+    * sidecar version created only if absent; an append that loses a
+    * version to a rival re-reads the newest state and merges its files
+    * into it ([[commitAppend]]). Maintenance cannot interleave, so no
+    * commit can republish a stale manifest (the lost-update hazard that
+    * kept ingest serialized before). A crashed appender strands its marker;
     * maintenance then fails loudly until [[repair]] (or
     * `vacuum(force)`) clears it — the same posture as the exclusive
     * lock. */
@@ -831,17 +836,20 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       (s.isDirectory && s.getPath.getName.contains("=")) ||
         (s.isFile && s.getPath.getName.endsWith(".parquet")))
 
-  /** Every live (escaped-dir-name, generation) pair: the manifest plus
-    * the current generation's own partition directories (appends land
-    * there between commits, so the whole current tree is live by rule).
-    * One dir name can appear under several generations — a partition
-    * rewritten long ago and appended to since has copies in both. */
+  /** Every live (escaped-dir-name, generation) pair: the manifest,
+    * which names the current generation's directories too when the state
+    * records them ([[LakeState.genRecorded]]), or else the manifest plus
+    * the current generation's own partition directories (a state written
+    * before appends committed through the sidecar: its whole current
+    * tree is live by rule). One dir name can appear under several
+    * generations — a partition rewritten long ago and appended to since
+    * has copies in both. */
   private def liveEntries(st: LakeState): Seq[(String, Long)] = {
     // a SEALED state is manifest-only ([[seal]]): its generation tree
     // was empty at commit, and anything there now (post-seal appends
     // before their unsealing commit, or a crashed append's orphans) is
     // not part of the sealed snapshot
-    if (st.isSealed) return st.live
+    if (st.isSealed || st.genRecorded) return st.live
     val fs = fsOfRoot
     val cur = genPath(st.generation)
     // one LIST, no existence probe first: a missing tree has no
@@ -894,13 +902,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   /** The data files the sidecar's FILE-level manifest records for `st`,
     * per (escaped-dir, generation) entry, as QUALIFIED statuses — the
     * exact values a listing returns, so a served path and a listed one
-    * compare equal. Pure: no I/O. Never serves a current-generation
-    * entry: that tree is live by rule (appends land there without a
-    * commit), so only a listing is truthful for it. */
+    * compare equal. Pure: no I/O. Serves a current-generation entry only
+    * when the state records that generation ([[LakeState.genRecorded]]);
+    * otherwise that tree is live by rule and only a listing is truthful
+    * for it. */
   private def recordedFiles(st: LakeState)
       : Map[(String, Long), Seq[org.apache.hadoop.fs.FileStatus]] = {
     val fs = fsOfRoot
-    st.liveFiles.collect { case (e @ (d, g), fl) if g != st.generation =>
+    st.liveFiles.collect { case (e @ (d, g), fl)
+        if g != st.generation || st.genRecorded =>
       val dir = fs.makeQualified(new org.apache.hadoop.fs.Path(genPath(g), d))
       e -> fl.map(f =>
         graft.sources.GraftManifestFileIndex.status(dir, f.name, f.len, f.mod))
@@ -946,36 +956,26 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       case _ => None
     })).max + 1
 
-  /** Append-write an already-derived frame (shared by [[ingest]] and
-    * [[upsert]]'s bootstrap path so the two can never diverge). Appends
-    * go into the CURRENT generation's tree — new files in live
-    * directories, invisible to a concurrent reader's already-planned
-    * scan, visible to the next; no commit needed beyond the
-    * `last_update` stamp.
-    *
-    * Write path: stage under `_staging/<uuid>/` (each append gets its
-    * OWN Hadoop committer scratch — concurrent jobs appending to one
-    * directory share `_temporary/0` and clobber each other's in-flight
-    * task files at cleanup), then MOVE the finished part-files into the
-    * live tree. Filenames embed the write job's uuid, so moves from
-    * concurrent appends never collide; a crash mid-move leaves some
-    * files visible and the staging remainder as scratch ([[vacuum]]
-    * sweeps `_staging`) — the same partial-visibility contract as any
-    * non-atomic append, with zero committed rows lost. On object
-    * stores the move is copy+delete per file, the identical cost the
-    * file committer itself pays there. Returns the partition values
-    * this batch landed files in (the skip-index refresh scope) and the
-    * published file paths themselves (the zone-map refresh scope).
-    * Caller holds the shared OR exclusive gate and resolved `st` under
-    * it (and checked its write config against it), so the generation
-    * pointer cannot move between the state read and the move, and the
-    * closing stamp republishes that same state: no maintenance commit
-    * can be concurrently replacing it.
+  /** Append-write an already-derived frame (shared by [[ingest]], the
+    * sink and [[upsert]]'s bootstrap path so they can never diverge).
+    * The batch's files are written once, at their final names, into the
+    * CURRENT generation's tree ([[LakeWriter]]); the append then COMMITS
+    * with one sidecar version that names them ([[commitAppend]]). Until
+    * that version exists they are invisible to every read, and a crash
+    * before it leaves them for [[vacuum]] to sweep — an append is never
+    * half-visible. The write stage hash-partitions on the partition
+    * column into min(shards, cores) tasks: each shard still gets exactly
+    * one file, and the stage uses the cores. Returns the partition values
+    * this batch landed files in (the skip-index refresh scope), the
+    * written file paths (the zone-map refresh scope) and the committed
+    * state. Caller holds the shared OR exclusive gate and resolved `st`
+    * under it (and checked its write config against it), so maintenance
+    * cannot move the generation pointer before the commit.
     *
     * `fileTag` (the streaming-sink path, [[ingestExactlyOnce]])
-    * prefixes every published filename with `sink-<tag>-` so a torn
-    * batch's files are IDENTIFIABLE by name on replay — the sweep that
-    * makes the sink's replay idempotent. Plain appends stay untagged. */
+    * prefixes every written filename with `sink-<tag>-` so a torn
+    * batch's files are IDENTIFIABLE by name on replay
+    * ([[sweepSinkFiles]]). Plain appends stay untagged. */
   private def writeAppend(fs: org.apache.hadoop.fs.FileSystem, st: LakeState,
       derived: DataFrame, fileTag: Option[String] = None): Lake.Appended = {
     requireRouting(st) // never append rows routed under foreign hyperplanes
@@ -988,48 +988,51 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       s"refusing batch ingest at ${cfg.location}: the current generation " +
         "is a streaming sink (its _spark_metadata manifest would not " +
         "name the appended files, hiding them from every read)")
-    val staging = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(cfg.location, Lake.stagingDirName),
-      java.util.UUID.randomUUID().toString)
-    derived
-      // cluster rows by partition value before the write: each task then
-      // writes whole shard files instead of every task touching every
-      // shard directory (the small-files explosion at scale)
-      .repartition(col(partCol))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", cfg.codec) // reference hard-codes gzip (index.py:308); snappy default scans faster
-      .partitionBy(partCol)
-      .parquet(staging.toString)
     val gen = genPath(st.generation)
-    val stagedDirs = fs.listStatus(staging).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-    val moved = Seq.newBuilder[String]
-    stagedDirs.foreach { d =>
-      val tgt = new org.apache.hadoop.fs.Path(gen, d.getPath.getName)
-      fs.mkdirs(tgt)
-      dataFilesIn(fs, d.getPath).foreach { f =>
-        val dstName = fileTag match {
-          case Some(t) => s"sink-$t-${f.getPath.getName}"
-          case None    => f.getPath.getName
-        }
-        val dst = new org.apache.hadoop.fs.Path(tgt, dstName)
-        if (!fs.rename(f.getPath, dst))
-          throw new java.io.IOException(
-            s"append publish failed: could not move ${f.getPath} to $dst")
-        moved += dst.toString
-      }
-    }
-    fs.delete(staging, true)
-    // drop the _staging parent too once no sibling append is staging —
-    // best-effort (delete(recursive=false) refuses a concurrently
-    // repopulated dir), so a racing append can never lose its scratch
-    try {
-      if (fs.listStatus(staging.getParent).isEmpty)
-        fs.delete(staging.getParent, false)
-    } catch { case scala.util.control.NonFatal(_) => () }
-    writeState(st)
-    Lake.Appended(stagedDirs.map(d => dirValue(d.getPath.getName)).toSet,
-      moved.result())
+    val written = LakeWriter.write(byPartition(derived), gen, Some(partCol),
+      cfg.codec, fileTag.fold("")(t => s"sink-$t-"))
+    val byDir = written.groupBy(_.dir).map { case (d, ws) => d -> ws.map(_.file) }
+    // adding a file the base already names is a no-op: a retried commit
+    // may re-apply this to a version that already holds the batch
+    val committed = commitAppend(fs, st)(editGenFiles(fs, _)(cur =>
+      byDir.foldLeft(cur) { case (m, (d, fl)) =>
+        val had = m.getOrElse(d, Nil)
+        m.updated(d, had ++ fl.filterNot(f => had.exists(_.name == f.name)))
+      }))
+    Lake.Appended(byDir.keySet.map(dirValue),
+      written.map(w => new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(gen, w.dir), w.file.name).toString),
+      committed)
+  }
+
+  /** `rows` hash-partitioned on the partition column into min(shards,
+    * cores) tasks — the write shape of an append and of a one-file-per-
+    * partition rewrite: every partition value lands in exactly one task,
+    * so it gets exactly one file, and the write stage runs on all the
+    * cores (an unnumbered repartition lets adaptive execution coalesce a
+    * small batch into one task that writes every shard in series). */
+  private def byPartition(rows: DataFrame): DataFrame = {
+    val cores = spark.sparkContext.defaultParallelism
+    rows.repartition(math.max(1,
+      if (cfg.partitionKey.isDefined) cores else math.min(lsh.numShards, cores)),
+      col(partCol))
+  }
+
+  /** `base` with its current generation's files (per directory) passed
+    * through `f`, recording that generation. A base that does not record
+    * it yet (a sidecar written before appends committed here) first
+    * takes what that tree holds, by listing it once. */
+  private def editGenFiles(fs: org.apache.hadoop.fs.FileSystem, base: LakeState)(
+      f: Map[String, Seq[LiveFile]] => Map[String, Seq[LiveFile]]): LakeState = {
+    val g = base.generation
+    val next = f(resolveFiles(fs, base, liveEntries(base).filter(_._2 == g), "append")
+      .map { case ((d, _), fl) => d -> fl.map(LiveFile.of) }.toMap)
+      .filter(_._2.nonEmpty)
+    base.copy(
+      live = base.live.filter(_._2 != g) ++ next.keys.toSeq.sorted.map(_ -> g),
+      liveFiles = base.liveFiles.filter(_._1._2 != g) ++
+        next.map { case (d, fl) => (d, g) -> fl },
+      genRecorded = true, isSealed = false)
   }
 
   /** The ONE derived-column block, shared by batch and streaming ingest
@@ -1237,10 +1240,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           // (dir, generation) references are absolute, so a fresh
           // append target never invalidates them
           val rolled = st.copy(generation = nextGen(st, entries),
-            live = liveEntries(st))
+            live = liveEntries(st), genRecorded = false)
           writeState(rolled)
           rolled
-        } else { writeState(st); st }
+        } else {
+          // the sink's own manifest, not the sidecar, names what its
+          // generation holds
+          val sink = st.copy(genRecorded = false)
+          writeState(sink); sink
+        }
       val p = genPath(sinkSt.generation)
       val meta = new org.apache.hadoop.fs.Path(p, "_spark_metadata")
       // remember whether THIS call created the pin: a pre-existing
@@ -1469,7 +1477,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * feed to the replica. The caller owns VERSION ALIGNMENT: applying
     * a delta whose from-version is not the replica's current state is
     * answered garbage-for-garbage ([[syncFrom]] is the aligned
-    * convenience). Same rewrite machinery, locks, and staged-publish
+    * convenience). Same rewrite machinery, locks, and sidecar
     * commit as [[upsert]]. Returns (deleted, inserted). */
   def applyChanges(changes: DataFrame): (Long, Long) = {
     require(changes.columns.contains("change"),
@@ -1794,7 +1802,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * the replica was mutated out of band ([[syncFrom]]/[[follow]]
     * stay the cheap steady-state at O(churn); repair is O(diverged
     * partitions) after a metadata-light audit). Same rewrite
-    * machinery, locks, and staged-publish commit as [[upsert]].
+    * machinery, locks, and sidecar commit as [[upsert]].
     *
     * 100 TB posture: the audit is the end-to-end storage-partitioned
     * join — zero exchanges, two aggregated rows per shard on the
@@ -2240,25 +2248,22 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           .otherwise(col(partCol)))
   }
 
-  /** Stage one derived generation tree — same clustering exchange and
-    * codec as the lake's own writes; invisible until the sidecar
-    * commit names it. Overwrite, for the same reason rewritePartitions
-    * overwrites: a crashed prior attempt strands an UNCOMMITTED tree
-    * under the same next-generation name, and the retry must converge
-    * over it, not refuse. */
+  /** Write one derived generation tree — same clustering exchange,
+    * writer ([[LakeWriter]]) and codec as the lake's own writes;
+    * invisible until the sidecar commit names it. The tree is cleared
+    * first: a crashed prior attempt strands an UNCOMMITTED tree under
+    * the same next-generation name, and the retry must converge over it,
+    * not refuse. */
   private def writeDerivedGen(location: String, gen: Long,
-      rows: DataFrame): Unit =
-    rows.repartition(col(partCol))
-      .write.mode(SaveMode.Overwrite)
-      // STATIC overwrite pinned per-write: under a session's
-      // partitionOverwriteMode=dynamic, only the shards present in
-      // `rows` would clear — a crashed prior attempt's stranded shard
-      // dirs would survive under the same gen name and be ADOPTED by
-      // the manifest listing below as committed data
-      .option("partitionOverwriteMode", "static")
-      .option("compression", cfg.codec)
-      .partitionBy(partCol)
-      .parquet(s"$location/gen-$gen")
+      rows: DataFrame): Unit = {
+    // clear the WHOLE tree first: a crashed prior attempt's stranded
+    // shard dirs must not survive under the same gen name and be
+    // ADOPTED by the manifest listing below as committed data
+    val dir = new org.apache.hadoop.fs.Path(s"$location/gen-$gen")
+    DerivedTable.fsOf(spark, location).delete(dir, true)
+    LakeWriter.write(byPartition(rows), dir, Some(partCol), cfg.codec)
+    ()
+  }
 
   private def listDerivedDirs(location: String, gen: Long): Seq[String] = {
     val fs = DerivedTable.fsOf(spark, location)
@@ -2481,8 +2486,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // sink's uncommitted files or root-level data could not be frozen
     requireManifestGoverned("seal", st, entries)
     writeState(
-      if (!treeHasData(fs, genPath(st.generation))) st
-      else st.copy(generation = nextGen(st, entries), live = liveEntries(st)),
+      if (!holdsCurrentData(fs, st)) st
+      else st.copy(generation = nextGen(st, entries), live = liveEntries(st),
+        genRecorded = true),
       sealedCommit = true)
   }
 
@@ -2836,8 +2842,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // branch to exactly the scoped rows.
     val keep = scope.map(inScope(st, _))
     val entries =
-      (if (curPresent && !curSinkOwned) liveEntries(st)
-      else st.live.filter(_._2 != st.generation))
+      (if (curSinkOwned || !(curPresent || st.genRecorded))
+        st.live.filter(_._2 != st.generation)
+      else liveEntries(st))
         .filter(e => keep.forall(_(e)))
     val genBranches = resolveFiles(fs, st, entries, "read")
       .groupBy { case (e, _) => (e._2, reshardPending.contains(e)) }
@@ -3322,7 +3329,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       "calibrateRecall needs LSH routing (user-keyed lakes have no probe ladder)")
     require(k >= 1 && sampleQueries >= 1, "calibrateRecall: k, sampleQueries >= 1")
     import spark.implicits._
-    val base = read().select(col("id"), col("vector"), col(partCol))
+    // one state read serves the sample, the ladder's stamp and its volume
+    val (fs, entries, st) = resolveState()
+    requireRouting(st)
+    val base = readFrom(st, entries).select(col("id"), col("vector"), col(partCol))
     val sampled = base
       .select(col("id"), V.asDouble(col("vector")).as("qv"))
       .orderBy(abs(xxhash64(col("id"))), col("id"))
@@ -3361,29 +3371,29 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     }
     // persist like the IVF/PQ models: tmp + rename swap of a one-file
     // sidecar dir, fingerprinted against the routing config
-    val fs = fsOfRoot
     val tmp = new org.apache.hadoop.fs.Path(cfg.location,
       s"_recall__tmp_${java.util.UUID.randomUUID()}")
     fs.mkdirs(tmp)
     ControlFiles.write(fs, new org.apache.hadoop.fs.Path(tmp, "calib.json"),
       ControlFiles.RecallCalib(Some(cfg.dim.toLong), Some(cfg.numHashes.toLong),
         Some(cfg.seed), Some(cfg.metric), Some(k), Some(sampled.size),
-        Some(lastUpdate().getOrElse("")),
+        Some(st.lastUpdate.getOrElse("")),
         // the live data volume at calibration time — the cheap drift
         // denominator [[recallCalibStale]] compares against (metadata
-        // listing only, no scan)
-        Some(liveDataBytes()), recalls), overwrite = false)
+        // only, no scan)
+        Some(liveDataBytes(fs, entries, st)), recalls), overwrite = false)
     fs.delete(recallPath, true)
     fs.rename(tmp, recallPath)
     recallCalibCache = Some(recalls)
     recalls
   }
 
-  /** Total bytes of live data files — the calibration-drift
-    * denominator. Pure metadata (the resolved live set, the filesView
-    * posture); never opens a file. */
-  private def liveDataBytes(): Long = {
-    val (fs, entries, st) = resolveState()
+  /** Total bytes of live data files of a resolved state — the
+    * calibration-drift denominator. Pure metadata (the resolved live set,
+    * the filesView posture: the recorded lengths, a LIST only for an
+    * unrecorded directory); never opens a file. */
+  private def liveDataBytes(fs: org.apache.hadoop.fs.FileSystem,
+      entries: Seq[org.apache.hadoop.fs.FileStatus], st: LakeState): Long = {
     val live = resolveFiles(fs, st, liveEntries(st), "liveDataBytes")
       .map(_._2.map(_.getLen).sum).sum
     // legacy root-level data: a directory's own FileStatus length is
@@ -3426,12 +3436,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
      // torn artifact: stale, so the next maintain() re-calibrates over it
      catch { case _: ControlFiles.Unparseable => return Some(true) })
       .map { c =>
+        // one state read serves the token and the volume
+        val (fs, entries, st) = resolveState()
         val stamp = c.stamp.getOrElse("")
-        if (stamp.nonEmpty && lastUpdate().contains(stamp)) false
+        if (stamp.nonEmpty && st.lastUpdate.contains(stamp)) false
         else c.bytes match {
           case None => true // pre-volume artifact + moved token: recalibrate once
           case Some(b0) =>
-            math.abs(liveDataBytes() - b0).toDouble >
+            math.abs(liveDataBytes(fs, entries, st) - b0).toDouble >
               drift * math.max(b0, 1L).toDouble
         }
       }
@@ -3836,7 +3848,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       val pending = liveEntries(st)
       val hadSkip = fs.exists(skipPath)
       writeState(st.copy(generation = nextGen(st, entries), live = pending,
-        reshard = Some(Lake.ReshardState(
+        genRecorded = true, reshard = Some(Lake.ReshardState(
           cfg.numHashes, newNumHashes, pending, hadSkip))))
       if (hadSkip) { fs.delete(skipPath, true); () }
     }
@@ -3916,7 +3928,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * generation) sources at the old width, widen each row's shard by
     * the refinement bits, write the split directories into a fresh
     * generation, verify count and refinement scope, commit the batch's
-    * retirement. Same staged-publish discipline as every rewrite: a
+    * retirement. Same sidecar-commit discipline as every rewrite: a
     * failure before the sidecar create leaves the live state
     * untouched and the stranded tree for vacuum. */
   private def reshardStep(fs: org.apache.hadoop.fs.FileSystem,
@@ -3948,12 +3960,12 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // file visibility.) The produced files ride the commit as recorded.
     val committed = LakeState(
       st.generation,
-      st.live.filter(_._2 != st.generation).filterNot(batchSet) ++
-        produced.map(_._1 -> newGen),
+      st.live.filterNot(batchSet) ++ produced.map(_._1 -> newGen),
       extraCols = st.extraCols, sidecarShards = st.sidecarShards,
       reshard = Some(r.copy(pending = r.pending.filterNot(batchSet))),
       liveFiles = st.liveFiles ++ produced.map { case (d, fl) =>
-        (d, newGen) -> fl.map(Lake.LiveFile.of) })
+        (d, newGen) -> fl.map(Lake.LiveFile.of) },
+      genRecorded = st.genRecorded)
     writeState(committed)
     // auxiliary refresh: the skip index is absent mid-reshard (dropped
     // at transition); the FILE-keyed zone map refreshes for the
@@ -4200,7 +4212,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private def bootstrapAppend(fs: org.apache.hadoop.fs.FileSystem,
       st: LakeState, batch: DataFrame): Unit = {
     val out = writeAppend(fs, st, batch)
-    refreshSkipIndex(st, out.shards); refreshZoneMap(out.files)
+    refreshSkipIndex(out.state, out.shards); refreshZoneMap(out.files)
   }
 
   /** Upsert by caller-supplied id: rows whose id already exists replace
@@ -4233,7 +4245,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * columns `shard`/`packed`/`pq_code` are recomputed; DML
     * assignments to them are overwritten by design). Same discovery
     * (skip-index-prunable id probe), same rewrite machinery, locks,
-    * and staged-publish commit as [[upsert]]/[[deleteWhere]]. Returns
+    * and sidecar commit as [[upsert]]/[[deleteWhere]]. Returns
     * (rows removed or replaced, rows landed). */
   private[graft] def applyRowDelta(deletes: DataFrame,
       inserts: DataFrame): (Long, Long) =
@@ -4399,7 +4411,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val fs = fsOfRoot
     val tmp = new org.apache.hadoop.fs.Path(cfg.location,
       s"_skip__tmp_${java.util.UUID.randomUUID()}")
-    rows.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    LakeWriter.write(rows.coalesce(1), tmp, None, cfg.codec)
     fs.delete(skipPath, true)
     fs.rename(tmp, skipPath)
   }
@@ -4593,7 +4605,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         // together.
         val tmp = new org.apache.hadoop.fs.Path(cfg.location,
           s"_zone__tmp_${java.util.UUID.randomUUID()}")
-        rows.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        LakeWriter.write(rows.coalesce(1), tmp, None, cfg.codec)
         if (fields.nonEmpty)
           ControlFiles.write(fs, new org.apache.hadoop.fs.Path(tmp, "_spec.json"),
             ControlFiles.ZoneSpec(fields), overwrite = false)
@@ -4616,8 +4628,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     if (files.isEmpty || !fs.exists(zonePath)) return
     val tmp = new org.apache.hadoop.fs.Path(cfg.location,
       s"_zone__tmp_${java.util.UUID.randomUUID()}")
-    zoneRows(spark.read.parquet(files: _*), zoneSpecOf(fs).getOrElse(Nil))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    LakeWriter.write(zoneRows(spark.read.parquet(files: _*),
+      zoneSpecOf(fs).getOrElse(Nil)).coalesce(1), tmp, None, cfg.codec)
     fs.listStatus(tmp)
       .find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .foreach { p =>
@@ -4656,7 +4668,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       .parquet(parts.map(_.getPath.toString).toSeq: _*)
     val tmp = new org.apache.hadoop.fs.Path(cfg.location,
       s"_zone__tmp_${java.util.UUID.randomUUID()}")
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    LakeWriter.write(merged.coalesce(1), tmp, None, cfg.codec)
     val spec = new org.apache.hadoop.fs.Path(zonePath, "_spec.json")
     if (fs.exists(spec))
       org.apache.hadoop.fs.FileUtil.copy(fs, spec, fs,
@@ -5003,8 +5015,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val survivors = liveEntries(st).filter { case (d, _) =>
       !affected.contains(dirValue(d))
     }
-    val committed = LakeState(newGen, survivors, extraCols = st.extraCols,
-      liveFiles = st.liveFiles)
+    // the new generation is current and records exactly the files
+    // written into it
+    val committed = LakeState(newGen, survivors ++ produced.map(_._1 -> newGen),
+      extraCols = st.extraCols,
+      liveFiles = st.liveFiles ++ produced.map { case (d, fl) =>
+        (d, newGen) -> fl.map(LiveFile.of) },
+      genRecorded = true)
     writeState(committed)
     refreshSkipIndex(committed, affected)
     refreshZoneMapShards(committed, affected)
@@ -5044,7 +5061,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // what the slice join below must re-project back to
     val outCols = content.columns.toSeq.map(col)
     val shaped =
-      if (slices.isEmpty) content.repartition(col(partCol))
+      if (slices.isEmpty) byPartition(content)
       else {
         import spark.implicits._
         // null-safe LEFT join with a 1-slice default: a partition whose
@@ -5068,21 +5085,28 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
             .repartitionByRange(total, (col(partCol) +: clusterBy): _*)
             .select(outCols: _*)
       }
-    (if (clusterBy.isEmpty) shaped
-     else shaped.sortWithinPartitions((col(partCol) +: clusterBy): _*))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", cfg.codec)
-      .partitionBy(partCol)
-      .parquet(tmp.toString)
+    def abort(why: String, cause: Throwable = null): Nothing =
+      throw new IllegalStateException(
+        s"partition rewrite ($tag) aborted: $why (live state untouched)", cause)
     try {
-      val produced = mapDirsPooled(fs.listStatus(tmp).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-          .map(_.getPath.getName)) { d =>
-        d -> dataFilesIn(fs, new org.apache.hadoop.fs.Path(tmp, d))
+      // a failed write (a task whose file the store never shows, say)
+      // aborts exactly like a failed check
+      val written =
+        try LakeWriter.write(
+          if (clusterBy.isEmpty) shaped
+          else shaped.sortWithinPartitions((col(partCol) +: clusterBy): _*),
+          tmp, Some(partCol), cfg.codec)
+        catch { case scala.util.control.NonFatal(e) =>
+          abort(s"write failed: ${e.getMessage}", e) }
+      val produced = written.groupBy(_.dir).toSeq.sortBy(_._1).map { case (d, ws) =>
+        val dir = fs.makeQualified(new org.apache.hadoop.fs.Path(tmp, d))
+        d -> ws.map(w => graft.sources.GraftManifestFileIndex.status(
+          dir, w.file.name, w.file.len, w.file.mod))
       }
-      def abort(why: String): Nothing = throw new IllegalStateException(
-        s"partition rewrite ($tag) aborted: $why (live state untouched)")
-      val wrote = footerRowsOf(produced.map(_._2))
+      val wrote =
+        try footerRowsOf(produced.map(_._2))
+        catch { case e: java.io.IOException =>
+          abort(s"footer check failed: ${e.getMessage}", e) }
       if (wrote != expectedRows) abort(s"wrote $wrote rows, expected $expectedRows")
       val outOfScope = produced.map(p => dirValue(p._1)).filterNot(allowed)
       if (outOfScope.nonEmpty)
@@ -5267,13 +5291,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           fs.delete(s.getPath, false); ()
         case n if n.startsWith("_skip__tmp") || n.startsWith("_zone__tmp") =>
           if (fs.delete(s.getPath, true)) removed += 1L
-        // append staging scratch: the sweep runs under the EXCLUSIVE
-        // lock, which excludes every in-flight append — anything still
-        // under _staging is a crashed appender's leftovers (an empty
-        // parent is dropped silently, not counted as a swept item)
-        case Lake.stagingDirName =>
-          val hadContent = fs.listStatus(s.getPath).nonEmpty
-          if (fs.delete(s.getPath, true) && hadContent) removed += 1L
         // row-level DML staging (_rlo/<queryId>): writers stage BEFORE
         // the statement's apply takes the writer lock, so a live
         // statement's dir is age-protected — only a dir idle >10 min
@@ -5293,6 +5310,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         case _ => ()
       }
     }
+    sweepUnnamed(fs, st)
     if (commits.nonEmpty) {
       val latest = commits.map(_._1).max
       commits.filter { case (v, mt, _) =>
@@ -5305,6 +5323,33 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       }
     }
     removed
+  }
+
+  /** Delete the data files no sidecar names, in the directories whose
+    * file lists `st` records: a crashed append's files, a torn sink
+    * attempt's. They are invisible to every read, and they were never
+    * named by any version: a recorded directory only ever gains named
+    * files while current, and its list is frozen when the generation
+    * rolls. The current generation's tree, when recorded, is listed
+    * whole, so a directory holding only unnamed files is swept too.
+    * Runs under the exclusive lock, which excludes every in-flight
+    * append. One LIST per recorded directory; the files are not counted
+    * in [[vacuum]]'s result, which counts trees, sidecars and locks. */
+  private def sweepUnnamed(fs: org.apache.hadoop.fs.FileSystem,
+      st: LakeState): Unit = {
+    val named = recordedFiles(st)
+    val current =
+      if (!st.genRecorded) Nil
+      else try fs.listStatus(genPath(st.generation)).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+        .map(_.getPath.getName -> st.generation)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    mapDirsPooled((named.keys.toSeq ++ current).distinct) { case e @ (d, g) =>
+      val keep = named.getOrElse(e, Nil).map(_.getPath.getName).toSet
+      try dataFilesIn(fs, new org.apache.hadoop.fs.Path(genPath(g), d))
+        .filterNot(f => keep(f.getPath.getName))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    }.flatten.foreach(f => fs.delete(f.getPath, false))
   }
 
   /** Crash RECOVERY — in layout v2, a one-liner by construction: every
@@ -5472,7 +5517,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       // whole maintenance tick; the stale calibration stays inert until
       // rows return (topKAtRecall on an empty lake returns empty rows
       // regardless of ladder)
-      if (liveDataBytes() == 0L) false
+      if (!exists()) false
       else {
         val params = try recallCalib().flatMap(c =>
           for (k <- c.k; sample <- c.sample) yield (k, sample))
@@ -5627,11 +5672,17 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     holdsData(fs, entries, st)
   }
 
+  /** Whether `st`'s current generation holds data: the files it records,
+    * or (unrecorded) what its tree shows. */
+  private def holdsCurrentData(fs: org.apache.hadoop.fs.FileSystem,
+      st: LakeState): Boolean =
+    if (st.genRecorded) st.live.exists(_._2 == st.generation)
+    else treeHasData(fs, genPath(st.generation))
+
   /** [[exists]] over a state the caller already resolved. */
   private def holdsData(fs: org.apache.hadoop.fs.FileSystem,
       entries: Seq[org.apache.hadoop.fs.FileStatus], st: LakeState): Boolean =
-    st.live.exists(_._2 != st.generation) ||
-      treeHasData(fs, genPath(st.generation)) ||
+    st.live.exists(_._2 != st.generation) || holdsCurrentData(fs, st) ||
       rootLevelDataFrom(entries).nonEmpty
 
   /** The live-data pointer + config stamp, stored as VERSIONED sidecar
@@ -5774,34 +5825,86 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     try withWriterLock("stamp")(writeState(readState()))
     catch { case _: java.util.ConcurrentModificationException => () }
 
-  /** Commit `st` (and refresh `last_update`): create sidecar version
-    * latest+1. MAINTENANCE callers (and the streaming stamp via
-    * [[stampQuietly]]) hold the exclusive writer lock, so
-    * structure-changing read-modify-writes are serialized. SHARED-gate
-    * appends ([[withAppendLock]]) may call this CONCURRENTLY — safe
-    * because an append's stamp republishes the manifest it re-read
-    * under the gate (maintenance excluded, so every racing append
-    * carries the IDENTICAL manifest, stamps differing only in
-    * `last_update`); version allocation arbitrates via
-    * `create(overwrite=false)` + bump on POSIX/HDFS, and on a
-    * plain-S3-semantics store (where two PUTs of the same name both
-    * "succeed" — the documented lock residual) a clobbered append stamp
-    * loses nothing but its duplicate timestamp. Returns the version
-    * written. `sealedCommit` marks the version as a [[seal]] sync point
-    * — exempt from the inline rotation below (only [[vacuum]] retires
-    * sync points), and resolved manifest-only by readers. */
+  /** Commit `st` (and refresh `last_update`) as sidecar version
+    * latest+1 — the commit of every op holding the EXCLUSIVE writer lock
+    * (maintenance, seal, evolve, the streaming stamp via
+    * [[stampQuietly]]): the lock excludes every other committer, appends
+    * included, so the version is free; finding it taken means the
+    * exclusion was breached, and the commit fails loudly rather than
+    * publishing over a version it never read. Shared-gate appends commit
+    * through [[commitAppend]] instead. Returns the version written.
+    * `sealedCommit` marks the version as a [[seal]] sync point — exempt
+    * from the inline rotation (only [[vacuum]] retires sync points), and
+    * resolved manifest-only by readers. */
   private def writeState(st: LakeState, sealedCommit: Boolean = false): Long = {
     val fs = fsOfRoot
-    // ONE root listing serves version discovery AND the stranded-tmp
-    // sweep below — a second LIST per commit is pure object-store tax
-    val rootEntries = listRoot(fs)
-    val versions = metaVersionsFrom(rootEntries)
-    val latest = if (versions.isEmpty) 0L else versions.map(_._1).max
+    val entries = listRoot(fs)
+    val v = latestVersion(entries) + 1
+    if (!publishState(fs, entries, st, v, sealedCommit))
+      throw new java.util.ConcurrentModificationException(
+        s"sidecar commit at ${cfg.location}: version $v was created by " +
+          "another writer while this one held the writer lock")
+    v
+  }
+
+  /** The newest sidecar version a root listing shows (0: none). */
+  private def latestVersion(entries: Seq[org.apache.hadoop.fs.FileStatus]): Long =
+    metaVersionsFrom(entries).map(_._1).maxOption.getOrElse(0L)
+
+  /** Commit an APPEND: `edit` applied to the newest committed state, as
+    * the next sidecar version — the version that names the append's
+    * files is its commit point. Appends share the gate, so two can race
+    * for one version: the version create is create-if-absent
+    * ([[createVersion]]), and the loser re-reads the newest version,
+    * applies `edit` to it again and retries, so no append's files are
+    * lost. A newest version that does not decode yet may be a rival's
+    * commit still landing (a store without an atomic create shows the
+    * object before its body): the loop waits a little for it before
+    * treating it as torn. Maintenance is excluded while the gate is held,
+    * so the generation cannot move under the loop. `st` is the state the
+    * caller resolved; returns the committed state. */
+  private def commitAppend(fs: org.apache.hadoop.fs.FileSystem,
+      st: LakeState)(edit: LakeState => LakeState): LakeState = {
+    var base = st
+    var waits = 0
+    var attempts = 0
+    while (true) {
+      val entries = listRoot(fs)
+      val latest = latestVersion(entries)
+      if (base.version != latest) base = readStateFrom(fs, entries)
+      if (base.version < latest && waits < 5) {
+        waits += 1
+        Thread.sleep(20L * waits)
+      } else {
+        if (base.generation != st.generation)
+          throw new java.util.ConcurrentModificationException(
+            s"append at ${cfg.location}: the generation moved from " +
+              s"${st.generation} to ${base.generation} under the append gate")
+        val next = edit(base)
+        if (publishState(fs, entries, next, latest + 1, sealedCommit = false))
+          return next.copy(version = latest + 1)
+        attempts += 1
+        require(attempts < 1000, s"append at ${cfg.location}: lost " +
+          s"$attempts consecutive version creates — the store's " +
+          "create-if-absent is failing, not racing")
+      }
+    }
+    st // unreachable
+  }
+
+  /** Create sidecar version `v` committing `st`, if no version `v`
+    * exists; false when one does. `entries` is the root listing the
+    * version was chosen from: it serves the rotation and the stranded-
+    * tmp sweep after a successful create. */
+  private def publishState(fs: org.apache.hadoop.fs.FileSystem,
+      entries: Seq[org.apache.hadoop.fs.FileStatus], st: LakeState, v: Long,
+      sealedCommit: Boolean): Boolean = {
     // gen_has_data: whether the CURRENT generation's tree held data at
     // commit time — readAt's loud-failure contract needs to tell
     // "snapshot of an empty/manifest-only lake" apart from "snapshot
-    // whose own generation was vacuumed"
-    val genHasData = treeHasData(fs, genPath(st.generation))
+    // whose own generation was vacuumed". A recorded generation holds
+    // exactly the files it names.
+    val genHasData = holdsCurrentData(fs, st)
     // declared routing width: mid-reshard states declare the TARGET
     // width (the transition commit is written by the pre-reshard
     // session, whose own lsh is still the narrow one); otherwise the
@@ -5814,77 +5917,23 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         .getOrElse(lsh.numShards.toLong)
     // FILE-level manifest (guide §6): record each live entry's data
     // files AT COMMIT TIME so reads plan with zero per-directory
-    // listings ([[ControlFiles.recordFiles]]). Every rewrite publishes
-    // into a FRESH generation, so an entry carried forward reuses its
-    // recorded list and only entries NEW to the manifest are listed,
-    // once, here on the write path. Every caller commits a state derived
-    // from the one it resolved, carrying that state's recorded map, so
-    // the commit never reads the sidecar again. CURRENT-generation
-    // entries are excluded: that tree is live-by-rule (appends land
-    // there without a commit), so a recorded list would go stale the
-    // moment one lands.
+    // listings ([[ControlFiles.recordFiles]]). Every caller commits a
+    // state derived from the one it resolved, carrying its recorded
+    // map — appends add the files they wrote, rewrites the files of
+    // their new generation — so entries carried forward reuse their
+    // lists and only entries NEW to the manifest without a list (a
+    // generation an older sidecar left unrecorded) are listed, once,
+    // here. An UNRECORDED current generation (stream-owned, or never
+    // committed through an append) is left out: that tree is live by
+    // listing.
     val files = ControlFiles.recordFiles(
-      st.live.filter(_._2 != st.generation), st.liveFiles,
-      Map.empty[(String, Long), Seq[LiveFile]]) { case (d, g) =>
+      if (st.genRecorded) st.live else st.live.filter(_._2 != st.generation),
+      st.liveFiles, Map.empty[(String, Long), Seq[LiveFile]]) { case (d, g) =>
       dataFilesIn(fs, new org.apache.hadoop.fs.Path(genPath(g), d))
     }
     val json = ControlFiles.encode(ControlFiles.LakeSidecar.of(
       st, cfg, numShards, sealedCommit, genHasData, files))
-    // ATOMIC publish: the body lands in a root-sibling tmp (a name no
-    // discovery regex matches) and is RENAMED into its version name.
-    // A create-in-place briefly exposes an EMPTY `_meta.<v>.json`
-    // (create() makes the entry before write/close lands the bytes),
-    // and a reader catching that window parses the DEFAULT state —
-    // silently serving only the current generation, or failing a
-    // format resolution with "no dim" (observed under two concurrent
-    // SQL writers). Version-allocation arbitration: HDFS rename
-    // refuses an existing destination (bump and retry); POSIX rename
-    // CLOBBERS — there, two stamps racing past the exists() pre-check
-    // can land on one version and the earlier body is lost. That loss
-    // is bounded by the stamping rules: only SHARED-gate appends ever
-    // stamp concurrently (maintenance and seal hold the exclusive
-    // writer lock), and racing append stamps carry the IDENTICAL
-    // manifest (re-read under the gate, maintenance excluded), so a
-    // clobber forfeits nothing but a duplicate last_update — the same
-    // residual the previous in-place create had on plain-S3 stores,
-    // now shared by local-FS runs and documented as such. On real
-    // object stores the publish stays torn-free for a different
-    // reason: rename is a server-side copy and object visibility is
-    // all-or-nothing (no reader ever sees a partial object) — only
-    // stream-copying stand-ins (the test BucketFs) retain a window,
-    // which their PUT-semantics caveat already covers.
-    val tmp = new org.apache.hadoop.fs.Path(cfg.location,
-      s"_meta.tmp.${java.util.UUID.randomUUID().toString.take(12)}")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    var v = latest + 1
-    var done = false
-    try {
-      while (!done) {
-        val dst = new org.apache.hadoop.fs.Path(cfg.location, s"_meta.$v.json")
-        if (fs.exists(dst)) v += 1 // a racing stamp took this version
-        else if (fs.rename(tmp, dst)) done = true
-        else {
-          // rename refusal without a visible destination: either the
-          // rival's create won the same instant (bump) or the tmp is
-          // gone (a real store failure — loud, never a silent no-stamp)
-          require(fs.exists(tmp),
-            s"sidecar publish at ${cfg.location}: staged version body " +
-              s"$tmp vanished before rename — store failure")
-          // bounded: a store whose rename persistently returns false
-          // while the tmp survives would otherwise bump forever where
-          // the old in-place create failed loudly with its IOException
-          require(v < latest + 10000,
-            s"sidecar publish at ${cfg.location}: rename refused " +
-              s"${v - latest} consecutive versions with the staged body " +
-              "still present — store rename is failing, not racing")
-          v += 1
-        }
-      }
-    } finally if (!done) {
-      try { fs.delete(tmp, false); () }
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+    if (!createVersion(fs, v, json.getBytes("UTF-8"))) return false
     sealedCache.put(v, sealedCommit) // the rotation never re-reads our own
     // sweep far-superseded versions; keep a few for in-flight readers.
     // SEALED versions are exempt: they are the change-feed's sync
@@ -5896,22 +5945,95 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // here would let a transient read error delete a consumer's sync
     // point, the exact loss the exemption exists to prevent (vacuum
     // retires genuinely dead versions later).
-    versions.filter(_._1 < v - keptMetaVersions)
+    metaVersionsFrom(entries).filter(_._1 < v - keptMetaVersions)
       .filterNot { case (ver, p) =>
         sealedCache.getOrElseUpdate(ver,
           try stateOfSidecar(fs, p).isSealed
           catch { case scala.util.control.NonFatal(_) => true }) }
       .foreach(p => fs.delete(p._2, false))
-    // stranded publish bodies (a JVM that died between staging and
-    // rename) are inert — no regex matches them — but sweep the old
-    // ones anyway (from the already-taken listing); age-gated so no
+    // stranded publish bodies (a JVM that died between writing the body
+    // and linking it) are inert — no regex matches them — but sweep the
+    // old ones anyway (from the already-taken listing); age-gated so no
     // live writer's in-flight tmp is hit
-    try rootEntries.foreach { s =>
+    try entries.foreach { s =>
       if (s.isFile && s.getPath.getName.startsWith("_meta.tmp.") &&
           System.currentTimeMillis() - s.getModificationTime > 3600000L)
         fs.delete(s.getPath, false)
     } catch { case scala.util.control.NonFatal(_) => () }
-    v
+    true
+  }
+
+  /** Create `_meta.<v>.json` holding `body` only if no version `v`
+    * exists — true when this call created it. Every store gets a true
+    * create-if-absent, and where it can, one that never shows the
+    * version before its whole body:
+    *  - `file:` writes the body to a root-sibling tmp (a name no
+    *    discovery regex matches) and hard-links it to the version name —
+    *    link(2) refuses an existing name — falling back to an O_EXCL
+    *    create where links are unsupported;
+    *  - HDFS renames such a tmp into place: its rename refuses an
+    *    existing destination;
+    *  - a store that advertises conditional create (s3a, see
+    *    [[Lake.conditionalCreateKey]]) puts with If-None-Match, arbitrated
+    *    by the store at close;
+    *  - any other store gets `create(overwrite = false)`. There a reader
+    *    can catch the new version before its body lands; it then serves
+    *    the previous version ([[ControlFiles.newestParseable]]), and an
+    *    appender waits for it ([[commitAppend]]). On a plain-PUT store
+    *    whose exclusive create is a blind PUT, two racing appends can
+    *    both "create" one version and the earlier one's files are lost
+    *    from the manifest — the documented residual such stores share
+    *    with the writer lock. */
+  private def createVersion(fs: org.apache.hadoop.fs.FileSystem, v: Long,
+      body: Array[Byte]): Boolean = {
+    val dst = new org.apache.hadoop.fs.Path(cfg.location, s"_meta.$v.json")
+    val tmpName = s"_meta.tmp.${java.util.UUID.randomUUID().toString.take(12)}"
+    if (fs.getScheme == "file") {
+      import java.nio.file.{Files, StandardOpenOption => O}
+      val d = java.nio.file.Paths.get(dst.toUri.getPath)
+      Files.createDirectories(d.getParent)
+      val tmp = d.resolveSibling(tmpName)
+      Files.write(tmp, body, O.CREATE_NEW, O.WRITE)
+      try {
+        try { Files.createLink(d, tmp); true }
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException => false
+          case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
+            try { Files.write(d, body, O.CREATE_NEW, O.WRITE); true }
+            catch { case _: java.nio.file.FileAlreadyExistsException => false }
+        }
+      } finally Files.deleteIfExists(tmp)
+    } else if (fs.getScheme == "hdfs") {
+      val tmp = new org.apache.hadoop.fs.Path(cfg.location, tmpName)
+      val out = fs.create(tmp, true)
+      try out.write(body) finally out.close()
+      try fs.rename(tmp, dst)
+      finally if (fs.exists(tmp)) fs.delete(tmp, false)
+    } else if (conditionalCreate(fs, dst)) {
+      val b = fs.createFile(dst)
+      b.overwrite(false)
+      b.must(Lake.conditionalCreateKey, true)
+      val out =
+        try b.build().asInstanceOf[org.apache.hadoop.fs.FSDataOutputStream]
+        catch {
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
+          case e: java.io.IOException => if (fs.exists(dst)) return false else throw e
+        }
+      try { out.write(body); out.close(); true } // the conditional PUT commits at close
+      catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+        case e: java.io.IOException => if (fs.exists(dst)) false else throw e
+      }
+    } else {
+      val out =
+        try fs.create(dst, false)
+        catch {
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
+          case e: java.io.IOException => if (fs.exists(dst)) return false else throw e
+        }
+      try out.write(body) finally out.close()
+      true
+    }
   }
 
   /** Version → isSealed memo for the rotation exemption above (a
@@ -6229,19 +6351,11 @@ object Lake {
       .digest(sinkId.getBytes("UTF-8"))
       .take(6).map(b => f"${b & 0xff}%02x").mkString
 
-  /** What one staged append published: the partition values it landed
-    * files in (skip-index refresh scope) and the published data-file
-    * paths themselves (zone-map refresh scope). */
+  /** What one append committed: the partition values it landed files
+    * in (skip-index refresh scope), the written data-file paths (zone-map
+    * refresh scope) and the state its commit published. */
   private[graft] final case class Appended(
-      shards: Set[Option[String]], files: Seq[String])
-
-  /** Per-append staging subtree root: each batch append writes its
-    * parquet under `_staging/<uuid>/` with its own committer scratch,
-    * then moves the finished files into the live generation tree —
-    * concurrent appends sharing one output directory would share
-    * Hadoop's `_temporary` job-attempt dir and clobber each other's
-    * in-flight task files at cleanup. */
-  private[graft] val stagingDirName: String = "_staging"
+      shards: Set[Option[String]], files: Seq[String], state: LakeState)
 
   /** An incremental LSH reshard in flight: rows in the `pending`
     * (escaped-dir, generation) entries are still routed at
@@ -6295,7 +6409,14 @@ object Lake {
     * is immutable until vacuum retires it wholesale — the same
     * invariant the listing read already relied on. `config` is the
     * writer config the sidecar recorded — Some exactly when the state
-    * was decoded from a sidecar (fresh constructions carry None). */
+    * was decoded from a sidecar (fresh constructions carry None).
+    * `genRecorded`: `live` and `liveFiles` name the CURRENT generation's
+    * directories and files too — every append commits the files it
+    * wrote — so a file there that no sidecar names is not part of the
+    * lake; false for states decoded from sidecars written before this
+    * (and for a stream-owned generation), whose current tree is live by
+    * listing. `version` is the sidecar version the state was decoded
+    * from (0 when none): an append commits `version + 1`. */
   private[graft] final case class LakeState(
       generation: Long, live: Seq[(String, Long)],
       genHasData: Option[Boolean] = None,
@@ -6305,7 +6426,9 @@ object Lake {
       reshard: Option[ReshardState] = None,
       lastUpdate: Option[String] = None,
       liveFiles: Map[(String, Long), Seq[LiveFile]] = Map.empty,
-      config: Option[SidecarConfig] = None)
+      config: Option[SidecarConfig] = None,
+      genRecorded: Boolean = false,
+      version: Long = 0L)
 
   /** The writer config a sidecar records beside the live set: what
     * routing/compression guards check a session against and what the
@@ -6336,13 +6459,20 @@ object Lake {
 
   /** The state a root listing of `location` names: the newest
     * parseable `_meta.<v>.json` (a torn newest falls back to the one
-    * before it, logged; none parseable fails loudly), else the pre-v2
+    * before it, logged, with its current generation resolved by
+    * listing; none parseable fails loudly), else the pre-v2
     * single-file `_meta.json`, else a fresh lake. A listed version
     * rotated out before its read surfaces as FileNotFoundException. */
   private[graft] def stateFromListing(fs: org.apache.hadoop.fs.FileSystem,
       location: String, entries: Seq[org.apache.hadoop.fs.FileStatus]): LakeState =
     ControlFiles.newestParseable[ControlFiles.LakeSidecar, LakeState](fs,
-      metaVersionsFrom(entries), s"lake at $location")(_.toState).map(_._2)
+      metaVersionsFrom(entries), s"lake at $location")(_.toState)
+      .map { case (v, st) =>
+        // served past a torn newest version, which may have named more
+        // current-generation files than this one: that tree resolves by
+        // listing, the only truthful answer left
+        st.copy(version = v, genRecorded = st.genRecorded &&
+          v == metaVersionsFrom(entries).map(_._1).max) }
       .orElse(entries.find(s => s.isFile && s.getPath.getName == "_meta.json")
         .map(s => stateOfSidecar(fs, s.getPath)))
       .getOrElse(LakeState(1L, Nil))

@@ -44,7 +44,7 @@ import graft.{Lake, LakeConfig}
   * the `USING graft` format uses, so a catalog read/write and a
   * path read/write can never resolve one lake differently — and every
   * write funnels through [[GraftTable.newWriteBuilder]] →
-  * [[graft.Lake.ingest]] (routed, derived, staged-publish, append
+  * [[graft.Lake.ingest]] (routed, derived, sidecar-commit, append
   * gate).
   *
   * CREATE TABLE schema contract: the stored schema of a lake is the

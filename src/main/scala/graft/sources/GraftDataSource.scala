@@ -60,14 +60,14 @@ import graft.{Lake, LakeConfig}
   * BATCH writes are supported and NEVER land raw parquet: `INSERT
   * INTO` / `writeTo(...).append()` / `df.write.format("graft")
   * .mode("append")` funnel through the identical `withDerived` +
-  * staged-publish + append-gate path as [[graft.Lake.ingest]]
+  * sidecar-commit + append-gate path as [[graft.Lake.ingest]]
   * ([[GraftTable.newWriteBuilder]] — shard routing, uuid/timestamp
   * defaults, metadata coercion, evolve extras, concurrent-append
   * admission). STREAMING writes are supported
   * (`df.writeStream.format("graft")` → [[GraftSink]], exactly-once
   * via [[graft.Lake.ingestExactlyOnce]]'s batch ledger), because a
   * streaming write IS routed ingest — the sink runs the same derive +
-  * staged-publish path as the Scala API. Streaming reads go through
+  * sidecar-commit path as the Scala API. Streaming reads go through
   * the registered `graft-changes` source; together they close
   * the loop `readStream(graft-changes) → transform →
   * writeStream(graft)` without a line of Scala.
@@ -600,7 +600,7 @@ final class GraftDerivedTable(
   * WRITABLE: `INSERT INTO`, `df.writeTo(...).append()`, and
   * `df.write.format("graft").mode("append")` all land as ONE routed
   * lake append — the write funnels through the IDENTICAL
-  * `withDerived` + staged-publish + append-gate path as
+  * `withDerived` + sidecar-commit + append-gate path as
   * [[graft.Lake.ingest]] (uuid/timestamp defaults, metadata coercion,
   * LSH shard routing, evolve extras, concurrent-append admission), so
   * a SQL-inserted row and a Scala-ingested row can never diverge. The
@@ -834,7 +834,7 @@ private final class GraftBackingTable(
 }
 
 /** The registered streaming SINK behind `writeStream.format("graft")`:
-  * each micro-batch is one routed, staged-publish lake append, made
+  * each micro-batch is one routed, sidecar-commit lake append, made
   * exactly-once by [[graft.Lake.ingestExactlyOnce]]'s batch ledger
   * (protocol scaladoc there). The batch frame is pinned to its planned
   * row RDD before ingest ([[org.apache.spark.sql.GraftShims.asBatchFrame]])

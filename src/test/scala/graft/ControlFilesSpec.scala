@@ -337,4 +337,24 @@ class ControlFilesSpec extends SparkSpec {
       "upsert after buildSkipIndex" -> upsertSkip, "readTimeRange" -> timeRange)
     assert(counts.forall(_._2 == 1), s"sidecar GETs per op: $counts")
   }
+
+  test("a recall calibration and its staleness check each open the sidecar once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countopenfs.impl", classOf[CountingOpenFs].getName)
+    val loc = s"countopenfs://${tmp("calibcount")}/lake"
+    val lake = Lake(spark, LakeConfig(loc, dim = 3, numHashes = 2))
+    lake.ingest(rows(12, "a"))
+    import scala.jdk.CollectionConverters._
+    def sidecarGets(op: => Any): Int = {
+      CountingOpenFs.opened.clear()
+      op
+      CountingOpenFs.opened.asScala.count(_.matches(""".*_meta\.\d+\.json"""))
+    }
+    val calibrate = sidecarGets(assert(lake.calibrateRecall(k = 3, sampleQueries = 4).nonEmpty))
+    // a moved token: the staleness check weighs the live volume too
+    lake.ingest(rows(1, "b"))
+    val stale = sidecarGets(assert(lake.recallCalibStale() === Some(false)))
+    assert((calibrate, stale) === ((1, 1)),
+      s"sidecar GETs: calibrateRecall $calibrate, recallCalibStale $stale")
+  }
 }

@@ -346,6 +346,9 @@ class DeleteUpsertSpec extends SparkSpec {
     val movedRows = spark.read.parquet(srcFile.toString).count()
     assert(fs.rename(srcFile,
       new org.apache.hadoop.fs.Path(dirs.last, "foreign-" + srcFile.getName)))
+    // an out-of-band move is part of the lake only where the current
+    // generation resolves by listing
+    PreRecordingSidecar(spark, lake)
     assert(lake.validate().head().getLong(1) === movedRows,
       "every row of the misplaced file is flagged as misrouted")
   }
@@ -362,6 +365,9 @@ class DeleteUpsertSpec extends SparkSpec {
     Seq(("alien", Seq(1f, 2f, 3f), "wrong dim"))
       .toDF("id", "vector", "document")
       .write.mode("append").parquet(dir.toString)
+    // a foreign file is part of the lake only where the current
+    // generation resolves by listing
+    PreRecordingSidecar(spark, lake)
     val r = lake.validate().head()
     assert(r.getLong(0) === 33L)
     assert(r.getLong(5) === 1L, "the dim-3 row is counted")

@@ -138,6 +138,9 @@ class LakeSpec extends SparkSpec {
     Seq((Seq(0.1f, 0.2f, 0.3f, 0.4f, 0.5f), "doc", 42L))
       .toDF("vector", "document", "rogue_col")
       .write.mode("append").parquet(s"${lake.currentGenDir}/shard=9")
+    // a file no sidecar names is not part of the lake: the rogue file
+    // gets in the one way an uncommitted file still can
+    PreRecordingSidecar(spark, lake)
     val df = lake.read()
     assert(!df.columns.contains("rogue_col"),
       "the pinned read must serve exactly the declared columns")
@@ -230,6 +233,35 @@ class LakeSpec extends SparkSpec {
     }
     // nothing committed: the writer's own config still routes, the
     // foreign seed is still refused, and the rows are the same
+    assert(lake.topK(Seq(1.0, 0, 0, 0, 0), 1).count() === 1L)
+    assert(intercept[IllegalArgumentException](
+      Lake(spark, foreign.head).topK(Seq(1.0, 0, 0, 0, 0), 1).count())
+      .getMessage.contains("seed"))
+    assert(lake.read().select("id").as[String].collect().toSet === before)
+  }
+
+  test("evolve and bootstrap under a mismatched routing config are refused and leave the sidecar alone") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_routing_restamp").toString
+    val loc = s"$dir/lake"
+    val lake = Lake(spark, LakeConfig(loc, dim = 5, numHashes = 4))
+    (0 until 3).foreach(i => lake.ingest(
+      Seq((Seq(1f, i.toFloat, 0f, 0f, 0f), s"doc $i")).toDF("vector", "document")))
+    val before = lake.read().select("id").as[String].collect().toSet
+    val version = lake.currentVersion()
+    // same shard count, different hyperplanes; then a different dimension
+    val foreign = Seq(LakeConfig(loc, dim = 5, numHashes = 4, seed = 7L),
+      LakeConfig(loc, dim = 6, numHashes = 4))
+    for (c <- foreign; op <- Seq[Lake => Unit](
+        _.evolve(org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types
+          .StructField("tag", org.apache.spark.sql.types.StringType)))),
+        _.bootstrap())) {
+      val e = intercept[IllegalArgumentException](op(Lake(spark, c)))
+      assert(e.getMessage.contains("seed") || e.getMessage.contains("-dim"), e.getMessage)
+    }
+    // nothing committed: the sidecar still records the writer's config,
+    // the foreign seed is still refused, and the rows are the same
+    assert(lake.currentVersion() === version)
+    assert(!lake.read().columns.contains("tag"))
     assert(lake.topK(Seq(1.0, 0, 0, 0, 0), 1).count() === 1L)
     assert(intercept[IllegalArgumentException](
       Lake(spark, foreign.head).topK(Seq(1.0, 0, 0, 0, 0), 1).count())

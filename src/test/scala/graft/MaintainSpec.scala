@@ -91,6 +91,9 @@ class MaintainSpec extends SparkSpec {
     val p = new org.apache.hadoop.fs.Path(dataFile)
     assert(fs.rename(p, new org.apache.hadoop.fs.Path(p.getParent,
       "renamed-" + p.getName)))
+    // an out-of-band move is part of the lake only where the current
+    // generation resolves by listing
+    PreRecordingSidecar(spark, lake)
     assert(lake.validate().head().getAs[Long]("skip_stale") > 0L,
       "fixture must actually be stale")
     val r = lake.maintain(retainMs = 0L)

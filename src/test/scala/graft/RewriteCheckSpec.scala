@@ -5,33 +5,32 @@ import java.net.URI
 import org.apache.hadoop.fs.Path
 
 object DropPartFs {
-  /** When armed, the next rename that lands data inside a generation
-    * tree (a rewrite's commit publishing its part files) silently loses
-    * one part file; the rename still reports success. */
+  /** When armed, the next part file written inside a generation tree (a
+    * rewrite writing its new generation) is silently lost: the store
+    * acknowledges the write, the file never shows. */
   @volatile var armed: Boolean = false
 }
 
-/** [[BucketFs]] that silently drops one committed part file of a
-  * rewrite: the store acknowledged the write, the file never shows. */
+/** [[BucketFs]] that silently drops one written part file of a rewrite:
+  * the store acknowledged the write, the file never shows. */
 class DropPartFs extends BucketFs {
   override def getScheme: String = "droppart"
   override def getUri: URI = URI.create("droppart:///")
-  override def rename(src: Path, dst: Path): Boolean = {
-    val ok = super.rename(src, dst)
-    val d = dst.toString
-    if (ok && DropPartFs.armed && d.matches(".*/gen-\\d+/.*") &&
-        !d.contains("_temporary")) {
-      parts(dst).headOption.foreach { f =>
-        DropPartFs.armed = false
-        delete(f, false)
-      }
-    }
-    ok
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    if (DropPartFs.armed && f.toString.matches(".*/gen-\\d+/.*\\.parquet")) {
+      DropPartFs.armed = false
+      val self = this
+      new org.apache.hadoop.fs.FSDataOutputStream(
+        new java.io.FilterOutputStream(out) {
+          override def write(b: Array[Byte], off: Int, len: Int): Unit =
+            out.write(b, off, len)
+          override def close(): Unit = { out.close(); self.delete(f, false); () }
+        }, null)
+    } else out
   }
-
-  private def parts(p: Path): Seq[Path] =
-    if (getFileStatus(p).isFile) Seq(p).filter(_.getName.endsWith(".parquet"))
-    else listStatus(p).toSeq.flatMap(s => parts(s.getPath))
 }
 
 /** The post-write row check of every rewrite (row-level writes,

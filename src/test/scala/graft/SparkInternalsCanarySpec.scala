@@ -90,6 +90,27 @@ class SparkInternalsCanarySpec extends AnyFunSuite {
     method(c, "hash", 3)
   }
 
+  test("lake file writer: execution.datasources.FileFormatWriter.write/11 + internal.io.FileCommitProtocol") {
+    // graft.LakeWriter drives Spark's own parquet write path with an
+    // in-repo commit protocol (files written once at their final names,
+    // commit messages carrying name/length/mtime). Migration: if
+    // FileFormatWriter.write changes shape, the same protocol rides the
+    // DSv2 file write path (a BatchWrite whose DataWriters return the
+    // written files in their WriterCommitMessages); if FileCommitProtocol
+    // changes, keep the contract — no staging, no rename, the caller's
+    // sidecar version is the commit point.
+    val w = canary("org.apache.spark.sql.execution.datasources.FileFormatWriter$")
+    method(w, "write", 11)
+    val p = canary("org.apache.spark.internal.io.FileCommitProtocol")
+    Seq("setupJob" -> 1, "commitJob" -> 2, "abortJob" -> 1, "setupTask" -> 1,
+      "newTaskTempFile" -> 3, "newTaskTempFileAbsPath" -> 3,
+      "commitTask" -> 1, "abortTask" -> 1, "onTaskCommit" -> 1)
+      .foreach { case (m, n) => method(p, m, n) }
+    val spec = canary("org.apache.spark.sql.execution.datasources.FileFormatWriter$OutputSpec")
+    assert(spec.getConstructors.exists(_.getParameterCount == 3),
+      "SPARK-MAJOR CANARY: FileFormatWriter.OutputSpec(path, custom locations, columns) changed")
+  }
+
   test("exhaustive: no src/main file uses an internal surface this canary does not list") {
     val root = new java.io.File("src/main/scala")
     assume(root.isDirectory, "run from the repo root")
@@ -100,17 +121,18 @@ class SparkInternalsCanarySpec extends AnyFunSuite {
       "execution.streaming.Sink", "execution.streaming.Source",
       "StreamSinkProvider", "StreamSourceProvider",
       "internalCreateDataFrame", "ExpressionUtils", "XxHash64Function",
-      "sessionState.functionRegistry")
+      "sessionState.functionRegistry", "FileFormatWriter", "FileCommitProtocol")
     val hits = for {
       f <- walk(root)
       src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       m <- markers if src.contains(m)
     } yield f.getName -> m
     // the KNOWN users: the shim itself, the DSv2 registration file
-    // (sink), and the change-feed source. `extends Source` in
-    // LakeChanges resolves through the execution.streaming import.
+    // (sink), the change-feed source and the lake file writer.
+    // `extends Source` in LakeChanges resolves through the
+    // execution.streaming import.
     val allowed = Set("GraftShims.scala", "GraftDataSource.scala",
-      "LakeChanges.scala")
+      "LakeChanges.scala", "LakeWriter.scala")
     val strays = hits.filterNot(h => allowed(h._1))
     assert(strays.isEmpty,
       s"SPARK-MAJOR CANARY: internal-API markers appeared outside the " +

@@ -15,15 +15,16 @@ fi
 
 # which files a lake state holds is decided in one place: in Lake.scala
 # only the resolver (recordedFiles) and the commit-time recorder
-# (writeState) read `.liveFiles` — besides the two rewrite commits
-# (rewritePartitions, reshardStep) that hand the recorded files they
-# resolved on to writeState — and only streamOwned (the predicate) and
-# ingestStream (which plants the pin) name "_spark_metadata"
+# (publishState) read `.liveFiles` — besides the commits that hand the
+# files they wrote or resolved on to it: the append's current-generation
+# edit (editGenFiles) and the two rewrite commits (rewritePartitions,
+# reshardStep) — and only streamOwned (the predicate) and ingestStream
+# (which plants the pin) name "_spark_metadata"
 if ! awk '
   /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
   match($0, /def [A-Za-z0-9_]+/) { fn = substr($0, RSTART + 4, RLENGTH - 4) }
-  /\.liveFiles([^A-Za-z0-9_]|$)/ && fn != "recordedFiles" && fn != "writeState" &&
-      fn != "rewritePartitions" && fn != "reshardStep" {
+  /\.liveFiles([^A-Za-z0-9_]|$)/ && fn != "recordedFiles" && fn != "publishState" &&
+      fn != "editGenFiles" && fn != "rewritePartitions" && fn != "reshardStep" {
     print FILENAME ":" FNR ": " $0; bad = 1 }
   /"_spark_metadata"/ && fn != "streamOwned" && fn != "ingestStream" {
     print FILENAME ":" FNR ": " $0; bad = 1 }
@@ -82,6 +83,36 @@ if ! awk '
     print FILENAME ":" FNR ": " $0; bad = 1 }
   END { exit bad }' src/main/scala/graft/Lake.scala; then
   echo "ci: a generation tree written, counted or sized outside Lake.writeGeneration/liveShardFiles" >&2
+  exit 1
+fi
+
+# one rename-free writer: every data file is written once, at its final
+# name, by graft.LakeWriter, and an append commits by naming its files in
+# a sidecar version. So nothing in src/main stages under `_staging`, the
+# append and writer path (LakeWriter.scala; writeAppend, editGenFiles,
+# commitAppend, writeGeneration and sweepSinkFiles in Lake.scala) never
+# renames, and Lake.scala drives no DataFrameWriter (`.write.` chain)
+# of its own
+if grep -rnE '_staging|stagingDirName' src/main/scala --include='*.scala'; then
+  echo "ci: append staging is gone (write through graft.LakeWriter)" >&2
+  exit 1
+fi
+if grep -nE '\.rename\(' src/main/scala/graft/LakeWriter.scala || ! awk '
+  /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
+  match($0, /^  ([a-z]+(\[[a-z]+\])? )*def [A-Za-z0-9_]+/) {
+    fn = substr($0, RSTART, RLENGTH); sub(/.*def /, "", fn) }
+  /\.rename\(/ && (fn == "writeAppend" || fn == "editGenFiles" ||
+      fn == "commitAppend" || fn == "writeGeneration" || fn == "sweepSinkFiles") {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  END { exit bad }' src/main/scala/graft/Lake.scala; then
+  echo "ci: a rename in the append or writer path" >&2
+  exit 1
+fi
+if ! awk '
+  /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
+  /\.write[[:space:]]*(\.|$)/ { print FILENAME ":" FNR ": " $0; bad = 1 }
+  END { exit bad }' src/main/scala/graft/Lake.scala; then
+  echo "ci: Lake.scala writes parquet only through graft.LakeWriter" >&2
   exit 1
 fi
 
