@@ -208,12 +208,9 @@ object DerivedTable {
     * create; a concurrent deriveTo to the same location loses the
     * create and fails loudly (derived tables have a single writer
     * verb, so a race is always a caller bug, not a coordination case
-    * worth a lock file). Same acquisition discipline as the writer
-    * lock: POSIX O_EXCL via NIO on `file://` (Hadoop's local
-    * create(overwrite=false) is check-then-act — the second racer
-    * would silently truncate the first's sidecar), atomic namenode
-    * create on HDFS, and only a create that LOST to an existing file
-    * maps to the concurrency error — any other IOException (quota,
+    * worth a lock file). The create is the writer lock's
+    * ([[Lake.createIfAbsent]]); only a create that LOST to an existing
+    * file maps to the concurrency error — any other IOException (quota,
     * permission, network) surfaces as itself. */
   private[graft] def commit(spark: SparkSession, location: String,
       st: State): Long = {
@@ -223,53 +220,16 @@ object DerivedTable {
     val versions = listVersions(fs, root)
     val v = versions.map(_._1).foldLeft(0L)(math.max) + 1
     val p = new Path(root, s"_derived.$v.json")
-    def lost(e: Throwable): Nothing =
+    def lost(): Nothing =
       throw new java.util.ConcurrentModificationException(
         s"derived commit at $location lost the version-$v create — a " +
-          "concurrent deriveTo is writing the same location", e)
+          "concurrent deriveTo is writing the same location")
     val bytes = render(recordFiles(fs, root, location, versions, st))
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if (fs.getScheme == "file") {
-      try {
-        java.nio.file.Files.write(java.nio.file.Paths.get(p.toUri.getPath),
-          bytes, java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        ()
-      } catch { case e: java.nio.file.FileAlreadyExistsException => lost(e) }
-    } else if (
-      try fs.hasPathCapability(p, graft.Lake.conditionalCreateKey)
-      catch { case scala.util.control.NonFatal(_) => false }) {
-      // conditional (If-None-Match) create where the store advertises
-      // it (s3a on Hadoop 3.4.x+): the version allocation becomes
-      // EXACT on object stores — two racing deriveTo commits can no
-      // longer both "win" the same version inside the PUT window.
-      // This path matters more here than on the lake (which has a
-      // writer lock in front): derived commits are deliberately
-      // lockless, arbitrated only by this create.
-      val b = fs.createFile(p)
-      b.overwrite(false)
-      b.must(graft.Lake.conditionalCreateKey, true)
-      val out =
-        try b.build().asInstanceOf[org.apache.hadoop.fs.FSDataOutputStream]
-        catch {
-          case e: org.apache.hadoop.fs.FileAlreadyExistsException => lost(e)
-          case e: java.io.IOException if fs.exists(p) => lost(e)
-        }
-      try {
-        out.write(bytes)
-        out.close() // the conditional PUT commits HERE
-      } catch {
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException => lost(e)
-      }
-    } else {
-      val out =
-        try fs.create(p, false)
-        catch {
-          case e: org.apache.hadoop.fs.FileAlreadyExistsException => lost(e)
-          case e: java.io.IOException if fs.exists(p) => lost(e)
-        }
-      try out.write(bytes) finally out.close()
-    }
+    // exclusive create, If-None-Match where the store advertises it:
+    // derived commits are deliberately lockless, arbitrated only by this
+    // create, so two racing deriveTo commits can never both win a version
+    if (!graft.Lake.createIfAbsent(fs, p, bytes)) lost()
     v
   }
 

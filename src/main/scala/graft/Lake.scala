@@ -642,76 +642,12 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val payload =
       s"""{"op": "$op", "taken_at": "${java.time.Instant.now()}", "holder": "$token"}"""
         .getBytes("UTF-8")
-    // ACQUIRE — with the platform's atomic exclusive create where one
-    // exists. Hadoop's LOCAL create(overwrite=false) is check-then-act
-    // (RawLocalFileSystem tests existence, then opens a truncating
-    // stream), so two writers landing in the window both "create": the
-    // second TRUNCATES the first's just-written lock, and if the
-    // first's verify-after-write read ran before the truncation, BOTH
-    // proceed — observed as two DML commits rewriting one generation
-    // concurrently (the loser's sanity-abort then deleted the winner's
-    // committed tree: the full lost-update sequence). POSIX
-    // open(O_CREAT|O_EXCL) via NIO CREATE_NEW closes the window
-    // outright on file:// filesystems; HDFS's create(overwrite=false)
-    // is atomic at the namenode already; plain-PUT object stores keep
-    // the verify-after-write mitigation below (the documented lock
-    // residual).
-    if (fs.getScheme == "file") {
-      val p = java.nio.file.Paths.get(lock.toUri.getPath)
-      try {
-        java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p, payload,
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        ()
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          contention(new java.io.IOException("lock file present", e))
-      }
-    } else if (conditionalCreate(fs, lock)) {
-      // CONDITIONAL CREATE (Hadoop 3.4.2+, HADOOP-19256): the store
-      // itself arbitrates with an If-None-Match PUT — the create
-      // commits at close() and FAILS there if any rival object landed
-      // first, closing the plain-PUT interleave window exactly. s3a
-      // advertises the capability when fs.s3a.create.conditional.enabled
-      // (default true); the builder option is rejected by stores that
-      // don't, which is why this path is capability-gated.
-      val b = fs.createFile(lock)
-      b.overwrite(false)
-      b.must(Lake.conditionalCreateKey, true)
-      val out =
-        try b.build().asInstanceOf[org.apache.hadoop.fs.FSDataOutputStream]
-        catch {
-          case e: org.apache.hadoop.fs.FileAlreadyExistsException => contention(e)
-          case e: java.io.IOException if fs.exists(lock) => contention(e)
-        }
-      try {
-        out.write(payload)
-        out.close() // the conditional PUT commits HERE
-      } catch {
-        // s3a surfaces a failed precondition at close as
-        // RemoteFileChangedException (an IOException subclass); a lock
-        // now on disk that is not ours is contention, anything else
-        // (network, quota) surfaces as itself
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException => contention(e)
-        case e: java.io.IOException
-            if !lockHolder(fs, lock).exists(_.contains(token)) => contention(e)
-      }
-    } else {
-      val out =
-        try fs.create(lock, false)
-        catch {
-          // only a genuinely-held lock is contention; any other
-          // IOException (permission, quota, network) must surface as
-          // itself — mapping it to "lock is held" would steer the
-          // operator toward force-vacuum, which could then delete a lock
-          // a LIVE writer actually holds
-          case e: org.apache.hadoop.fs.FileAlreadyExistsException => contention(e)
-          case e: java.io.IOException if fs.exists(lock) => contention(e)
-        }
-      out.write(payload)
-      out.close()
-    }
+    // ACQUIRE with the store's exclusive create ([[Lake.createIfAbsent]]):
+    // exact on file:// (O_EXCL), HDFS and conditional-create stores;
+    // plain-PUT stores keep the verify-after-write mitigation below (the
+    // documented lock residual)
+    if (!Lake.createIfAbsent(fs, lock, payload))
+      contention(new java.io.IOException("lock file present"))
     try {
       // verify-after-write: the lease survives only if OUR token is
       // what the store now serves (see scaladoc: object-store race).
@@ -812,16 +748,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     try Some(ControlFiles.readControlFile(fs, lock)).filter(_.nonEmpty)
     catch { case _: Throwable => None }
 
-  /** Whether the store advertises conditional (If-None-Match) create
-    * for this path — the probe that picks the exact object-store lock
-    * acquisition over the verify-after-write fallback. A store that
-    * cannot answer (old client, RPC error) answers no: the fallback is
-    * always safe, merely weaker. */
-  private def conditionalCreate(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Boolean =
-    try fs.hasPathCapability(p, Lake.conditionalCreateKey)
-    catch { case scala.util.control.NonFatal(_) => false }
-
   /** Path of generation `g`'s subtree under the root. */
   private def genPath(g: Long): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(cfg.location, s"gen-$g")
@@ -902,17 +828,17 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   /** The data files the sidecar's FILE-level manifest records for `st`,
     * per (escaped-dir, generation) entry, as QUALIFIED statuses — the
     * exact values a listing returns, so a served path and a listed one
-    * compare equal. Pure: no I/O. Serves a current-generation entry only
-    * when the state records that generation ([[LakeState.genRecorded]]);
-    * otherwise that tree is live by rule and only a listing is truthful
-    * for it. */
+    * compare equal — less the ones `st` knows are lost. Pure: no I/O.
+    * Serves a current-generation entry only when the state records that
+    * generation ([[LakeState.genRecorded]]); otherwise that tree is live
+    * by rule and only a listing is truthful for it. */
   private def recordedFiles(st: LakeState)
       : Map[(String, Long), Seq[org.apache.hadoop.fs.FileStatus]] = {
     val fs = fsOfRoot
     st.liveFiles.collect { case (e @ (d, g), fl)
         if g != st.generation || st.genRecorded =>
       val dir = fs.makeQualified(new org.apache.hadoop.fs.Path(genPath(g), d))
-      e -> fl.map(f =>
+      e -> fl.filterNot(f => st.lost((e, f.name))).map(f =>
         graft.sources.GraftManifestFileIndex.status(dir, f.name, f.len, f.mod))
     }
   }
@@ -988,16 +914,26 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       s"refusing batch ingest at ${cfg.location}: the current generation " +
         "is a streaming sink (its _spark_metadata manifest would not " +
         "name the appended files, hiding them from every read)")
-    val gen = genPath(st.generation)
+    // files are written only into a generation the newest sidecar
+    // records: a state whose current generation still resolves by
+    // listing (no sidecar yet, or one written before appends committed
+    // through it) first commits that tree as it stands. A listing is
+    // committed only if no version was created since it was taken, and
+    // every append creates one before it writes, so no listing ever
+    // records another append's files, finished or half-written.
+    val base =
+      if (st.genRecorded || st.isSealed) st
+      else commitAppend(fs, st)(editGenFiles(fs, _)(identity))
+    val gen = genPath(base.generation)
     val written = LakeWriter.write(byPartition(derived), gen, Some(partCol),
       cfg.codec, fileTag.fold("")(t => s"sink-$t-"))
     val byDir = written.groupBy(_.dir).map { case (d, ws) => d -> ws.map(_.file) }
-    // adding a file the base already names is a no-op: a retried commit
-    // may re-apply this to a version that already holds the batch
-    val committed = commitAppend(fs, st)(editGenFiles(fs, _)(cur =>
+    // this append's own status of each of its files wins: a retried
+    // commit may re-apply this to a version that already holds the batch
+    val committed = commitAppend(fs, base)(editGenFiles(fs, _)(cur =>
       byDir.foldLeft(cur) { case (m, (d, fl)) =>
-        val had = m.getOrElse(d, Nil)
-        m.updated(d, had ++ fl.filterNot(f => had.exists(_.name == f.name)))
+        val names = fl.map(_.name).toSet
+        m.updated(d, m.getOrElse(d, Nil).filterNot(h => names(h.name)) ++ fl)
       }))
     Lake.Appended(byDir.keySet.map(dirValue),
       written.map(w => new org.apache.hadoop.fs.Path(
@@ -5310,7 +5246,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         case _ => ()
       }
     }
-    sweepUnnamed(fs, st)
+    sweepUnnamed(fs, entries, st)
     if (commits.nonEmpty) {
       val latest = commits.map(_._1).max
       commits.filter { case (v, mt, _) =>
@@ -5325,21 +5261,43 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     removed
   }
 
-  /** Delete the data files no sidecar names, in the directories whose
-    * file lists `st` records: a crashed append's files, a torn sink
-    * attempt's. They are invisible to every read, and they were never
-    * named by any version: a recorded directory only ever gains named
-    * files while current, and its list is frozen when the generation
-    * rolls. The current generation's tree, when recorded, is listed
-    * whole, so a directory holding only unnamed files is swept too.
-    * Runs under the exclusive lock, which excludes every in-flight
-    * append. One LIST per recorded directory; the files are not counted
-    * in [[vacuum]]'s result, which counts trees, sidecars and locks. */
+  /** Delete the data files no sidecar names: a crashed append's files,
+    * a torn sink attempt's. They are invisible to every read, and they
+    * only ever appear in the tree of the generation that is current when
+    * they are written (appends and sink attempts write nowhere else; a
+    * rewrite's tree is named whole or swept whole as dead). So a sweep
+    * run while generation g is current leaves a `_swept.<g>` marker, and
+    * the next one looks only at the recorded directories of g and later
+    * generations: a lake that did not roll its generation since pays one
+    * LIST of the current tree plus one per current directory, however
+    * many older directories it holds. Without a marker (the first sweep)
+    * every recorded directory is looked at. Runs under the exclusive
+    * lock, which excludes every in-flight append; `entries` is the root
+    * listing the sweep took. The files are not counted in [[vacuum]]'s
+    * result, which counts trees, sidecars and locks. */
   private def sweepUnnamed(fs: org.apache.hadoop.fs.FileSystem,
-      st: LakeState): Unit = {
-    val named = recordedFiles(st)
+      entries: Seq[org.apache.hadoop.fs.FileStatus], st: LakeState): Unit = {
+    val marks = entries.flatMap(s => s.getPath.getName match {
+      case Lake.sweptRe(g) if s.isFile => Some(g.toLong -> s.getPath)
+      case _ => None
+    })
+    unnamedFiles(fs, st, marks.map(_._1).maxOption.getOrElse(Long.MinValue))
+      .foreach(f => fs.delete(f.getPath, false))
+    if (!marks.exists(_._1 == st.generation))
+      fs.create(new org.apache.hadoop.fs.Path(cfg.location,
+        s"_swept.${st.generation}"), true).close()
+    marks.filter(_._1 != st.generation).foreach(m => fs.delete(m._2, false))
+  }
+
+  /** The data files no sidecar names in the recorded directories of
+    * generations `fromGen` and later. The current generation's tree,
+    * when recorded, is listed whole, so a directory holding only unnamed
+    * files counts too. One LIST per directory, on the listing pool. */
+  private def unnamedFiles(fs: org.apache.hadoop.fs.FileSystem,
+      st: LakeState, fromGen: Long): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val named = recordedFiles(st).filter(_._1._2 >= fromGen)
     val current =
-      if (!st.genRecorded) Nil
+      if (!st.genRecorded || st.generation < fromGen) Nil
       else try fs.listStatus(genPath(st.generation)).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.contains("="))
         .map(_.getPath.getName -> st.generation)
@@ -5349,7 +5307,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       try dataFilesIn(fs, new org.apache.hadoop.fs.Path(genPath(g), d))
         .filterNot(f => keep(f.getPath.getName))
       catch { case _: java.io.FileNotFoundException => Nil }
-    }.flatten.foreach(f => fs.delete(f.getPath, false))
+    }.flatten
   }
 
   /** Crash RECOVERY — in layout v2, a one-liner by construction: every
@@ -5382,7 +5340,12 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     *    `cfg.dim` (a foreign file with wrong-dimension vectors — the
     *    session-vs-sidecar dim mismatch is already refused at read by
     *    the routing check, so what this catches is wrong-dim DATA
-    *    under a correct config; a null vector also lands here).
+    *    under a correct config; a null vector also lands here);
+    *  - `missing_files`: files the state names that are gone from the
+    *    store (an out-of-band move or delete), found by the footer sweep
+    *    with no listing; the audit reads the rest. Data files no sidecar
+    *    names (a crashed append's, a foreign writer's) are not part of
+    *    the lake: never read as rows, and [[vacuum]] deletes them.
     *
     * All checks are map-side expressions into one aggregate; at 100 TB
     * this costs exactly one full scan, the floor for any audit that
@@ -5547,29 +5510,37 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // ONE state read serves the audited rows and every driver-side audit
     // input below (skew, reshard state, drift, the stored-column set,
     // the extras) — one snapshot, and one remote GET on an object store
-    val (fs, entries, auditState) = resolveState()
-    requireRouting(auditState)
+    val (fs, entries, resolved) = resolveState()
+    requireRouting(resolved)
+    // FOOTER audit (round 11): the O(live files) footer sweep that used
+    // to run on EVERY read now runs only here, where an audit-priced
+    // pass belongs. One resolution of the live files feeds it, on the
+    // listing pool, and it answers two questions: which data columns any
+    // live manifest-governed file carries beyond the declared stored set
+    // (an out-of-contract foreign write; the pinned-schema read serves
+    // such a file null-padded/projected instead of failing), and which
+    // named files are gone from the store (an out-of-band move or
+    // delete) — those are counted and left out of every audit below.
+    // Other unreadable footers surface as the read error they are.
+    val resolvedFiles = resolveFiles(fs, resolved, liveEntries(resolved), "shard files")
+    val footers = mapDirsPooled(resolvedFiles.flatMap { case (e, fl) => fl.map(e -> _) }) {
+      case (e, f) => (e, f.getPath.getName,
+        try Some(footerOf(f).getFileMetaData.getSchema.getFields.asScala.map(_.getName))
+        catch { case _: java.io.FileNotFoundException => None })
+    }
+    val missing = footers.collect { case (e, n, None) => (e, n) }.toSet
+    val auditState = resolved.copy(lost = missing)
     val df = readFrom(auditState, entries)
-    // one resolution of the live files serves skew, drift and skip-index
-    // staleness
-    val files = liveShardFiles(fs, auditState)
+    // the same files serve skew and skip-index staleness
+    val files = byShard(resolvedFiles.map { case (e, fl) =>
+      e -> fl.filterNot(f => missing((e, f.getPath.getName))) })
     val skew = shardSkewStats(files)
     val pendingDirs = auditState.reshard.map(_.pending.size.toLong).getOrElse(0L)
-    // FOOTER-DRIFT audit (round 11): the O(live files) footer sweep
-    // that used to run on EVERY read now runs only here, where an
-    // audit-priced pass belongs — count data columns any live
-    // manifest-governed file carries beyond the declared stored set
-    // (an out-of-contract foreign write; the pinned-schema read
-    // serves such a file null-padded/projected instead of failing).
-    // The footers are read from the resolved statuses on the listing
-    // pool. -1 = no live files to audit; unreadable footers surface as
-    // the read error they are.
+    // -1 = no live files to audit
     val driftCols: Long =
       if (files.values.forall(_.isEmpty)) -1L
       else {
-        val stored = mapDirsPooled(files.values.flatten.toSeq)(f =>
-          footerOf(f).getFileMetaData.getSchema.getFields.asScala.map(_.getName))
-          .flatten.map(_.toLowerCase).toSet
+        val stored = footers.flatMap(_._3).flatten.map(_.toLowerCase).toSet
         val declared = (storedColsOf(auditState) :+ partCol)
           .map(_.toLowerCase).toSet
         (stored -- declared).size.toLong
@@ -5629,6 +5600,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       .withColumn("reshard_recommended",
         lit(pendingDirs == 0L && skew.exists(_._1 > targetShardBytes)))
       .withColumn("drift_cols", lit(driftCols))
+      .withColumn("missing_files", lit(missing.size.toLong))
   }
 
   /** Test/tooling hook: the current generation's subtree path (appends
@@ -5855,12 +5827,12 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * the next sidecar version — the version that names the append's
     * files is its commit point. Appends share the gate, so two can race
     * for one version: the version create is create-if-absent
-    * ([[createVersion]]), and the loser re-reads the newest version,
-    * applies `edit` to it again and retries, so no append's files are
-    * lost. A newest version that does not decode yet may be a rival's
-    * commit still landing (a store without an atomic create shows the
-    * object before its body): the loop waits a little for it before
-    * treating it as torn. Maintenance is excluded while the gate is held,
+    * ([[Lake.createIfAbsent]]), and the loser re-reads the newest
+    * version, applies `edit` to it again and retries, so no append's
+    * files are lost. A newest version that does not decode yet may be a
+    * rival's commit still landing (an exclusive create shows the file
+    * before its whole body everywhere but on object stores): the loop
+    * waits a little for it before treating it as torn. Maintenance is excluded while the gate is held,
     * so the generation cannot move under the loop. `st` is the state the
     * caller resolved; returns the committed state. */
   private def commitAppend(fs: org.apache.hadoop.fs.FileSystem,
@@ -5933,7 +5905,9 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     }
     val json = ControlFiles.encode(ControlFiles.LakeSidecar.of(
       st, cfg, numShards, sealedCommit, genHasData, files))
-    if (!createVersion(fs, v, json.getBytes("UTF-8"))) return false
+    if (!Lake.createIfAbsent(fs,
+        new org.apache.hadoop.fs.Path(cfg.location, s"_meta.$v.json"),
+        json.getBytes("UTF-8"))) return false
     sealedCache.put(v, sealedCommit) // the rotation never re-reads our own
     // sweep far-superseded versions; keep a few for in-flight readers.
     // SEALED versions are exempt: they are the change-feed's sync
@@ -5951,89 +5925,17 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           try stateOfSidecar(fs, p).isSealed
           catch { case scala.util.control.NonFatal(_) => true }) }
       .foreach(p => fs.delete(p._2, false))
-    // stranded publish bodies (a JVM that died between writing the body
-    // and linking it) are inert — no regex matches them — but sweep the
-    // old ones anyway (from the already-taken listing); age-gated so no
-    // live writer's in-flight tmp is hit
+    // stranded publish bodies (writers before the exclusive version
+    // create staged each body as `_meta.tmp.*` and renamed it into
+    // place; a JVM that died in between left it) are inert — no regex
+    // matches them — but sweep the old ones anyway (from the
+    // already-taken listing); age-gated
     try entries.foreach { s =>
       if (s.isFile && s.getPath.getName.startsWith("_meta.tmp.") &&
           System.currentTimeMillis() - s.getModificationTime > 3600000L)
         fs.delete(s.getPath, false)
     } catch { case scala.util.control.NonFatal(_) => () }
     true
-  }
-
-  /** Create `_meta.<v>.json` holding `body` only if no version `v`
-    * exists — true when this call created it. Every store gets a true
-    * create-if-absent, and where it can, one that never shows the
-    * version before its whole body:
-    *  - `file:` writes the body to a root-sibling tmp (a name no
-    *    discovery regex matches) and hard-links it to the version name —
-    *    link(2) refuses an existing name — falling back to an O_EXCL
-    *    create where links are unsupported;
-    *  - HDFS renames such a tmp into place: its rename refuses an
-    *    existing destination;
-    *  - a store that advertises conditional create (s3a, see
-    *    [[Lake.conditionalCreateKey]]) puts with If-None-Match, arbitrated
-    *    by the store at close;
-    *  - any other store gets `create(overwrite = false)`. There a reader
-    *    can catch the new version before its body lands; it then serves
-    *    the previous version ([[ControlFiles.newestParseable]]), and an
-    *    appender waits for it ([[commitAppend]]). On a plain-PUT store
-    *    whose exclusive create is a blind PUT, two racing appends can
-    *    both "create" one version and the earlier one's files are lost
-    *    from the manifest — the documented residual such stores share
-    *    with the writer lock. */
-  private def createVersion(fs: org.apache.hadoop.fs.FileSystem, v: Long,
-      body: Array[Byte]): Boolean = {
-    val dst = new org.apache.hadoop.fs.Path(cfg.location, s"_meta.$v.json")
-    val tmpName = s"_meta.tmp.${java.util.UUID.randomUUID().toString.take(12)}"
-    if (fs.getScheme == "file") {
-      import java.nio.file.{Files, StandardOpenOption => O}
-      val d = java.nio.file.Paths.get(dst.toUri.getPath)
-      Files.createDirectories(d.getParent)
-      val tmp = d.resolveSibling(tmpName)
-      Files.write(tmp, body, O.CREATE_NEW, O.WRITE)
-      try {
-        try { Files.createLink(d, tmp); true }
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-          case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-            try { Files.write(d, body, O.CREATE_NEW, O.WRITE); true }
-            catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        }
-      } finally Files.deleteIfExists(tmp)
-    } else if (fs.getScheme == "hdfs") {
-      val tmp = new org.apache.hadoop.fs.Path(cfg.location, tmpName)
-      val out = fs.create(tmp, true)
-      try out.write(body) finally out.close()
-      try fs.rename(tmp, dst)
-      finally if (fs.exists(tmp)) fs.delete(tmp, false)
-    } else if (conditionalCreate(fs, dst)) {
-      val b = fs.createFile(dst)
-      b.overwrite(false)
-      b.must(Lake.conditionalCreateKey, true)
-      val out =
-        try b.build().asInstanceOf[org.apache.hadoop.fs.FSDataOutputStream]
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
-          case e: java.io.IOException => if (fs.exists(dst)) return false else throw e
-        }
-      try { out.write(body); out.close(); true } // the conditional PUT commits at close
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case e: java.io.IOException => if (fs.exists(dst)) false else throw e
-      }
-    } else {
-      val out =
-        try fs.create(dst, false)
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
-          case e: java.io.IOException => if (fs.exists(dst)) return false else throw e
-        }
-      try out.write(body) finally out.close()
-      true
-    }
   }
 
   /** Version → isSealed memo for the rotation exemption above (a
@@ -6222,6 +6124,60 @@ object Lake {
     * the s3a jar on the classpath. */
   private[graft] val conditionalCreateKey: String =
     "fs.option.create.conditional.overwrite"
+
+  /** `_swept.<g>`: the last sweep of unnamed files ran while generation
+    * g was current ([[Lake.vacuum]]). */
+  private[graft] val sweptRe = """_swept\.(\d+)""".r
+
+  /** Create `p` holding `body` only if nothing is there: true when this
+    * call created it, false when the path was taken. The one exclusive
+    * create behind the writer lock, every sidecar version and every
+    * derived-table version:
+    *  - `file:` opens with O_CREAT|O_EXCL (NIO `CREATE_NEW`): Hadoop's
+    *    local `create(overwrite = false)` is check-then-act, so two
+    *    writers in its window would both "create" and the second would
+    *    truncate the first's body;
+    *  - a store that advertises conditional create (s3a, see
+    *    [[conditionalCreateKey]]) PUTs with If-None-Match, which the
+    *    store arbitrates at close;
+    *  - any other store gets `create(overwrite = false)`: atomic at the
+    *    HDFS namenode, a blind PUT on a plain object store (the residual
+    *    each caller documents).
+    * Only a create that lost to an existing path answers false; any
+    * other IOException (quota, permission, network) surfaces as itself.
+    * Outside object stores a reader can see the file before its whole
+    * body; every caller's reader treats an undecodable newest file as
+    * not there yet. */
+  private[graft] def createIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, body: Array[Byte]): Boolean = {
+    if (fs.getScheme == "file") {
+      import java.nio.file.{Files, StandardOpenOption => O}
+      val f = java.nio.file.Paths.get(p.toUri.getPath)
+      Files.createDirectories(f.getParent)
+      try { Files.write(f, body, O.CREATE_NEW, O.WRITE); return true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => return false }
+    }
+    val conditional =
+      try fs.hasPathCapability(p, conditionalCreateKey)
+      catch { case scala.util.control.NonFatal(_) => false }
+    val out =
+      try {
+        if (conditional) {
+          val b = fs.createFile(p)
+          b.overwrite(false)
+          b.must(conditionalCreateKey, true)
+          b.build().asInstanceOf[org.apache.hadoop.fs.FSDataOutputStream]
+        } else fs.create(p, false)
+      } catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
+        case e: java.io.IOException => if (fs.exists(p)) return false else throw e
+      }
+    try { out.write(body); out.close(); true } // a conditional PUT commits at close
+    catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      case e: java.io.IOException => if (conditional && fs.exists(p)) false else throw e
+    }
+  }
 
   /** What one [[Lake.maintain]] call actually ran — all-zero/false on
     * a converged lake. */
@@ -6416,7 +6372,10 @@ object Lake {
     * lake; false for states decoded from sidecars written before this
     * (and for a stream-owned generation), whose current tree is live by
     * listing. `version` is the sidecar version the state was decoded
-    * from (0 when none): an append commits `version + 1`. */
+    * from (0 when none): an append commits `version + 1`. `lost` names
+    * (entry, file name) pairs the resolver leaves out: named files found
+    * gone from the store, set only on [[Lake.validate]]'s audit view and
+    * never committed. */
   private[graft] final case class LakeState(
       generation: Long, live: Seq[(String, Long)],
       genHasData: Option[Boolean] = None,
@@ -6428,7 +6387,8 @@ object Lake {
       liveFiles: Map[(String, Long), Seq[LiveFile]] = Map.empty,
       config: Option[SidecarConfig] = None,
       genRecorded: Boolean = false,
-      version: Long = 0L)
+      version: Long = 0L,
+      lost: Set[((String, Long), String)] = Set.empty)
 
   /** The writer config a sidecar records beside the live set: what
     * routing/compression guards check a session against and what the

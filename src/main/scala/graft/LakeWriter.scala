@@ -66,12 +66,14 @@ private[graft] object LakeWriter {
   }
 
   /** The commit protocol: files go straight to their final names; a
-    * task commit stats each of its files (executor side, in parallel
-    * across tasks) and returns them; the driver collects them as each
-    * task commits, so a job abort can delete every file a committed task
+    * task commit, once the driver's commit coordinator authorizes the
+    * attempt, stats each of its files (executor side, in parallel across
+    * tasks) and returns them; the driver collects them as each task
+    * commits, so a job abort can delete every file a committed task
     * wrote, and job commit has nothing left to do — the caller's sidecar
     * version is the commit. Task attempts write distinct names, so a
-    * retried or speculative attempt never overwrites another's file. */
+    * retried or speculative attempt never overwrites another's file, and
+    * an attempt the coordinator denies deletes its own. */
   private final class Protocol(jobId: String, root: String, prefix: String)
       extends FileCommitProtocol with Serializable {
 
@@ -116,6 +118,11 @@ private[graft] object LakeWriter {
         "lake writes have no custom partition locations")
 
     override def commitTask(taskContext: TaskAttemptContext): TaskCommitMessage = {
+      // only the attempt the driver authorizes reports its files; a
+      // denied one (a speculative copy, a retry of a task whose commit
+      // already ran) deletes them, so no task's rows sit in a second
+      // file at a final name
+      org.apache.spark.sql.GraftShims.authorizeTaskCommit(abortTask(taskContext))
       val conf = taskContext.getConfiguration
       new TaskCommitMessage(taskFiles.map { case (d, p) =>
         Written(d, LiveFile.of(p.getFileSystem(conf).getFileStatus(p)))
@@ -123,10 +130,15 @@ private[graft] object LakeWriter {
     }
 
     override def abortTask(taskContext: TaskAttemptContext): Unit = {
-      val conf = taskContext.getConfiguration
-      taskFiles.foreach { case (_, p) =>
-        try p.getFileSystem(conf).delete(p, false)
-        catch { case scala.util.control.NonFatal(_) => () }
+      val fs = new Path(root).getFileSystem(taskContext.getConfiguration)
+      def quietly(f: => Any): Unit =
+        try { f; () } catch { case scala.util.control.NonFatal(_) => () }
+      taskFiles.foreach { case (_, p) => quietly(fs.delete(p, false)) }
+      // and the directories its files opened, once empty: an attempt a
+      // failed job has not stopped yet can open a file after the caller
+      // deleted the tree, and aborting is the last thing it does
+      (taskFiles.map(_._2.getParent).distinct :+ new Path(root)).foreach { d =>
+        quietly(if (fs.listStatus(d).isEmpty) fs.delete(d, false))
       }
     }
 

@@ -40,6 +40,28 @@ object GraftShims {
       cdf.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
+  /** Ask the driver's output-commit coordinator whether this task
+    * attempt may commit its files: of a task's attempts (a retry, a
+    * speculative copy) it authorizes one, the arbitration Spark's own
+    * file committers get from `SparkHadoopMapRedUtil.commitTask`. A
+    * denied attempt runs `onDenied` (deleting its files) and throws
+    * `CommitDeniedException`, which the scheduler counts as a denied
+    * commit, not a task failure. Both the coordinator and the exception
+    * are `private[spark]`; [[graft.LakeWriter]] is the caller. */
+  def authorizeTaskCommit(onDenied: => Unit): Unit = {
+    val ctx = org.apache.spark.TaskContext.get()
+    if (!org.apache.spark.SparkEnv.get.outputCommitCoordinator.canCommit(
+        ctx.stageId(), ctx.stageAttemptNumber(), ctx.partitionId(),
+        ctx.attemptNumber())) {
+      onDenied
+      throw new org.apache.spark.executor.CommitDeniedException(
+        s"attempt ${ctx.attemptNumber()} of task ${ctx.partitionId()} in " +
+          s"stage ${ctx.stageId()}.${ctx.stageAttemptNumber()} was not " +
+          "authorized to commit its files",
+        ctx.stageId(), ctx.partitionId(), ctx.attemptNumber())
+    }
+  }
+
   /** Driver-side twin of the `xxhash64(string)` SQL function (seed 42) —
     * what `BloomFilterAggregate` stored via [[graft.operators.BloomJoin]],
     * so a handful of ids can be tested against collected sketches

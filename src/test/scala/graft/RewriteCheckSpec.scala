@@ -9,10 +9,16 @@ object DropPartFs {
     * rewrite writing its new generation) is silently lost: the store
     * acknowledges the write, the file never shows. */
   @volatile var armed: Boolean = false
+
+  /** When set, the next part file written inside a generation tree is
+    * silently replaced, once closed, by these bytes: a valid parquet
+    * file with fewer rows, so the write succeeds and only the rows come
+    * up short. */
+  @volatile var shortPart: Option[Array[Byte]] = None
 }
 
-/** [[BucketFs]] that silently drops one written part file of a rewrite:
-  * the store acknowledged the write, the file never shows. */
+/** [[BucketFs]] that silently loses, or silently shortens, one written
+  * part file of a rewrite. */
 class DropPartFs extends BucketFs {
   override def getScheme: String = "droppart"
   override def getUri: URI = URI.create("droppart:///")
@@ -20,23 +26,44 @@ class DropPartFs extends BucketFs {
       replication: Short, blockSize: Long,
       progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
     val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-    if (DropPartFs.armed && f.toString.matches(".*/gen-\\d+/.*\\.parquet")) {
-      DropPartFs.armed = false
-      val self = this
+    // Some(Some(bytes)): shorten this file; Some(None): lose it
+    val fault =
+      if (!f.toString.matches(".*/gen-\\d+/.*\\.parquet")) None
+      else DropPartFs.synchronized {
+        val hit =
+          if (DropPartFs.shortPart.isDefined) Some(DropPartFs.shortPart)
+          else if (DropPartFs.armed) Some(None)
+          else None
+        DropPartFs.armed = false
+        DropPartFs.shortPart = None
+        hit
+      }
+    val self = this
+    fault.fold(out) { short =>
       new org.apache.hadoop.fs.FSDataOutputStream(
         new java.io.FilterOutputStream(out) {
           override def write(b: Array[Byte], off: Int, len: Int): Unit =
             out.write(b, off, len)
-          override def close(): Unit = { out.close(); self.delete(f, false); () }
+          override def close(): Unit = {
+            out.close()
+            short match {
+              case Some(bytes) =>
+                val o = self.create(f, true)
+                try o.write(bytes) finally o.close()
+              case None => self.delete(f, false)
+            }
+            ()
+          }
         }, null)
-    } else out
+    }
   }
 }
 
 /** The post-write row check of every rewrite (row-level writes,
-  * compaction, reshard steps) keeps its strength: a committed part file
-  * that goes missing aborts the op before its commit, the live state
-  * stays as it was, and the unreferenced tree is removed. */
+  * compaction, reshard steps) keeps its strength: a written part file
+  * whose rows come up short, or that never shows, aborts the op before
+  * its commit, the live state stays as it was, and the unreferenced tree
+  * is removed. */
 class RewriteCheckSpec extends SparkSpec {
   import spark.implicits._
 
@@ -61,14 +88,32 @@ class RewriteCheckSpec extends SparkSpec {
       .listStatus(root).map(_.getPath.getName).filter(_.startsWith("gen-")).toSet
   }
 
+  /** A valid parquet file holding no rows. */
+  private lazy val emptyPart: Array[Byte] = {
+    val d = java.nio.file.Files.createTempDirectory("graft_emptypart").toString + "/p"
+    spark.range(0).toDF("x").coalesce(1).write.parquet(d)
+    val f = new java.io.File(d).listFiles().find(_.getName.endsWith(".parquet"))
+    assert(f.isDefined, "an empty frame writes one schema-only part file")
+    java.nio.file.Files.readAllBytes(f.get.toPath)
+  }
+
+  /** `op` aborts twice, leaving the lake as it was each time: first when
+    * a written part file is shortened to no rows (the post-write row
+    * check), then when one never shows (the write itself fails). */
   private def aborts(l: Lake)(op: => Any): Unit = {
     val before = rows(l)
     val trees = gens(l)
-    DropPartFs.armed = true
-    val e = try intercept[Exception](op) finally DropPartFs.armed = false
-    assert(e.getMessage.matches("(?s)partition rewrite \\(.+\\) aborted.*"), e.getMessage)
-    assert(rows(l) === before, "an aborted rewrite must leave the live rows as they were")
-    assert(gens(l) === trees, "an aborted rewrite must remove its unreferenced tree")
+    def once(why: String)(arm: => Unit): Unit = {
+      arm
+      val e = try intercept[Exception](op)
+        finally { DropPartFs.armed = false; DropPartFs.shortPart = None }
+      assert(e.getMessage.matches(
+        s"(?s)partition rewrite \\(.+\\) aborted: $why.*"), e.getMessage)
+      assert(rows(l) === before, "an aborted rewrite must leave the live rows as they were")
+      assert(gens(l) === trees, "an aborted rewrite must remove its unreferenced tree")
+    }
+    once("wrote \\d+ rows, expected \\d+")(DropPartFs.shortPart = Some(emptyPart))
+    once("write failed")(DropPartFs.armed = true)
   }
 
   test("upsert aborts when a committed part file goes missing") {

@@ -31,6 +31,42 @@ class RacingBucketFs extends BucketFs {
   }
 }
 
+object GateFs {
+  val armed = new AtomicBoolean(false)
+  @volatile var started = new CountDownLatch(1)
+  @volatile var release = new CountDownLatch(1)
+}
+
+/** [[BucketFs]] that, when armed, stops the next data file written in a
+  * generation tree half-written until released: its leading magic bytes
+  * are on disk, its row groups and footer are not — an append caught in
+  * the middle of writing its files at their final names. */
+class GateFs extends BucketFs {
+  override def getScheme: String = "gatefs"
+  override def getUri: java.net.URI = java.net.URI.create("gatefs:///")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    val raw = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    if (!f.toString.matches(".*/gen-\\d+/.*\\.parquet")) raw
+    else new org.apache.hadoop.fs.FSDataOutputStream(
+      new java.io.FilterOutputStream(raw) {
+        private var written = 0L
+        private def gate(): Unit =
+          if (written > 0 && GateFs.armed.compareAndSet(true, false)) {
+            raw.flush()
+            GateFs.started.countDown()
+            GateFs.release.await(120, TimeUnit.SECONDS)
+          }
+        override def write(b: Int): Unit = { gate(); raw.write(b); written += 1 }
+        override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+          gate(); raw.write(b, off, len); written += len
+        }
+        override def close(): Unit = raw.close()
+      }, null)
+  }
+}
+
 object AppendLatch {
   val armed = new AtomicBoolean(false)
   @volatile var started = new CountDownLatch(1)
@@ -175,5 +211,144 @@ class SidecarCommitSpec extends SparkSpec {
     assert(after.genRecorded.contains(true))
     assert(ids(Lake(spark, LakeConfig(loc, dim = 4, numHashes = 2)).read()) ===
       (0 until 55).map(i => s"r$i").toSet)
+  }
+
+  test("two appends racing on a sidecar written before appends committed through it both land in full; neither commits the other's files") {
+    spark.sparkContext.hadoopConfiguration.set("fs.gatefs.impl", classOf[GateFs].getName)
+    val loc = s"gatefs://${tmp("race_legacy")}/lake"
+    val lake = Lake(spark, LakeConfig(loc, dim = 4, numHashes = 2))
+    lake.ingest(rows(0, 10))
+    PreRecordingSidecar(spark, lake)
+    // the first append stops in its write, one of its data files at its
+    // final name and half-written
+    GateFs.started = new CountDownLatch(1)
+    GateFs.release = new CountDownLatch(1)
+    GateFs.armed.set(true)
+    val first = new Thread(() => lake.ingest(rows(10, 20)))
+    @volatile var failure: Throwable = null
+    first.setUncaughtExceptionHandler((_, e) => failure = e)
+    first.start()
+    var second = 0L
+    try {
+      assert(GateFs.started.await(120, TimeUnit.SECONDS))
+      val other = Lake(spark, LakeConfig(loc, dim = 4, numHashes = 2))
+      other.ingest(rows(20, 30))
+      second = other.currentVersion().get
+    } finally GateFs.release.countDown()
+    first.join(120000L)
+    assert(failure == null, s"the blocked append failed: $failure")
+    // the second append's commit names the rows that were there and its
+    // own, not the first append's file it could have listed half-written
+    assert(ids(lake.readAt(second)) ===
+      ((0 until 10) ++ (20 until 30)).map(i => s"r$i").toSet)
+    assert(ids(lake.read()) === (0 until 30).map(i => s"r$i").toSet)
+    // both versions name every file at its whole written length (a
+    // half-written file a listing took up would be named short)
+    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (v <- Seq(second, lake.currentVersion().get)) {
+      val named = ControlFiles.read[ControlFiles.LakeSidecar](fs,
+        new Path(loc, s"_meta.$v.json")).toState.liveFiles
+      assert(named.nonEmpty)
+      for (((d, g), fl) <- named; f <- fl)
+        assert(fs.getFileStatus(new Path(s"$loc/gen-$g/$d", f.name)).getLen === f.len,
+          s"version $v names $d/${f.name} at its written length")
+    }
+  }
+
+  test("validate on a recorded lake counts a moved named file as missing and audits the rest; vacuum deletes the moved copy") {
+    val loc = tmp("audit_moved") + "/lake"
+    val lake = Lake(spark, LakeConfig(loc, dim = 4, numHashes = 2))
+    lake.ingest(rows(0, 40))
+    assert(lake.validate().head().getAs[Long]("missing_files") === 0L)
+    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = lake.liveDirPaths().map(_._2).sortBy(_.getName)
+    assert(dirs.size > 1)
+    val src = fs.listStatus(dirs.head)
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).head.getPath
+    val moved = spark.read.parquet(src.toString).count()
+    val copy = new Path(dirs.last, "foreign-" + src.getName)
+    assert(fs.rename(src, copy))
+    val r = lake.validate().head()
+    assert(r.getAs[Long]("rows") === 40L - moved, "the rows of the named files still there")
+    assert(r.getAs[Long]("misrouted") === 0L, "the moved copy is not read as rows")
+    assert(r.getAs[Long]("missing_files") === 1L)
+    lake.vacuum()
+    assert(!fs.exists(copy), "no sidecar names the moved copy")
+  }
+
+  test("a foreign file in a recorded directory is not audited as rows, and vacuum deletes it") {
+    val loc = tmp("audit_foreign") + "/lake"
+    val lake = Lake(spark, LakeConfig(loc, dim = 4, numHashes = 2))
+    lake.ingest(rows(0, 40))
+    val dir = lake.liveDirPaths().head._2
+    // right columns, wrong dimension, one rogue column
+    Seq(("alien", Seq(1f, 2f, 3f), "wrong dim", 42L))
+      .toDF("id", "vector", "document", "rogue_col")
+      .write.mode("append").parquet(dir.toString)
+    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val r = lake.validate().head()
+    assert(r.getAs[Long]("rows") === 40L)
+    assert(r.getAs[Long]("bad_dim") === 0L)
+    assert(r.getAs[Long]("drift_cols") === 0L)
+    assert(r.getAs[Long]("missing_files") === 0L)
+    assert(!ids(lake.read()).contains("alien"))
+    val before = fs.listStatus(dir).count(_.getPath.getName.endsWith(".parquet"))
+    lake.vacuum()
+    assert(fs.listStatus(dir).count(_.getPath.getName.endsWith(".parquet")) === before - 1,
+      "vacuum deletes the one file no sidecar names")
+    assert(lake.read().count() === 40L)
+    assert(lake.validate().head().getAs[Long]("rows") === 40L)
+  }
+
+  test("vacuum looks for unnamed files only in generations current since its last sweep") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingListFs].getName)
+    val loc = s"countfs://${tmp("sweep_bound")}/lake"
+    val lake = Lake(spark, LakeConfig(loc, dim = 4, numHashes = 4))
+    // two sealed generations of 16-shard data, then a small current one
+    lake.ingest(rows(0, 200))
+    lake.seal()
+    lake.ingest(rows(200, 400))
+    lake.seal()
+    lake.ingest(rows(400, 403))
+    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val entries = lake.liveDirPaths()
+    val cur = new Path(lake.currentGenDir).getName
+    val old = entries.map(_._2).filterNot(_.getParent.getName == cur)
+    val current = entries.map(_._2).filter(_.getParent.getName == cur)
+    assert(old.size > 2 * current.size, s"${old.size} old, ${current.size} current")
+    def plant(dir: Path, name: String): Path = {
+      val p = new Path(dir, name)
+      fs.create(p).close()
+      p
+    }
+    def dataLists(op: => Any): Seq[String] = {
+      CountingListFs.listed.clear()
+      op
+      scala.jdk.CollectionConverters.IteratorHasAsScala(CountingListFs.listed.iterator())
+        .asScala.toSeq.filter(_.matches(".*/gen-\\d+(/.*)?"))
+    }
+    // no marker yet: every recorded directory is looked at
+    val stray = plant(old.head, "part-stray.parquet")
+    val first = dataLists(lake.vacuum())
+    assert(!fs.exists(stray))
+    assert(first.size >= old.size + current.size)
+    // since then the generation did not roll: only its tree is looked at
+    val torn = plant(current.head, "part-torn.parquet")
+    val second = dataLists(lake.vacuum())
+    assert(!fs.exists(torn))
+    assert(second.forall(_.contains(s"/$cur")), second)
+    assert(second.size === current.size + 1, second)
+    // a converged maintain tick pays the same bound; without the marker
+    // the same tick looks at every recorded directory again
+    val tick = dataLists(lake.maintain(retainMs = 0L))
+    fs.listStatus(new Path(loc)).filter(_.getPath.getName.startsWith("_swept."))
+      .foreach(m => fs.delete(m.getPath, false))
+    val unbounded = dataLists(lake.maintain(retainMs = 0L))
+    info(s"data-tree LISTs: first vacuum ${first.size}, second ${second.size}; " +
+      s"converged maintain tick ${tick.size}, ${unbounded.size} without the marker " +
+      s"(${old.size} old, ${current.size} current directories)")
+    assert(tick.size < unbounded.size)
+    assert(lake.read().count() === 403L)
   }
 }

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** SPARK-MAJOR CANARY for the engine's accepted internal/v1 surfaces
   * (docs/adr-streaming-extension-points.md): the netted change-feed
   * source and the exactly-once sink deliberately stay on the v1
-  * streaming extension points, and `GraftShims` opens four
-  * `private[sql]` doors. These are the FIRST things a Spark major
+  * streaming extension points, and `GraftShims` opens five
+  * `private[sql]`/`private[spark]` doors. These are the FIRST things a Spark major
   * bump breaks — this suite enumerates every touchpoint by
   * reflection so an upgrade fails ONE named test with the ADR's
   * migration notes attached, instead of forty suites with raw
@@ -90,6 +90,20 @@ class SparkInternalsCanarySpec extends AnyFunSuite {
     method(c, "hash", 3)
   }
 
+  test("GraftShims door 5: scheduler.OutputCommitCoordinator.canCommit/4 + executor.CommitDeniedException/4") {
+    // graft.LakeWriter's task commit asks the driver which attempt of a
+    // task may report its files, as SparkHadoopMapRedUtil.commitTask
+    // does for Spark's own committers. Migration: if the coordinator
+    // moves, call SparkHadoopMapRedUtil.commitTask with a no-op Hadoop
+    // OutputCommitter whose commitTask is the file stat, which keeps
+    // the arbitration.
+    method(canary("org.apache.spark.scheduler.OutputCommitCoordinator"), "canCommit", 4)
+    method(canary("org.apache.spark.SparkEnv"), "outputCommitCoordinator", 0)
+    assert(canary("org.apache.spark.executor.CommitDeniedException")
+      .getConstructors.exists(_.getParameterCount == 4),
+      "SPARK-MAJOR CANARY: CommitDeniedException(msg, job, split, attempt) changed")
+  }
+
   test("lake file writer: execution.datasources.FileFormatWriter.write/11 + internal.io.FileCommitProtocol") {
     // graft.LakeWriter drives Spark's own parquet write path with an
     // in-repo commit protocol (files written once at their final names,
@@ -121,7 +135,8 @@ class SparkInternalsCanarySpec extends AnyFunSuite {
       "execution.streaming.Sink", "execution.streaming.Source",
       "StreamSinkProvider", "StreamSourceProvider",
       "internalCreateDataFrame", "ExpressionUtils", "XxHash64Function",
-      "sessionState.functionRegistry", "FileFormatWriter", "FileCommitProtocol")
+      "sessionState.functionRegistry", "FileFormatWriter", "FileCommitProtocol",
+      "outputCommitCoordinator", "CommitDeniedException")
     val hits = for {
       f <- walk(root)
       src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")

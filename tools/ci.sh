@@ -116,6 +116,23 @@ if ! awk '
   exit 1
 fi
 
+# one exclusive create: the writer lock, every sidecar version and every
+# derived-table version are created through Lake.createIfAbsent, so an
+# O_EXCL open (CREATE_NEW) or an If-None-Match builder option stands
+# nowhere else in src/main
+if ! awk '
+  FNR == 1 { fn = "" }
+  /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
+  match($0, /^  ([a-z]+(\[[a-z]+\])? )*def [A-Za-z0-9_]+/) {
+    fn = substr($0, RSTART, RLENGTH); sub(/.*def /, "", fn) }
+  (/CREATE_NEW/ || /\.must\(/) &&
+      !(FILENAME ~ /graft\/Lake\.scala$/ && fn == "createIfAbsent") {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  END { exit bad }' $(find src/main/scala -name '*.scala' | sort); then
+  echo "ci: an exclusive create outside Lake.createIfAbsent" >&2
+  exit 1
+fi
+
 # one state read per operation: a Lake op resolves the root listing and
 # the sidecar once (resolveState, under its lock or gate when it takes
 # one) and hands that state down to every check, read and commit. So in
