@@ -28,7 +28,6 @@ import graft.Lake.{LakeState, LiveFile, ReshardState, SidecarConfig}
   * <lake>/_zone/_spec.json        ZoneSpec         field reads scan, rebuilds skip
   * <model>/_ivf_meta.json         IvfMeta          fail
   * <model>/_pq_meta.json          PqMeta           fail
-  * <lake>/_sink.<id>.<batch>.json SinkLedger       winner unknown: heal sweeps nothing
   * }}}
   *
   * Versioned files are resolved with [[newestParseable]]. A manifest
@@ -123,6 +122,10 @@ private[graft] object ControlFiles {
   /** A `{"d", "g"}` directory still pending in an in-flight reshard. */
   final case class PendingDir(d: String, g: Long)
 
+  /** A `{"sink", "batch"}` pair of the lake sidecar's `sinks` list: the
+    * newest batch an exactly-once sink committed. */
+  final case class SinkBatch(sink: String, batch: Long)
+
   /** One FILE-level manifest entry: the data files of directory `fd`
     * (in generation `fg` — absent in derived sidecars) as `;`-joined
     * names, byte lengths and modification times. */
@@ -179,7 +182,8 @@ private[graft] object ControlFiles {
     * `live` and `files` name the current generation's directories and
     * files too, so its unnamed files are not part of the lake; without
     * it (sidecars written before appends committed here) the current
-    * generation's tree is live by listing. */
+    * generation's tree is live by listing. `sinks` is each exactly-once
+    * sink's committed head, written only when a sink has committed. */
   final case class LakeSidecar(
       lastUpdate: Option[String] = None,
       @JsonDeserialize(contentAs = classOf[JLong]) dim: Option[Long] = None,
@@ -200,7 +204,8 @@ private[graft] object ControlFiles {
       generation: Long = 1L,
       live: Seq[LiveDir] = Nil,
       genHasData: Option[Boolean] = None,
-      genRecorded: Option[Boolean] = None) {
+      genRecorded: Option[Boolean] = None,
+      sinks: Option[Seq[SinkBatch]] = None) {
 
     def toState: LakeState = LakeState(
       generation, live.map(e => e.d -> e.g), genHasData,
@@ -217,6 +222,7 @@ private[graft] object ControlFiles {
       liveFiles = files.getOrElse(Nil).flatMap(e =>
         for (g <- e.fg; fl <- e.liveFiles) yield (e.fd -> g) -> fl).toMap,
       genRecorded = genRecorded.contains(true),
+      sinks = sinks.getOrElse(Nil).map(s => s.sink -> s.batch).toMap,
       config = Some(SidecarConfig(dim, metric, lshSeed, pqFingerprint,
         packSignBits.contains(true), partitionKey, partitionKeyType)))
   }
@@ -249,7 +255,9 @@ private[graft] object ControlFiles {
         live = (if (st.genRecorded) st.live
           else st.live.filter(_._2 != st.generation)).map { case (d, g) => LiveDir(d, g) },
         genHasData = Some(genHasData),
-        genRecorded = Some(true).filter(_ => st.genRecorded))
+        genRecorded = Some(true).filter(_ => st.genRecorded),
+        sinks = Some(st.sinks.toSeq.sorted.map { case (k, b) => SinkBatch(k, b) })
+          .filter(_.nonEmpty))
   }
 
   /** `<derived>/_derived.<v>.json`, a derived feature table's commit
@@ -322,9 +330,4 @@ private[graft] object ControlFiles {
 
   /** `<model>/_pq_meta.json`. */
   final case class PqMeta(m: Int, k: Int, subDim: Int, fingerprint: String)
-
-  /** `<lake>/_sink.<id>.<batch>.json`: the exactly-once sink's commit
-    * record, naming the attempt whose files are the batch. */
-  final case class SinkLedger(sink: String, batch: Long, attempt: String,
-      committedAt: String)
 }

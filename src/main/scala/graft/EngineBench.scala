@@ -395,84 +395,6 @@ object ReshardBench {
   }
 }
 
-/** Streaming-sink overhead probe: the exactly-once ledger
-  * ([[Lake.ingestExactlyOnce]]) vs the plain append it wraps, same
-  * batches — the delta is the protocol cost a `writeStream.format
-  * ("graft")` user pays per micro-batch (two tiny root-file writes).
-  * Args: [batches] [rowsPerBatch] [dim]. */
-object SinkBench {
-  def main(args: Array[String]): Unit = {
-    val batches = if (args.length > 0) args(0).toInt else 20
-    val rowsPer = if (args.length > 1) args(1).toLong else 5000L
-    val dim = if (args.length > 2) args(2).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def time[T](f: => T): (Double, T) = {
-      val t = System.nanoTime(); val r = f; ((System.nanoTime() - t) / 1e9, r)
-    }
-    def chunk(c: Long) = spark.range(c * rowsPer, (c + 1) * rowsPer)
-      .select(col("id").as("num"),
-        transform(sequence(lit(0), lit(dim - 1)),
-          i => sin(col("id") * 7919 + i * 104729) * 0.15)
-          .cast("array<float>").as("vector"))
-      .select(concat(lit("r"), col("num")).as("id"), col("vector"),
-        concat(lit("doc-"), col("num")).as("document"))
-    def run(mode: String, tag: String, report: Boolean): Unit = {
-      val lake = Lake(spark, LakeConfig(
-        s"${sys.props("java.io.tmpdir")}/graft_sink_bench_$tag", dim = dim,
-        numHashes = 4))
-      lake.delete()
-      val stagingRoot =
-        s"${sys.props("java.io.tmpdir")}/graft_sink_bench_stage_$tag"
-      val (t, _) = time {
-        (0L until batches.toLong).foreach { b =>
-          mode match {
-            case "plain" => lake.ingest(chunk(b))
-            case "sink" => lake.ingestExactlyOnce(chunk(b), "bench-sink", b)
-            case "stage" =>
-              // what a DSv2 StreamingWrite sink would be forced to do
-              // (ADR docs/adr-streaming-extension-points.md): commit()
-              // receives no rows, so executors must PERSIST the raw
-              // batch and the driver commit re-reads it before running
-              // the real exactly-once ingest — this stage write + read
-              // back is the extra I/O the v2 extension point costs per
-              // micro-batch, on top of sink mode's identical ingest
-              val staging = s"$stagingRoot/$b"
-              chunk(b).write.mode("overwrite").parquet(staging)
-              lake.ingestExactlyOnce(
-                spark.read.parquet(staging), "bench-sink", b)
-          }
-        }
-      }
-      if (report)
-        println(s"""{"probe":"sink_$mode","batches":$batches,""" +
-          s""""rows_per_batch":$rowsPer,"total_sec":${f"$t%.2f"},""" +
-          s""""sec_per_batch":${f"${t / batches}%.3f"},""" +
-          s""""rows":${lake.read().count()}}""")
-      lake.delete()
-      try org.apache.hadoop.fs.FileSystem.getLocal(
-        spark.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(stagingRoot), true)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    // warm-up pass per mode first: the first lake-write path through a
-    // fresh JVM pays codegen/classload that would otherwise be billed
-    // to whichever mode runs first
-    run("plain", "warm_p", report = false)
-    run("sink", "warm_s", report = false)
-    run("plain", "p", report = true)
-    run("sink", "s", report = true)
-    run("stage", "st", report = true)
-    spark.stop()
-  }
-}
-
 /** Storage-partitioned-join slope probe: [[Lake.diffStats]]' claim is
   * that the replica audit is shuffle-free end to end — both per-shard
   * aggregates ride keyed file partitions and the final join is

@@ -234,9 +234,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   def ingest(rows: DataFrame): Unit = withAppendLock("ingest") {
     val (fs, entries, st) = resolveState()
     requireWriteConfigMatch(fs, entries, st)
-    val out = writeAppend(fs, st, withDerived(rows, st))
-    refreshSkipIndex(out.state, out.shards)
-    refreshZoneMap(out.files)
+    writeAppend(fs, st, withDerived(rows, st)).foreach { out =>
+      refreshSkipIndex(out.state, out.shards)
+      refreshZoneMap(out.files)
+    }
   }
 
   /** EXACTLY-ONCE ingest for the registered streaming SINK
@@ -246,346 +247,104 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     *
     * Structured Streaming guarantees a replayed micro-batch carries
     * the SAME `batchId` with the SAME data, so exactly-once reduces to
-    * idempotent commit. The protocol, all under the shared append gate:
+    * idempotent commit. The batch commits inside the append's own
+    * sidecar version: the version that names the batch's files also
+    * records `batchId` as this sink's head ([[LakeState.sinks]]), the
+    * way Delta's streaming sink records its `(appId, version)` as a
+    * `txn` action in the same log commit. So the batch is visible
+    * exactly when it counts as committed. A crash before that version
+    * leaves files no sidecar names: invisible to every read, swept by
+    * [[vacuum]], and the replay writes the batch again. Two attempts of
+    * one batch (a zombie driver racing its replacement) both write;
+    * [[commitAppend]] re-reads the newest state before each version
+    * create, and an attempt that finds the batch already recorded
+    * there commits nothing and returns false.
     *
-    *  1. LEDGER CHECK — `_sink.<id>.<batch>.json` versions at the root
-    *     record the newest committed batch per sink identity (atomic
-    *     CREATE per commit, reader takes the max — the sidecar
-    *     pattern). `batchId` at or below it: already committed, skip.
-    *  2. TORN-ATTEMPT SWEEP — a pend marker left by a crashed attempt
-    *     of THIS batch means some of its files may already sit in the
-    *     live tree; they are identifiable BY NAME (every published
-    *     file of a sink batch is prefixed `sink-<id>-<batchHex>-`,
-    *     [[writeAppend]]'s `fileTag`) and are deleted before the
-    *     rewrite, so replay converges instead of duplicating.
-    *  3. PEND MARKER — `_append.<id>-<batchHex>-<attempt>.lock` is
-    *     created before any file lands, HEARTBEATEN (re-PUT) every few
-    *     seconds while the attempt publishes, and deleted only AFTER
-    *     the ledger commit. It matches the shared append-marker
-    *     pattern, so a crash mid-batch BLOCKS maintenance (exactly
-    *     like a crashed plain append) until the sink restarts and
-    *     self-heals — a compact running between crash and replay would
-    *     merge the torn files beyond the sweep's reach. The heartbeat
-    *     is the live-vs-dead discriminator: a replay finding a FRESH
-    *     rival marker for its own batch refuses loudly (a zombie
-    *     driver is publishing that batch concurrently — sweeping would
-    *     corrupt what it is about to commit), while a STALE marker
-    *     (no heartbeat for `pendStaleMs`) marks a dead attempt whose
-    *     files are swept. Should two attempts still interleave past
-    *     the marker check, the ledger version create arbitrates and
-    *     the loser deletes exactly its own attempt-tagged files.
-    *     Force-clearing the marker (`repair()`/`vacuum(force)`) and
-    *     then compacting before the sink restarts is the one
-    *     documented way to defeat the sweep; the marker's json names
-    *     the sink, batch, and attempt for exactly that inspection.
-    *  4. WRITE + LEDGER — the tagged append, the skip/zone refreshes
-    *     (idempotent recomputes), then the ledger version create. A
-    *     crash after the ledger but before the pend delete is healed
-    *     by the replay's skip branch, which clears the stale marker.
-    *
-    * 100 TB posture: the happy path adds two tiny root files per batch
-    * (marker + ledger version, older versions swept inline) on top of
-    * [[ingest]]'s cost; the tree-wide sweep LIST runs only on the
-    * torn-replay path. Delta's streaming sink records the same
-    * (queryId, batchId) watermark in its transaction log — here the
-    * layout has no atomic multi-file commit, so the name-tagged sweep
-    * stands in for log atomicity. */
+    * The head is the larger of the state's and, for lakes a sink
+    * committed to before the head moved into the sidecar, the newest
+    * legacy ledger name in the root listing ([[sinkHead]]). */
   private[graft] def ingestExactlyOnce(rows: DataFrame, sinkId: String,
       batchId: Long): Boolean = withAppendLock("sink-batch") {
-    val fs = fsOfRoot
-    // one state read serves the config check, a dead attempt's sweep and
-    // the append: maintenance is excluded while the gate is held, so the
-    // state cannot move under the batch. The marker and ledger listings
-    // below stay separate — each must see other attempts' files.
-    lazy val (_, entries, st) = resolveState()
+    val (fs, entries, st) = resolveState()
     val idHex = Lake.sinkIdHex(sinkId)
-    val batchHex = java.lang.Long.toHexString(batchId)
-    // per-ATTEMPT identity on top of the (sink, batch) identity: two
-    // concurrent attempts of the same batch (a zombie driver racing its
-    // replacement) publish under DISTINCT tags, the ledger version
-    // create arbitrates, and the loser deletes exactly its own files —
-    // without this, the loser's uniquely-named duplicates would survive
-    // forever (the later replay takes the skip branch and sweeps
-    // nothing)
-    val attempt = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    def pendsForBatch(): Seq[(org.apache.hadoop.fs.Path, String)] =
-      listRoot(fs).collect {
-        case s if s.isFile &&
-          s.getPath.getName.startsWith(s"_append.$idHex-$batchHex-") &&
-          s.getPath.getName.endsWith(".lock") =>
-          s.getPath -> s.getPath.getName
-            .stripPrefix(s"_append.$idHex-$batchHex-").stripSuffix(".lock")
-      }
-    // Some(true) = stale (dead attempt), Some(false) = fresh (live
-    // rival, heartbeat protection), None = GONE — deleted between the
-    // pendsForBatch() listing and this stat, i.e. its attempt just
-    // committed and cleaned up. Gone is its own state: mapping it to
-    // "fresh" would make a replay refuse (spuriously failing the query
-    // over a rival that already finished), and mapping it to "stale"
-    // would sweep the files of a batch that just committed.
-    def markerState(p: org.apache.hadoop.fs.Path): Option[Boolean] =
-      try Some(System.currentTimeMillis() -
-        fs.getFileStatus(p).getModificationTime >= Lake.pendStaleMs)
-      catch { case _: java.io.FileNotFoundException => None }
-    // Heal the DEAD attempts of this batch: for every STALE marker
-    // (no heartbeat for pendStaleMs = its JVM is gone), delete that
-    // attempt's published files — UNLESS it is the recorded winner,
-    // whose files ARE the committed batch — then the marker itself.
-    // Scoped per OBSERVED stale attempt, never batch-wide: a racing
-    // live attempt's files carry a different attempt tag and are never
-    // matched, so no replay can delete rows another attempt is about
-    // to commit (and fresh markers — live rivals — are left untouched,
-    // heartbeat protection intact).
-    //
-    // `version` is [[sinkVersion]]'s three-way answer for THIS batch:
-    // None = no ledger version (nothing committed — every stale attempt
-    // is a dead loser, sweep freely); Some(Some(w)) = w won (sweep
-    // every stale attempt but w); Some(None) = the version FILE exists
-    // but its winner is UNREADABLE (a torn ledger write) — the one
-    // state where sweeping is forbidden: the committed batch's files
-    // carry SOME attempt's tag and we cannot tell whose, so deleting
-    // any stale attempt's files might delete the committed rows
-    // themselves. Markers are kept too: maintenance stays blocked,
-    // loudly, until an operator repairs the torn _sink.<id>.<batch>
-    // .json (or repair()/vacuum(force) clears the marker).
-    def healDeadAttempts(version: Option[Option[String]]): Unit =
-      pendsForBatch().foreach { case (p, a) =>
-        if (markerState(p).contains(true)) version match {
-          case Some(None) => () // torn ledger: winner unknowable — keep everything
-          case Some(Some(w)) if w == a =>
-            // the winner's own stale marker (crash in the ledger →
-            // marker-delete window): its files ARE the batch
-            try { fs.delete(p, false); () }
-            catch { case scala.util.control.NonFatal(_) => () }
-          case _ =>
-            sweepSinkFiles(fs, st, s"$idHex-$batchHex-$a")
-            try { fs.delete(p, false); () }
-            catch { case scala.util.control.NonFatal(_) => () }
-        }
-      }
-    val committed = sinkLedger(fs, idHex)
-    // a LEGITIMATE replay only ever re-delivers the ledger head (the
+    val head = sinkHead(entries, st, idHex)
+    // a LEGITIMATE replay only ever re-delivers the head (the
     // micro-batch commit log lags addBatch by at most one batch). A
     // batch id BELOW the head means the query's checkpoint restarted
-    // from scratch against a ledger that remembers more — the classic
+    // from scratch against a lake that remembers more — the classic
     // wiped-checkpoint-same-location accident — and skipping would
     // silently drop every batch until the count catches up: refuse.
-    require(!committed.exists(batchId < _),
+    require(!head.exists(batchId < _),
       s"graft sink at ${cfg.location}: ledger for sink '$sinkId' has " +
-        s"committed batch ${committed.get} but the query delivered batch " +
+        s"committed batch ${head.get} but the query delivered batch " +
         s"$batchId — a reset/wiped checkpoint is reusing this sink " +
         "identity. Restore the original checkpoint, or pass a fresh " +
-        s".option(\"sinkId\", ...) to ingest as a new sink, or delete " +
-        s"the _sink.$idHex.*.json ledger files to deliberately re-ingest " +
-        "from scratch.")
-    if (committed.exists(_ == batchId)) {
-      // the replay of the already-committed head: any crash fell in the
-      // ledger→marker-delete window. Heal DEAD attempts (a crashed
-      // loser's files would otherwise be served as duplicates forever —
-      // the ledger records the WINNING attempt so its files are never
-      // touched) and leave any fresh marker alone: a live zombie is
-      // mid-publish and will lose the ledger race and clean itself up.
-      healDeadAttempts(sinkVersion(fs, idHex, batchId))
-      false
-    } else {
+        ".option(\"sinkId\", ...) to ingest as a new sink.")
+    if (head.contains(batchId)) false
+    else {
       requireWriteConfigMatch(fs, entries, st)
-      // A FRESH marker for this batch means another driver is
-      // publishing it right now (a zombie racing its replacement —
-      // live attempts HEARTBEAT their marker): refuse loudly, since
-      // converging concurrently would double-publish. STALE markers
-      // are dead attempts; heal them (sweep + marker delete) per
-      // observed attempt.
-      val fresh = pendsForBatch().collect {
-        case (p, _) if markerState(p).contains(false) => p
-      }
-      if (fresh.nonEmpty) throw new java.util.ConcurrentModificationException(
-        s"sink batch $batchId at ${cfg.location} refused: another " +
-          s"attempt of this same batch holds a fresh marker " +
-          s"(${fresh.map(_.getName).mkString(", ")}) — a concurrent " +
-          "duplicate driver is publishing this batch right now. Retry " +
-          s"after the marker stops heartbeating (${Lake.pendStaleMs} ms) " +
-          "or its commit lands.")
-      healDeadAttempts(version = None)
-      val pend = new org.apache.hadoop.fs.Path(cfg.location,
-        s"_append.$idHex-$batchHex-$attempt.lock")
-      // pendLock serializes the heartbeat's re-PUT against the final
-      // marker delete: without it, a beat blocked inside fs.create on a
-      // slow store could land AFTER the delete and resurrect the marker
-      // — stranding it (maintenance blocked) until repair
-      val pendLock = new Object
-      def stampPend(): Unit = {
-        val o = fs.create(pend, true)
-        try o.write(
-          (s"""{"op": "sink-batch", "sink": "$idHex", "batch": $batchId, """ +
-            s""""attempt": "$attempt", """ +
-            s""""taken_at": "${java.time.Instant.now()}"}""").getBytes("UTF-8"))
-        finally o.close()
-      }
-      stampPend()
-      // heartbeat: re-PUT the marker (portable mtime refresh — setTimes
-      // is unsupported on object stores) so rival replays see a LIVE
-      // attempt for as long as this JVM is; a crash stops the beat and
-      // the marker goes stale within pendStaleMs
-      val beating = new java.util.concurrent.atomic.AtomicBoolean(true)
-      val beat = new Thread(() => {
-        while (beating.get()) {
-          try Thread.sleep(math.max(1000L, Lake.pendStaleMs / 4))
-          catch { case _: InterruptedException => () }
-          pendLock.synchronized {
-            if (beating.get())
-              try stampPend()
-              catch { case scala.util.control.NonFatal(_) => () }
-          }
-        }
-      }, s"graft-sink-pend-beat-$attempt")
-      beat.setDaemon(true)
-      beat.start()
-      try {
-        val out = writeAppend(fs, st, withDerived(rows, st),
-          fileTag = Some(s"$idHex-$batchHex-$attempt"))
-        refreshSkipIndex(out.state, out.shards)
-        refreshZoneMap(out.files)
-        // COMMIT = the atomic ledger version create (recording THIS
-        // attempt as the winner). On IOException the version state
-        // disambiguates LOSING A RACE from OUR OWN WRITE TEARING —
-        // without the distinction, a torn own write (create succeeded,
-        // write/close threw, a visible half-written version remains)
-        // would match a naive "version exists" guard, sweep our own
-        // just-published files, and report already-committed: every
-        // later replay skips and the batch's rows are silently lost.
-        //  - a READABLE version naming a RIVAL attempt: we lost the
-        //    race — remove exactly our attempt's files (the winner's
-        //    stay) and report already-committed.
-        //  - NO version but the ledger head moved PAST this batch: a
-        //    rival committed it (and more; our batch's version slot
-        //    was rotated out — for the rival to be delivered batch
-        //    n+1 its commit of n must have landed). Our files are
-        //    pure duplicates: sweep, report already-committed.
-        //  - anything else (version absent with head at/below us,
-        //    version unreadable, or — readback races — naming US):
-        //    RETHROW. The pend marker stays, maintenance stays
-        //    blocked, and the restart's replay converges through the
-        //    skip/heal branch (which preserves a recorded winner's
-        //    files and refuses to sweep under a torn version). On a
-        //    plain-S3 store where create(overwrite=false) is a blind
-        //    PUT the arbitration narrows to the same documented
-        //    residual as the writer lock.
-        val won =
-          try { writeSinkLedger(fs, idHex, batchId, attempt); true }
-          catch { case e: java.io.IOException =>
-            sinkVersion(fs, idHex, batchId) match {
-              case Some(Some(w)) if w != attempt =>
-                sweepSinkFiles(fs, out.state, s"$idHex-$batchHex-$attempt")
-                false
-              case None if sinkLedger(fs, idHex).exists(_ > batchId) =>
-                sweepSinkFiles(fs, out.state, s"$idHex-$batchHex-$attempt")
-                false
-              case _ => throw e
-            }
-          }
-        beating.set(false); beat.interrupt(); beat.join(5000L)
-        // the monitor (not the bounded join) is what makes the delete
-        // final: any in-flight beat completes first, none start after
-        pendLock.synchronized {
-          try { fs.delete(pend, false); () }
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-        // other STALE markers of this batch heal now that a winner is
-        // recorded (fresh ones belong to live rivals about to lose and
-        // self-clean)
-        healDeadAttempts(
-          if (won) Some(Some(attempt)) else sinkVersion(fs, idHex, batchId))
-        won
-      } finally { beating.set(false); beat.interrupt() }
+      // a newest version that did not decode may be this sink's own torn
+      // commit of the batch, or a rival attempt's still landing: the
+      // state served past it lists the current tree, its files included,
+      // without recording the batch — a replay would land it twice
+      val newest = latestVersion(entries)
+      if (newest > st.version) throw new java.util.ConcurrentModificationException(
+        s"sink batch $batchId at ${cfg.location} refused: the newest " +
+          s"sidecar version _meta.$newest.json does not decode (a torn " +
+          "commit, or a rival's still landing: retry), and it may be this " +
+          "sink's commit of the batch. If it stays torn, delete it: the " +
+          "files it named become unnamed, the replay lands the batch once " +
+          "and vacuum deletes them.")
+      // a pend marker an earlier sink version left for THIS batch: that
+      // attempt crashed mid-batch, and its files may already be named by
+      // a sidecar with no ledger entry — replaying over them would
+      // duplicate rows
+      val batchHex = java.lang.Long.toHexString(batchId)
+      val pends = entries.map(_.getPath.getName).filter(n =>
+        n.startsWith(s"_append.$idHex-$batchHex-") && n.endsWith(".lock"))
+      if (pends.nonEmpty) throw new IllegalStateException(
+        s"sink batch $batchId at ${cfg.location} refused: pend marker " +
+          s"${pends.mkString(", ")} is left by a crashed attempt of this " +
+          "batch under the earlier ledger protocol. Its files (named " +
+          s"`sink-$idHex-$batchHex-…`) may already be committed without " +
+          "a ledger entry, and replaying over them would duplicate rows. " +
+          "If filesView() lists no file with that prefix, clear the " +
+          "marker (repair()) and restart the query; if it does, the " +
+          "batch is already in the lake: remove those rows first.")
+      val out = writeAppend(fs, st, withDerived(rows, st),
+        sinkBatch = Some(idHex -> batchId))
+      out.foreach { o => refreshSkipIndex(o.state, o.shards); refreshZoneMap(o.files) }
+      out.isDefined
     }
   }
 
-  /** The ledger version state for (sink, batch) — three-way, because
-    * the heal paths must treat each differently:
-    *
-    *  - `None`: the version FILE is absent (never committed, or rotated
-    *    out after later commits).
-    *  - `Some(Some(attempt))`: committed; `attempt` won. The batch's
-    *    files carry the winner's tag and must never be swept.
-    *  - `Some(None)`: the version file EXISTS but the winning attempt
-    *    cannot be read out of it (a torn ledger write, or a transient
-    *    read failure). The batch counts as committed (the filename is
-    *    the ledger, [[sinkLedger]]) but the winner is unknowable — heal
-    *    paths must sweep NOTHING under this state, or they could delete
-    *    the committed rows themselves. */
-  private def sinkVersion(fs: org.apache.hadoop.fs.FileSystem,
-      idHex: String, batchId: Long): Option[Option[String]] = {
-    val p = new org.apache.hadoop.fs.Path(cfg.location,
-      s"_sink.$idHex.$batchId.json")
-    try {
-      if (!fs.exists(p)) None
-      else Some(Option(ControlFiles.read[ControlFiles.SinkLedger](fs, p).attempt))
-    } catch {
-      case _: java.io.FileNotFoundException => None
-      case scala.util.control.NonFatal(_) => Some(None)
-    }
+  /** Which of `sinkIds` have committed a batch to this lake, from one
+    * state read — the migration probe
+    * [[graft.sources.GraftDataSource.createSink]] uses to keep a
+    * pre-normalization checkpoint spelling bound to its history (a
+    * respelled identity with no history would re-ingest the replayed
+    * head batch). */
+  private[graft] def sinksWithHistory(sinkIds: String*): Set[String] = {
+    val (_, entries, st) = resolveState()
+    sinkIds.filter(id => sinkHead(entries, st, Lake.sinkIdHex(id)).isDefined).toSet
   }
 
-  /** Whether ANY ledger version exists for this user-visible sink id —
-    * the migration probe [[graft.sources.GraftDataSource.createSink]]
-    * uses to keep a pre-normalization checkpoint spelling bound to its
-    * existing ledger (a respelled identity with an empty ledger would
-    * re-ingest the replayed head batch). One root listing. */
+  /** Whether this sink id has committed a batch to this lake. */
   private[graft] def hasSinkLedger(sinkId: String): Boolean =
-    sinkLedger(fsOfRoot, Lake.sinkIdHex(sinkId)).isDefined
+    sinksWithHistory(sinkId).nonEmpty
 
-  /** Newest committed batch id for sink `idHex`, from the root's
-    * `_sink.<id>.<batch>.json` ledger versions. */
-  private def sinkLedger(fs: org.apache.hadoop.fs.FileSystem,
-      idHex: String): Option[Long] = {
-    val re = ("_sink\\." + java.util.regex.Pattern.quote(idHex) +
+  /** Newest committed batch of sink `idHex`: the larger of the head
+    * `st` records and the newest legacy `_sink.<id>.<batch>.json`
+    * ledger NAME in the root listing `entries` (written by sinks before
+    * the head moved into the sidecar; only the name is read). */
+  private def sinkHead(entries: Seq[org.apache.hadoop.fs.FileStatus],
+      st: LakeState, idHex: String): Option[Long] = {
+    val legacy = ("_sink\\." + java.util.regex.Pattern.quote(idHex) +
       "\\.(\\d+)\\.json").r
-    listRoot(fs).flatMap(s => s.getPath.getName match {
-      case re(b) if s.isFile => Some(b.toLong)
+    (st.sinks.get(idHex) ++ entries.flatMap(s => s.getPath.getName match {
+      case legacy(b) if s.isFile => Some(b.toLong)
       case _ => None
-    }).sorted.lastOption
-  }
-
-  /** Atomic-create ledger version for (sink, batch); sweeps all but the
-    * newest two versions of this sink best-effort (same rotation
-    * posture as the `_meta` sidecar). */
-  private def writeSinkLedger(fs: org.apache.hadoop.fs.FileSystem,
-      idHex: String, batchId: Long, attempt: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(cfg.location,
-      s"_sink.$idHex.$batchId.json")
-    // atomic create = the commit arbiter; a collision means a rival won
-    ControlFiles.write(fs, p, ControlFiles.SinkLedger(idHex, batchId,
-      attempt, java.time.Instant.now().toString), overwrite = false)
-    try {
-      val re = ("_sink\\." + java.util.regex.Pattern.quote(idHex) +
-        "\\.(\\d+)\\.json").r
-      listRoot(fs).flatMap(s => s.getPath.getName match {
-        case re(b) if s.isFile => Some(b.toLong -> s.getPath)
-        case _ => None
-      }).sortBy(_._1).dropRight(2).foreach(v => fs.delete(v._2, false))
-    } catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  /** Un-name, then delete, the files a torn attempt of this sink batch
-    * committed (identified by the `sink-<tag>-` name prefix): one
-    * append commit ([[commitAppend]]) drops them from the current
-    * generation `st` records, then each is deleted. Runs only on the
-    * torn-replay and lost-race paths. The torn files all sit in the
-    * CURRENT generation: appends only land there, and the pend marker has
-    * blocked every maintenance op (nothing can have moved them) since the
-    * torn attempt. Files of the attempt that no sidecar named are
-    * invisible already; [[vacuum]] sweeps them. */
-  private def sweepSinkFiles(fs: org.apache.hadoop.fs.FileSystem,
-      st: LakeState, tag: String): Unit = {
-    def tagged(f: LiveFile): Boolean = f.name.startsWith(s"sink-$tag-")
-    val g = st.generation
-    val named = resolveFiles(fs, st, liveEntries(st).filter(_._2 == g), "sink sweep")
-      .flatMap { case ((d, _), fl) =>
-        fl.filter(s => tagged(LiveFile.of(s))).map(_.getPath) }
-    if (named.isEmpty) return
-    commitAppend(fs, st)(editGenFiles(fs, _)(_.map { case (d, fl) =>
-      d -> fl.filterNot(tagged) }))
-    named.foreach(p => fs.delete(p, false))
+    })).maxOption
   }
 
   /** Fail-fast EXCLUSIVE gate for the structure-mutating ops
@@ -898,12 +657,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * under it (and checked its write config against it), so maintenance
     * cannot move the generation pointer before the commit.
     *
-    * `fileTag` (the streaming-sink path, [[ingestExactlyOnce]])
-    * prefixes every written filename with `sink-<tag>-` so a torn
-    * batch's files are IDENTIFIABLE by name on replay
-    * ([[sweepSinkFiles]]). Plain appends stay untagged. */
+    * `sinkBatch` (the streaming-sink path, [[ingestExactlyOnce]]) is
+    * `(sink, batch)`: the commit records the batch as that sink's head,
+    * and commits nothing (None) when the newest state it commits over
+    * already records it — a rival attempt of the batch won, and this
+    * attempt deletes its own files, which no version names. */
   private def writeAppend(fs: org.apache.hadoop.fs.FileSystem, st: LakeState,
-      derived: DataFrame, fileTag: Option[String] = None): Lake.Appended = {
+      derived: DataFrame, sinkBatch: Option[(String, Long)] = None)
+      : Option[Lake.Appended] = {
     requireRouting(st) // never append rows routed under foreign hyperplanes
     // a generation with a sink manifest is STREAM-OWNED: the manifest
     // governs which files readers see, and it will never name a batch
@@ -923,22 +684,26 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // records another append's files, finished or half-written.
     val base =
       if (st.genRecorded || st.isSealed) st
-      else commitAppend(fs, st)(editGenFiles(fs, _)(identity))
+      else commitAppend(fs, st)(b => Some(editGenFiles(fs, b)(identity))).get
     val gen = genPath(base.generation)
     val written = LakeWriter.write(byPartition(derived), gen, Some(partCol),
-      cfg.codec, fileTag.fold("")(t => s"sink-$t-"))
+      cfg.codec)
     val byDir = written.groupBy(_.dir).map { case (d, ws) => d -> ws.map(_.file) }
+    val paths = written.map(w => new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(gen, w.dir), w.file.name))
     // this append's own status of each of its files wins: a retried
     // commit may re-apply this to a version that already holds the batch
-    val committed = commitAppend(fs, base)(editGenFiles(fs, _)(cur =>
-      byDir.foldLeft(cur) { case (m, (d, fl)) =>
-        val names = fl.map(_.name).toSet
-        m.updated(d, m.getOrElse(d, Nil).filterNot(h => names(h.name)) ++ fl)
-      }))
-    Lake.Appended(byDir.keySet.map(dirValue),
-      written.map(w => new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(gen, w.dir), w.file.name).toString),
-      committed)
+    val committed = commitAppend(fs, base)(cur =>
+      Option.unless(sinkBatch.exists { case (id, b) => cur.sinks.get(id).exists(_ >= b) })(
+        editGenFiles(fs, cur)(m0 => byDir.foldLeft(m0) { case (m, (d, fl)) =>
+          val names = fl.map(_.name).toSet
+          m.updated(d, m.getOrElse(d, Nil).filterNot(h => names(h.name)) ++ fl)
+        }).copy(sinks = cur.sinks ++ sinkBatch)))
+    // declined: no sidecar will ever name these files, so delete them now
+    // rather than leave them for vacuum (a listing fallback past a torn
+    // newest version would serve them as duplicates)
+    if (committed.isEmpty) paths.foreach(fs.delete(_, false))
+    committed.map(Lake.Appended(byDir.keySet.map(dirValue), paths.map(_.toString), _))
   }
 
   /** `rows` hash-partitioned on the partition column into min(shards,
@@ -1302,7 +1067,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   def readAt(version: Long): DataFrame = readScoped(None, Some(version))
 
   /** [[stateAt]] plus the vacuumed-snapshot detectors [[readAt]] and
-    * the `graft` DSv2 format's [[scanRoots]] share — a retired
+    * the `graft` DSv2 format's [[formatScan]] share — a retired
     * snapshot must fail loudly, never read back partial or empty.
     * Two detectors, both needed: (a) the commit recorded whether its
     * OWN generation tree held data, so that tree being gone is
@@ -1648,9 +1413,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       other.cfg.seed == cfg.seed && other.cfg.partitionKey == cfg.partitionKey,
       "diffStats: lakes must share the routing config (dim, numHashes, " +
         "seed, partitionKey) or per-shard comparison is meaningless")
+    // one state read per side serves its schema and its scan roots
+    val (_, entries, st) = resolveState()
+    val (_, otherEntries, otherSt) = other.resolveState()
+    val schema = canonicalSchemaOf(st)
     val shared = {
-      val mine = canonicalSchema.fieldNames.toSet
-      val theirs = other.canonicalSchema.fieldNames.toSet
+      val mine = schema.fieldNames.toSet
+      val theirs = other.canonicalSchemaOf(otherSt).fieldNames.toSet
       (mine intersect theirs - partCol).toSeq.sorted
     }
     require(shared.nonEmpty, "diffStats: no shared stored columns")
@@ -1661,7 +1430,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // columns is null would hash identically — each value rides with
     // an explicit per-column null flag so null placement is part of
     // the fingerprint.
-    val byName = canonicalSchema.fields.map(f => f.name -> f.dataType).toMap
+    val byName = schema.fields.map(f => f.name -> f.dataType).toMap
     val hashInputs = shared.flatMap { f =>
       val v = byName(f) match {
         case _: MapType => sort_array(map_entries(col(f)))
@@ -1701,8 +1470,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       (col("cnt") <=> col("other_cnt") && col("h") <=> col("oh") &&
         col("hs") <=> col("ohs")).as("in_sync")
     val nullableKey = cfg.partitionKey.isDefined ||
-      scanRoots().exists(_._2.isEmpty) ||
-      other.scanRoots().exists(_._2.isEmpty)
+      formatScan(entries, st, None).roots.exists(_._2.isEmpty) ||
+      other.formatScan(otherEntries, otherSt, None).roots.exists(_._2.isEmpty)
     val joined =
       if (nullableKey)
         mine.join(theirs, mine(partCol) <=> theirs(partCol), "full_outer")
@@ -2218,12 +1987,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   private def canonicalSchemaOf(st: LakeState): StructType =
     StructType(storedFieldsOf(st) :+ StructField(partCol,
       if (cfg.partitionKey.isEmpty) IntegerType else cfg.partitionKeyType))
-
-  /** DIRECTORY-level scan roots of the current snapshot ([[formatScan]]). */
-  private[graft] def scanRoots(): Seq[(String, Option[String])] = {
-    val (_, entries, st) = resolveState()
-    formatScan(entries, st, None).roots
-  }
 
   /** The `graft` DSv2 format's view of the current (`asOf = None`) or a
     * past snapshot, resolved from a root listing and the CURRENT state
@@ -3893,15 +3656,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // manifest — is never touched. (An earlier version rolled the
     // pointer per step, which would have re-parented a stream-owned
     // generation into raw live entries and broken manifest-governed
-    // file visibility.) The produced files ride the commit as recorded.
-    val committed = LakeState(
-      st.generation,
-      st.live.filterNot(batchSet) ++ produced.map(_._1 -> newGen),
-      extraCols = st.extraCols, sidecarShards = st.sidecarShards,
+    // file visibility.) The produced files ride the commit as recorded;
+    // the rest of the state (extras, sink heads) carries over.
+    val committed = st.copy(
+      live = st.live.filterNot(batchSet) ++ produced.map(_._1 -> newGen),
       reshard = Some(r.copy(pending = r.pending.filterNot(batchSet))),
       liveFiles = st.liveFiles ++ produced.map { case (d, fl) =>
-        (d, newGen) -> fl.map(Lake.LiveFile.of) },
-      genRecorded = st.genRecorded)
+        (d, newGen) -> fl.map(Lake.LiveFile.of) })
     writeState(committed)
     // auxiliary refresh: the skip index is absent mid-reshard (dropped
     // at transition); the FILE-keyed zone map refreshes for the
@@ -4147,8 +3908,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * as after any append. */
   private def bootstrapAppend(fs: org.apache.hadoop.fs.FileSystem,
       st: LakeState, batch: DataFrame): Unit = {
-    val out = writeAppend(fs, st, batch)
-    refreshSkipIndex(out.state, out.shards); refreshZoneMap(out.files)
+    writeAppend(fs, st, batch).foreach { out =>
+      refreshSkipIndex(out.state, out.shards); refreshZoneMap(out.files) }
   }
 
   /** Upsert by caller-supplied id: rows whose id already exists replace
@@ -4952,12 +4713,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       !affected.contains(dirValue(d))
     }
     // the new generation is current and records exactly the files
-    // written into it
-    val committed = LakeState(newGen, survivors ++ produced.map(_._1 -> newGen),
-      extraCols = st.extraCols,
+    // written into it; the rest of the state (extras, sink heads)
+    // carries over
+    val committed = st.copy(generation = newGen,
+      live = survivors ++ produced.map(_._1 -> newGen),
       liveFiles = st.liveFiles ++ produced.map { case (d, fl) =>
         (d, newGen) -> fl.map(LiveFile.of) },
-      genRecorded = true)
+      genRecorded = true, isSealed = false)
     writeState(committed)
     refreshSkipIndex(committed, affected)
     refreshZoneMapShards(committed, affected)
@@ -5262,7 +5024,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   }
 
   /** Delete the data files no sidecar names: a crashed append's files,
-    * a torn sink attempt's. They are invisible to every read, and they
+    * a crashed sink attempt's. They are invisible to every read, and they
     * only ever appear in the tree of the generation that is current when
     * they are written (appends and sink attempts write nowhere else; a
     * rewrite's tree is named whole or swept whole as dead). So a sweep
@@ -5832,11 +5594,13 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * files are lost. A newest version that does not decode yet may be a
     * rival's commit still landing (an exclusive create shows the file
     * before its whole body everywhere but on object stores): the loop
-    * waits a little for it before treating it as torn. Maintenance is excluded while the gate is held,
-    * so the generation cannot move under the loop. `st` is the state the
-    * caller resolved; returns the committed state. */
+    * waits a little for it before treating it as torn. Maintenance is
+    * excluded while the gate is held, so the generation cannot move
+    * under the loop. `st` is the state the caller resolved; returns the
+    * committed state, or None when `edit` declines to commit (a sink
+    * batch the newest state already records). */
   private def commitAppend(fs: org.apache.hadoop.fs.FileSystem,
-      st: LakeState)(edit: LakeState => LakeState): LakeState = {
+      st: LakeState)(edit: LakeState => Option[LakeState]): Option[LakeState] = {
     var base = st
     var waits = 0
     var attempts = 0
@@ -5852,16 +5616,16 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           throw new java.util.ConcurrentModificationException(
             s"append at ${cfg.location}: the generation moved from " +
               s"${st.generation} to ${base.generation} under the append gate")
-        val next = edit(base)
+        val next = edit(base).getOrElse(return None)
         if (publishState(fs, entries, next, latest + 1, sealedCommit = false))
-          return next.copy(version = latest + 1)
+          return Some(next.copy(version = latest + 1))
         attempts += 1
         require(attempts < 1000, s"append at ${cfg.location}: lost " +
           s"$attempts consecutive version creates — the store's " +
           "create-if-absent is failing, not racing")
       }
     }
-    st // unreachable
+    None // unreachable
   }
 
   /** Create sidecar version `v` committing `st`, if no version `v`
@@ -6254,15 +6018,6 @@ object Lake {
     // DATA column with this name would shadow it and break UPDATE/MERGE
     "_graft_rid")
 
-  /** Staleness horizon for a sink attempt's pend marker: an attempt
-    * HEARTBEATS its marker every `pendStaleMs / 4`, so a marker this
-    * old means the attempt's JVM is dead (crash) rather than slow —
-    * the discriminator that lets a replay sweep a torn attempt's files
-    * without ever sweeping a live concurrent attempt's. System-property
-    * override for tests (which simulate crashes with fresh markers). */
-  private[graft] def pendStaleMs: Long =
-    sys.props.get("graft.sink.pendStaleMs").map(_.toLong).getOrElse(45000L)
-
   /** The ONE netting definition — rows byte-identical between the
     * insert and delete sides cancel (so a pure compact/rewrite nets to
     * nothing), shared by [[Lake.changesBetween]]'s netted frame and
@@ -6299,9 +6054,9 @@ object Lake {
   }
 
   /** Stable 12-hex sink identity from the user-visible sink id (the
-    * query's checkpoint location): what names the sink's ledger files,
-    * pend markers, and file-name tags. SHA-256-based so two checkpoints
-    * differing anywhere get distinct identities. */
+    * query's checkpoint location): the sidecar's key for the sink's
+    * committed head ([[LakeState.sinks]]). SHA-256-based so two
+    * checkpoints differing anywhere get distinct identities. */
   private[graft] def sinkIdHex(sinkId: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(sinkId.getBytes("UTF-8"))
@@ -6375,7 +6130,10 @@ object Lake {
     * from (0 when none): an append commits `version + 1`. `lost` names
     * (entry, file name) pairs the resolver leaves out: named files found
     * gone from the store, set only on [[Lake.validate]]'s audit view and
-    * never committed. */
+    * never committed. `sinks` maps each exactly-once sink's identity
+    * ([[Lake.sinkIdHex]]) to the newest batch it committed — recorded by
+    * the append that commits the batch ([[Lake.ingestExactlyOnce]]) and
+    * carried by every later commit, like Delta's `txn` action. */
   private[graft] final case class LakeState(
       generation: Long, live: Seq[(String, Long)],
       genHasData: Option[Boolean] = None,
@@ -6388,7 +6146,8 @@ object Lake {
       config: Option[SidecarConfig] = None,
       genRecorded: Boolean = false,
       version: Long = 0L,
-      lost: Set[((String, Long), String)] = Set.empty)
+      lost: Set[((String, Long), String)] = Set.empty,
+      sinks: Map[String, Long] = Map.empty)
 
   /** The writer config a sidecar records beside the live set: what
     * routing/compression guards check a session against and what the

@@ -31,18 +31,18 @@ private[graft] object LakeWriter {
 
   /** Write `content` as parquet under `dir`, partitioned by
     * `partitionCol` when given, and return the files written. File names
-    * are `<prefix>part-<task>-<uuid>-c<n>.<codec>.parquet`: a fresh uuid
+    * are `part-<task>-<uuid>-c<n>.<codec>.parquet`: a fresh uuid
     * per call, so concurrent writers never collide. `content`'s own
     * partitioning is the task split. On failure, every file a task of
     * this call committed is deleted before the error surfaces (an
     * aborted task deletes its own). */
   def write(content: DataFrame, dir: Path, partitionCol: Option[String],
-      codec: String, prefix: String = ""): Seq[Written] = {
+      codec: String): Seq[Written] = {
     val ds = content.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
     val session = ds.sparkSession
     val qe = ds.queryExecution
     val protocol = new Protocol(java.util.UUID.randomUUID().toString,
-      dir.toString, prefix)
+      dir.toString)
     val hadoopConf = new org.apache.hadoop.conf.Configuration(
       session.sparkContext.hadoopConfiguration)
     SQLExecution.withNewExecutionId(qe, Some("graft write")) {
@@ -74,7 +74,7 @@ private[graft] object LakeWriter {
     * version is the commit. Task attempts write distinct names, so a
     * retried or speculative attempt never overwrites another's file, and
     * an attempt the coordinator denies deletes its own. */
-  private final class Protocol(jobId: String, root: String, prefix: String)
+  private final class Protocol(jobId: String, root: String)
       extends FileCommitProtocol with Serializable {
 
     @transient private var taskFiles: Seq[(String, Path)] = Nil
@@ -104,7 +104,7 @@ private[graft] object LakeWriter {
     override def newTaskTempFile(taskContext: TaskAttemptContext,
         dir: Option[String], spec: FileNameSpec): String = {
       val attempt = taskContext.getTaskAttemptID
-      val name = f"${spec.prefix}${prefix}part-${attempt.getTaskID.getId}%05d-" +
+      val name = f"${spec.prefix}part-${attempt.getTaskID.getId}%05d-" +
         s"$jobId-${attempt.getId}${spec.suffix}"
       val d = dir.getOrElse("")
       val p = if (d.isEmpty) new Path(root, name) else new Path(new Path(root, d), name)

@@ -35,7 +35,7 @@ import graft.{Lake, LakeConfig}
   *
   * Both land on the SAME generation-aware scan as [[graft.Lake.read]]:
   * the table resolves the live directory set from one sidecar read
-  * ([[graft.Lake.scanRoots]] — manifest entries across generations,
+  * ([[graft.Lake.formatScan]] — manifest entries across generations,
   * the whole current generation by rule, legacy root data), then
   * DELEGATES scanning to Spark's own DSv2 parquet table over exactly
   * those directories. Delegation, not reimplementation, is the point:
@@ -138,9 +138,9 @@ class GraftDataSource extends TableProvider with DataSourceRegister
         // only when it alone holds a ledger.
         if (normalized == raw) normalized
         else {
-          val lake = Lake(sqlContext.sparkSession, cfg)
-          if (!lake.hasSinkLedger(normalized) && lake.hasSinkLedger(raw)) raw
-          else normalized
+          val known = Lake(sqlContext.sparkSession, cfg)
+            .sinksWithHistory(normalized, raw)
+          if (!known(normalized) && known(raw)) raw else normalized
         }
       })
       .getOrElse {
@@ -835,15 +835,16 @@ private final class GraftBackingTable(
 
 /** The registered streaming SINK behind `writeStream.format("graft")`:
   * each micro-batch is one routed, sidecar-commit lake append, made
-  * exactly-once by [[graft.Lake.ingestExactlyOnce]]'s batch ledger
-  * (protocol scaladoc there). The batch frame is pinned to its planned
-  * row RDD before ingest ([[org.apache.spark.sql.GraftShims.asBatchFrame]])
+  * exactly-once by recording the batch in that same sidecar version
+  * ([[graft.Lake.ingestExactlyOnce]], protocol scaladoc there). The
+  * batch frame is pinned to its planned row RDD before ingest
+  * ([[org.apache.spark.sql.GraftShims.asBatchFrame]])
   * — the v1 addBatch contract — and then flows through the IDENTICAL
   * derive + publish path as [[graft.Lake.ingest]], so batch and
   * streaming writers can never diverge on routing, metadata coercion,
   * or schema evolution extras. Fully distributed: the sink adds no
-  * collect and no driver-side rows; its per-batch overhead over a plain
-  * append is two tiny root-file writes.
+  * collect and no driver-side rows, and a batch makes the same root
+  * requests as a plain append: the gate marker and one sidecar version.
   *
   * Reference: the reference has no streaming surface at all (SURVEY.md
   * §2.10); this is the engine's continuous-ingest face for SQL/PySpark

@@ -153,11 +153,22 @@ class ControlFilesSpec extends SparkSpec {
     roundTrips(pq)
     assert(pq === PqMeta(2, 16, 4, "ab"))
 
-    val ledger = decode[SinkLedger]("""{"sink": "abcdef012345", "batch": 7, """ +
-      """"attempt": "0123456789ab", "committed_at": "2026-01-01T00:00:00Z"}""", "literal")
-    roundTrips(ledger)
-    assert(ledger.attempt === "0123456789ab" && ledger.batch === 7L)
-    intercept[Unparseable](decode[SinkLedger]("""{"sink": """", "half-written"))
+    // the sink ledger is the lake sidecar's `sinks` list: each sink's
+    // committed head, written only once a sink has committed
+    val sinks = decode[LakeSidecar]("""{"generation": 2, "live": [], "sinks": """ +
+      """[{"sink": "abcdef012345", "batch": 7}, {"sink": "0123456789ab", "batch": 0}]}""",
+      "literal")
+    roundTrips(sinks)
+    assert(sinks.toState.sinks === Map("abcdef012345" -> 7L, "0123456789ab" -> 0L))
+    val cfg = LakeConfig("/x", dim = 4, numHashes = 3)
+    def written(st: Lake.LakeState) = encode(LakeSidecar.of(st, cfg, numShards = 8L,
+      sealedCommit = false, genHasData = true, files = Nil))
+    val plain = Lake.LakeState(2L, Nil)
+    assert(!written(plain).contains("sinks"), "a lake with no sink writes no sink key")
+    val withSinks = plain.copy(sinks = Map("abcdef012345" -> 7L))
+    assert(written(withSinks).contains(""""sinks":[{"sink":"abcdef012345","batch":7}]"""))
+    assert(decode[LakeSidecar](written(withSinks), "written").toState.sinks === withSinks.sinks)
+    intercept[Unparseable](decode[LakeSidecar]("""{"sinks": [{"sink": """", "half-written"))
   }
 
   test("torn bodies never decode: every strict prefix of a body is refused") {
@@ -334,7 +345,8 @@ class ControlFilesSpec extends SparkSpec {
     val counts = Seq("ingest" -> ingest, "deleteIds" -> deleteIds,
       "upsert" -> upsert, "compactIncremental" -> compactInc,
       "applyChanges" -> applyChanges, "buildSkipIndex" -> buildSkip,
-      "upsert after buildSkipIndex" -> upsertSkip, "readTimeRange" -> timeRange)
+      "upsert after buildSkipIndex" -> upsertSkip, "readTimeRange" -> timeRange,
+      "sink batch" -> sidecarGets(assert(lake.ingestExactlyOnce(rows(4, "s"), "count-sink", 0L))))
     assert(counts.forall(_._2 == 1), s"sidecar GETs per op: $counts")
   }
 

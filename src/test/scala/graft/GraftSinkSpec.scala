@@ -11,7 +11,8 @@ import graft.sources.GraftDataSource
 
 /** The registered streaming SINK (`writeStream.format("graft")`):
   * end-to-end micro-batch ingest, restart continuation, the
-  * exactly-once ledger (replay skip + torn-attempt sweep), the
+  * exactly-once batch record in the sidecar (replay skip, torn
+  * attempts, the head across every rewriting commit), the
   * read-loop with the `graft-changes` source, and the surface
   * refusals (output mode, partitionBy, missing checkpoint). */
 class GraftSinkSpec extends SparkSpec {
@@ -22,6 +23,36 @@ class GraftSinkSpec extends SparkSpec {
 
   private def fsOf(loc: String) =
     new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def newestSidecar(loc: String): Path =
+    fsOf(loc).listStatus(new Path(loc)).map(_.getPath)
+      .filter(p => Lake.metaNameRe.pattern.matcher(p.getName).matches())
+      .maxBy(_.getName.split('.')(1).toLong)
+
+  /** Delete the newest sidecar version after checking that it is the
+    * commit recording `batch` for sink `idHex`: what a crash just before
+    * that commit leaves — the batch's files written, no version naming
+    * them. */
+  private def dropNewestSidecar(loc: String, idHex: String, batch: Long): Unit = {
+    val p = newestSidecar(loc)
+    assert(ControlFiles.read[ControlFiles.LakeSidecar](fsOf(loc), p).sinks
+      .exists(_.contains(ControlFiles.SinkBatch(idHex, batch))))
+    fsOf(loc).delete(p, false)
+  }
+
+  /** The lake serves `docs` exactly once, names no missing file, and
+    * vacuum deletes the `unnamed` files of an earlier attempt. */
+  private def assertOneCopyThenSwept(lake: Lake, docs: Array[String],
+      unnamed: Seq[Path]): Unit = {
+    assert(lake.read().select("document").as[String].collect().sorted === docs)
+    assert(lake.validate().head().getAs[Long]("missing_files") === 0L)
+    val served = lake.read().inputFiles.map(new Path(_)).toSet
+    assert(unnamed.forall(p => !served(p)))
+    lake.vacuum()
+    assert(unnamed.forall(p => !fsOf(lake.cfg.location).exists(p)),
+      "vacuum deletes the files no sidecar names")
+    assert(lake.read().select("document").as[String].collect().sorted === docs)
+  }
 
   test("writeStream format(graft): micro-batches land as routed lake appends; restart continues without dupes") {
     implicit val sqlCtx = spark.sqlContext
@@ -93,74 +124,43 @@ class GraftSinkSpec extends SparkSpec {
     assert(lake.ingestExactlyOnce(batch, "sink-t", 7L))
     assert(lake.read().count() === 3)
 
-    // simulate the crash window: files published (and even the skip/
-    // zone refreshes run) but the ledger commit never happened — delete
-    // the ledger version and restore a (stale) pend marker. The
-    // staleness override stands in for the marker aging past the
-    // heartbeat horizon after the JVM died.
-    val idHex = Lake.sinkIdHex("sink-t")
-    val ledger = new Path(loc, s"_sink.$idHex.7.json")
-    assert(fs.exists(ledger), "ledger version should exist after commit")
-    fs.delete(ledger, false)
-    // the marker carries the REAL attempt id (as a genuine crash would
-    // leave it) — the heal path sweeps files by that attempt's tag
-    val attempt = lake.read().inputFiles.map(new Path(_).getName)
-      .collectFirst { case n if n.startsWith(s"sink-$idHex-7-") =>
-        n.stripPrefix(s"sink-$idHex-7-").split("-")(0) }.get
-    val pend = new Path(loc, s"_append.$idHex-7-$attempt.lock")
-    fs.create(pend, true).close()
+    // the crash window: the batch's files are written but the sidecar
+    // version that names them (and records the batch) never landed
+    val torn = lake.read().inputFiles.map(new Path(_))
+    dropNewestSidecar(loc, Lake.sinkIdHex("sink-t"), 7L)
+    assert(torn.forall(fs.exists), "the attempt's files stay on disk")
+    assert(lake.read().count() === 0, "files no sidecar names are invisible")
 
-    // replay of the same batch: the sweep removes the torn files first,
-    // so the lake converges to exactly one copy
-    sys.props("graft.sink.pendStaleMs") = "0"
-    try assert(lake.ingestExactlyOnce(batch, "sink-t", 7L))
-    finally sys.props.remove("graft.sink.pendStaleMs")
-    assert(lake.read().count() === 3)
-    assert(lake.read().select("document").as[String].collect().sorted ===
-      Array("p", "q", "r"))
-    assert(!fs.exists(pend), "pend marker cleared after healed commit")
+    // the replay converges to exactly one copy; the attempt's files are
+    // no lake file, so nothing is missing, and vacuum deletes them
+    assert(lake.ingestExactlyOnce(batch, "sink-t", 7L))
+    assertOneCopyThenSwept(lake, Array("p", "q", "r"), torn)
+    assert(!lake.ingestExactlyOnce(batch, "sink-t", 7L))
   }
 
-  test("a TORN ledger version (winner unreadable) freezes the heal path: no sweep, marker kept, maintenance blocked") {
+  test("a torn sidecar version holding a sink batch refuses the replay loudly; with it removed the replay lands one copy") {
     val loc = tmp() + "/lake"
     val fs = fsOf(loc)
     val lake = Lake(spark, LakeConfig(loc, dim = 4, numHashes = 2))
     val batch = Seq(
       (Seq(1f, 0f, 0f, 0f), "p"), (Seq(0f, 1f, 0f, 0f), "q")).toDF("vector", "document")
     assert(lake.ingestExactlyOnce(batch, "sink-tl", 7L))
-    assert(lake.read().count() === 2)
-
-    // simulate a TORN ledger write: the version file exists (so the
-    // batch counts committed — the filename is the ledger) but the
-    // winning attempt is unreadable from its body. Restore a stale pend
-    // marker carrying the REAL attempt, as a crash in the commit window
-    // would leave it.
-    val idHex = Lake.sinkIdHex("sink-tl")
-    val ledger = new Path(loc, s"_sink.$idHex.7.json")
-    val out = fs.create(ledger, true)
-    out.write("{\"sink\": \"".getBytes("UTF-8")) // half-written json
-    out.close()
-    val attempt = lake.read().inputFiles.map(new Path(_).getName)
-      .collectFirst { case n if n.startsWith(s"sink-$idHex-7-") =>
-        n.stripPrefix(s"sink-$idHex-7-").split("-")(0) }.get
-    val pend = new Path(loc, s"_append.$idHex-7-$attempt.lock")
-    fs.create(pend, true).close()
-
-    // the replay takes the skip branch but must sweep NOTHING: the
-    // committed files carry SOME attempt's tag and the torn version
-    // cannot say whose — deleting the stale attempt's files here could
-    // be deleting the committed rows themselves
-    sys.props("graft.sink.pendStaleMs") = "0"
-    try assert(!lake.ingestExactlyOnce(batch, "sink-tl", 7L))
-    finally sys.props.remove("graft.sink.pendStaleMs")
-    assert(lake.read().count() === 2, "committed rows survive the torn-ledger replay")
-    assert(fs.exists(pend), "marker stays: maintenance blocked loudly until repair")
-    intercept[java.util.ConcurrentModificationException](lake.compact())
-
-    // the documented operator heal: fix/inspect, clear the marker
-    fs.delete(pend, false)
-    lake.compact()
-    assert(lake.read().count() === 2)
+    val torn = lake.read().inputFiles.map(new Path(_))
+    // the commit version tears: the previous version is served, with
+    // the current tree (the batch's files among it) resolved by listing,
+    // and the batch not recorded — a replay would land it twice
+    val newest = newestSidecar(loc)
+    val body = ControlFiles.readControlFile(fs, newest)
+    val out = fs.create(newest, true)
+    try out.write(body.take(body.length / 2).getBytes("UTF-8")) finally out.close()
+    val e = intercept[java.util.ConcurrentModificationException](
+      lake.ingestExactlyOnce(batch, "sink-tl", 7L))
+    assert(e.getMessage.contains(newest.getName) && e.getMessage.contains("torn"))
+    assert(lake.read().count() === 2, "the refused replay wrote nothing")
+    // the documented heal: delete the torn version
+    fs.delete(newest, false)
+    assert(lake.ingestExactlyOnce(batch, "sink-tl", 7L))
+    assertOneCopyThenSwept(lake, Array("p", "q"), torn)
   }
 
   test("sink identity migration: a ledger committed under the raw path spelling is adopted, not restarted") {
@@ -198,26 +198,80 @@ class GraftSinkSpec extends SparkSpec {
     assert(GraftDataSource.normalizeCheckpointId(spark, "/tmp/graft_cp_y") !== base)
   }
 
-  test("a FRESH rival marker for the same batch refuses the attempt (live zombie protection)") {
+  test("lakes the earlier ledger protocol wrote: a legacy ledger name is the head, a legacy pend marker refuses its batch") {
     val loc = tmp() + "/lake"
+    val fs = fsOf(loc)
     val lake = Lake(spark, LakeConfig(loc, dim = 4, numHashes = 2))
     val batch = Seq((Seq(1f, 0f, 0f, 0f), "z")).toDF("vector", "document")
-    assert(lake.ingestExactlyOnce(batch, "sink-z", 0L))
-    // a marker freshly heartbeaten by another driver's attempt of batch 1
+    lake.ingest(batch)
     val idHex = Lake.sinkIdHex("sink-z")
-    val rival = new Path(loc, s"_append.$idHex-1-cafe0001.lock")
-    fsOf(loc).create(rival, true).close()
+    // the earlier protocol's ledger: only the NAME is read
+    fs.create(new Path(loc, s"_sink.$idHex.3.json"), true).close()
+    assert(lake.hasSinkLedger("sink-z"))
+    assert(!lake.ingestExactlyOnce(batch, "sink-z", 3L), "the legacy head replays as a no-op")
+    intercept[IllegalArgumentException](lake.ingestExactlyOnce(batch, "sink-z", 2L))
+    // a crashed attempt's pend marker for the batch being written: its
+    // files may be committed without a ledger entry — refuse, naming
+    // the marker and the attempt's file prefix
+    val pend = new Path(loc, s"_append.$idHex-4-cafe0001.lock")
+    fs.create(pend, true).close()
     try {
-      // under the DEFAULT staleness horizon the attempt must refuse —
-      // sweeping would delete files the live rival is about to commit
-      val e = intercept[java.util.ConcurrentModificationException](
-        lake.ingestExactlyOnce(batch, "sink-z", 1L))
-      assert(e.getMessage.contains("concurrent duplicate driver"))
+      val e = intercept[IllegalStateException](lake.ingestExactlyOnce(batch, "sink-z", 4L))
+      assert(e.getMessage.contains(pend.getName) && e.getMessage.contains(s"sink-$idHex-4-"))
       assert(lake.read().count() === 1, "refused attempt must publish nothing")
-    } finally fsOf(loc).delete(rival, false)
-    // rival gone (crashed and aged, or committed+cleared): proceeds
-    assert(lake.ingestExactlyOnce(batch, "sink-z", 1L))
+    } finally fs.delete(pend, false)
+    assert(lake.ingestExactlyOnce(batch, "sink-z", 4L))
     assert(lake.read().count() === 2)
+    // the new head lives in the sidecar; the legacy name stays behind it
+    assert(!lake.ingestExactlyOnce(batch, "sink-z", 4L))
+    intercept[IllegalArgumentException](lake.ingestExactlyOnce(batch, "sink-z", 3L))
+  }
+
+  test("the sink head survives every rewriting commit: compact, compactIncremental, seal, deleteIds, upsert, expire, a reshard step, vacuum") {
+    val loc = tmp() + "/lake"
+    var lake = Lake(spark, LakeConfig(loc, dim = 4, numHashes = 2))
+    val rng = new scala.util.Random(3)
+    def plain(tag: String, n: Int) = (0 until n)
+      .map(i => (s"$tag-$i", Seq.fill(4)(rng.nextGaussian().toFloat), s"$tag $i"))
+      .toDF("id", "vector", "document")
+    // several files per shard, so compactIncremental has work
+    (0 until 3).foreach(i => lake.ingest(plain(s"p$i", 12)))
+    lake.ingest(Seq(("old", Seq(1f, 1f, 0f, 0f), "old", "2001-01-01 00:00:00"))
+      .toDF("id", "vector", "document", "timestamp"))
+    val (a0, b0) = (plain("a0", 4), plain("b0", 4))
+    assert(lake.ingestExactlyOnce(a0, "sink-a", 0L))
+    assert(lake.ingestExactlyOnce(b0, "sink-b", 0L))
+    assert(lake.ingestExactlyOnce(plain("b1", 4), "sink-b", 1L))
+    var rows = 37L + 12L
+    assert(lake.count() === rows)
+    // sink-a's head is batch 0, sink-b's is batch 1
+    def heads(op: String): Unit = {
+      assert(!lake.ingestExactlyOnce(a0, "sink-a", 0L), s"after $op: batch 0 replayed")
+      val e = intercept[IllegalArgumentException](lake.ingestExactlyOnce(b0, "sink-b", 0L))
+      assert(e.getMessage.contains("wiped checkpoint"), s"after $op: ${e.getMessage}")
+      assert(lake.count() === rows, s"after $op: rows changed")
+    }
+    def committed(op: String)(body: => Any): Unit = {
+      val before = lake.currentVersion()
+      body
+      assert(lake.currentVersion() !== before, s"$op committed no version")
+      heads(op)
+    }
+    committed("compactIncremental")(assert(lake.compactIncremental(maxFilesPerShard = 1) > 0L))
+    committed("compact")(lake.compact())
+    committed("seal")(lake.seal())
+    committed("deleteIds") { assert(lake.deleteIds(Seq("p0-0")) === 1L); rows -= 1 }
+    committed("upsert")(assert(lake.upsert(plain("p1", 1)) === 1L))
+    committed("expire") {
+      val (retired, rewritten) = lake.expire(java.time.Instant.parse("2002-01-01T00:00:00Z"))
+      assert(retired + rewritten === 1L); rows -= 1
+    }
+    committed("a reshard step") {
+      lake = lake.reshard(3, maxDirs = 1, dirsPerCommit = 1)
+      assert(lake.reshardStatus().exists(_._3 > 0L), "the reshard is still in flight")
+    }
+    lake.vacuum()
+    heads("vacuum")
   }
 
   test("two concurrent attempts of the SAME batch converge to one copy (refusal or ledger arbitration)") {

@@ -409,8 +409,9 @@ class LakePropertiesSpec extends SparkSpec {
           // STREAMING-SINK batch (ingestExactlyOnce) interleaved with
           // every maintenance op the sequence produces: commit, then an
           // immediate replay (must no-op), and sometimes a simulated
-          // torn commit (ledger dropped, pend marker restored) whose
-          // replay must sweep-and-rewrite to the same model
+          // torn commit (the sidecar version that recorded the batch
+          // dropped: its files written, named by nothing) whose replay
+          // must land the batch once, converging to the same model
           val rows = freshRows(1 + rng.nextInt(5))
           day += 1
           def df = withExtras(rows.map(r => (r._1, r._2, r._3, ts(day)))
@@ -425,22 +426,22 @@ class LakePropertiesSpec extends SparkSpec {
           if (rng.nextInt(3) == 0) {
             val fs = new org.apache.hadoop.fs.Path(lake.cfg.location)
               .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val idHex = Lake.sinkIdHex("fuzz-sink")
-            fs.delete(new org.apache.hadoop.fs.Path(lake.cfg.location,
-              s"_sink.$idHex.$sinkBatch.json"), false)
-            val bHex = java.lang.Long.toHexString(sinkBatch)
-            val attempt = lake.read().inputFiles
-              .map(new org.apache.hadoop.fs.Path(_).getName)
-              .collectFirst { case n if n.startsWith(s"sink-$idHex-$bHex-") =>
-                n.stripPrefix(s"sink-$idHex-$bHex-").split("-")(0) }
-              .getOrElse("f022beef") // batch fully compacted away
-            val pend = new org.apache.hadoop.fs.Path(lake.cfg.location,
-              s"_append.$idHex-$bHex-$attempt.lock")
-            fs.create(pend, true).close()
-            sys.props("graft.sink.pendStaleMs") = "0" // crashed attempt aged out
-            try assert(lake.ingestExactlyOnce(df, "fuzz-sink", sinkBatch),
-              s"step $step: torn replay of sink batch $sinkBatch not healed")
-            finally sys.props.remove("graft.sink.pendStaleMs")
+            val newest = fs.listStatus(new org.apache.hadoop.fs.Path(lake.cfg.location))
+              .map(_.getPath)
+              .filter(p => Lake.metaNameRe.pattern.matcher(p.getName).matches())
+              .maxBy(_.getName.split('.')(1).toLong)
+            assert(ControlFiles.read[ControlFiles.LakeSidecar](fs, newest).sinks
+              .exists(_.contains(ControlFiles.SinkBatch(
+                Lake.sinkIdHex("fuzz-sink"), sinkBatch))),
+              s"step $step: the newest version is not sink batch $sinkBatch's commit")
+            fs.delete(newest, false)
+            assert(lake.ingestExactlyOnce(df, "fuzz-sink", sinkBatch),
+              s"step $step: torn replay of sink batch $sinkBatch not re-committed")
+            val got = lake.read().select("id").collect().map(_.getString(0))
+            assert(got.length === model.size && got.toSet === model.keySet,
+              s"step $step: torn replay of sink batch $sinkBatch diverged from the model")
+            assert(lake.validate().head().getAs[Long]("missing_files") === 0L,
+              s"step $step: the torn attempt's unnamed files count as lake files")
           }
           sinkBatch += 1
           "sink batch"

@@ -39,18 +39,33 @@ object CountingListFs {
     * round-trip ledger the zero-listing read contract is pinned
     * against. */
   val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** Every path created (a PUT), in order. */
+  val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** Every path deleted, in order. */
+  val deleted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
-/** [[BucketFs]] that records every `listStatus` call — an object
-  * store's LIST is the round trip the sidecar's FILE-level manifest
-  * exists to eliminate (guide §6), and this FS makes "zero listings"
-  * an assertable fact instead of a claim. */
+/** [[BucketFs]] that records every `listStatus`, `create` and `delete`
+  * call — an object store's LIST is the round trip the sidecar's
+  * FILE-level manifest exists to eliminate (guide §6), and this FS makes
+  * "zero listings" (and a commit's PUTs) an assertable fact instead of
+  * a claim. */
 class CountingListFs extends BucketFs {
   override def getScheme: String = "countfs"
   override def getUri: URI = URI.create("countfs:///")
   override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
     CountingListFs.listed.add(f.toString)
     super.listStatus(f)
+  }
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    CountingListFs.created.add(f.toString)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def delete(f: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean = {
+    CountingListFs.deleted.add(f.toString)
+    super.delete(f, recursive)
   }
 }
 
@@ -652,30 +667,33 @@ class ObjectStoreSpec extends SparkSpec {
       assert(lake.ingestExactlyOnce(batch, "bucket-sink", 0L))
       assert(!lake.ingestExactlyOnce(batch, "bucket-sink", 0L)) // replay skips
       assert(lake.count() === 2L)
-      // the ledger version lives on the remote scheme
+      // the batch record lives in the sidecar version on the remote
+      // scheme, beside the files it names: no other root file
       val fs = new org.apache.hadoop.fs.Path(lake.cfg.location)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val idHex = Lake.sinkIdHex("bucket-sink")
-      assert(fs.exists(new org.apache.hadoop.fs.Path(
-        lake.cfg.location, s"_sink.$idHex.0.json")))
-      // torn-commit heal across the PUT-semantics store: drop the
-      // ledger, restore the pend marker, replay — the name-tagged sweep
-      // (a delete per torn file, no rename) converges to one copy
-      fs.delete(new org.apache.hadoop.fs.Path(
-        lake.cfg.location, s"_sink.$idHex.0.json"), false)
-      val attempt = lake.read().inputFiles
-        .map(new org.apache.hadoop.fs.Path(_).getName)
-        .collectFirst { case n if n.startsWith(s"sink-$idHex-0-") =>
-          n.stripPrefix(s"sink-$idHex-0-").split("-")(0) }.get
-      fs.create(new org.apache.hadoop.fs.Path(
-        lake.cfg.location, s"_append.$idHex-0-$attempt.lock"), true).close()
-      sys.props("graft.sink.pendStaleMs") = "0" // the marker has "aged out"
-      try assert(lake.ingestExactlyOnce(batch, "bucket-sink", 0L))
-      finally sys.props.remove("graft.sink.pendStaleMs")
+      def rootNames = fs.listStatus(new org.apache.hadoop.fs.Path(lake.cfg.location))
+        .map(_.getPath.getName).toSeq
+      val newest = rootNames.filter(n => Lake.metaNameRe.pattern.matcher(n).matches())
+        .maxBy(_.split('.')(1).toLong)
+      val committed = new org.apache.hadoop.fs.Path(lake.cfg.location, newest)
+      assert(ControlFiles.read[ControlFiles.LakeSidecar](fs, committed).sinks ===
+        Some(Seq(ControlFiles.SinkBatch(idHex, 0L))))
+      assert(!rootNames.exists(n => n.startsWith("_sink.") || n.startsWith("_append.")))
+      // a torn commit across the PUT-semantics store: the batch's files
+      // written, the version naming them lost — the replay lands one
+      // copy, nothing named is missing, and vacuum deletes the rest
+      val torn = lake.read().inputFiles.map(new org.apache.hadoop.fs.Path(_))
+      fs.delete(committed, false)
+      assert(lake.count() === 0L)
+      assert(lake.ingestExactlyOnce(batch, "bucket-sink", 0L))
+      assert(lake.validate().head().getAs[Long]("missing_files") === 0L)
+      lake.vacuum()
+      assert(torn.forall(!fs.exists(_)), "vacuum deletes the unnamed attempt")
       assert(lake.count() === 2L)
       assert(lake.read().select("document").as[String].collect().sorted
         === Array("s0", "s1"))
-      // no pend marker or sink scratch left; maintenance proceeds
+      // maintenance proceeds
       assert(lake.compact() >= 1L)
       assert(lake.count() === 2L)
     }
@@ -719,6 +737,46 @@ class ObjectStoreSpec extends SparkSpec {
       assert(fin.vacuum() >= 1L) // the retired old-width trees sweep
       assert(fin.count() === 300L)
     }
+  }
+
+  test("countfs: a sink batch makes the root requests of a plain ingest — the gate marker and one sidecar version") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingListFs].getName)
+    val root = "countfs://" +
+      java.nio.file.Files.createTempDirectory("graft_countfs_sink").toString
+    def batch(tag: String) = (0 until 40)
+      .map(i => (s"$tag$i", Seq(math.sin(i).toFloat, 1f, -i.toFloat, 0.5f), s"doc-$i"))
+      .toDF("id", "vector", "document")
+    import scala.jdk.CollectionConverters._
+    /** LISTs of, and creates and deletes directly under, the lake root
+      * while `op` runs; versioned and per-writer names as their shapes. */
+    def rootRequests(lake: Lake)(op: => Any): (Int, Seq[String], Seq[String]) = {
+      Seq(CountingListFs.listed, CountingListFs.created, CountingListFs.deleted)
+        .foreach(_.clear())
+      op
+      val rootPath = new org.apache.hadoop.fs.Path(lake.cfg.location)
+      def atRoot(q: java.util.concurrent.ConcurrentLinkedQueue[String]) =
+        q.asScala.toSeq.map(new org.apache.hadoop.fs.Path(_))
+          .filter(_.getParent == rootPath).map(_.getName
+            .replaceAll("""^_meta\.\d+\.json$""", "_meta.<v>.json")
+            .replaceAll("""^_append\..+\.lock$""", "_append.<writer>.lock"))
+      (CountingListFs.listed.asScala.count(p => new org.apache.hadoop.fs.Path(p) == rootPath),
+        atRoot(CountingListFs.created), atRoot(CountingListFs.deleted))
+    }
+    val plain = Lake(spark, LakeConfig(s"$root/plain", dim = 4, numHashes = 3))
+    val sink = Lake(spark, LakeConfig(s"$root/sink", dim = 4, numHashes = 3))
+    Seq(plain, sink).foreach(_.ingest(batch("w"))) // past the first commit
+    val byIngest = rootRequests(plain)(plain.ingest(batch("b")))
+    val bySink = rootRequests(sink)(assert(sink.ingestExactlyOnce(batch("b"), "count-sink", 0L)))
+    assert(bySink === byIngest, s"sink batch $bySink vs plain ingest $byIngest")
+    val (_, creates, deletes) = bySink
+    assert(creates === Seq("_append.<writer>.lock", "_meta.<v>.json"))
+    assert(deletes === Seq("_append.<writer>.lock"))
+    // the replay of the committed batch writes nothing at the root
+    val (_, replayCreates, _) = rootRequests(sink)(
+      assert(!sink.ingestExactlyOnce(batch("b"), "count-sink", 0L)))
+    assert(replayCreates === Seq("_append.<writer>.lock"))
+    assert(sink.count() === plain.count())
   }
 
   test("manifest-recorded reads plan with ZERO data-directory listings") {

@@ -27,8 +27,8 @@ class SparkInternalsCanarySpec extends AnyFunSuite {
         s"SPARK-MAJOR CANARY: $name no longer loads ($e). Migration " +
           s"notes: $adr — the v1 source maps to SupportsRead + " +
           "MicroBatchStream over sealedFileStatuses; the v1 sink's " +
-          "ledger protocol needs a driver-transactional DSv2 " +
-          "streaming commit (re-measure SinkBench before moving); " +
+          "batch commit needs a driver-transactional DSv2 " +
+          "streaming commit; " +
           "GraftShims members each carry their replacement inline.")
     }
 

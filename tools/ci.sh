@@ -90,7 +90,7 @@ fi
 # name, by graft.LakeWriter, and an append commits by naming its files in
 # a sidecar version. So nothing in src/main stages under `_staging`, the
 # append and writer path (LakeWriter.scala; writeAppend, editGenFiles,
-# commitAppend, writeGeneration and sweepSinkFiles in Lake.scala) never
+# commitAppend and writeGeneration in Lake.scala) never
 # renames, and Lake.scala drives no DataFrameWriter (`.write.` chain)
 # of its own
 if grep -rnE '_staging|stagingDirName' src/main/scala --include='*.scala'; then
@@ -102,7 +102,7 @@ if grep -nE '\.rename\(' src/main/scala/graft/LakeWriter.scala || ! awk '
   match($0, /^  ([a-z]+(\[[a-z]+\])? )*def [A-Za-z0-9_]+/) {
     fn = substr($0, RSTART, RLENGTH); sub(/.*def /, "", fn) }
   /\.rename\(/ && (fn == "writeAppend" || fn == "editGenFiles" ||
-      fn == "commitAppend" || fn == "writeGeneration" || fn == "sweepSinkFiles") {
+      fn == "commitAppend" || fn == "writeGeneration") {
     print FILENAME ":" FNR ": " $0; bad = 1 }
   END { exit bad }' src/main/scala/graft/Lake.scala; then
   echo "ci: a rename in the append or writer path" >&2
@@ -119,7 +119,10 @@ fi
 # one exclusive create: the writer lock, every sidecar version and every
 # derived-table version are created through Lake.createIfAbsent, so an
 # O_EXCL open (CREATE_NEW) or an If-None-Match builder option stands
-# nowhere else in src/main
+# nowhere else in src/main. A streaming-sink batch commits in its
+# append's sidecar version, so this covers the sink too (its earlier
+# ledger file was a plain create(overwrite = false) outside
+# createIfAbsent: a blind PUT on plain S3, which arbitrated nothing)
 if ! awk '
   FNR == 1 { fn = "" }
   /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
@@ -130,6 +133,26 @@ if ! awk '
     print FILENAME ":" FNR ": " $0; bad = 1 }
   END { exit bad }' $(find src/main/scala -name '*.scala' | sort); then
   echo "ci: an exclusive create outside Lake.createIfAbsent" >&2
+  exit 1
+fi
+
+# one sink commit: a streaming-sink batch is recorded in the sidecar
+# version of its append, so src/main names a `_sink.` ledger file only
+# in Lake.sinkHead, which reads the newest legacy ledger name from the
+# root listing; and Lake.scala starts no thread of its own (the sink's
+# marker heartbeat is gone with the ledger)
+if ! awk '
+  FNR == 1 { fn = "" }
+  /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
+  match($0, /^  ([a-z]+(\[[a-z]+\])? )*def [A-Za-z0-9_]+/) {
+    fn = substr($0, RSTART, RLENGTH); sub(/.*def /, "", fn) }
+  /_sink\\*\./ && !(FILENAME ~ /graft\/Lake\.scala$/ && fn == "sinkHead") {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  FILENAME ~ /graft\/Lake\.scala$/ &&
+      /new Thread([^A-Za-z0-9_]|$)|extends Thread([^A-Za-z0-9_]|$)|Thread\.of(Virtual|Platform)/ {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  END { exit bad }' $(find src/main/scala -name '*.scala' | sort); then
+  echo "ci: a _sink. ledger file named outside Lake.sinkHead, or a thread started in Lake.scala" >&2
   exit 1
 fi
 
