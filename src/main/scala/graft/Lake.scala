@@ -1406,7 +1406,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * (GraftSpjSpec pins the zero-shuffle plan). Compare with a
     * re-download-and-compare: days of copy for a verdict this
     * computes in one metadata-light pass. */
-  def diffStats(other: Lake, spj: Boolean = true): DataFrame = {
+  def diffStats(other: Lake): DataFrame = {
     require(other.cfg.location != cfg.location,
       "diffStats: comparing a lake to itself is vacuous")
     require(other.cfg.dim == cfg.dim && other.cfg.numHashes == cfg.numHashes &&
@@ -1438,8 +1438,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       }
       Seq(v, isnull(col(f)).cast(IntegerType))
     }
-    // spj=false forces the stock shuffled plan — the A/B lever
-    // SpjBench measures the co-located audit against.
     // TWO combiners over the per-row hash: bit_xor alone is blind to
     // byte-identical row PAIRS (h XOR h = 0 — a duplicated-and-
     // dropped-elsewhere pair would XOR-cancel, count-neutral), and a
@@ -1448,7 +1446,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // (10^19 hash magnitude × 10^19 rows fits) and a shard is in_sync
     // only when count, XOR fold, AND additive fold all agree.
     def side(l: Lake, cntName: String, hashName: String, sumName: String): DataFrame =
-      spark.read.format("graft").option("spj", spj.toString).load(l.cfg.location)
+      spark.read.format("graft").option("spj", "true").load(l.cfg.location)
         .groupBy(col(partCol))
         .agg(org.apache.spark.sql.functions.count(lit(1)).as(cntName),
           bit_xor(xxhash64(hashInputs: _*)).as(hashName),
@@ -1696,8 +1694,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * `spark.sql.requireAllClusterKeysForCoPartition=false` — the join
     * keys (shard, id) are a SUPERSET of the partition keys (shard),
     * and the strict default demands every join key be a partition key
-    * (the same relaxation Iceberg's SPJ docs prescribe). `graft.Bench`
-    * and `graft.Verify` sessions ship it; DerivedSpec pins the
+    * (the same relaxation Iceberg's SPJ docs prescribe). `graft.Verify`
+    * and perfbench sessions ship it; DerivedSpec pins the
     * zero-exchange plan under exactly these confs. */
   def joinDerived(derived: DerivedTable, how: String = "inner",
       spj: Boolean = true, allowStale: Boolean = false): DataFrame =

@@ -19,8 +19,8 @@ object Verify {
       // co-located derived joins (Lake.joinDerived scaladoc): accept
       // join keys ⊃ partition keys without a shuffle
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // driver-side file discovery up to 10k paths (see Bench scaladoc:
-      // the distributed listing job only pays on high-latency stores)
+      // driver-side file discovery up to 10k paths: a distributed
+      // listing job pays off only on high-latency stores
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         sys.env.getOrElse("SPARK_GRAFT_DISCOVERY_THRESHOLD", "10000"))
       .getOrCreate()

@@ -1105,7 +1105,7 @@ object CoreQueries {
     * once. Scale shape: both sides read key-grouped on shard and the
     * join keys (shard, id) contain the partition key, so the plan is
     * the ZERO-EXCHANGE storage-partitioned join (DerivedSpec pins it;
-    * Bench/Verify sessions carry the co-partition conf) — at 100 TB
+    * Verify and perfbench sessions carry the co-partition conf) — at 100 TB
     * the refresh is O(churn) and the serve never re-hashes corpus or
     * features across the wire. */
   val qDerivedJoin = Q(

@@ -46,8 +46,19 @@ class ReshardSpec extends SparkSpec {
     val dir = tmp()
     val old = Lake(spark, LakeConfig(s"$dir/lake", dim = dim, numHashes = 3))
     old.ingest(rows(500))
+    def shardRows(l: Lake) = l.read().groupBy("shard").count()
+      .as[(Int, Long)].collect().toMap
+    val narrowRows = shardRows(old)
     val wide = old.reshard(5)
     assert(wide.cfg.numHashes === 5)
+    // each directory splits in place: a width-3 shard's rows are exactly
+    // the rows of the width-5 shards whose low 3 bits name it, so no row
+    // moves across parents
+    val wideRows = shardRows(wide)
+    (0 until 8).foreach { s =>
+      assert(narrowRows.getOrElse(s, 0L) === wideRows.collect {
+        case (w, n) if (w & 7) == s => n }.sum, s"parent shard $s")
+    }
     // independent rebuild at width 5 from the same rows
     val direct = Lake(spark, LakeConfig(s"$dir/direct", dim = dim, numHashes = 5))
     direct.ingest(rows(500))
@@ -63,6 +74,14 @@ class ReshardSpec extends SparkSpec {
     val exactInShard = wide.read().where(col("shard") === shardOfQ)
     assert(approx.subsetOf(
       exactInShard.select("id").as[String].collect().toSet))
+    // ... and scans only the routed directory at the new width: the
+    // probe's scanned rows fall with every added hyperplane
+    val scans = fileScansOf(wide.topK(q, 3).queryExecution.executedPlan)
+    assert(scans.nonEmpty)
+    scans.foreach(_.selectedPartitions.toPartitionArray
+      .map(_.filePath.toString)
+      .foreach(f => assert(f.contains(s"shard=$shardOfQ/"),
+        s"single-probe topK scans $f outside shard=$shardOfQ")))
     // the new sidecar declares the new width; a fresh session at the
     // OLD width is refused at construction-check time
     val staleFresh = Lake(spark, LakeConfig(s"$dir/lake", dim = dim, numHashes = 3))

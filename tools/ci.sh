@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
-# Full local gate: compile + specs, oracle-verify at all three scale
-# factors, then bench at sf0.1. Mirrors what the driver runs per round.
+# Full local gate: static source checks, compile + specs, oracle-verify
+# at all three scale factors, then one perfbench run per workload that
+# must come back correct with no failed operation.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -182,6 +183,19 @@ if ! awk '
   exit 1
 fi
 
+# one bench harness: perfbench/ measures, the specs and the oracle pin
+# behaviour, so src/main keeps only the driver mains (Verify, Smoke),
+# the plan printer (Explain) and the 10x-corpus probe (ScaleBench)
+mains=$(awk '
+  /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
+  match($0, /^[[:space:]]*([a-z]+ )*object [A-Za-z0-9_]+/) {
+    obj = substr($0, RSTART, RLENGTH); sub(/.*object /, "", obj) }
+  /def main\(/ { print obj }' $(find src/main/scala -name '*.scala' | sort) | sort | tr '\n' ' ')
+if [ "$mains" != "Explain ScaleBench Smoke Verify " ]; then
+  echo "ci: src/main/scala defines mains [$mains]; only Explain, ScaleBench, Smoke and Verify may (benchmark through perfbench/)" >&2
+  exit 1
+fi
+
 # benchmark arithmetic (stats.py) unit tests
 python3 perfbench/test_stats.py
 
@@ -193,5 +207,11 @@ for sf in 0.001 0.01 0.1; do
   python3 tools/check.py "/root/testdata/sf$sf" "$out"
 done
 
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-  sbt -batch "runMain graft.Bench" 2>&1 | grep '{"metric"' | sed 's/^\[info\] //'
+for w in registry scan churn; do
+  last=$(python3 perfbench/run.py --workload "$w" --seed 1 --seconds 10 --trace 0 | tail -n 1)
+  echo "$last"
+  if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)' "$last"; then
+    echo "ci: perfbench $w is not correct or has failed operations" >&2
+    exit 1
+  fi
+done
