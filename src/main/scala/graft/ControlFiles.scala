@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 import scala.reflect.ClassTag
 
-import graft.Lake.{LakeState, LiveFile, ReshardState, SidecarConfig}
+import graft.Lake.{LakeState, LiveFile, ReshardState, SidecarConfig, ZoneStats}
 
 /** The ONE codec for every small JSON control file the engine writes
   * next to its data. Each file has a case class below whose fields are
@@ -25,14 +25,17 @@ import graft.Lake.{LakeState, LiveFile, ReshardState, SidecarConfig}
   * <derived>/_derived.<v>.json    DerivedSidecar   previous version (logged); none left: fail
   * <state>/_state.<v>.json        StatePointer     previous version (logged); none left: fail
   * <lake>/_recall/calib.json      RecallCalib      fail
-  * <lake>/_zone/_spec.json        ZoneSpec         field reads scan, rebuilds skip
   * <model>/_ivf_meta.json         IvfMeta          fail
   * <model>/_pq_meta.json          PqMeta           fail
   * }}}
   *
   * Versioned files are resolved with [[newestParseable]]. A manifest
   * entry (`files`) whose name/length/mtime lists disagree is dropped
-  * on decode: that directory is listed instead. */
+  * on decode: that directory is listed instead. The zone map is part of
+  * the lake sidecar: `zone_fields` names its metadata fields and each
+  * entry's `fz` list carries its files' zone stats; a stats list or
+  * element that does not decode leaves those files without stats, so
+  * readers scan them. */
 private[graft] object ControlFiles {
   private type JLong = java.lang.Long
 
@@ -128,11 +131,14 @@ private[graft] object ControlFiles {
 
   /** One FILE-level manifest entry: the data files of directory `fd`
     * (in generation `fg` — absent in derived sidecars) as `;`-joined
-    * names, byte lengths and modification times. */
+    * names, byte lengths and modification times, and, once the lake
+    * keeps a zone map, `fz`: each file's zone stats ([[FileEntry.zoneOf]]),
+    * an empty element for a file without them. */
   final case class FileEntry(fd: String,
       @JsonDeserialize(contentAs = classOf[JLong]) fg: Option[Long],
-      fn: String, fl: String, fm: String) {
-    /** The entry's files, or None when the three lists disagree. */
+      fn: String, fl: String, fm: String, fz: Option[String] = None) {
+    /** The entry's files, or None when the three lists disagree. A
+      * stats list of another length than the names gives no file stats. */
     def liveFiles: Option[Seq[LiveFile]] =
       try {
         def parts(s: String): Seq[String] =
@@ -140,8 +146,10 @@ private[graft] object ControlFiles {
         val names = parts(fn)
         val lens = parts(fl).map(_.toLong)
         val mods = parts(fm).map(_.toLong)
+        val stats = fz.map(parts).filter(_.size == names.size)
+          .fold(names.map(_ => Option.empty[ZoneStats]))(_.map(FileEntry.zoneOf))
         if (fd == null || names.size != lens.size || names.size != mods.size) None
-        else Some(names.indices.map(i => LiveFile(names(i), lens(i), mods(i))))
+        else Some(names.indices.map(i => LiveFile(names(i), lens(i), mods(i), stats(i))))
       } catch { case _: NumberFormatException => None }
   }
 
@@ -152,7 +160,26 @@ private[graft] object ControlFiles {
 
     def of(dir: String, gen: Option[Long], files: Seq[LiveFile]): FileEntry =
       FileEntry(dir, gen, files.map(_.name).mkString(";"),
-        files.map(_.len).mkString(";"), files.map(_.mod).mkString(";"))
+        files.map(_.len).mkString(";"), files.map(_.mod).mkString(";"),
+        Some(files.map(_.stats.fold("")(zoneElement)).mkString(";"))
+          .filter(_ => files.exists(_.stats.isDefined)))
+
+    /** One `fz` element: `rows,ts_rows,min_ts,max_ts` and a `min,max`
+      * pair per zone field, an empty value for a missing bound. */
+    def zoneElement(z: ZoneStats): String =
+      (Seq(z.rows, z.tsRows) ++ (Seq(z.minTs, z.maxTs) ++
+        z.fields.flatMap { case (lo, hi) => Seq(lo, hi) }).map(_.fold("")(_.toString)))
+        .mkString(",")
+
+    /** The stats of one `fz` element; None when it is empty or malformed. */
+    def zoneOf(e: String): Option[ZoneStats] =
+      try {
+        val v = e.split(",", -1).toSeq
+        def opt[A](s: String)(f: String => A): Option[A] = Option.when(s.nonEmpty)(f(s))
+        Option.when(v.size >= 4 && v.size % 2 == 0)(ZoneStats(v(0).toLong, v(1).toLong,
+          opt(v(2))(_.toLong), opt(v(3))(_.toLong),
+          v.drop(4).grouped(2).map(p => (opt(p(0))(_.toDouble), opt(p(1))(_.toDouble))).toSeq))
+      } catch { case _: NumberFormatException => None }
   }
 
   /** The FILE-level manifest a commit records for `dirs`: each
@@ -183,7 +210,10 @@ private[graft] object ControlFiles {
     * files too, so its unnamed files are not part of the lake; without
     * it (sidecars written before appends committed here) the current
     * generation's tree is live by listing. `sinks` is each exactly-once
-    * sink's committed head, written only when a sink has committed. */
+    * sink's committed head, written only when a sink has committed.
+    * `zone_fields` is present (possibly empty) once [[Lake.buildZoneMap]]
+    * has run: the metadata fields whose per-file ranges the entries'
+    * zone stats carry, in order. */
   final case class LakeSidecar(
       lastUpdate: Option[String] = None,
       @JsonDeserialize(contentAs = classOf[JLong]) dim: Option[Long] = None,
@@ -205,7 +235,8 @@ private[graft] object ControlFiles {
       live: Seq[LiveDir] = Nil,
       genHasData: Option[Boolean] = None,
       genRecorded: Option[Boolean] = None,
-      sinks: Option[Seq[SinkBatch]] = None) {
+      sinks: Option[Seq[SinkBatch]] = None,
+      zoneFields: Option[Seq[String]] = None) {
 
     def toState: LakeState = LakeState(
       generation, live.map(e => e.d -> e.g), genHasData,
@@ -224,7 +255,8 @@ private[graft] object ControlFiles {
       genRecorded = genRecorded.contains(true),
       sinks = sinks.getOrElse(Nil).map(s => s.sink -> s.batch).toMap,
       config = Some(SidecarConfig(dim, metric, lshSeed, pqFingerprint,
-        packSignBits.contains(true), partitionKey, partitionKeyType)))
+        packSignBits.contains(true), partitionKey, partitionKeyType)),
+      zoneFields = zoneFields)
   }
 
   object LakeSidecar {
@@ -257,7 +289,8 @@ private[graft] object ControlFiles {
         genHasData = Some(genHasData),
         genRecorded = Some(true).filter(_ => st.genRecorded),
         sinks = Some(st.sinks.toSeq.sorted.map { case (k, b) => SinkBatch(k, b) })
-          .filter(_.nonEmpty))
+          .filter(_.nonEmpty),
+        zoneFields = st.zoneFields)
   }
 
   /** `<derived>/_derived.<v>.json`, a derived feature table's commit
@@ -320,10 +353,6 @@ private[graft] object ControlFiles {
       stamp: Option[String] = None,
       @JsonDeserialize(contentAs = classOf[JLong]) bytes: Option[Long] = None,
       @JsonDeserialize(contentAs = classOf[java.lang.Double]) recalls: Seq[Double] = Nil)
-
-  /** `<lake>/_zone/_spec.json`: the metadata field paths the zone map
-    * carries, in column order. */
-  final case class ZoneSpec(fields: Seq[String] = Nil)
 
   /** `<model>/_ivf_meta.json`. */
   final case class IvfMeta(k: Int, dim: Int, fingerprint: String)

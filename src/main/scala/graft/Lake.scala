@@ -234,10 +234,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   def ingest(rows: DataFrame): Unit = withAppendLock("ingest") {
     val (fs, entries, st) = resolveState()
     requireWriteConfigMatch(fs, entries, st)
-    writeAppend(fs, st, withDerived(rows, st)).foreach { out =>
-      refreshSkipIndex(out.state, out.shards)
-      refreshZoneMap(out.files)
-    }
+    writeAppend(fs, st, withDerived(rows, st)).foreach(out =>
+      refreshSkipIndex(out.state, out.shards))
   }
 
   /** EXACTLY-ONCE ingest for the registered streaming SINK
@@ -313,7 +311,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
           "batch is already in the lake: remove those rows first.")
       val out = writeAppend(fs, st, withDerived(rows, st),
         sinkBatch = Some(idHex -> batchId))
-      out.foreach { o => refreshSkipIndex(o.state, o.shards); refreshZoneMap(o.files) }
+      out.foreach(o => refreshSkipIndex(o.state, o.shards))
       out.isDefined
     }
   }
@@ -587,20 +585,27 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   /** The data files the sidecar's FILE-level manifest records for `st`,
     * per (escaped-dir, generation) entry, as QUALIFIED statuses — the
     * exact values a listing returns, so a served path and a listed one
-    * compare equal — less the ones `st` knows are lost. Pure: no I/O.
-    * Serves a current-generation entry only when the state records that
-    * generation ([[LakeState.genRecorded]]); otherwise that tree is live
-    * by rule and only a listing is truthful for it. */
-  private def recordedFiles(st: LakeState)
-      : Map[(String, Long), Seq[org.apache.hadoop.fs.FileStatus]] = {
+    * compare equal — with their zone stats, less the ones `st` knows are
+    * lost. Pure: no I/O. Serves a current-generation entry only when the
+    * state records that generation ([[LakeState.genRecorded]]); otherwise
+    * that tree is live by rule and only a listing is truthful for it. */
+  private def recordedFiles(st: LakeState): Map[(String, Long),
+      Seq[(org.apache.hadoop.fs.FileStatus, Option[ZoneStats])]] = {
     val fs = fsOfRoot
     st.liveFiles.collect { case (e @ (d, g), fl)
         if g != st.generation || st.genRecorded =>
       val dir = fs.makeQualified(new org.apache.hadoop.fs.Path(genPath(g), d))
       e -> fl.filterNot(f => st.lost((e, f.name))).map(f =>
-        graft.sources.GraftManifestFileIndex.status(dir, f.name, f.len, f.mod))
+        (graft.sources.GraftManifestFileIndex.status(dir, f.name, f.len, f.mod), f.stats))
     }
   }
+
+  /** The zone stats `st` records, by qualified file path (the paths
+    * [[resolveFiles]] serves). */
+  private def zoneStatsOf(st: LakeState)
+      : Map[org.apache.hadoop.fs.Path, ZoneStats] =
+    recordedFiles(st).values.flatten
+      .collect { case (s, Some(z)) => s.getPath -> z }.toMap
 
   /** Which files `st` holds: every data file of `entries` (live
     * (escaped-dir, generation) pairs of `st`), per entry. An entry
@@ -615,7 +620,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       : Seq[((String, Long), Seq[org.apache.hadoop.fs.FileStatus])] = {
     val recorded = recordedFiles(st)
     val (served, toList) = entries.distinct.partition(recorded.contains)
-    served.map(e => e -> recorded(e)) ++ mapDirsPooled(toList) { case (d, g) =>
+    served.map(e => e -> recorded(e).map(_._1)) ++ mapDirsPooled(toList) { case (d, g) =>
       val p = new org.apache.hadoop.fs.Path(genPath(g), d)
       (d, g) -> (try dataFilesIn(fs, p)
       catch {
@@ -650,9 +655,10 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * before it leaves them for [[vacuum]] to sweep — an append is never
     * half-visible. The write stage hash-partitions on the partition
     * column into min(shards, cores) tasks: each shard still gets exactly
-    * one file, and the stage uses the cores. Returns the partition values
-    * this batch landed files in (the skip-index refresh scope), the
-    * written file paths (the zone-map refresh scope) and the committed
+    * one file, and the stage uses the cores. On a lake with a zone map
+    * the commit names the files with their zone stats ([[zoneRows]] over
+    * exactly these files). Returns the partition values this batch
+    * landed files in (the skip-index refresh scope) and the committed
     * state. Caller holds the shared OR exclusive gate and resolved `st`
     * under it (and checked its write config against it), so maintenance
     * cannot move the generation pointer before the commit.
@@ -688,7 +694,8 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val gen = genPath(base.generation)
     val written = LakeWriter.write(byPartition(derived), gen, Some(partCol),
       cfg.codec)
-    val byDir = written.groupBy(_.dir).map { case (d, ws) => d -> ws.map(_.file) }
+    val byDir = withZoneStats(base, base.generation,
+      written.groupBy(_.dir).toSeq.map { case (d, ws) => d -> ws.map(_.file) })
     val paths = written.map(w => new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(gen, w.dir), w.file.name))
     // this append's own status of each of its files wins: a retried
@@ -703,7 +710,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // rather than leave them for vacuum (a listing fallback past a torn
     // newest version would serve them as duplicates)
     if (committed.isEmpty) paths.foreach(fs.delete(_, false))
-    committed.map(Lake.Appended(byDir.keySet.map(dirValue), paths.map(_.toString), _))
+    committed.map(Lake.Appended(byDir.map(_._1).toSet.map(dirValue), _))
   }
 
   /** `rows` hash-partitioned on the partition column into min(shards,
@@ -722,12 +729,14 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   /** `base` with its current generation's files (per directory) passed
     * through `f`, recording that generation. A base that does not record
     * it yet (a sidecar written before appends committed here) first
-    * takes what that tree holds, by listing it once. */
+    * takes what that tree holds, by listing it once. Recorded files keep
+    * their zone stats. */
   private def editGenFiles(fs: org.apache.hadoop.fs.FileSystem, base: LakeState)(
       f: Map[String, Seq[LiveFile]] => Map[String, Seq[LiveFile]]): LakeState = {
     val g = base.generation
     val next = f(resolveFiles(fs, base, liveEntries(base).filter(_._2 == g), "append")
-      .map { case ((d, _), fl) => d -> fl.map(LiveFile.of) }.toMap)
+      .map { case (e @ (d, _), fl) => d -> base.liveFiles.get(e)
+        .filter(_ => base.genRecorded).getOrElse(fl.map(LiveFile.of)) }.toMap)
       .filter(_._2.nonEmpty)
     base.copy(
       live = base.live.filter(_._2 != g) ++ next.keys.toSeq.sorted.map(_ -> g),
@@ -788,7 +797,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     df = df
       .withColumn("id", coalesce(col("id").cast(StringType), expr("uuid()")))
       // a caller-supplied timestamp survives (backfill/replay ingest
-      // keeps source event times — and the `_zone` time pruning is only
+      // keeps source event times — and the zone map's time pruning is only
       // as good as the times are meaningful); absent or null → now(),
       // the reference's always-stamp default. Never null either way.
       // NUMERIC columns are REFUSED rather than cast: Spark reads a
@@ -2057,7 +2066,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       else cfg.location -> None // bare root-level parquet: no partition
     }.distinct
     val rootFiles = recordedFiles(st).map { case ((d, g), fl) =>
-      new org.apache.hadoop.fs.Path(genPath(g), d).toString -> fl }
+      new org.apache.hadoop.fs.Path(genPath(g), d).toString -> fl.map(_._1) }
     Lake.FormatScan(dirs ++ legacy, rootFiles, canonicalSchemaOf(current))
   }
 
@@ -3389,7 +3398,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     *        columns) — the OPTIMIZE-ZORDER analog, at two granularities:
     *        files are RANGE-SLICED over (shard, clusterBy) so each
     *        rewritten file covers one contiguous key band (the per-file
-    *        `_zone` map keeps pruning after the rewrite — hash slicing
+    *        zone map keeps pruning after the rewrite — hash slicing
     *        would hand every file the shard's whole key range and undo
     *        time-correlated ingest's natural banding), and rows inside
     *        each file are locally sorted (parquet row-group stats
@@ -3654,19 +3663,17 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // manifest — is never touched. (An earlier version rolled the
     // pointer per step, which would have re-parented a stream-owned
     // generation into raw live entries and broken manifest-governed
-    // file visibility.) The produced files ride the commit as recorded;
-    // the rest of the state (extras, sink heads) carries over.
-    val committed = st.copy(
+    // file visibility.) The produced files ride the commit as recorded,
+    // with their zone stats; the rest of the state (extras, sink heads,
+    // zone stats) carries over. The skip index is absent mid-reshard
+    // (dropped at transition).
+    writeState(st.copy(
       live = st.live.filterNot(batchSet) ++ produced.map(_._1 -> newGen),
       reshard = Some(r.copy(pending = r.pending.filterNot(batchSet))),
-      liveFiles = st.liveFiles ++ produced.map { case (d, fl) =>
-        (d, newGen) -> fl.map(Lake.LiveFile.of) })
-    writeState(committed)
-    // auxiliary refresh: the skip index is absent mid-reshard (dropped
-    // at transition); the FILE-keyed zone map refreshes for the
-    // retired and produced values
-    refreshZoneMapShards(committed,
-      (produced.map(_._1) ++ batch.map(_._1)).map(dirValue).toSet)
+      liveFiles = st.liveFiles ++ withZoneStats(st, newGen,
+        produced.map { case (d, fl) => d -> fl.map(LiveFile.of) })
+        .map { case (d, fl) => (d, newGen) -> fl }))
+    ()
   }
 
   /** Row-level DELETE WHERE — the targeted maintenance op the reference
@@ -3714,20 +3721,20 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     * than `olderThan`, at the cheapest PROVABLE cost tier:
     *
     *  1. WHOLESALE manifest retirement: a manifest entry (an
-    *     older-generation directory) ALL of whose data files the zone
-    *     map certifies fully expired (`max_ts < horizon` with
-    *     `ts_cnt == cnt` — no null-timestamp row can hide) is retired
-    *     by ONE sidecar commit. Zero file reads, zero rewrites:
-    *     O(entries) metadata, the deleted row count comes from the
-    *     map's own counters. With time-correlated appends and
-    *     incremental compaction, old data concentrates in old
-    *     generations, so steady-state retention at 100 TB is almost
-    *     entirely this tier — TTL enforcement priced like a directory
-    *     listing, not like a delete.
+    *     older-generation directory) ALL of whose data files the
+    *     committed zone stats certify fully expired (max `timestamp`
+    *     below the horizon, every row's `timestamp` non-null — no
+    *     null-timestamp row can hide) is retired by ONE sidecar commit.
+    *     Zero file reads, zero rewrites: O(entries) metadata, the
+    *     deleted row count comes from the stats' own row counts. With
+    *     time-correlated appends and incremental compaction, old data
+    *     concentrates in old generations, so steady-state retention at
+    *     100 TB is almost entirely this tier — TTL enforcement priced
+    *     like a directory listing, not like a delete.
     *  2. Row-level delete for the remainder: straddling files,
     *     current-generation data, and anything the map cannot certify
-    *     (unmapped files, pre-`ts_cnt` maps, null-bearing files) go
-    *     through the usual transactional [[deleteWhere]] rewrite of
+    *     (files without stats, null-bearing files) go through the
+    *     usual transactional [[deleteWhere]] rewrite of
     *     exactly the affected partitions.
     *
     * Retired files stay on disk for time travel, dying in place like
@@ -3756,35 +3763,21 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       if (st0.isSealed) st0.live else st0.live.filter(_._2 != st0.generation)
     var retiredRows = 0L
     var st = st0 // tier 2 runs over the state tier 1 committed, if it did
-    if (candidates.nonEmpty) {
-      // per-file certificates from the zone map: (fully-expired, rows).
-      // Absent/old/unreadable maps yield no certificates — never wrong,
-      // merely tier-2 cost. merged=true: parts written before ts_cnt
-      // null-fill it, which certifies nothing (null comparison).
-      val certs: Map[String, (Boolean, Long)] =
-        try readZone(fs, merged = true).map {
-          _.select(col("file"), col("max_ts"), col("cnt"), col("ts_cnt"))
-            .collect().map { r =>
-              val provable = !r.isNullAt(1) && !r.isNullAt(3) &&
-                r.getLong(3) == r.getLong(2) &&
-                r.getTimestamp(1).before(horizon)
-              zoneKey(r.getString(0)) -> ((provable, r.getLong(2)))
-            }.toMap
-        }.getOrElse(Map.empty)
-        catch { case scala.util.control.NonFatal(_) => Map.empty }
-      if (certs.nonEmpty) {
-        val retired = resolveFiles(fs, st0, candidates, "expire")
-          .filter { case (_, files) =>
-            files.nonEmpty && files.forall(f =>
-              certs.get(zoneKey(f.getPath.toString)).exists(_._1))
-          }
-        if (retired.nonEmpty) {
-          retiredRows = retired.flatMap(_._2)
-            .map(f => certs(zoneKey(f.getPath.toString))._2).sum
-          st = st0.copy(live = st0.live.filterNot(retired.map(_._1).toSet))
-          writeState(st)
-          ()
+    if (candidates.nonEmpty && st0.zoneFields.isDefined) {
+      // per-file certificates from the committed zone stats; a file
+      // without stats certifies nothing — never wrong, merely tier-2 cost
+      val stats = zoneStatsOf(st0)
+      val h = epochMicros(olderThan)
+      val retired = resolveFiles(fs, st0, candidates, "expire")
+        .filter { case (_, files) =>
+          files.nonEmpty && files.forall(f => stats.get(f.getPath)
+            .exists(z => z.tsRows == z.rows && z.maxTs.exists(_ < h)))
         }
+      if (retired.nonEmpty) {
+        retiredRows = retired.flatMap(_._2).map(f => stats(f.getPath).rows).sum
+        st = st0.copy(live = st0.live.filterNot(retired.map(_._1).toSet))
+        writeState(st)
+        ()
       }
     }
     // tier 2: whatever rows remain expired (straddlers, current-gen,
@@ -3902,13 +3895,11 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   }
 
   /** The empty-lake bootstrap of a keyed write: the inserts ARE the
-    * lake — a plain append, with the skip index and zone map refreshed
-    * as after any append. */
+    * lake — a plain append, with the skip index refreshed as after any
+    * append. */
   private def bootstrapAppend(fs: org.apache.hadoop.fs.FileSystem,
-      st: LakeState, batch: DataFrame): Unit = {
-    writeAppend(fs, st, batch).foreach { out =>
-      refreshSkipIndex(out.state, out.shards); refreshZoneMap(out.files) }
-  }
+      st: LakeState, batch: DataFrame): Unit =
+    writeAppend(fs, st, batch).foreach(out => refreshSkipIndex(out.state, out.shards))
 
   /** Upsert by caller-supplied id: rows whose id already exists replace
     * the stored version (wherever routing put it — a changed vector may
@@ -4146,263 +4137,115 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     writeSkipIndex(refreshed)
   } catch { case scala.util.control.NonFatal(_) => () } // stale = safe
 
-  // ------------------------------------------------- timestamp zone map --
+  // ------------------------------------------------------------ zone map --
 
-  private def zonePath: org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(cfg.location, "_zone")
-
-  /** One canonical spelling of a data-file path for zone-map matching:
-    * `input_file_name()` (what the map stores) renders the file as a
-    * percent-ENCODED URI while `Path.toString` (what the listings
-    * produce) keeps raw characters — and the two also differ in
-    * scheme/authority decoration. Parse as a real URI first (decodes
-    * the escapes), fall back to Hadoop Path for raw strings a strict
-    * URI parser rejects (e.g. literal spaces): both land on the DECODED
-    * path component, identical and unique within the lake's one
-    * filesystem. A mismatch here is silent pruning loss (the safe
-    * direction, but permanently dead), hence the two-sided
-    * normalization. */
-  private def zoneKey(p: String): String = Lake.zoneKey(p)
-
-  /** The zone map as a frame, reading its part files EXPLICITLY — the
-    * `_`-prefixed dir is hidden from discovery-style listings (same
-    * convention the skip index uses), and passing the dir itself trips
-    * a cosmetic "all paths were ignored" warning. None = no usable
-    * map. */
-  private def readZone(fs: org.apache.hadoop.fs.FileSystem,
-      merged: Boolean = false): Option[DataFrame] = {
-    if (!fs.exists(zonePath)) return None
-    val parts = fs.listStatus(zonePath)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString)
-    if (parts.isEmpty) return None
-    // `merged` (FIELD reads): refresh parts written under a DIFFERENT
-    // field spec (a failed spec read, a racing rebuild) can be narrower
-    // than the build part — single-footer inference from whichever file
-    // lists first would silently drop the wide columns; merging
-    // null-fills instead, and the spec_fp gate decides which rows to
-    // trust. TIME reads skip the merge: file/min_ts/max_ts/cnt are
-    // present in EVERY part ever written, and a per-serving-query
-    // footer-merge job growing with append count is exactly the
-    // control-plane cost the hot path must not pay.
-    var r = spark.read
-    if (merged) r = r.option("mergeSchema", "true")
-    Some(r.parquet(parts.toSeq: _*))
+  /** Zone stats ([[ZoneStats]]) of `files` (entry → its files), keyed by
+    * entry and file name: per file its rows, its rows with a non-null
+    * `timestamp` (min and max ignore nulls, so only `tsRows == rows`
+    * proves a file holds no null-timestamp row — the certificate
+    * [[expire]]'s wholesale tier needs), the min and max `timestamp`, and
+    * a (min, max) DOUBLE pair per metadata FIELD in `fields` (a value
+    * that is not a number counts as absent). One Spark job over exactly
+    * these files, map-side combinable: the shuffle carries one row per
+    * file. The one place zone stats are computed. */
+  private def zoneRows(files: Seq[((String, Long), Seq[LiveFile])],
+      fields: Seq[String]): Map[((String, Long), String), ZoneStats] = {
+    if (files.forall(_._2.isEmpty)) return Map.empty
+    val fs = fsOfRoot
+    val ts = col("timestamp")
+    val aggs = Seq(org.apache.spark.sql.functions.count(lit(1)),
+      org.apache.spark.sql.functions.count(ts),
+      unix_micros(min(ts)), unix_micros(max(ts))) ++
+      fields.flatMap { p =>
+        val c = metadataField(p).try_cast(DoubleType)
+        Seq(min(c), max(c))
+      }
+    val slice = readFileSlice(files.flatMap { case ((d, g), fl) =>
+      val dir = fs.makeQualified(new org.apache.hadoop.fs.Path(genPath(g), d))
+      fl.map(f => (d, g, graft.sources.GraftManifestFileIndex.status(dir, f.name, f.len, f.mod)))
+    })
+    slice.groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*).collect().flatMap { r =>
+      // input_file_name() is the file's percent-encoded URI
+      val p = new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0)))
+      def opt[A](i: Int)(get: Int => A): Option[A] = Option.unless(r.isNullAt(i))(get(i))
+      p.getParent.getParent.getName match {
+        case genDirRe(g) => Some(((p.getParent.getName, g.toLong), p.getName) ->
+          ZoneStats(r.getLong(1), r.getLong(2), opt(3)(r.getLong), opt(4)(r.getLong),
+            fields.indices.map(i => (opt(5 + 2 * i)(r.getDouble), opt(6 + 2 * i)(r.getDouble)))))
+        case _ => None
+      }
+    }.toMap
   }
 
-  /** Per-file (min_ts, max_ts, cnt) of `slice`'s `timestamp` column,
-    * plus a (f<i>_min, f<i>_max) double pair per mapped metadata FIELD
-    * and the SPEC FINGERPRINT the fields were computed under — the
-    * gate that keeps a part computed under a different (or unreadable)
-    * spec from ever mispruning: a field read trusts a row's ranges
-    * only when its `spec_fp` matches the spec the reader resolved, and
-    * everything else degrades to "scan". Map-side combinable; the
-    * shuffle carries one row per file. */
-  private def zoneRows(slice: DataFrame, fields: Seq[String]): DataFrame = {
-    val aggs =
-      Seq(min(col("timestamp")).as("min_ts"),
-        max(col("timestamp")).as("max_ts"),
-        org.apache.spark.sql.functions.count(lit(1)).as("cnt"),
-        // non-null timestamp count: min/max ignore nulls, so only
-        // ts_cnt == cnt PROVES a file holds no null-timestamp rows —
-        // the certificate [[expire]]'s wholesale tier needs (a null
-        // timestamp never matches `timestamp < horizon`, so a file
-        // hiding one must NOT be dropped wholesale). Maps built before
-        // this column simply yield no certificates (expire falls back
-        // to the row-level tier) until rebuilt.
-        org.apache.spark.sql.functions.count(col("timestamp")).as("ts_cnt")) ++
-        fields.zipWithIndex.flatMap { case (p, i) =>
-          val c = metadataField(p).cast(DoubleType)
-          Seq(min(c).as(s"f${i}_min"), max(c).as(s"f${i}_max"))
-        }
-    slice.groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("spec_fp", lit(zoneSpecFp(fields)))
-  }
+  /** `dirs` (directory → the files just written into it, in generation
+    * `g`) with their zone stats when `st` keeps a zone map: a write
+    * computes the stats of its own files before the commit that names
+    * them, so the map never lags the lake. */
+  private def withZoneStats(st: LakeState, g: Long,
+      dirs: Seq[(String, Seq[LiveFile])]): Seq[(String, Seq[LiveFile])] =
+    st.zoneFields.fold(dirs) { fields =>
+      val stats = zoneRows(dirs.map { case (d, fl) => (d, g) -> fl }, fields)
+      dirs.map { case (d, fl) => d -> fl.map(f => f.copy(stats = stats.get(((d, g), f.name)))) }
+    }
 
-  /** Order-sensitive fingerprint of a field spec — what pins a zone
-    * row's f<i> columns to the field list they were computed under. */
-  private def zoneSpecFp(fields: Seq[String]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(fields.mkString("\u0001").getBytes("UTF-8"))
-    md.digest().take(6).map("%02x".format(_)).mkString
-  }
-
-  /** The metadata FIELD paths this lake's zone map carries, from the
-    * `_spec.json` the build wrote into `_zone` (empty for a
-    * timestamp-only map — including every map built before fields
-    * existed). Refreshes recompute exactly these, so appended entries
-    * always match the map's schema; a refresh whose spec read failed
-    * writes `spec_fp` of the EMPTY list, which field reads reject into
-    * "scan" rather than misprune. None = the spec file exists but could
-    * not be read or decoded (transient store failure, torn write):
-    * callers that would REBUILD the map must skip on None — rebuilding
-    * with Nil would permanently and silently drop the
-    * operator-configured field pruning on one store hiccup. Read-side
-    * callers treat None as Nil (unpruned scans, self-heals next read). */
-  private def zoneSpecOf(fs: org.apache.hadoop.fs.FileSystem): Option[Seq[String]] = {
-    val spec = new org.apache.hadoop.fs.Path(zonePath, "_spec.json")
-    if (!fs.exists(spec)) Some(Nil)
-    else try Some(ControlFiles.read[ControlFiles.ZoneSpec](fs, spec).fields)
-    catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Build the per-file TIMESTAMP ZONE MAP (`<root>/_zone`): (file,
-    * min_ts, max_ts, cnt), one row per live data file. LSH sharding
-    * scatters rows by VECTOR, so a time-window read
-    * ([[readTimeRange]]) prunes nothing at the directory level — but
-    * data files are IMMUTABLE in this layout (appends create, rewrites
-    * create new names, only vacuum deletes), so a per-file time range
-    * never goes stale: the read path simply intersects the map with
-    * the live listing. Files ABSENT from the map are scanned
-    * unconditionally (safe, merely unpruned); dead entries for retired
-    * files are ignored by construction. [[ingest]] appends entries for
-    * exactly the files it lands; rewrites re-map their affected shards
-    * ([[refreshZoneMapShards]]); a rebuild here also compacts
-    * accumulated dead entries away. With time-correlated appends (the
-    * 100 TB norm: loaders ingest in rough time order) a window read
-    * opens only the window's files — cost tracks the window, never
-    * lake size.
+  /** Build the per-file ZONE MAP: each live data file's zone stats
+    * ([[ZoneStats]]: rows, min/max `timestamp`, and a (min, max) range per
+    * metadata field in `fields`), committed in the sidecar entry that
+    * names the file — the way Iceberg's `lower_bounds`/`upper_bounds` and
+    * Delta's per-file `stats` ride their commits. LSH sharding scatters
+    * rows by VECTOR, so a time-window read ([[readTimeRange]]) prunes
+    * nothing at the directory level; but data files are IMMUTABLE in this
+    * layout, so a committed range never goes stale, and the read drops
+    * every file whose range cannot intersect the window. From this commit
+    * on, every append and rewrite computes the stats of the files it
+    * writes before its own commit ([[withZoneStats]]). A file without
+    * stats is scanned (safe, merely unpruned). With time-correlated
+    * appends (loaders ingest in rough time order) a window read opens
+    * only the window's files — cost tracks the window, never lake size.
     *
-    * `fields` extends the map beyond time: dotted paths into the
-    * nested-metadata JSON (the `metadata_json` ingest column), each
-    * mapped as a per-file (min, max) DOUBLE range and served by
-    * [[readFieldRange]]. This is pruning parquet itself cannot give —
-    * JSON-extracted fields have NO column statistics, so "docs with
-    * quality in [a, b]" opens every file without it. The spec rides in
-    * the map (`_zone/_spec.json`), so every later append/rewrite
-    * refresh recomputes the same fields, and every part stamps the
-    * spec FINGERPRINT its ranges were computed under — field reads
-    * trust only fingerprint-matching rows, so parts written under a
-    * different or unreadable spec degrade those files to "scanned",
-    * never to wrong pruning. Corollary: a field map whose parts
-    * predate the fingerprint column (or any spec-format drift) serves
-    * correct rows with NO pruning until rebuilt — re-run this after
-    * upgrading a map's format. Returns the number of files mapped. */
+    * `fields` are dotted paths into the nested-metadata JSON (the
+    * `metadata_json` ingest column), each mapped as a per-file (min, max)
+    * DOUBLE range and served by [[readFieldRange]]: pruning parquet
+    * cannot give, since JSON-extracted fields have no column statistics.
+    * The sidecar records them as `zone_fields`; building again with other
+    * fields recomputes every file's stats. One Spark job and one sidecar
+    * commit under the writer lock; a stream-owned lake is refused (its
+    * sink's manifest, not the sidecar, names its files). The side table
+    * earlier versions of this engine kept beside the data is deleted
+    * after the commit. Returns the number of files mapped. */
   def buildZoneMap(fields: Seq[String] = Nil): Long = {
     require(fields.distinct.size == fields.size && fields.forall(_.nonEmpty),
       s"buildZoneMap fields must be distinct non-empty paths; got $fields")
     if (!rootExists) return 0L
     withWriterLock("buildZoneMap") {
-      val (fs, entries, st) = resolveState()
-      if (!holdsData(fs, entries, st)) return 0L
-      requireRouting(st)
-      requireManifestGoverned("buildZoneMap", st, entries, streamOk = true)
-      requireNoReshard(st, "buildZoneMap")
-      val rows = zoneRows(readFrom(st, entries), fields).cache()
-      try {
-        val n = rows.count()
-        if (n == 0L) { fs.delete(zonePath, true); return 0L }
-        // replace `_zone` via unique tmp + swap — same torn-swap
-        // contract as [[writeSkipIndex]]: a failure leaves no map or an
-        // unreadable one, both degrading to the unpruned full scan. The
-        // field spec is written INTO the tmp, so map and spec swap
-        // together.
-        val tmp = new org.apache.hadoop.fs.Path(cfg.location,
-          s"_zone__tmp_${java.util.UUID.randomUUID()}")
-        LakeWriter.write(rows.coalesce(1), tmp, None, cfg.codec)
-        if (fields.nonEmpty)
-          ControlFiles.write(fs, new org.apache.hadoop.fs.Path(tmp, "_spec.json"),
-            ControlFiles.ZoneSpec(fields), overwrite = false)
-        fs.delete(zonePath, true)
-        fs.rename(tmp, zonePath)
-        n
-      } finally { rows.unpersist(); () }
+      val (fs, entries, st0) = resolveState()
+      if (!holdsData(fs, entries, st0)) return 0L
+      requireRouting(st0)
+      requireManifestGoverned("buildZoneMap", st0, entries)
+      requireNoReshard(st0, "buildZoneMap")
+      // the commit names every file it maps: an unrecorded current
+      // generation is taken as recorded first, as an append does
+      val st = editGenFiles(fs, st0)(identity)
+      val files = resolveFiles(fs, st, st.live, "buildZoneMap")
+        .map { case (e, fl) => e -> fl.map(LiveFile.of) }
+      val stats = zoneRows(files, fields)
+      writeState(st.copy(zoneFields = Some(fields), liveFiles = files.map { case (e, fl) =>
+        e -> fl.map(f => f.copy(stats = stats.get((e, f.name)))) }.toMap))
+      entries.map(_.getPath).filter(p => p.getName == "_zone" ||
+        p.getName.startsWith("_zone__tmp")).foreach(fs.delete(_, true))
+      stats.size.toLong
     }
   }
 
-  /** Post-append zone refresh: map exactly the just-published files by
-    * MOVING one new uniquely-named parquet part into `_zone` —
-    * concurrent appends' refreshes never touch each other's entries,
-    * and a racing full rebuild's swap at worst orphans this part's
-    * entries (dead entries are ignored; the files would then read as
-    * unmapped = scanned = still correct). Best-effort like the skip
-    * refresh: any failure leaves the files unmapped, never mismapped. */
-  private def refreshZoneMap(files: Seq[String]): Unit = try {
-    val fs = fsOfRoot
-    if (files.isEmpty || !fs.exists(zonePath)) return
-    val tmp = new org.apache.hadoop.fs.Path(cfg.location,
-      s"_zone__tmp_${java.util.UUID.randomUUID()}")
-    LakeWriter.write(zoneRows(spark.read.parquet(files: _*),
-      zoneSpecOf(fs).getOrElse(Nil)).coalesce(1), tmp, None, cfg.codec)
-    fs.listStatus(tmp)
-      .find(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .foreach { p =>
-        fs.rename(p.getPath, new org.apache.hadoop.fs.Path(zonePath,
-          s"part-append-${java.util.UUID.randomUUID()}.parquet"))
-        ()
-      }
-    fs.delete(tmp, true)
-    compactZoneParts(fs)
-    ()
-  } catch { case scala.util.control.NonFatal(_) => () } // unmapped = safe
-
-  /** Bound the `_zone` PART-FILE count on append-heavy lakes: each
-    * append's refresh moves ONE new part in, so without a bound both
-    * the per-query verdict pass and the many-small-files map read grow
-    * with append count until the next full [[buildZoneMap]]. Past
-    * `zonePartCap` parts, merge everything into one part via the same
-    * unique-tmp + swap as [[buildZoneMap]], carrying `_spec.json` across.
-    * Schema-merged read (refresh parts written under a failed spec
-    * read can be narrower than the build part — null-fill, the
-    * `spec_fp` gate still decides trust per row). Concurrency is the
-    * standing refresh contract: a concurrent append's part landing
-    * inside the swap window is orphaned by the rename → its files
-    * degrade to unmapped = scanned, never wrong; a concurrent read
-    * between delete and rename sees no map → full scan. Dead entries
-    * for retired files ride along harmlessly (the read side
-    * intersects with the live listing); only [[buildZoneMap]] drops
-    * them. Amortized cost: one O(map) merge every `zonePartCap`
-    * appends — the map is one row per live file, tiny next to the
-    * append itself. */
-  private def compactZoneParts(fs: org.apache.hadoop.fs.FileSystem): Unit = try {
-    val parts = fs.listStatus(zonePath)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    if (parts.length <= Lake.zonePartCap) return
-    val merged = spark.read.option("mergeSchema", "true")
-      .parquet(parts.map(_.getPath.toString).toSeq: _*)
-    val tmp = new org.apache.hadoop.fs.Path(cfg.location,
-      s"_zone__tmp_${java.util.UUID.randomUUID()}")
-    LakeWriter.write(merged.coalesce(1), tmp, None, cfg.codec)
-    val spec = new org.apache.hadoop.fs.Path(zonePath, "_spec.json")
-    if (fs.exists(spec))
-      org.apache.hadoop.fs.FileUtil.copy(fs, spec, fs,
-        new org.apache.hadoop.fs.Path(tmp, "_spec.json"), false, fs.getConf)
-    fs.delete(zonePath, true)
-    fs.rename(tmp, zonePath)
-    ()
-  } catch { case scala.util.control.NonFatal(_) => () } // next refresh retries
-
-  /** Post-rewrite zone refresh: a rewrite retires EVERY old file of its
-    * affected shards and publishes only NEW names, so the affected
-    * shards' live files are all unmapped by construction — map them
-    * directly, no already-mapped probe (collecting the whole map to
-    * compute an always-empty intersection would cost O(map) driver work
-    * on every one-shard rewrite). Were a file somehow mapped twice, the
-    * duplicate entries are byte-identical (files are immutable) and
-    * collapse harmlessly on the read side; the retired files' old
-    * entries are dead-harmless and compacted away by the next
-    * [[buildZoneMap]]. Cost tracks the affected shards, like the
-    * rewrite itself. */
-  private def refreshZoneMapShards(st: LakeState,
-      affected: Set[Option[String]]): Unit = try {
-    val fs = fsOfRoot
-    if (affected.isEmpty || !fs.exists(zonePath)) return
-    val live = liveShardFiles(fs, st, only = Some(affected))
-      .values.flatten.map(_.getPath.toString).toSeq
-    refreshZoneMap(live)
-  } catch { case scala.util.control.NonFatal(_) => () } // unmapped = safe
-
   /** Rows whose ingest `timestamp` lies in [from, to] — the zone-map
-    * pruned time-window read: resolve the live file listing, drop every
-    * file whose mapped [min_ts, max_ts] cannot intersect the window,
-    * scan only the rest (plus any unmapped file — never wrong, merely
+    * pruned time-window read: resolve the live files, drop every file
+    * whose committed [min, max] `timestamp` cannot intersect the window,
+    * scan the rest (files without stats included — never wrong, merely
     * unpruned), and apply the exact residual filter. Falls back to the
-    * plain filtered [[read]] when no map exists, the layout has
-    * root-level foreign data, or the current generation is
-    * stream-owned (its manifest governs file visibility — raw listings
-    * would count uncommitted files). Same recall as
-    * `read().where(timestamp between ...)` ALWAYS; the map only cuts
+    * plain filtered [[read]] when the lake has no zone map, holds
+    * root-level foreign data, is mid-reshard, or its current generation
+    * is stream-owned (its manifest governs file visibility). Same rows
+    * as `read().where(timestamp between ...)` ALWAYS; the map only cuts
     * files opened. */
   def readTimeRange(from: java.time.Instant, to: java.time.Instant): DataFrame = {
     val (base, residual) = timeWindowBase(from, to, None, "readTimeRange")
@@ -4410,145 +4253,76 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
   }
 
   /** The zone-pruned scan underneath [[readTimeRange]] and
-    * [[topKInRange]]: (base frame, residual window predicate). The base
-    * is the file slice the map could not exclude — or the plain
-    * [[read]] when no map exists / the layout forces the fallback —
-    * optionally pre-cut to the partitions holding `scope`'s values (the
+    * [[topKInRange]]: (base frame, residual window predicate), the base
+    * optionally cut to the partitions holding `scope`'s values (the
     * routed shards, a second file-level cut on top of the zone cut).
     * Callers must apply `residual` (and any shard predicate) for
     * exactness. */
   private def timeWindowBase(from: java.time.Instant, to: java.time.Instant,
       scope: Option[Set[Option[String]]], op: String): (DataFrame, Column) = {
     require(!from.isAfter(to), s"$op: from $from is after to $to")
-    val lob = lit(java.sql.Timestamp.from(from))
-    val hib = lit(java.sql.Timestamp.from(to))
-    (zonePrunedBase("min_ts", "max_ts", lob, hib, scope, op),
-      col("timestamp") >= lob && col("timestamp") <= hib)
+    val (lo, hi) = (epochMicros(from), epochMicros(to))
+    (zonePrunedBase(scope, op)(_ => Some((z: ZoneStats) =>
+      (for (mn <- z.minTs; mx <- z.maxTs) yield mx >= lo && mn <= hi).getOrElse(true))),
+      col("timestamp") >= lit(java.sql.Timestamp.from(from)) &&
+        col("timestamp") <= lit(java.sql.Timestamp.from(to)))
   }
 
-  /** The zone-pruned scan shared by every range surface: the file
-    * slice whose mapped [`minCol`, `maxCol`] can intersect [lo, hi] —
-    * or the plain [[read]] when no map exists / the layout forces the
-    * fallback — optionally pre-cut to the partitions holding `scope`'s
-    * values ([[readPartitions]]' scope). Control-plane cost is O(live files in scope), the
-    * same order as the listing itself (and as Spark's own file index):
-    * ONE pass over the map, PRE-FILTERED in the plan to the scoped
-    * directories when a shard cut is given (a serving call must not
-    * pull the whole lake's map to consult nprobe shards' verdicts; a
-    * path-spelling miss in that filter only drops a verdict → that
-    * file is scanned, never wrong). Below
-    * `graft.zone.distributedVerdictMinFiles` live files the per-file
-    * verdicts collect to the driver (no extra job — the cheap serve
-    * path); at or above it the pass runs as a DISTRIBUTED join against
-    * the listing and only the surviving file list returns, so driver
-    * memory never grows a second O(files) structure at 100× file
-    * counts. A file the map knows and marks disjoint is pruned; a
-    * mapped-and-overlapping or UNMAPPED file is scanned — and so is
-    * everything when the map lacks `minCol` entirely (the pass throws,
-    * fallback = scan all).
-    * `requireFp`: FIELD reads pass the fingerprint of the spec they
-    * resolved, and a row whose `spec_fp` differs contributes NO
-    * verdict (its f<i> columns may belong to a different field list —
-    * a refresh that could not read the spec, or a rebuild racing this
-    * read with reordered fields) → that file is scanned. The timestamp
-    * columns are name-stable across every spec, so time reads pass
-    * None and trust every row. Callers must apply their exact residual
-    * predicate. */
-  private def zonePrunedBase(minCol: String, maxCol: String,
-      lo: Column, hi: Column, scope: Option[Set[Option[String]]],
-      op: String, requireFp: Option[String] = None): DataFrame = {
+  /** `t` in epoch microseconds, rounded down: the value a `timestamp`
+    * literal of `t` compares rows with. */
+  private def epochMicros(t: java.time.Instant): Long =
+    Math.addExact(Math.multiplyExact(t.getEpochSecond, 1000000L), t.getNano / 1000L)
+
+  /** The zone-pruned scan shared by every range surface: the live files
+    * — only the entries that can hold `scope`'s partition values when
+    * given ([[readPartitions]]' scope) — whose committed zone stats
+    * `verdict(st)` says may hold a row in range, decided on the driver
+    * from the resolved state: no request and no Spark job of its own. A
+    * file without stats is scanned. `verdict` answers None when the
+    * state cannot prune the range (an unmapped field); then, as with no
+    * zone map or a layout that forces it, the base is the plain [[read]].
+    * Callers must apply their exact residual predicate. */
+  private def zonePrunedBase(scope: Option[Set[Option[String]]], op: String)(
+      verdict: LakeState => Option[ZoneStats => Boolean]): DataFrame = {
     val (fs, entries, st) = resolveState()
     requireRouting(st)
     // a file slice carries its directory's shard value as written, so
     // reshard-pending entries (narrower width, re-derived only by the
     // plain read) take the plain read until the reshard completes
-    if (!holdsData(fs, entries, st) || !fs.exists(zonePath) ||
-        rootLevelDataFrom(entries).nonEmpty || streamOwned(st) ||
-        st.reshard.isDefined)
-      return readFrom(st, entries, scope)
-    val keep = scope.map(inScope(st, _))
-    val dirs = liveEntries(st).filter(e => keep.forall(_(e)))
-    val owners = fileOwners(fs, st, dirs, op)
-    val kept =
-      try readZone(fs, merged = requireFp.isDefined).map { z =>
-        val scoped =
-          if (scope.isEmpty || dirs.isEmpty) z
-          else z.where(dirs.map(_._1).distinct
-            .map(d => col("file").contains(s"/$d/")).reduce(_ || _))
-        val trusted = requireFp match {
-          case Some(fp) => scoped.where(col("spec_fp") === fp)
-          case None => scoped
-        }
-        // null bounds contribute a MISS (never mapped-and-unknown —
-        // zoneRows always writes real min/max), identical on both
-        // regimes below
-        val hitCol =
-          coalesce(col(maxCol) >= lo && col(minCol) <= hi, lit(false))
-        // TWO verdict regimes, chosen by live-file count. Small scopes
-        // (the overwhelmingly common serve: a routed read consults
-        // nprobe shards' entries) collect the per-file verdicts — one
-        // driver pass, no extra Spark job. Past the bound, the
-        // per-file pass moves OFF the driver: the listing joins the
-        // map on the normalized path and only the SURVIVING file list
-        // comes back — which the driver must hold anyway to plan the
-        // read. Driver memory stays O(listing), never
-        // O(listing + verdict map), and the verdict scan parallelizes
-        // with the map's partition count at 100× file counts.
-        val minDistributed = spark.conf
-          .get("graft.zone.distributedVerdictMinFiles", "4096").toInt
-        if (owners.size < minDistributed) {
-          val verdicts = trusted.select(col("file"), hitCol.as("hit"))
-            .collect()
-            .map(r => zoneKey(r.getString(0)) -> r.getBoolean(1))
-            .toMap
-          owners.filter { case (f, _) =>
-            verdicts.getOrElse(zoneKey(f), true) }
-        } else {
-          // the zone side's paths normalize per row on executors; the
-          // listing side normalizes while building the frame (already
-          // driver-resident). A udf is fine HERE: this is control-plane
-          // metadata (one row per file), never corpus rows.
-          val zk = udf((s: String) => Lake.zoneKey(s))
-          val listing = spark.createDataFrame(
-            owners.keys.toSeq.map(f => (f, zoneKey(f))))
-            .toDF("path", "zkey")
-          // left join: an UNMAPPED file (no zone row) must be scanned
-          // unconditionally — hit is null only for those
-          val keptPaths = listing.join(
-              trusted.select(zk(col("file")).as("zkey"), hitCol.as("hit")),
-              Seq("zkey"), "left")
-            .where(col("hit").isNull || col("hit"))
-            .select("path").distinct()
-            .collect().map(_.getString(0)).toSet
-          owners.filter { case (f, _) => keptPaths(f) }
-        }
-      }.getOrElse(owners)
-      catch { case scala.util.control.NonFatal(_) => owners }
-    readFileSlice(kept.values, extraFieldsOf(st))
+    verdict(st).filter(_ => st.zoneFields.isDefined && holdsData(fs, entries, st) &&
+        rootLevelDataFrom(entries).isEmpty && st.reshard.isEmpty && !streamOwned(st)) match {
+      case None => readFrom(st, entries, scope)
+      case Some(mayHold) =>
+        val stats = zoneStatsOf(st)
+        val keep = scope.map(inScope(st, _))
+        readFileSlice(resolveFiles(fs, st, liveEntries(st).filter(e => keep.forall(_(e))), op)
+          .flatMap { case ((d, g), fl) =>
+            fl.filter(f => stats.get(f.getPath).forall(mayHold)).map((d, g, _)) },
+          extraFieldsOf(st))
+    }
   }
 
   /** Rows whose NESTED-METADATA numeric field `path` lies in [lo, hi]
     * — the curation-side twin of [[readTimeRange]], pruned by the
-    * field's per-file (min, max) range when [[buildZoneMap]] was given
-    * the path in `fields`. This is selectivity parquet cannot provide:
-    * the field lives inside an opaque JSON string, so without the map
-    * every "quality in [a, b]" / "n_chars < n" curation pass opens
-    * every file. Unmapped paths (or no map at all) fall back to the
-    * plain filtered read — same rows, no cut. Rows whose field is
-    * absent or non-numeric never match (null semantics, both paths). */
+    * field's committed per-file (min, max) range when [[buildZoneMap]]
+    * was given the path in `fields`. This is selectivity parquet cannot
+    * provide: the field lives inside an opaque JSON string, so without
+    * the map every "quality in [a, b]" / "n_chars < n" curation pass
+    * opens every file. An unmapped path (or no map at all) falls back to
+    * the plain filtered read — same rows, no cut. A range bound that is
+    * NaN (Spark orders NaN above every number) or missing keeps its file.
+    * Rows whose field is absent or non-numeric never match (null
+    * semantics, both paths). */
   def readFieldRange(path: String, lo: Double, hi: Double): DataFrame = {
     require(lo <= hi, s"readFieldRange: lo $lo > hi $hi")
     val field = metadataField(path).cast(DoubleType)
-    val residual = field >= lit(lo) && field <= lit(hi)
-    // zoneSpecOf's own missing-file check covers the no-map case
-    // (no separate exists probes — each is a round trip on an object
-    // store); an unmapped path falls back to the plain filtered read
-    val spec = zoneSpecOf(fsOfRoot).getOrElse(Nil)
-    val i = spec.indexOf(path)
-    if (i < 0) return read().where(residual)
-    zonePrunedBase(s"f${i}_min", s"f${i}_max", lit(lo), lit(hi),
-      None, "readFieldRange", requireFp = Some(zoneSpecFp(spec)))
-      .where(residual)
+    zonePrunedBase(None, "readFieldRange")(
+      _.zoneFields.map(_.indexOf(path)).filter(_ >= 0).map(i => (z: ZoneStats) =>
+        z.fields.lift(i) match {
+          case Some((Some(mn), Some(mx))) if !mn.isNaN && !mx.isNaN => mx >= lo && mn <= hi
+          case _ => true
+        }))
+      .where(field >= lit(lo) && field <= lit(hi))
   }
 
   /** FRESHNESS-SCOPED kNN: the k nearest rows whose ingest `timestamp`
@@ -4711,16 +4485,16 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       !affected.contains(dirValue(d))
     }
     // the new generation is current and records exactly the files
-    // written into it; the rest of the state (extras, sink heads)
-    // carries over
+    // written into it, with their zone stats; the rest of the state
+    // (extras, sink heads, zone stats) carries over
     val committed = st.copy(generation = newGen,
       live = survivors ++ produced.map(_._1 -> newGen),
-      liveFiles = st.liveFiles ++ produced.map { case (d, fl) =>
-        (d, newGen) -> fl.map(LiveFile.of) },
+      liveFiles = st.liveFiles ++ withZoneStats(st, newGen,
+        produced.map { case (d, fl) => d -> fl.map(LiveFile.of) })
+        .map { case (d, fl) => (d, newGen) -> fl },
       genRecorded = true, isSealed = false)
     writeState(committed)
     refreshSkipIndex(committed, affected)
-    refreshZoneMapShards(committed, affected)
     produced.map(_._2.size.toLong).sum
   }
 
@@ -4985,7 +4759,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
       s.getPath.getName match {
         case deadRe(g) if s.isFile && !fs.exists(genPath(g.toLong)) =>
           fs.delete(s.getPath, false); ()
-        case n if n.startsWith("_skip__tmp") || n.startsWith("_zone__tmp") =>
+        case n if n.startsWith("_skip__tmp") =>
           if (fs.delete(s.getPath, true)) removed += 1L
         // row-level DML staging (_rlo/<queryId>): writers stage BEFORE
         // the statement's apply takes the writer lock, so a live
@@ -5063,7 +4837,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
         .map(_.getPath.getName -> st.generation)
       catch { case _: java.io.FileNotFoundException => Nil }
     mapDirsPooled((named.keys.toSeq ++ current).distinct) { case e @ (d, g) =>
-      val keep = named.getOrElse(e, Nil).map(_.getPath.getName).toSet
+      val keep = named.getOrElse(e, Nil).map(_._1.getPath.getName).toSet
       try dataFilesIn(fs, new org.apache.hadoop.fs.Path(genPath(g), d))
         .filterNot(f => keep(f.getPath.getName))
       catch { case _: java.io.FileNotFoundException => Nil }
@@ -5123,23 +4897,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     }
   } catch { case scala.util.control.NonFatal(_) => -1L }
 
-  /** Whether the `_zone` map has degraded enough that a rebuild is
-    * justified: part-file bloat past the refresh auto-compact cap, or
-    * dead-entry bloat (map rows from retired files at 2x the live
-    * file count — rewrites leave old entries behind; only a rebuild
-    * drops them). False when no map exists: [[maintain]] refreshes
-    * what the operator built, it never builds new indexes. */
-  private def zoneNeedsRebuild(): Boolean = try {
-    val fs = fsOfRoot
-    if (!fs.exists(zonePath)) return false
-    val parts = fs.listStatus(zonePath)
-      .count(p => p.isFile && p.getPath.getName.endsWith(".parquet"))
-    if (parts > Lake.zonePartCap) return true
-    val liveFiles = liveShardFiles(fs, readState()).values.map(_.size.toLong).sum
-    val mapRows = readZone(fs).map(_.count()).getOrElse(0L)
-    mapRows > 2L * math.max(1L, liveFiles)
-  } catch { case scala.util.control.NonFatal(_) => false }
-
   /** ONE-CALL MAINTENANCE POLICY — what a platform team crons. Reads
     * the lake's own health signals and runs ONLY the work they
     * justify, so repeated calls on a converged lake are cheap no-ops
@@ -5151,16 +4908,15 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     *  2. [[buildSkipIndex]] — only when [[skipStaleCount]] shows
     *     shards whose sketches no longer match their live files, and
     *     only if an index exists (maintain refreshes, never installs);
-    *  3. [[buildZoneMap]] (with the map's own recorded field spec) —
-    *     only on part-file or dead-entry bloat ([[zoneNeedsRebuild]]);
-    *  4. [[vacuum]]`(retainMs)` — sweeps dead generations and
+    *  3. [[vacuum]]`(retainMs)` — sweeps dead generations and
     *     superseded sidecars older than the consumer window.
     *
     * Each step takes the exclusive writer lock itself; a collision
     * with in-flight appends throws `ConcurrentModificationException`
     * like any maintenance op — retry on the next cadence tick. Work
     * per call is bounded by what actually churned: O(dirty shards)
-    * rewrite + O(map)/O(shards) index refreshes + O(dead dirs) sweep.
+    * rewrite + O(shards) index refresh + O(dead dirs) sweep. The zone
+    * map needs no step: every commit carries its files' stats.
     * Returns what ran. */
   /** Per-shard BYTE totals over the live set ([[liveShardFiles]]),
     * summarized as (max, median): the probe-cost signal behind the
@@ -5192,7 +4948,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // stays a useful health probe mid-reshard instead of a throw
     val (fs, entries, tickState) = resolveState()
     if (!holdsData(fs, entries, tickState))
-      return Lake.MaintenanceReport(0L, false, false, 0L)
+      return Lake.MaintenanceReport(0L, false, 0L)
     val reshardInFlight = tickState.reshard.map(r =>
       (1L << r.fromBits, 1L << r.toBits, r.pending.size.toLong))
     // shard-health telemetry reads the PRE-maintenance state
@@ -5221,13 +4977,6 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     val skip = reshardInFlight.isEmpty &&
       skipStaleCount(liveShardFiles(fsOfRoot, readState())) > 0L && {
       buildSkipIndex(); true }
-    val zone = reshardInFlight.isEmpty && zoneNeedsRebuild() && (zoneSpecOf(fsOfRoot) match {
-      // spec present but unreadable: SKIP this cycle's rebuild rather
-      // than rebuild specless (which would silently drop the
-      // operator-configured field pruning); the next maintain() retries
-      case None => false
-      case Some(fields) => buildZoneMap(fields); true
-    })
     val swept = vacuum(retainMs = retainMs)
     // recall-ladder freshness: re-calibrate exactly when churn since
     // the last calibration crossed the drift threshold
@@ -5257,7 +5006,7 @@ final class Lake(spark: SparkSession, val cfg: LakeConfig) {
     // rewrites the lake once and temporarily refuses other
     // maintenance); mid-reshard the recommendation stays down and the
     // pending count reports progress instead
-    Lake.MaintenanceReport(compacted, skip, zone, swept, recalibrated,
+    Lake.MaintenanceReport(compacted, skip, swept, recalibrated,
       expired,
       maxShardBytes = skew.map(_._1).getOrElse(0L),
       medianShardBytes = skew.map(_._2).getOrElse(0L),
@@ -5868,16 +5617,6 @@ object Lake {
     * prefix keeps it out of Spark's file index (never read as data). */
   private[graft] val lockName: String = "_lock"
 
-  /** One canonical spelling of a data-file path for zone-map matching
-    * (see the instance-side scaladoc at the call sites). STATIC so the
-    * distributed verdict join's udf closure captures a plain function,
-    * never the Lake instance (which holds the SparkSession and cannot
-    * ship to executors). */
-  private[graft] def zoneKey(p: String): String =
-    (try Option(new java.net.URI(p).getPath)
-     catch { case _: java.net.URISyntaxException => None })
-      .getOrElse(new org.apache.hadoop.fs.Path(p).toUri.getPath)
-
   /** Hadoop's createFile builder key for a conditional (If-None-Match)
     * create, and the path-capability name a store advertises when it
     * honors it (HADOOP-19256, s3a since 3.4.x:
@@ -5944,8 +5683,7 @@ object Lake {
   /** What one [[Lake.maintain]] call actually ran — all-zero/false on
     * a converged lake. */
   final case class MaintenanceReport(
-      compactedShards: Long, skipRefreshed: Boolean,
-      zoneRebuilt: Boolean, vacuumSwept: Long,
+      compactedShards: Long, skipRefreshed: Boolean, vacuumSwept: Long,
       recallRecalibrated: Boolean = false,
       expiredRows: Long = 0L,
       maxShardBytes: Long = 0L,
@@ -5962,13 +5700,6 @@ object Lake {
     * file-count slack. 8 GiB ≈ a few seconds of columnar scan per
     * probe on one executor; tune per latency budget. */
   val defaultTargetShardBytes: Long = 8L * 1024 * 1024 * 1024
-
-  /** `_zone` part-file count past which an append's refresh compacts
-    * the map into one part (see `compactZoneParts`). System-property
-    * override exists for tests (compacting only past 64 real appends
-    * would make the spec ingest 64 times). */
-  private[graft] def zonePartCap: Int =
-    sys.props.get("graft.zone.partCap").map(_.toInt).getOrElse(64)
 
   /** Shared append-marker names: `_append.<uuid>.lock` under the root.
     * Appends hold one of these (any number concurrently) instead of the
@@ -6011,7 +5742,7 @@ object Lake {
   private[graft] val reservedDerivedCols: Set[String] = Set(
     "change", "dist", "packed", "pq_code", "qnrm", "qshard",
     "_mcmp", "_slice", "n_slices", "__routed", "shard_s", "key_s",
-    "spec_fp", "skip_stale",
+    "skip_stale",
     // the DSv2 row-level DML metadata column (GraftTable.RidName): a
     // DATA column with this name would shadow it and break UPDATE/MERGE
     "_graft_rid")
@@ -6061,10 +5792,9 @@ object Lake {
       .take(6).map(b => f"${b & 0xff}%02x").mkString
 
   /** What one append committed: the partition values it landed files
-    * in (skip-index refresh scope), the written data-file paths (zone-map
-    * refresh scope) and the state its commit published. */
+    * in (skip-index refresh scope) and the state its commit published. */
   private[graft] final case class Appended(
-      shards: Set[Option[String]], files: Seq[String], state: LakeState)
+      shards: Set[Option[String]], state: LakeState)
 
   /** An incremental LSH reshard in flight: rows in the `pending`
     * (escaped-dir, generation) entries are still routed at
@@ -6090,8 +5820,20 @@ object Lake {
     * sidecar at commit time (name is directory-relative; len/mod are
     * the exact [[org.apache.hadoop.fs.FileStatus]] values a listing
     * would return — readers build scan splits from them, so `len`
-    * must be the true byte length). */
-  private[graft] final case class LiveFile(name: String, len: Long, mod: Long)
+    * must be the true byte length), with its zone stats when the lake
+    * keeps a zone map and the commit that named the file computed them. */
+  private[graft] final case class LiveFile(name: String, len: Long, mod: Long,
+      stats: Option[ZoneStats] = None)
+
+  /** One data file's zone stats, committed with the file
+    * ([[Lake.buildZoneMap]]): its rows, its rows with a non-null
+    * `timestamp`, the min and max `timestamp` in epoch microseconds, and
+    * a (min, max) pair per zone field, in `zone_fields` order. A bound
+    * is None when no row has a value. Files are immutable, so the stats
+    * never go stale. */
+  private[graft] final case class ZoneStats(rows: Long, tsRows: Long,
+      minTs: Option[Long], maxTs: Option[Long],
+      fields: Seq[(Option[Double], Option[Double])] = Nil)
 
   private[graft] object LiveFile {
     def of(s: org.apache.hadoop.fs.FileStatus): LiveFile =
@@ -6131,7 +5873,10 @@ object Lake {
     * never committed. `sinks` maps each exactly-once sink's identity
     * ([[Lake.sinkIdHex]]) to the newest batch it committed — recorded by
     * the append that commits the batch ([[Lake.ingestExactlyOnce]]) and
-    * carried by every later commit, like Delta's `txn` action. */
+    * carried by every later commit, like Delta's `txn` action.
+    * `zoneFields` is Some once [[Lake.buildZoneMap]] has run: every later
+    * commit computes the zone stats of the files it writes
+    * ([[LiveFile.stats]]) over these metadata fields. */
   private[graft] final case class LakeState(
       generation: Long, live: Seq[(String, Long)],
       genHasData: Option[Boolean] = None,
@@ -6145,7 +5890,8 @@ object Lake {
       genRecorded: Boolean = false,
       version: Long = 0L,
       lost: Set[((String, Long), String)] = Set.empty,
-      sinks: Map[String, Long] = Map.empty)
+      sinks: Map[String, Long] = Map.empty,
+      zoneFields: Option[Seq[String]] = None)
 
   /** The writer config a sidecar records beside the live set: what
     * routing/compression guards check a session against and what the

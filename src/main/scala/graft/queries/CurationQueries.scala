@@ -572,8 +572,8 @@ object CurationQueries {
   /** Shared fixture for the zone-map round-trips: three time segments
     * of `embeddings` ingested with EXPLICIT event times (vec_id days —
     * the backfill-keeps-source-times story), the zone map built after
-    * the FIRST segment only so the later appends must self-map through
-    * the ingest-side refresh. One definition so the two oracles can
+    * the FIRST segment only so the later appends must commit their own
+    * files' zone stats. One definition so the two oracles can
     * never diverge from different setups. */
   private def timedLake(s: org.apache.spark.sql.SparkSession,
       dir: String): Lake =
@@ -589,7 +589,7 @@ object CurationQueries {
             concat(lit("doc-"), col("vec_id")).as("document"),
             timestamp_seconds(col("vec_id") * 86400L).as("timestamp"))
       l.ingest(seg(0, 150))
-      l.buildZoneMap() // later segments must self-map via the refresh
+      l.buildZoneMap() // later segments commit their own files' stats
       l.ingest(seg(150, 250))
       l.ingest(seg(250, 350))
       l

@@ -95,7 +95,6 @@ private[graft] object GraftProcedures {
         StructType(Seq(
           StructField("compacted_shards", LongType, nullable = false),
           StructField("skip_refreshed", BooleanType, nullable = false),
-          StructField("zone_rebuilt", BooleanType, nullable = false),
           StructField("vacuum_swept", LongType, nullable = false),
           StructField("recall_recalibrated", BooleanType, nullable = false),
           StructField("expired_rows", LongType, nullable = false),
@@ -108,10 +107,9 @@ private[graft] object GraftProcedures {
           val r = lake.maintain(targetBytes = in.getLong(1),
             maxFilesPerShard = in.getInt(2), retainMs = in.getLong(3),
             ttlMs = in.getLong(4), targetShardBytes = in.getLong(5))
-          InternalRow(r.compactedShards, r.skipRefreshed, r.zoneRebuilt,
-            r.vacuumSwept, r.recallRecalibrated, r.expiredRows,
-            r.maxShardBytes, r.medianShardBytes, r.reshardRecommended,
-            r.reshardPendingDirs)
+          InternalRow(r.compactedShards, r.skipRefreshed, r.vacuumSwept,
+            r.recallRecalibrated, r.expiredRows, r.maxShardBytes,
+            r.medianShardBytes, r.reshardRecommended, r.reshardPendingDirs)
         }))
       case "compact" => Some(new LakeProcedure(
         "compact", resolve,

@@ -142,9 +142,49 @@ class ControlFilesSpec extends SparkSpec {
     assert(calib.recalls === Seq(0.5, 0.75, 1.0, 1.0))
     assert(calib.bytes === Some(12345L) && calib.k === Some(20) && calib.lshSeed === Some(42L))
 
-    val zone = decode[ZoneSpec]("""{"fields": ["q", "a\"b.c"]}""", "literal")
+    // the zone map is the lake sidecar's `zone_fields` plus, per entry,
+    // an `fz` list of file stats aligned with the names: an empty element
+    // is a file without stats, and a list of another length than the
+    // names gives the whole entry none
+    val zone = decode[LakeSidecar]("""{"generation": 2, "live": [["shard=1", 1], """ +
+      """["shard=2", 1]], "files": [{"fd": "shard=1", "fg": 1, "fn": "a;b;c", """ +
+      """"fl": "1;2;3", "fm": "4;5;6", "fz": "8,8,100,200,1.5,NaN,,3.0;;3,2,,,,,,"}, """ +
+      """{"fd": "shard=2", "fg": 1, "fn": "x;y", "fl": "1;2", "fm": "3;4", """ +
+      """"fz": "8,8,100,200,1.0,2.0,1.0,2.0"}], "zone_fields": ["q", "a\"b.c"]}""",
+      "literal")
     roundTrips(zone)
-    assert(zone.fields === Seq("q", "a\"b.c"))
+    val zs = zone.toState
+    assert(zs.zoneFields === Some(Seq("q", "a\"b.c")))
+    val Seq(a, b, c) = zs.liveFiles(("shard=1", 1L))
+    assert((a.name, a.len, a.mod, b.stats, c.stats) === (("a", 1L, 4L, None,
+      Some(Lake.ZoneStats(3L, 2L, None, None, Seq((None, None), (None, None)))))))
+    val za = a.stats.get
+    assert((za.rows, za.tsRows, za.minTs, za.maxTs) === ((8L, 8L, Some(100L), Some(200L))))
+    assert(za.fields.head._1 === Some(1.5) && za.fields.head._2.exists(_.isNaN))
+    assert(za.fields(1) === ((None, Some(3.0))))
+    assert(zs.liveFiles(("shard=2", 1L)) ===
+      Seq(Lake.LiveFile("x", 1L, 3L), Lake.LiveFile("y", 2L, 4L)))
+    // the writer: stats and fields round-trip through a commit's body
+    val zoneCfg = LakeConfig("/x", dim = 4, numHashes = 3)
+    val mapped = Lake.LakeState(2L, Seq("shard=1" -> 1L), zoneFields = Some(Seq("q")))
+    val withStats = Seq(Lake.LiveFile("f", 5L, 6L, Some(Lake.ZoneStats(2L, 2L,
+      Some(-7L), Some(9L), Seq((Some(-0.5), Some(1e300)))))), Lake.LiveFile("g", 1L, 2L))
+    val zoneBody = encode(LakeSidecar.of(mapped, zoneCfg, numShards = 8L,
+      sealedCommit = false, genHasData = true, files = Seq(("shard=1", 1L) -> withStats)))
+    assert(zoneBody.contains(""""fz":"2,2,-7,9,-0.5,1.0E300;""""))
+    assert(zoneBody.contains(""""zone_fields":["q"]"""))
+    val back = decode[LakeSidecar](zoneBody, "written").toState
+    assert(back.liveFiles(("shard=1", 1L)) === withStats)
+    assert(back.zoneFields === Some(Seq("q")))
+    // no zone map: the writer adds no key, so the body is byte for byte
+    // what it was before the zone map moved into the sidecar
+    val plainBody = encode(LakeSidecar.of(Lake.LakeState(2L, Seq("shard=1" -> 1L)),
+      zoneCfg, numShards = 8L, sealedCommit = false, genHasData = true,
+      files = Seq(("shard=1", 1L) -> Seq(Lake.LiveFile("f", 5L, 6L))))
+      .copy(lastUpdate = Some("t")))
+    assert(plainBody === """{"last_update":"t","dim":4,"metric":"cosine",""" +
+      """"num_shards":8,"lsh_seed":42,"files":[{"fd":"shard=1","fg":1,"fn":"f",""" +
+      """"fl":"5","fm":"6"}],"generation":2,"live":[["shard=1",1]],"gen_has_data":true}""")
 
     val ivf = decode[IvfMeta](s"""{"k": 4, "dim": 64, "fingerprint": "${"0" * 32}"}""", "literal")
     roundTrips(ivf)

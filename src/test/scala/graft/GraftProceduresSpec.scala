@@ -74,13 +74,13 @@ class GraftProceduresSpec extends SparkSpec {
     val r1 = sql(s"CALL plakes.system.maintain(table => 'default.$t')").collect()
     assert(r1.length === 1)
     assert(r1.head.schema.fieldNames.toSeq === Seq("compacted_shards",
-      "skip_refreshed", "zone_rebuilt", "vacuum_swept",
+      "skip_refreshed", "vacuum_swept",
       "recall_recalibrated", "expired_rows", "max_shard_bytes",
       "median_shard_bytes", "reshard_recommended", "reshard_pending_dirs"))
     // a second immediate call finds nothing left to justify
     val r2 = sql(s"CALL plakes.system.maintain(table => 'default.$t')").collect().head
     assert(r2.getLong(0) === 0L, "second maintain compacted nothing")
-    assert(!r2.getBoolean(1) && !r2.getBoolean(2))
+    assert(!r2.getBoolean(1))
   }
 
   test("CALL seal then vacuum: versions commit and dead state sweeps; raw-path refs work") {

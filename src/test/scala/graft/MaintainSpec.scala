@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** The one-call maintenance policy: [[Lake.maintain]] reads the lake's
   * own health signals and runs only justified work — a churned lake
-  * converges (file counts compacted, skip index fresh, zone map
-  * rebuilt, dead generations swept) and a converged lake no-ops. */
+  * converges (file counts compacted, skip index fresh, dead generations
+  * swept; the zone map rides every commit and needs no step) and a
+  * converged lake no-ops. */
 class MaintainSpec extends SparkSpec {
   import spark.implicits._
 
@@ -22,13 +23,13 @@ class MaintainSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_maintain").toString
     val lake = Lake(spark, LakeConfig(s"$dir/lake", dim = 3, numHashes = 2))
     // churn: many tiny appends (file bloat), early indexes, rewrites
-    // (dead zone entries + dead generations), deletes
+    // (dead generations), deletes
     lake.ingest(rows(16, "a", 1))
     assert(lake.buildSkipIndex() > 0L)
     assert(lake.buildZoneMap() > 0L)
     (2 to 7).foreach(d => lake.ingest(rows(4, s"b$d", d)))
     assert(lake.deleteWhere(col("id") === "a-0") === 1L)
-    lake.compact(); lake.compact() // each full rewrite strands old zone entries
+    lake.compact(); lake.compact() // each full rewrite strands a dead generation
     (8 to 10).foreach(d => lake.ingest(rows(3, s"c$d", d)))
     val contentBefore = lake.read().select("id").collect().map(_.getString(0)).toSet
     val filesBefore = lake.read().inputFiles.length
@@ -64,22 +65,19 @@ class MaintainSpec extends SparkSpec {
       maxFilesPerShard = 1, retainMs = 0L)
     info(s"maintain #2: $r2")
     assert(r2.compactedShards === 0L, "a converged lake must not re-compact")
-    assert(!r2.skipRefreshed && !r2.zoneRebuilt,
-      "fresh indexes must not be rebuilt")
+    assert(!r2.skipRefreshed, "a fresh skip index must not be rebuilt")
     assert(lake.read().select("id").collect().map(_.getString(0)).toSet ===
       contentBefore)
   }
 
-  test("maintain refreshes a STALE skip index (fingerprint drift) and rebuilds a dead-entry-bloated zone map") {
+  test("maintain refreshes a STALE skip index (fingerprint drift); the committed zone map needs no rebuild") {
     val dir = Files.createTempDirectory("graft_maintain2").toString
     val lake = Lake(spark, LakeConfig(s"$dir/lake", dim = 3, numHashes = 2))
     lake.ingest(rows(12, "s", 1))
     assert(lake.buildSkipIndex() > 0L)
     assert(lake.buildZoneMap() > 0L)
-    // manufacture zone dead-entry bloat FIRST: repeated full rewrites
-    // strand old entries until map rows far exceed live files (the
-    // rewrites also refresh the skip index, so staleness must be
-    // manufactured after them)
+    // repeated full rewrites FIRST (they also refresh the skip index, so
+    // staleness must be manufactured after them)
     (0 until 3).foreach(_ => lake.compact())
     // manufacture skip staleness the way it really arises (the
     // best-effort refresh failed / an out-of-band writer moved files):
@@ -99,7 +97,10 @@ class MaintainSpec extends SparkSpec {
     val r = lake.maintain(retainMs = 0L)
     info(s"maintain: $r")
     assert(r.skipRefreshed, "a stale skip index must be rebuilt")
-    assert(r.zoneRebuilt, "a dead-entry-bloated zone map must be rebuilt")
+    // the zone map needs no step: rewrites commit their files' stats
+    def day(d: Int) = java.time.Instant.ofEpochSecond(d.toLong * 86400)
+    assert(lake.readTimeRange(day(1), day(1)).count() === lake.read().count())
+    assert(lake.readTimeRange(day(2), day(9)).count() === 0L)
     assert(lake.validate().head().getAs[Long]("skip_stale") === 0L)
     // both indexes still serve exactly
     val present = lake.read().select("id").collect().map(_.getString(0)).take(3)
@@ -107,7 +108,7 @@ class MaintainSpec extends SparkSpec {
       .map(_.getString(0)).toSet
     assert(got === present.toSet)
     val r2 = lake.maintain(retainMs = 0L)
-    assert(!r2.skipRefreshed && !r2.zoneRebuilt && r2.compactedShards === 0L,
+    assert(!r2.skipRefreshed && r2.compactedShards === 0L,
       s"converged after one call, got $r2")
   }
 

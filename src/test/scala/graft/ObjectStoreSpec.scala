@@ -302,11 +302,10 @@ class ObjectStoreSpec extends SparkSpec {
           s"doc $d $i", ts(d), s"""{"q": ${d * 100 + i}}"""))
         .toDF("id", "vector", "document", "timestamp", "metadata_json")
       (1 to 2).foreach(d => lake.ingest(batch(d)))
-      // the _zone swap (dir rename + the _spec.json inside it) goes
-      // through rename — copy+delete on this FS
+      // the build commits every file's stats in one sidecar version:
+      // no rename, so nothing is copied on this copy+delete FS
       assert(lake.buildZoneMap(fields = Seq("q")) > 0L)
-      // post-build append: the refresh MOVES a part into _zone
-      // (copy+delete again) and the new files self-map
+      // post-build append: the new files' stats ride its own commit
       lake.ingest(batch(3))
       def window(d: Int) = lake.readTimeRange(
         java.time.Instant.ofEpochSecond(d.toLong * 86400),
@@ -318,14 +317,13 @@ class ObjectStoreSpec extends SparkSpec {
       }
       val w = window(2)
       // pruned AND every opened file addressed through the bucket scheme
-      // (zoneKey must reconcile input_file_name vs listing spellings
-      // across the non-file scheme)
+      // (the stats key each file by its directory and name, so the
+      // scheme's spelling of the path never matters)
       assert(w.inputFiles.nonEmpty && w.inputFiles.forall(_.startsWith("bucket:")))
       assert(w.inputFiles.toSet.size < lake.read().inputFiles.toSet.size,
         "the day-2 window must prune on the remote FS")
-      // the FIELD zone (spec read + fp-gated verdicts) round-trips too:
-      // band 3 came from a post-build append, so its entries were
-      // written by the refresh reading _spec.json off the remote FS
+      // the FIELD zone round-trips too: band 3 came from a post-build
+      // append, which computed its ranges over the sidecar's zone_fields
       val f = lake.readFieldRange("q", 300.0, 399.0)
       assert(f.select("id").as[String].collect().toSet ===
         (0 until 10).map(i => s"z3-$i").toSet)
@@ -794,8 +792,8 @@ class ObjectStoreSpec extends SparkSpec {
     val sync1 = lake.seal()
     // a directory listing against the data tree (a generation subtree
     // or a shard directory inside one) — the LIST round trips the
-    // manifest exists to eliminate; root/sidecar discovery and index
-    // sidecars (_zone/_skip) are metadata, not the data tree
+    // manifest exists to eliminate; root/sidecar discovery and the skip
+    // index (_skip) are metadata, not the data tree
     def dataListings(): Seq[String] = {
       import scala.jdk.CollectionConverters._
       CountingListFs.listed.asScala.toSeq

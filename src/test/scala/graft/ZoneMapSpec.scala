@@ -2,14 +2,18 @@ package graft
 
 import java.nio.file.Files
 import java.time.Instant
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** The per-file timestamp zone map: time-window reads open only the
-  * files whose [min_ts, max_ts] can intersect the window, stay exactly
-  * equal to the unpruned filtered read through appends / rewrites /
-  * missing entries, and never go wrong — files are immutable, so a
-  * mapped range never stales; an unmapped file is merely scanned. */
+  * files whose committed [min, max] `timestamp` can intersect the
+  * window, stay exactly equal to the unpruned filtered read through
+  * appends / rewrites / files without stats, and never go wrong —
+  * files are immutable, so a committed range never stales; a file
+  * without stats is merely scanned. */
 class ZoneMapSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,6 +31,46 @@ class ZoneMapSpec extends SparkSpec {
   private def freshLake(): Lake = {
     val dir = Files.createTempDirectory("graft_zone").toString
     Lake(spark, LakeConfig(s"$dir/lake", dim = 3, numHashes = 2))
+  }
+
+  /** Commit a copy of the newest sidecar as the next version, with the
+    * zone stats of every file `strip` selects removed: those files are
+    * in the lake without stats. */
+  private def stripStats(lake: Lake)(strip: Lake.ZoneStats => Boolean): Unit = {
+    val root = new Path(lake.cfg.location)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (v, newest) = Lake.metaVersionsFrom(fs.listStatus(root).toSeq).maxBy(_._1)
+    val sc = ControlFiles.read[ControlFiles.LakeSidecar](fs, newest)
+    val stripped = sc.files.map(_.map(e => e.copy(fz = e.fz.map(_.split(";", -1)
+      .map(z => if (ControlFiles.FileEntry.zoneOf(z).exists(strip)) "" else z)
+      .mkString(";")))))
+    assert(stripped != sc.files, "the fixture must strip some file's stats")
+    ControlFiles.write(fs, new Path(root, s"_meta.${v + 1}.json"),
+      sc.copy(files = stripped), overwrite = false)
+  }
+
+  /** Epoch microseconds of day `d`, the unit zone stats carry. */
+  private def micros(day: Int): Long = day.toLong * 86400L * 1000000L
+
+  /** Spark jobs `op` starts (the RewriteJobsSpec pattern: a job group
+    * and a listener, counted after the listener bus drains). */
+  private def jobsOf[A](op: => A): (A, Int) = {
+    val group = s"zone-jobs-${java.util.UUID.randomUUID()}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "zone job count")
+    try {
+      val out = op
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, n.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
 
   private def windowRows(lake: Lake, lo: Int, hi: Int) =
@@ -80,46 +124,6 @@ class ZoneMapSpec extends SparkSpec {
     assert(windowRows(lake, 50, 60) === Set.empty[String])
   }
 
-  test("distributed verdict regime: past the file bound the prune runs as a join, equal rows and equal file cut") {
-    // the at-scale path (graft.zone.distributedVerdictMinFiles): the
-    // per-file verdict pass moves off the driver and only the
-    // surviving file list collects. Forcing the bound to 0 runs EVERY
-    // prune through the join — rows and file cuts must be
-    // indistinguishable from the driver-map regime, including the
-    // unmapped-file scan-unconditionally rule.
-    val lake = freshLake()
-    (1 to 4).foreach(d => lake.ingest(batch(d)))
-    assert(lake.buildZoneMap() > 0L)
-    lake.ingest(batch(9)) // post-build append: mapped by the refresh
-    val driverRegime = Seq((1, 1), (2, 3), (1, 4), (5, 9), (50, 60)).map {
-      case (lo, hi) => (windowRows(lake, lo, hi),
-        lake.readTimeRange(inst(lo), inst(hi)).inputFiles.toSet)
-    }
-    spark.conf.set("graft.zone.distributedVerdictMinFiles", "0")
-    try {
-      Seq((1, 1), (2, 3), (1, 4), (5, 9), (50, 60)).zip(driverRegime)
-        .foreach { case ((lo, hi), (rows, files)) =>
-          assert(windowRows(lake, lo, hi) === rows,
-            s"window [$lo,$hi]: distributed verdict changed the rows")
-          assert(windowRows(lake, lo, hi) === fullRows(lake, lo, hi))
-          assert(lake.readTimeRange(inst(lo), inst(hi)).inputFiles.toSet
-            === files,
-            s"window [$lo,$hi]: distributed verdict changed the file cut")
-        }
-      // freshness-scoped kNN rides the same base — exercise it too
-      // (single-probe contract: the filtered twin carries the same
-      // routed-shard predicate)
-      val q = Seq(0.1, 0.2, 0.3)
-      val viaZone = lake.topKInRange(q, 5, inst(2), inst(3))
-        .select("id").collect().map(_.getString(0)).toSeq
-      val viaFilter = lake.topKFiltered(q, 5,
-        col("timestamp").between(ts(2), ts(3)) &&
-          col("shard") === lake.lsh.shardOf(q))
-        .select("id").collect().map(_.getString(0)).toSeq
-      assert(viaZone === viaFilter)
-    } finally spark.conf.unset("graft.zone.distributedVerdictMinFiles")
-  }
-
   test("appends refresh the map; an unmapped file is scanned, never dropped") {
     val lake = freshLake()
     (1 to 2).foreach(d => lake.ingest(batch(d)))
@@ -131,19 +135,13 @@ class ZoneMapSpec extends SparkSpec {
     val d3 = lake.readTimeRange(inst(3), inst(3))
     assert(d3.inputFiles.toSet.size < lake.read().inputFiles.toSet.size,
       "post-build appends must be mapped (else day 3 reads everything)")
-    // sabotage: drop day 3's entries from the map — its files become
+    // sabotage: a sidecar copy without day 3's stats — its files are
     // UNMAPPED and must be scanned unconditionally (correct, unpruned)
-    val fs = new org.apache.hadoop.fs.Path(lake.cfg.location)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val zone = new org.apache.hadoop.fs.Path(lake.cfg.location, "_zone")
-    val kept = spark.read.parquet(zone.toString)
-      .where(col("max_ts") < ts(3)).cache()
-    kept.count()
-    val tmp = new org.apache.hadoop.fs.Path(lake.cfg.location, "_zone_new")
-    kept.coalesce(1).write.parquet(tmp.toString)
-    kept.unpersist()
-    fs.delete(zone, true)
-    fs.rename(tmp, zone)
+    val day1Files = lake.readTimeRange(inst(1), inst(1)).inputFiles.toSet
+    stripStats(lake)(_.maxTs.exists(_ >= micros(3)))
+    assert(lake.readTimeRange(inst(1), inst(1)).inputFiles.toSet ===
+      day1Files ++ d3.inputFiles.toSet,
+      "unmapped files must be opened by every window")
     assert(windowRows(lake, 3, 3) === fullRows(lake, 3, 3),
       "unmapped files must still be scanned")
     assert(windowRows(lake, 1, 1) === fullRows(lake, 1, 1))
@@ -239,26 +237,23 @@ class ZoneMapSpec extends SparkSpec {
     val band2 = lake.readFieldRange("q", 200.0, 299.0)
     assert(band2.inputFiles.toSet.size < lake.read().inputFiles.toSet.size,
       "a one-band field window must open fewer files")
-    // a post-build append recomputes the SPEC'd field (the refresh
-    // reads _spec.json) — band 4 is pruned-read correctly and band 1
-    // windows don't open its files
+    // a post-build append commits its files' ranges of the mapped
+    // field (the sidecar's zone_fields) — band 4 is pruned-read
+    // correctly and band 1 windows don't open its files
     lake.ingest(batchQ(4))
     assert(fieldRows(400.0, 499.0) === fullRows(400.0, 499.0))
     assert(lake.readFieldRange("q", 400.0, 499.0).inputFiles.toSet.size <
       lake.read().inputFiles.toSet.size,
       "post-build appends must carry the field ranges")
-    // SABOTAGE: a refresh that cannot read the spec writes a part
-    // WITHOUT the field columns (fp of the empty list) — those files
-    // must be SCANNED by field reads, never pruned by null ranges
-    val fs2 = new org.apache.hadoop.fs.Path(lake.cfg.location)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val spec = new org.apache.hadoop.fs.Path(lake.cfg.location, "_zone/_spec.json")
-    fs2.delete(spec, false)
-    lake.ingest(batchQ(5)) // refresh runs with fields = Nil
-    val out = fs2.create(spec, false)
-    out.write("""{"fields": ["q"]}""".getBytes("UTF-8")); out.close()
+    // SABOTAGE: a sidecar copy without band 5's stats — those files
+    // must be SCANNED by field reads, never pruned
+    lake.ingest(batchQ(5))
+    stripStats(lake)(_.fields.exists(_._1.exists(_ >= 500.0)))
     assert(fieldRows(500.0, 599.0) === fullRows(500.0, 599.0),
-      "files mapped under a failed spec read must be scanned, not pruned")
+      "files without stats must be scanned, not pruned")
+    assert(lake.readFieldRange("q", 100.0, 199.0).inputFiles.toSet
+      .intersect(lake.readFieldRange("q", 500.0, 599.0).inputFiles.toSet).nonEmpty,
+      "files without stats are opened by every field window")
     assert(fieldRows(100.0, 199.0) === fullRows(100.0, 199.0))
     // an UNMAPPED path falls back to the plain filtered read — same rows
     assert(lake.readFieldRange("tag_len_never_mapped", 0, 9).count() === 0L)
@@ -267,9 +262,8 @@ class ZoneMapSpec extends SparkSpec {
       .toDF("id", "vector", "document", "metadata_json"))
     assert(!fieldRows(0.0, 9999.0).contains("no-q"))
     assert(fieldRows(0.0, 9999.0) === fullRows(0.0, 9999.0))
-    // REWRITES: deleteWhere and a full compact re-map their new files
-    // with the SPEC'd field (refreshZoneMapShards reads _spec.json and
-    // recomputes q's ranges) — field reads stay exact, and a band
+    // REWRITES: deleteWhere and a full compact commit their new files
+    // with the mapped field's ranges — field reads stay exact, and a band
     // outside the whole value space still opens zero files after the
     // compact rewrote every file
     assert(lake.deleteWhere(col("id") === "b2-0") === 1L)
@@ -315,50 +309,115 @@ class ZoneMapSpec extends SparkSpec {
       "a refused ingest must publish nothing (staged write)")
   }
 
-  test("append-heavy lakes keep a BOUNDED _zone part count: refreshes auto-compact past the cap") {
-    val prev = sys.props.get("graft.zone.partCap")
-    sys.props("graft.zone.partCap") = "2"
-    try {
-      val dir = Files.createTempDirectory("graft_zone_cap").toString
-      val lake = Lake(spark, LakeConfig(s"$dir/lake", dim = 3, numHashes = 2))
-      def batchQ(band: Int) = (0 until 8).map { i =>
-        (s"b$band-$i", Seq(math.sin(band * 9 + i).toFloat, 1f, -0.2f * i),
-          s"doc $band $i", ts(band), s"""{"q": ${band * 100 + i}}""")
-      }.toDF("id", "vector", "document", "timestamp", "metadata_json")
-      lake.ingest(batchQ(1))
-      assert(lake.buildZoneMap(fields = Seq("q")) > 0L)
-      (2 to 7).foreach(b => lake.ingest(batchQ(b)))
-      val fs = new org.apache.hadoop.fs.Path(lake.cfg.location)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val parts = fs.listStatus(
-        new org.apache.hadoop.fs.Path(lake.cfg.location, "_zone"))
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      assert(parts.length <= 3,
-        s"7 appends at cap 2 must leave a compacted map, got ${parts.length} parts")
-      assert(fs.exists(new org.apache.hadoop.fs.Path(
-        lake.cfg.location, "_zone/_spec.json")),
-        "compaction must carry the field spec across the swap")
-      // exactness and pruning both survive compaction — time AND field
-      def ids(df: org.apache.spark.sql.DataFrame) =
-        df.select("id").collect().map(_.getString(0)).toSet
-      Seq((1, 2), (4, 4), (1, 7)).foreach { case (lo, hi) =>
-        assert(ids(lake.readTimeRange(inst(lo), inst(hi))) ===
-          ids(lake.read().where(col("timestamp").between(ts(lo), ts(hi)))),
-          s"time window [$lo,$hi] after compaction")
-      }
-      assert(lake.readTimeRange(inst(4), inst(4)).inputFiles.toSet.size <
-        lake.read().inputFiles.toSet.size, "time pruning survives compaction")
-      assert(ids(lake.readFieldRange("q", 300.0, 399.0)) ===
-        ids(lake.read().where(
-          lake.metadataField("q").cast("double").between(300.0, 399.0))))
-      assert(lake.readFieldRange("q", 300.0, 399.0).inputFiles.toSet.size <
-        lake.read().inputFiles.toSet.size, "field pruning survives compaction")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.zone.partCap") = v
-        case None => sys.props.remove("graft.zone.partCap"); ()
-      }
+  test("append-heavy lakes keep exact, pruned time and field windows: each append commits its files' stats") {
+    val dir = Files.createTempDirectory("graft_zone_appends").toString
+    val lake = Lake(spark, LakeConfig(s"$dir/lake", dim = 3, numHashes = 2))
+    def batchQ(band: Int) = (0 until 8).map { i =>
+      (s"b$band-$i", Seq(math.sin(band * 9 + i).toFloat, 1f, -0.2f * i),
+        s"doc $band $i", ts(band), s"""{"q": ${band * 100 + i}}""")
+    }.toDF("id", "vector", "document", "timestamp", "metadata_json")
+    lake.ingest(batchQ(1))
+    assert(lake.buildZoneMap(fields = Seq("q")) > 0L)
+    (2 to 7).foreach(b => lake.ingest(batchQ(b)))
+    // exactness and pruning after seven appends — time AND field
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getString(0)).toSet
+    Seq((1, 2), (4, 4), (1, 7)).foreach { case (lo, hi) =>
+      assert(ids(lake.readTimeRange(inst(lo), inst(hi))) ===
+        ids(lake.read().where(col("timestamp").between(ts(lo), ts(hi)))),
+        s"time window [$lo,$hi] after the appends")
     }
+    assert(lake.readTimeRange(inst(4), inst(4)).inputFiles.toSet.size <
+      lake.read().inputFiles.toSet.size, "time pruning after the appends")
+    assert(ids(lake.readFieldRange("q", 300.0, 399.0)) ===
+      ids(lake.read().where(
+        lake.metadataField("q").cast("double").between(300.0, 399.0))))
+    assert(lake.readFieldRange("q", 300.0, 399.0).inputFiles.toSet.size <
+      lake.read().inputFiles.toSet.size, "field pruning after the appends")
+  }
+
+  test("a NaN field value does not hide its file: readFieldRange returns the file's in-window rows") {
+    val dir = Files.createTempDirectory("graft_zone_nan").toString
+    val lake = Lake(spark, LakeConfig(s"$dir/lake", dim = 3, numHashes = 2))
+    // one vector for every row: one shard, one file, whose q range is
+    // [100, NaN] — Spark orders NaN above every number
+    lake.ingest(((0 until 6).map(i => (s"n$i", s"""{"q": ${100 + i}}""")) :+
+      ("nan", """{"q": "NaN"}"""))
+      .map { case (id, j) => (id, Seq(1f, 0.5f, 0.25f), s"doc $id", j) }
+      .toDF("id", "vector", "document", "metadata_json"))
+    assert(lake.buildZoneMap(fields = Seq("q")) === 1L)
+    val got = lake.readFieldRange("q", 101.0, 103.0)
+      .select("id").collect().map(_.getString(0)).toSet
+    assert(got === Set("n1", "n2", "n3"))
+    assert(got === lake.read().where(lake.metadataField("q").cast("double")
+      .between(101.0, 103.0)).select("id").collect().map(_.getString(0)).toSet)
+  }
+
+  test("a window outside the data opens zero files after every kind of commit") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.racebucket.impl", classOf[RacingBucketFs].getName)
+    val loc = s"racebucket://${Files.createTempDirectory("graft_zone_commits")}/lake"
+    var lake = Lake(spark, LakeConfig(loc, dim = 3, numHashes = 2))
+    // every live file carries stats: a window past all data opens none
+    def noFilesOutside(op: String): Unit = {
+      assert(lake.read().inputFiles.nonEmpty, s"after $op: the lake holds no file")
+      assert(lake.readTimeRange(inst(50), inst(60)).inputFiles.isEmpty,
+        s"after $op: a window outside the data opened files")
+    }
+    lake.ingest(batch(1))
+    assert(lake.buildZoneMap() > 0L)
+    lake.seal() // day 1 becomes manifest entries
+    noFilesOutside("seal")
+    lake.ingest(batch(10))
+    noFilesOutside("ingest")
+    assert(lake.expire(inst(5)) === ((8L, 0L)), "day 1 retires wholesale")
+    noFilesOutside("expire tier 1")
+    lake.ingest(batch(11))
+    assert(lake.upsert(batch(12).where(col("id") =!= "d12-r7")
+      .withColumn("id", regexp_replace(col("id"), "d12", "d10"))) === 7L)
+    noFilesOutside("upsert")
+    assert(lake.deleteIds(Seq("d11-r0", "d11-r1")) === 2L)
+    noFilesOutside("deleteIds")
+    lake.ingest(batch(13))
+    assert(lake.compactIncremental(maxFilesPerShard = 1) > 0L)
+    noFilesOutside("compactIncremental")
+    lake.compact()
+    noFilesOutside("compact")
+    lake.evolve(org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("lang",
+        org.apache.spark.sql.types.StringType))))
+    noFilesOutside("evolve")
+    assert(lake.ingestExactlyOnce(batch(14), "zone-sink", 0L))
+    noFilesOutside("sink batch")
+    // a rival append takes the version this append chose: its commit
+    // retries over the rival's version and both land with their stats
+    val v0 = lake.currentVersion().get
+    RacingBucketFs.rival = () =>
+      Lake(spark, LakeConfig(loc, dim = 3, numHashes = 2)).ingest(batch(15))
+    try lake.ingest(batch(16)) finally RacingBucketFs.rival = null
+    assert(lake.currentVersion().get === v0 + 2)
+    noFilesOutside("an append retried over a rival's version")
+    val before = lake.read().select("id").collect().map(_.getString(0)).toSet
+    lake = lake.reshard(3, dirsPerCommit = 1)
+    assert(lake.reshardStatus().isEmpty)
+    noFilesOutside("reshard steps")
+    assert(lake.read().select("id").collect().map(_.getString(0)).toSet === before)
+    assert(windowRows(lake, 10, 16) === fullRows(lake, 10, 16))
+  }
+
+  test("a zone-pruned readTimeRange runs no Spark job besides its scan's own") {
+    val lake = freshLake()
+    (1 to 4).foreach(d => lake.ingest(batch(d)))
+    assert(lake.buildZoneMap() > 0L)
+    // the verdicts come off the resolved sidecar: planning runs no job
+    val (pruned, planJobs) = jobsOf(lake.readTimeRange(inst(2), inst(2)))
+    assert(planJobs === 0, s"planning the pruned read ran $planJobs Spark jobs")
+    assert(pruned.inputFiles.toSet.size < lake.read().inputFiles.toSet.size)
+    val (_, scanJobs) = jobsOf(pruned.collect())
+    val (_, plainJobs) = jobsOf(lake.read()
+      .where(col("timestamp").between(ts(2), ts(2))).collect())
+    assert(scanJobs <= plainJobs,
+      s"the pruned read ran $scanJobs Spark jobs, the plain filtered read $plainJobs")
   }
 
   test("no map, no harm: readTimeRange without buildZoneMap is the plain filtered read") {

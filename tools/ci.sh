@@ -157,6 +157,30 @@ if ! awk '
   exit 1
 fi
 
+# one zone map, committed with its files: each file's zone stats ride
+# the sidecar entry that names it, so src/main names the retired `_zone`
+# side table (or a `graft.zone.` knob) only in Lake.buildZoneMap, which
+# deletes a legacy one after its commit; and the directory renames left
+# in src/main are the recall calibration's swap (Lake.calibrateRecall),
+# the skip index's swap (Lake.writeSkipIndex) and IncrementalAgg's
+# state-pointer swap (commitPointer)
+if ! awk '
+  FNR == 1 { fn = "" }
+  /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
+  match($0, /^  ([a-z]+(\[[a-z]+\])? )*def [A-Za-z0-9_]+/) {
+    fn = substr($0, RSTART, RLENGTH); sub(/.*def /, "", fn) }
+  (/_zone/ || /graft\.zone\./) &&
+      !(FILENAME ~ /graft\/Lake\.scala$/ && fn == "buildZoneMap") {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  /\.rename\(/ &&
+      !(FILENAME ~ /graft\/Lake\.scala$/ && (fn == "calibrateRecall" || fn == "writeSkipIndex")) &&
+      !(FILENAME ~ /graft\/streaming\/IncrementalAgg\.scala$/ && fn == "commitPointer") {
+    print FILENAME ":" FNR ": " $0; bad = 1 }
+  END { exit bad }' $(find src/main/scala -name '*.scala' | sort); then
+  echo "ci: a _zone side table or graft.zone. knob outside Lake.buildZoneMap's legacy cleanup, or a rename outside the calibration, skip-index and aggregate-pointer swaps" >&2
+  exit 1
+fi
+
 # one state read per operation: a Lake op resolves the root listing and
 # the sidecar once (resolveState, under its lock or gate when it takes
 # one) and hands that state down to every check, read and commit. So in
@@ -167,7 +191,7 @@ if ! awk '
   BEGIN {
     n = split("exists lastUpdate canonicalSchema currentExtraFields " \
       "bootstrap stampQuietly reshard reshardStatus maintain " \
-      "zoneNeedsRebuild currentGenDir liveDirPaths", a, " ")
+      "currentGenDir liveDirPaths", a, " ")
     for (i = 1; i <= n; i++) entry[a[i]] = 1 }
   /^[[:space:]]*(\*|\/\/|\/\*)/ { next }
   match($0, /^  ([a-z]+(\[[a-z]+\])? )*def [A-Za-z0-9_]+/) {
